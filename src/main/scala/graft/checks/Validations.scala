@@ -1,5 +1,6 @@
 package graft.checks
 
+import graft.operators.GraphTuning
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,10 +12,19 @@ object Validations {
   final case class CheckResult(name: String, passed: Boolean, detail: String)
 
   /** V1 cross-system row-count equality for a partition predicate
-    * (`validate_bt_bq_counts`, `airflow/bitquery.py:354-424`). */
+    * (`validate_bt_bq_counts`, `airflow/bitquery.py:354-424`).
+    *
+    * Both filtered sides are counted in ONE pass: their union, tagged by
+    * side, with two `count_if`s observed in a single consuming job — no
+    * shuffle, where two `count()`s are two queries of two or more jobs
+    * each. Rows whose predicate is null count on neither side. */
   def countParity(a: DataFrame, b: DataFrame, pred: Column): CheckResult = {
-    val ca = a.filter(pred).count()
-    val cb = b.filter(pred).count()
+    val side = col("__left")
+    val m = GraphTuning.observeLongs(
+      a.filter(pred).select(lit(true).as("__left"))
+        .union(b.filter(pred).select(lit(false).as("__left"))),
+      Seq("left" -> count_if(side), "right" -> count_if(!side)))
+    val (ca, cb) = (m("left"), m("right"))
     CheckResult("count_parity", ca == cb, s"left=$ca right=$cb")
   }
 

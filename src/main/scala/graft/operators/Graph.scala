@@ -810,12 +810,9 @@ object Graph {
       * per-round pass over the round's label/frontier table. */
     def writeObserving(df: DataFrame, table: String,
         bucketCols: Seq[String],
-        metric: org.apache.spark.sql.Column): Long = {
-      val obs = org.apache.spark.sql.Observation()
-      write(df.observe(obs, coalesce(metric, lit(0L)).as("n")),
-        table, bucketCols)
-      GraphTuning.longMetric(obs.get("n"))
-    }
+        metric: org.apache.spark.sql.Column): Long =
+      GraphTuning.observeLongs(df, Seq("n" -> coalesce(metric, lit(0L))),
+        write(_, table, bucketCols))("n")
     def dropAll(): Unit = dropTables(spark, created.toSeq: _*)
   }
 

@@ -242,18 +242,36 @@ object GraphTuning extends Logging {
       metrics: Seq[(String, org.apache.spark.sql.Column)])
       : (DataFrame, Map[String, Long]) = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    require(metrics.nonEmpty, "checkpointObservingAll needs >= 1 metric")
-    val obs = org.apache.spark.sql.Observation()
-    val named = metrics.map { case (n, c) => coalesce(c, lit(0L)).as(n) }
-    val out = df.observe(obs, named.head, named.tail: _*)
-      .localCheckpoint(true)
-    (out, metrics.map { case (n, _) => n -> longMetric(obs.get(n)) }.toMap)
+    var out: DataFrame = null
+    val ms = observeLongs(df,
+      metrics.map { case (n, c) => n -> coalesce(c, lit(0L)) },
+      d => out = d.localCheckpoint(true))
+    (out, ms)
   }
 
-  private[operators] def longMetric(x: Any): Long = x match {
+  private def longMetric(x: Any): Long = x match {
     case l: java.lang.Long => l.longValue()
     case i: java.lang.Integer => i.longValue()
     case other => other.toString.toLong
+  }
+
+  /** Runs `action` over `df` with each named long-valued aggregate
+    * OBSERVED in the action's own job — the [[checkpointObservingAll]]
+    * fusion without the checkpoint. The default action is a `noop` write:
+    * one pass, no shuffle, nothing kept, so an aggregate that would be its
+    * own `agg(...).head()` query (two jobs under AQE: partial and final
+    * stage) costs one job; passed a write the caller makes anyway (a sink
+    * append), it costs none. A null aggregate (`max` over zero rows) is
+    * left out of the result, never coalesced to 0. */
+  def observeLongs(df: DataFrame,
+      metrics: Seq[(String, org.apache.spark.sql.Column)],
+      action: DataFrame => Unit = _.write.format("noop").mode("overwrite").save())
+      : Map[String, Long] = {
+    require(metrics.nonEmpty, "observeLongs needs >= 1 metric")
+    val obs = org.apache.spark.sql.Observation()
+    val named = metrics.map { case (n, c) => c.as(n) }
+    action(df.observe(obs, named.head, named.tail: _*))
+    obs.get.collect { case (n, v) if v != null => n -> longMetric(v) }
   }
 
   /** Proven-fit broadcast license (the repo-wide routing discipline —

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.operators.GraphTuning
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -7,21 +8,26 @@ import org.apache.spark.sql.functions._
   * (`clickhouse/v1/operator.py:440-499` + `airflow/bitquery.py:208-351`),
   * re-expressed as a driver loop over bounded block ranges:
   *
+  *   0. source head                           → observed `max`, one job
   *   1. read state (T1)                       → SyncState.get
   *   2. advance decision w/ lag + cap (T2)    → SyncState.advance
   *   3. bounded batch read (T3)               → filter block ∈ (last, latest]
-  *   4. user pipeline + sink write
-  *   5. commit from the DESTINATION's max (T4) — offsets are re-derived
-  *      from what actually landed, not from the loop's own counter, so a
-  *      crash between write and commit replays (idempotent with dedup,
-  *      T5) instead of skipping.
+  *   4. user pipeline + sink append; the landed rows are OBSERVED in the
+  *      append job itself (a `count` riding the write), so the sink is
+  *      never re-read
+  *   5. commit the END of the processed range (T4) — only after the
+  *      write has landed, so a crash between write and commit replays
+  *      the range (idempotent with dedup, T5) instead of skipping it.
   *
   * This matches the reference's crash semantics exactly (SURVEY.md §7.4
   * risk 5) and is equivalent to `Trigger.AvailableNow` with
-  * `maxOffsetsPerTrigger`-style admission control.
+  * `maxOffsetsPerTrigger`-style admission control. A source with no
+  * non-null block has no head: the run writes nothing and leaves the
+  * state as it was.
   */
 object MicroBatchRunner {
 
+  /** @param rowsWritten rows this call appended to the sink */
   final case class BatchResult(
       ranges: Seq[(Long, Long)], batchesRun: Int, rowsWritten: Long)
 
@@ -37,26 +43,23 @@ object MicroBatchRunner {
       sinkPath: String,
       maxBatches: Int = Int.MaxValue): BatchResult = {
 
-    val head = source.agg(max(col(blockCol))).head().getLong(0)
+    // None over an empty or all-null block column — never 0, which would
+    // admit a batch
+    val head = GraphTuning.observeLongs(source.select(col(blockCol)),
+      Seq("head" -> max(col(blockCol)))).get("head")
     var st = state.get(stateKey).getOrElse(SyncStatus(-1L, "", -1L, ""))
     var ranges = Vector.empty[(Long, Long)]
     var rows = 0L
-    var landedSoFar = 0L
     var n = 0
-    var go = true
+    var go = head.isDefined
     while (go && n < maxBatches) {
-      val (latest, proceed) = SyncState.advance(st.lastSyncedBlock, head, streamingLag, batchSize)
+      val (latest, proceed) = SyncState.advance(st.lastSyncedBlock, head.get, streamingLag, batchSize)
       go = proceed
       if (proceed) {
         val prevLast = st.lastSyncedBlock
         val batch = source.filter(col(blockCol) > prevLast && col(blockCol) <= latest)
-        pipeline(batch).write.mode("append").parquet(sinkPath)
-        // Count what LANDED (delta vs previous total) rather than
-        // re-running the pipeline; tolerate an empty/absent sink.
-        val landedNow = scala.util.Try(
-          spark.read.parquet(sinkPath).count()).getOrElse(0L)
-        rows += landedNow - landedSoFar
-        landedSoFar = landedNow
+        rows += GraphTuning.observeLongs(pipeline(batch), Seq("n" -> count(lit(1))),
+          _.write.mode("append").parquet(sinkPath))("n")
         // The loop watermark advances to the END of the processed range —
         // an empty or fully-filtered batch must still make progress
         // (deriving it from the sink's max would loop forever on sparse

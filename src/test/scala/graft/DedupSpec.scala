@@ -151,27 +151,6 @@ class DedupSpec extends SparkSpec {
     val n = 32L
     val ids = (1L to n).map(Tuple1(_)).toDF("doc_id")
     val pairs = (1L until n).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    def countJobs(body: => Unit): Int = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        var last = -1
-        var stable = 0
-        val deadline = System.nanoTime() + 5000000000L
-        while (stable < 3 && System.nanoTime() < deadline) {
-          val c = jobs.get()
-          if (c == last) stable += 1 else { stable = 0; last = c }
-          Thread.sleep(100)
-        }
-      } finally spark.sparkContext.removeSparkListener(l)
-      jobs.get()
-    }
     def run(iters: Int): Int = countJobs {
       Dedup.duplicateClusters(ids, "doc_id", pairs, maxIterations = iters,
         localEdgeThreshold = 0L)

@@ -2,7 +2,6 @@ package graft
 
 import graft.operators.{Dedup, Graph, GraphTuning}
 import graft.sources.Tables
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 /** Regime-resolver contract: conf override, cost model, logged
@@ -19,28 +18,6 @@ class GraphTuningSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None    => spark.conf.unset(key)
     }
-  }
-
-  private def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async: wait until the count stops moving
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-        Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
   }
 
   test("resolveNodeLimit: explicit beats conf beats default, with provenance") {

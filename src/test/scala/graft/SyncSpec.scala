@@ -89,6 +89,77 @@ class SyncSpec extends SparkSpec {
     assert(state.get(key).get.lastSyncedBlock == maxId)
   }
 
+  test("no head (empty source, all-null block column): no batch, no write, state unchanged") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("mbempty").toString
+    val sink = s"$dir/sink"
+    val state = new SyncState(s"$dir/state")
+    val committed = SyncStatus(5L, "", 5L, "")
+    state.put("synced", committed)
+    val empty = Tables.events(spark, sfDir).select("event_id", "value")
+      .filter(col("event_id") < 0)
+    val allNull = Seq[(Option[Long], Double)]((None, 1.0), (None, 2.0))
+      .toDF("event_id", "value")
+    for (src <- Seq(empty, allNull); key <- Seq("synced", "fresh")) {
+      val res = MicroBatchRunner.run(spark, src, "event_id", state, key,
+        streamingLag = 0, batchSize = 10, pipeline = identity, sinkPath = sink)
+      assert(res == MicroBatchRunner.BatchResult(Nil, 0, 0))
+    }
+    assert(!Files.exists(java.nio.file.Paths.get(sink)))
+    assert(state.get("synced").contains(committed))
+    assert(state.get("fresh").isEmpty)
+  }
+
+  test("rowsWritten sums to the sink's growth over repeated maxBatches = 1 runs") {
+    val dir = Files.createTempDirectory("mbrows").toString
+    val sink = s"$dir/sink"
+    val events = Tables.events(spark, sfDir).select("event_id", "event_type", "value")
+    val pipeline = (df: org.apache.spark.sql.DataFrame) =>
+      df.filter(col("event_type") === "click").withColumn("tagged", lit(1))
+    // the sink already holds rows another writer landed
+    events.filter(col("event_id") < 100).withColumn("tagged", lit(0))
+      .write.parquet(sink)
+    val before = spark.read.parquet(sink).count()
+    val state = new SyncState(s"$dir/state")
+    var written = 0L
+    var calls = 0
+    var res: MicroBatchRunner.BatchResult = null
+    do {
+      res = MicroBatchRunner.run(spark, events, "event_id", state, "rows",
+        streamingLag = 0, batchSize = 250, pipeline = pipeline,
+        sinkPath = sink, maxBatches = 1)
+      written += res.rowsWritten
+      calls += 1
+    } while (res.batchesRun == 1)
+    assert(calls > 3, s"expected several batches, got ${calls - 1}")
+    assert(before > 0 && written > 0)
+    assert(written == spark.read.parquet(sink).count() - before)
+    assert(written == pipeline(events).count())
+  }
+
+  test("run(maxBatches = 1) costs one head job plus the pipeline's write jobs") {
+    val dir = Files.createTempDirectory("mbjobs").toString
+    val sink = s"$dir/sink"
+    val events = Tables.events(spark, sfDir).select("event_id", "event_type", "value")
+    val pipeline = (df: org.apache.spark.sql.DataFrame) => df.withColumn("tagged", lit(1))
+    val state = new SyncState(s"$dir/state")
+    def runOne() = MicroBatchRunner.run(spark, events, "event_id", state, "jobs",
+      streamingLag = 0, batchSize = 150, pipeline = pipeline, sinkPath = sink,
+      maxBatches = 1)
+    runOne() // the sink now holds rows a recount would have to read
+    val last = state.get("jobs").get.lastSyncedBlock
+    // the next range written on its own: the pipeline's write jobs
+    val writeJobs = countJobs {
+      pipeline(events.filter(col("event_id") > last && col("event_id") <= last + 150))
+        .write.parquet(s"$dir/alone")
+    }
+    var res: MicroBatchRunner.BatchResult = null
+    val runJobs = countJobs { res = runOne() }
+    assert(res.ranges == Seq((last, last + 150)))
+    // any read of the sink (a recount) would add at least one job
+    assert(runJobs == 1 + writeJobs, s"run: $runJobs jobs, the write alone: $writeJobs")
+  }
+
   test("stateful dedup suppresses replayed keys across micro-batches (T5)") {
     import org.apache.spark.sql.streaming.Trigger
     import graft.streaming.StatefulDedup

@@ -14,6 +14,37 @@ class ValidationsSpec extends SparkSpec {
     assert(!Validations.countParity(a, drifted, col("d") === "2024-01-01").passed)
   }
 
+  test("countParity: both sides counted in one job") {
+    val a = Seq(("2024-01-01", 1), ("2024-01-02", 2)).toDF("d", "v")
+    val b = Seq(("2024-01-01", 9), ("2024-01-01", 8)).toDF("d", "v")
+    var r: Validations.CheckResult = null
+    val jobs = countJobs { r = Validations.countParity(a, b, col("d") === "2024-01-01") }
+    assert(r == Validations.CheckResult("count_parity", false, "left=1 right=2"))
+    assert(jobs == 1, s"countParity ran $jobs jobs")
+  }
+
+  test("countParity edge cases: no match, one side empty, null predicate column") {
+    val a = Seq(("2024-01-01", 1), ("2024-01-02", 2)).toDF("d", "v")
+    val b = Seq(("2024-01-01", 9), ("2024-01-02", 8)).toDF("d", "v")
+    // nothing matches on either side: 0 = 0 passes
+    assert(Validations.countParity(a, b, col("d") === "1999-12-31") ==
+      Validations.CheckResult("count_parity", true, "left=0 right=0"))
+    // one side empty fails, whichever side it is
+    val none = b.limit(0)
+    assert(Validations.countParity(a, none, col("d") === "2024-01-01") ==
+      Validations.CheckResult("count_parity", false, "left=1 right=0"))
+    assert(Validations.countParity(none, a, col("d") === "2024-01-01") ==
+      Validations.CheckResult("count_parity", false, "left=0 right=1"))
+    // rows whose predicate is null count on neither side
+    val an = Seq[(Option[String], Int)]((Some("2024-01-01"), 1), (None, 2), (None, 3))
+      .toDF("d", "v")
+    val bn = Seq[(Option[String], Int)]((Some("2024-01-01"), 9), (None, 8)).toDF("d", "v")
+    assert(Validations.countParity(an, bn, col("d") === "2024-01-01") ==
+      Validations.CheckResult("count_parity", true, "left=1 right=1"))
+    assert(Validations.countParity(an, bn, col("d") =!= "2024-01-01") ==
+      Validations.CheckResult("count_parity", true, "left=0 right=0"))
+  }
+
   test("priceSanity: native price, zero-ratio, missing tokens (V2)") {
     val prices = Seq(("BTC", 50000.0), ("ETH", 3000.0), ("DEAD", 0.0))
       .toDF("symbol", "price")
