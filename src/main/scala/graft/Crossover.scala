@@ -252,7 +252,7 @@ object Crossover {
         noAutoBroadcast(Graph.pageRankFixedPoint(wPr, 3,
           broadcastNodeLimit = 0, symmetric = true,
           coBucketEdgeThreshold = Long.MaxValue).count())
-        Graph.pageRankCoBucketed(wPr, 3, tablePrefix = "graft_xw_pr").count()
+        Graph.pageRankCoBucketed(wPr, 3).count()
         wPr.unpersist()
       }
       if (algos("lpa") || algos("cc")) {
@@ -263,13 +263,11 @@ object Crossover {
             coBucketAboveBroadcast = false).count()
           noAutoBroadcast(Graph.labelPropagation(wCo, 3,
             broadcastNodeLimit = 0, coBucketAboveBroadcast = false).count())
-          Graph.labelPropagationCoBucketed(wCo, 3,
-            tablePrefix = "graft_xw_lpa").count()
+          Graph.labelPropagationCoBucketed(wCo, 3).count()
         }
         if (algos("cc")) {
           ccShuffleLoop(wCo)
-          Graph.connectedComponentsCoBucketed(wCo,
-            tablePrefix = "graft_xw_cc").count()
+          Graph.connectedComponentsCoBucketed(wCo).count()
         }
         wCo.unpersist()
       }
@@ -278,8 +276,7 @@ object Crossover {
         Graph.bfsDistances(e, sd, 4, broadcastNodeLimit = Long.MaxValue).count()
         Graph.bfsDistances(e, sd, 4, broadcastNodeLimit = 0,
           coBucketAboveBroadcast = false).count()
-        Graph.bfsDistancesCoBucketed(e, sd, 4,
-          tablePrefix = "graft_xw_bfs").count()
+        Graph.bfsDistancesCoBucketed(e, sd, 4).count()
         e.unpersist(); sd.unpersist()
       }
       if (algos("hits")) {
@@ -287,7 +284,7 @@ object Crossover {
         Graph.hits(e, 2, broadcastNodeLimit = Long.MaxValue).count()
         Graph.hits(e, 2, broadcastNodeLimit = 0,
           coBucketAboveBroadcast = false).count()
-        Graph.hitsCoBucketed(e, 2, tablePrefix = "graft_xw_hits").count()
+        Graph.hitsCoBucketed(e, 2).count()
         e.unpersist()
       }
       if (algos("sssp")) {
@@ -295,15 +292,13 @@ object Crossover {
         Graph.ssspDistances(e, sd, 4, broadcastNodeLimit = Long.MaxValue).count()
         noAutoBroadcast(Graph.ssspDistances(e, sd, 4, broadcastNodeLimit = 0,
           coBucketAboveBroadcast = false).count())
-        Graph.ssspDistancesCoBucketed(e, sd, 4,
-          tablePrefix = "graft_xw_sssp").count()
+        Graph.ssspDistancesCoBucketed(e, sd, 4).count()
         e.unpersist(); sd.unpersist()
       }
       if (algos("kcore")) {
         val e = kcoreEdges(1)
         Graph.kCore(e, 3, 4, broadcastNodeLimit = Long.MaxValue).count()
         noAutoBroadcast(Graph.kCore(e, 3, 4, broadcastNodeLimit = 0).count())
-        Graph.kCoreCoBucketed(e, 3, 4, tablePrefix = "graft_xw_kc").count()
         e.unpersist()
       }
       if (algos("tri")) {
@@ -337,8 +332,8 @@ object Crossover {
             Graph.pageRankFixedPoint(ed, 3, broadcastNodeLimit = 0,
               symmetric = true,
               coBucketEdgeThreshold = Long.MaxValue).count())),
-          "cobucket" -> ((ed: DataFrame) => Graph.pageRankCoBucketed(ed, 3,
-            tablePrefix = s"graft_x_pr_$mult").count())))
+          "cobucket" -> ((ed: DataFrame) =>
+            Graph.pageRankCoBucketed(ed, 3).count())))
         e.unpersist()
       }
       if (algos("cc") || algos("lpa")) {
@@ -352,13 +347,12 @@ object Crossover {
           "shuffle_nobc" -> ((ed: DataFrame) => noAutoBroadcast(
             Graph.labelPropagation(ed, 3, broadcastNodeLimit = 0,
               coBucketAboveBroadcast = false).count())),
-          "cobucket" -> ((ed: DataFrame) => Graph.labelPropagationCoBucketed(
-            ed, 3, tablePrefix = s"graft_x_lpa_$mult").count())))
+          "cobucket" -> ((ed: DataFrame) =>
+            Graph.labelPropagationCoBucketed(ed, 3).count())))
         if (algos("cc")) runGrid(mult, "cc", e, nodes, Seq(
           "shuffle" -> ((ed: DataFrame) => ccShuffleLoop(ed)),
           "cobucket" -> ((ed: DataFrame) =>
-            Graph.connectedComponentsCoBucketed(ed,
-              tablePrefix = s"graft_x_cc_$mult").count())))
+            Graph.connectedComponentsCoBucketed(ed).count())))
         e.unpersist()
       }
       if (algos("bfs")) {
@@ -370,8 +364,8 @@ object Crossover {
             broadcastNodeLimit = Long.MaxValue).count()),
           "shuffle" -> ((ed: DataFrame) => Graph.bfsDistances(ed, sd, 4,
             broadcastNodeLimit = 0, coBucketAboveBroadcast = false).count()),
-          "cobucket" -> ((ed: DataFrame) => Graph.bfsDistancesCoBucketed(
-            ed, sd, 4, tablePrefix = s"graft_x_bfs_$mult").count())))
+          "cobucket" -> ((ed: DataFrame) =>
+            Graph.bfsDistancesCoBucketed(ed, sd, 4).count())))
         e.unpersist(); sd.unpersist()
       }
       if (algos("hits")) {
@@ -382,8 +376,8 @@ object Crossover {
             broadcastNodeLimit = Long.MaxValue).count()),
           "shuffle" -> ((ed: DataFrame) => Graph.hits(ed, 2,
             broadcastNodeLimit = 0, coBucketAboveBroadcast = false).count()),
-          "cobucket" -> ((ed: DataFrame) => Graph.hitsCoBucketed(ed, 2,
-            tablePrefix = s"graft_x_hits_$mult").count())))
+          "cobucket" -> ((ed: DataFrame) =>
+            Graph.hitsCoBucketed(ed, 2).count())))
         e.unpersist()
       }
       if (algos("sssp")) {
@@ -398,8 +392,8 @@ object Crossover {
           "shuffle_nobc" -> ((ed: DataFrame) => noAutoBroadcast(
             Graph.ssspDistances(ed, sd, 4, broadcastNodeLimit = 0,
               coBucketAboveBroadcast = false).count())),
-          "cobucket" -> ((ed: DataFrame) => Graph.ssspDistancesCoBucketed(
-            ed, sd, 4, tablePrefix = s"graft_x_sssp_$mult").count())))
+          "cobucket" -> ((ed: DataFrame) =>
+            Graph.ssspDistancesCoBucketed(ed, sd, 4).count())))
         e.unpersist(); sd.unpersist()
       }
       // Triangle-core family (edgeSupport = the shared engine of
@@ -447,9 +441,7 @@ object Crossover {
           "shuffle" -> ((ed: DataFrame) => Graph.kCore(ed, 3, 4,
             broadcastNodeLimit = 0).count()),
           "shuffle_nobc" -> ((ed: DataFrame) => noAutoBroadcast(
-            Graph.kCore(ed, 3, 4, broadcastNodeLimit = 0).count())),
-          "cobucket" -> ((ed: DataFrame) => Graph.kCoreCoBucketed(ed, 3, 4,
-            tablePrefix = s"graft_x_kc_$mult").count())))
+            Graph.kCore(ed, 3, 4, broadcastNodeLimit = 0).count()))))
         e.unpersist()
       }
     }

@@ -213,16 +213,15 @@ object Scale {
     // layout; each round is a bucketed join (zero Exchange) + one
     // narrow (dst, c) agg — growth must track the layout write, with
     // the per-round cost rank-table-bound
-    def pagerankBucketShape(li: DataFrame, tag: String): Long = {
+    def pagerankBucketShape(li: DataFrame): Long = {
       val pairs = li.select((col("l_orderkey") * 2).as("o"),
         (col("l_partkey") * 2 + 1).as("p")).distinct()
       val edges = pairs.select(col("o").as("src"), col("p").as("dst"))
         .unionByName(pairs.select(col("p").as("src"), col("o").as("dst")))
-      Graph.pageRankCoBucketed(edges, iterations = 3, numBuckets = 32,
-        tablePrefix = s"graft_scale_pr_$tag").count()
+      Graph.pageRankCoBucketed(edges, iterations = 3).count()
     }
-    time("pagerank_cobucket_1x") { pagerankBucketShape(li1, "a") }
-    time(s"pagerank_cobucket_${mult}x") { pagerankBucketShape(liN, "b") }
+    time("pagerank_cobucket_1x") { pagerankBucketShape(li1) }
+    time(s"pagerank_cobucket_${mult}x") { pagerankBucketShape(liN) }
     // cross-source overlap (q97 shape): the self-join runs on distinct
     // (source, gram) pairs — N× corpus with a ~fixed source set must be
     // tokenize/distinct-bound, not join-bound
@@ -616,22 +615,21 @@ object Scale {
     time("heavyhitters_1x") { hhShape(docs1) }
     time(s"heavyhitters_${mult}x") { hhShape(docsN) }
 
-    // co-bucketed crossovers: same shapes as labelprop/bfs/kcore above
+    // co-bucketed crossovers: same shapes as labelprop/bfs above
     // but in the bucketed-table regime — the edge table shuffles once at
     // layout and each round plans ≤ 1 Exchange; growth must track the
     // layout write, with per-round cost state-bound
-    def lpaBucketShape(li: DataFrame, tag: String): Long = {
+    def lpaBucketShape(li: DataFrame): Long = {
       val canon = Graph.coOccurrenceEdges(
         li.select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
         "o", "p", maxGroupSize = 8).distinct()
       Graph.labelPropagationCoBucketed(canon.unionByName(
-        canon.select(col("dst").as("src"), col("src").as("dst"))), 3,
-        numBuckets = 32, tablePrefix = s"graft_scale_lpa_$tag").count()
+        canon.select(col("dst").as("src"), col("src").as("dst"))), 3).count()
     }
-    time("labelprop_cobucket_1x") { lpaBucketShape(li1, "a") }
-    time(s"labelprop_cobucket_${mult}x") { lpaBucketShape(liT, "b") }
+    time("labelprop_cobucket_1x") { lpaBucketShape(li1) }
+    time(s"labelprop_cobucket_${mult}x") { lpaBucketShape(liT) }
 
-    def bfsBucketShape(li: DataFrame, tag: String): Long = {
+    def bfsBucketShape(li: DataFrame): Long = {
       val fwd = li.select((col("l_orderkey") * 2).as("src"),
         (col("l_partkey") * 2 + 1).as("dst"))
       val edges = fwd
@@ -639,11 +637,10 @@ object Scale {
         .distinct()
       val seeds = li.filter(col("l_partkey") % 97 === 0)
         .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-      Graph.bfsDistancesCoBucketed(edges, seeds, maxHops = 4,
-        numBuckets = 32, tablePrefix = s"graft_scale_bfs_$tag").count()
+      Graph.bfsDistancesCoBucketed(edges, seeds, maxHops = 4).count()
     }
-    time("bfs_cobucket_1x") { bfsBucketShape(li1, "a") }
-    time(s"bfs_cobucket_${mult}x") { bfsBucketShape(liT, "b") }
+    time("bfs_cobucket_1x") { bfsBucketShape(li1) }
+    time(s"bfs_cobucket_${mult}x") { bfsBucketShape(liT) }
 
     // connected components (dedup-clustering backbone): the plain
     // shuffle loop (duplicateClusters' distributed regime — inlined so
@@ -688,28 +685,18 @@ object Scale {
     }
     time("cc_shuffleloop_1x") { ccShuffleLoopShape(li1) }
     time(s"cc_shuffleloop_${mult}x") { ccShuffleLoopShape(liT) }
-    def ccBucketShape(li: DataFrame, tag: String): Long =
-      Graph.connectedComponentsCoBucketed(ccEdges(li), numBuckets = 32,
-        tablePrefix = s"graft_scale_cc_$tag").count()
-    time("cc_cobucket_1x") { ccBucketShape(li1, "a") }
-    time(s"cc_cobucket_${mult}x") { ccBucketShape(liT, "b") }
+    def ccBucketShape(li: DataFrame): Long =
+      Graph.connectedComponentsCoBucketed(ccEdges(li)).count()
+    time("cc_cobucket_1x") { ccBucketShape(li1) }
+    time(s"cc_cobucket_${mult}x") { ccBucketShape(liT) }
 
-    def hitsBucketShape(li: DataFrame, tag: String): Long =
+    def hitsBucketShape(li: DataFrame): Long =
       Graph.hitsCoBucketed(
         li.select((col("l_orderkey") * 2).as("src"),
           (col("l_partkey") * 2 + 1).as("dst")).distinct(),
-        iterations = 2, numBuckets = 32,
-        tablePrefix = s"graft_scale_hits_$tag").count()
-    time("hits_cobucket_1x") { hitsBucketShape(li1, "a") }
-    time(s"hits_cobucket_${mult}x") { hitsBucketShape(liT, "b") }
-
-    def kcoreBucketShape(li: DataFrame, tag: String): Long =
-      Graph.kCoreCoBucketed(Graph.coOccurrenceEdges(
-        li.select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-        "o", "p", maxGroupSize = 8).distinct(), k = 3, maxRounds = 4,
-        numBuckets = 32, tablePrefix = s"graft_scale_kc_$tag").count()
-    time("kcore_cobucket_1x") { kcoreBucketShape(li1, "a") }
-    time(s"kcore_cobucket_${mult}x") { kcoreBucketShape(liT, "b") }
+        iterations = 2).count()
+    time("hits_cobucket_1x") { hitsBucketShape(li1) }
+    time(s"hits_cobucket_${mult}x") { hitsBucketShape(liT) }
 
     // KMV set algebra (q141 shape): after the two base scans everything
     // is k-sized array math on one row — N× keys change the estimates,

@@ -31,16 +31,15 @@ object Bucketing {
       .saveAsTable(table)
   }
 
-  /** Resolve a caller-supplied bucket count: n > 0 is taken as-is;
-    * n <= 0 derives from `spark.sql.shuffle.partitions`. The bucket
-    * count bounds the per-round aggregation parallelism of every
-    * co-bucketed loop (each round's one Exchange is pinned to exactly
-    * this many partitions), so on a cluster it must be O(cores) — which
-    * is exactly what shuffle.partitions is already tuned to. A bare
-    * literal default (the old `= 32`) silently capped big-graph rounds
-    * at 32-way parallelism regardless of cluster size. */
-  def resolveBuckets(spark: SparkSession, n: Int): Int =
-    if (n > 0) n else spark.sessionState.conf.numShufflePartitions
+  /** Bucket count of the co-bucketed loops: `spark.sql.shuffle.partitions`.
+    * The bucket count bounds the per-round aggregation parallelism of
+    * every co-bucketed loop (each round's one Exchange is pinned to
+    * exactly this many partitions), so on a cluster it must be O(cores)
+    * — which is exactly what shuffle.partitions is already tuned to. A
+    * bare literal (the old `= 32`) silently capped big-graph rounds at
+    * 32-way parallelism regardless of cluster size. */
+  def resolveBuckets(spark: SparkSession): Int =
+    spark.sessionState.conf.numShufflePartitions
 
   /** Join two co-bucketed tables on the bucket key. The plan contains
     * no Exchange for either side — verified in BucketingSpec. */

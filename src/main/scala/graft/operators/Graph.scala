@@ -5,8 +5,11 @@ import org.apache.spark.sql.functions._
 
 /** Distributed graph algorithms over plain (src, dst) edge DataFrames —
   * the GraphFrames-style layout the reference's TigerGraph projection
-  * uses (SURVEY.md §1.1 "Graph"). Connected components live in
-  * [[Dedup.duplicateClusters]]; this module adds rank propagation.
+  * uses (SURVEY.md §1.1 "Graph"): rank propagation, traversal (BFS,
+  * SSSP, temporal reachability, walks), communities (LPA, k-core, SCC
+  * coloring), triangle kernels, and the co-bucketed big-graph regimes —
+  * including the connected-components loop [[Dedup.duplicateClusters]]
+  * routes to above its edge threshold.
   *
   * PageRank here is FIXED-POINT: ranks are integers in `scale`-ths
   * (parts-per-million by default) and every division is integer floor
@@ -36,6 +39,15 @@ import org.apache.spark.sql.functions._
   * pre-doubling distinct. Re-measure before re-attempting any of them.
   */
 object Graph {
+
+  /** `edges` projected to (src, dst, extra…), every column cast to long. */
+  private def longEdges(edges: DataFrame, extra: String*): DataFrame =
+    edges.select(("src" +: "dst" +: extra).map(c => col(c).cast("long")): _*)
+
+  /** HLL distinct count of column `c`: the stats job behind a regime
+    * decision whose plan bound does not prove the fit. */
+  private def hll(df: DataFrame, c: String): (Long, String) =
+    (df.agg(approx_count_distinct(col(c)).as("n")).first().getLong(0), "hll")
 
   /** @param edges     directed edges (src, dst), both LongType
     * @param iterations number of damped propagation rounds
@@ -131,7 +143,7 @@ object Graph {
     // dst then makes every iteration's groupBy(dst) exchange-free in
     // broadcast mode — the loop body is one broadcast join + one local
     // hash agg per round.
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val ew = longEdges(edges)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .repartition(col("dst")).cache()
     def allNodes: DataFrame =
@@ -147,26 +159,24 @@ object Graph {
       if (provablySmall) (2 * edgeUpper.get._1, edgeUpper.get._2)
       else nodes.map(n => (n.count(), "exact-count")).getOrElse(
         symStats.map(st => (st.getLong(1), "stats-agg-hll")).getOrElse(
-          (ew.agg(approx_count_distinct(col("src")).as("n"))
-            .first().getLong(0), "hll")))
-    val small = GraphTuning.decide(spark, "pageRankFixedPoint",
-      nodeEst, nodeSrc,
-      edgeEstimate = symStats.map(_.getLong(0))
-        .orElse(edgeUpper.map(_._1)).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit).broadcast
+          hll(ew, "src")))
     // Adaptive plan, same idea as the CC edge threshold: the rank table
     // is node-sized; below the limit broadcast it so the edge table
     // NEVER shuffles per iteration. Above it, fall back to shuffle joins
     // — there, co-bucketing edges and ranks by src (io/Bucketing) is the
     // cluster-scale answer. Checkpointed loop tables lose stats, so AQE
     // cannot make this call on its own.
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val d = GraphTuning.decide(spark, "pageRankFixedPoint",
+      nodeEst, nodeSrc,
+      edgeEstimate = symStats.map(_.getLong(0))
+        .orElse(edgeUpper.map(_._1)).getOrElse(-1L),
+      requestedLimit = broadcastNodeLimit)
     val base = scale - dampingScaled
     def damped(sums: DataFrame): DataFrame = {
       // symmetric ⇒ every node has an in-edge ⇒ the contribution sums
       // already cover the whole node set — skip the nodes left-join
       val withBase = nodes match {
-        case Some(n) => n.join(maybeB(sums), Seq("id"), "left")
+        case Some(n) => n.join(d.maybeBroadcast(sums), Seq("id"), "left")
         case None    => sums
       }
       // Per-round eager checkpoint: keeps the plan flat (AQE re-plans a
@@ -189,7 +199,8 @@ object Graph {
     while (it < iterations) {
       it += 1
       ranks = damped(ew
-        .join(maybeB(ranks.withColumnRenamed("id", "src")), Seq("src"))
+        .join(d.maybeBroadcast(ranks.withColumnRenamed("id", "src")),
+          Seq("src"))
         .select(col("dst").as("id"), expr("rank div deg").as("c"))
         .groupBy("id").agg(sum(col("c")).as("s")))
       if (captureAt(it)) captures(it) = ranks
@@ -239,8 +250,7 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
     val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"),
-        col("w").cast("long"))
+    val ew = longEdges(edges, "w")
       .withColumn("wout", sum(col("w")).over(Window.partitionBy("src")))
       .repartition(col("dst")).cache()
     def allNodes: DataFrame =
@@ -258,21 +268,19 @@ object Graph {
       case Some(n) => (n.count(), "exact-count")
       case None => edgeUpper match {
         case Some((u, s)) if u <= limit => (u, s)
-        case _ => (ew.agg(approx_count_distinct(col("src")).as("n"))
-          .first().getLong(0), "hll")
+        case _ => hll(ew, "src")
       }
     }
-    val small = GraphTuning.decide(spark, "weightedPageRank",
+    val d = GraphTuning.decide(spark, "weightedPageRank",
       nodeEst, nodeSrc,
       edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit).broadcast
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+      requestedLimit = broadcastNodeLimit)
     val base = scale - dampingScaled
     def damped(sums: DataFrame): DataFrame = {
       // symmetric ⇒ every node has an in-edge ⇒ the contribution sums
       // already cover the whole node set — skip the nodes left-join
       val withBase = nodes match {
-        case Some(n) => n.join(maybeB(sums), Seq("id"), "left")
+        case Some(n) => n.join(d.maybeBroadcast(sums), Seq("id"), "left")
         case None    => sums
       }
       withBase.select(col("id"), (lit(base) +
@@ -290,7 +298,8 @@ object Graph {
     while (it < iterations) {
       it += 1
       ranks = damped(ew
-        .join(maybeB(ranks.withColumnRenamed("id", "src")), Seq("src"))
+        .join(d.maybeBroadcast(ranks.withColumnRenamed("id", "src")),
+          Seq("src"))
         .select(col("dst").as("id"), expr("(rank * w) div wout").as("c"))
         .groupBy("id").agg(sum(col("c")).as("s")))
     }
@@ -325,24 +334,16 @@ object Graph {
       broadcastNodeLimit: Long = GraphTuning.Auto,
       coBucketAboveBroadcast: Boolean = true): DataFrame = {
     require(iterations >= 1, "HITS needs at least one round")
-    val spark = edges.sparkSession
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val e = longEdges(edges)
     // ns + nd <= 2 · #edges: a plan-stats row bound proving the fit
     // skips the HLL job (no pre-loop stats job for tiny graphs).
-    val edgeUpper = GraphTuning.rowUpperBound(e)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if u <= limit / 2 => (2 * u, s)
-      case _ =>
-        val est = e.agg(
-          approx_count_distinct(col("src")).as("ns"),
-          approx_count_distinct(col("dst")).as("nd")).first()
-        (est.getLong(0) + est.getLong(1), "hll")
+    val d = GraphTuning.resolveRegime("hits", e, broadcastNodeLimit,
+        statePerRow = 2L) {
+      val est = e.agg(
+        approx_count_distinct(col("src")).as("ns"),
+        approx_count_distinct(col("dst")).as("nd")).first()
+      (est.getLong(0) + est.getLong(1), "hll")
     }
-    val d = GraphTuning.decide(spark, "hits", nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    val small = d.broadcast
     // Routing tests FITS, not the broadcast choice (the RegimeDecision
     // contract): a state table that can't fit any executor's budget must
     // leave the broadcast loop for the bucketed one (round-6 crossover
@@ -356,7 +357,6 @@ object Graph {
       return hitsCoBucketed(edges, iterations)
     val eSrc = e.repartition(col("src")).cache()
     val eDst = e.repartition(col("dst")).cache()
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // Round-16 loop-action fusion, HITS edition: auth_k is a pure
     // function of hub_{k-1} and hub_k of auth_k, so the only state the
     // loop must MATERIALIZE is one hub table per round — each round's
@@ -369,10 +369,12 @@ object Graph {
     // non-broadcast regime checkpoints it instead (shuffle-join legs
     // need not reuse — the shared-branch rule).
     def authOf(h: DataFrame): DataFrame = eDst
-      .join(maybeB(h.select(col("id").as("src"), col("hub"))), Seq("src"))
+      .join(d.maybeBroadcast(h.select(col("id").as("src"), col("hub"))),
+        Seq("src"))
       .groupBy(col("dst").as("id")).agg(sum(col("hub")).as("auth"))
     def hubOf(a: DataFrame): DataFrame = eSrc
-      .join(maybeB(a.select(col("id").as("dst"), col("auth"))), Seq("dst"))
+      .join(d.maybeBroadcast(a.select(col("id").as("dst"), col("auth"))),
+        Seq("dst"))
       .groupBy(col("src").as("id")).agg(sum(col("auth")).as("hub"))
     // round 1 authority = in-degree (h₀ is the constant 1) — no join
     var authLazy: DataFrame = eDst.groupBy(col("dst").as("id"))
@@ -382,12 +384,13 @@ object Graph {
       it += 1
       authLazy = authOf(hubOf(authLazy).localCheckpoint(true))
     }
-    val authFinal = if (small) authLazy else authLazy.localCheckpoint(true)
+    val authFinal =
+      if (d.broadcast) authLazy else authLazy.localCheckpoint(true)
     val nodes = eSrc.select(col("src").as("id"))
       .unionByName(eDst.select(col("dst").as("id"))).distinct()
     val out = nodes
-      .join(maybeB(hubOf(authFinal)), Seq("id"), "left")
-      .join(maybeB(authFinal), Seq("id"), "left")
+      .join(d.maybeBroadcast(hubOf(authFinal)), Seq("id"), "left")
+      .join(d.maybeBroadcast(authFinal), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("hub"), lit(0L)).as("hub"),
         coalesce(col("auth"), lit(0L)).as("auth"))
@@ -425,29 +428,17 @@ object Graph {
       broadcastNodeLimit: Long = GraphTuning.Auto,
       coBucketAboveBroadcast: Boolean = true): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val spark = edges.sparkSession
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
     // distinct dst <= #edge rows: a plan-stats bound proving the fit
     // skips the HLL job (no pre-loop stats job for tiny graphs).
-    val edgeUpper = GraphTuning.rowUpperBound(edges)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if u <= limit => (u, s)
-      case _ => (edges.agg(approx_count_distinct(col("dst")).as("n"))
-        .first().getLong(0), "hll")
-    }
-    val d = GraphTuning.decide(spark, "bfsDistances", nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    val small = d.broadcast
+    val d = GraphTuning.resolveRegime("bfsDistances", edges,
+      broadcastNodeLimit)(hll(edges, "dst"))
     // Routing tests FITS (see [[hits]]): non-fitting state leaves for
     // the bucketed loop (round-6 crossover grid: co-bucketed beat the
     // shuffle rounds 2.1x at 36M edges, 1.1x at 72M — CROSSOVER.json);
     // fitting-but-cost-vetoed stays on plain shuffle joins here.
     if (!d.fits && coBucketAboveBroadcast)
       return bfsDistancesCoBucketed(edges, seeds, maxHops)
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("dst")).cache()
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val ew = longEdges(edges).repartition(col("dst")).cache()
     // frontier counts OBSERVED in the checkpoint jobs (round-15 fusion)
     // — the old per-hop isEmpty was one extra job per hop
     val (seed0, nSeed) = GraphTuning.checkpointWithCount(
@@ -464,9 +455,10 @@ object Graph {
       hop += 1
       val visited = frontiers.map(_.select("id")).reduce(_ unionByName _)
       val fn = GraphTuning.checkpointWithCount(ew
-        .join(maybeB(frontier.select(col("id").as("src"))), Seq("src"))
+        .join(d.maybeBroadcast(frontier.select(col("id").as("src"))),
+          Seq("src"))
         .select(col("dst").as("id")).distinct()
-        .join(maybeB(visited), Seq("id"), "left_anti")
+        .join(d.maybeBroadcast(visited), Seq("id"), "left_anti")
         .withColumn("dist", lit(hop.toLong)))
       frontier = fn._1
       nFrontier = fn._2
@@ -476,30 +468,6 @@ object Graph {
     frontiers.reduce(_ unionByName _)
   }
 
-  /** Bit-packed multi-source BFS (the MS-BFS idea — Then et al.,
-    * VLDB'15): exact hop distances from up to 64 landmark seeds in ONE
-    * shared frontier sweep. Per-node state is a single 64-bit mask
-    * (bit b set ⇔ reached by landmark b), so k landmarks cost one
-    * traversal with bit-parallel frontier sharing instead of k
-    * [[bfsDistances]] runs — the landmark-distance feature extractor
-    * (graph embeddings, closeness sketches) at corpus scale. Unlike
-    * [[bfsDistances]] (min distance over ALL seeds), the output keeps
-    * the per-landmark distance. (Reference analog: k-hop entity
-    * exposure queries, dataengineering/tigergraph/v1/queries.py.)
-    *
-    * Scale shape per round (broadcast regime): one broadcast join of
-    * the (node, mask) frontier against the dst-partitioned cached edge
-    * table, one `bit_or` agg on the SAME dst key (exchange-free), and
-    * one reached-set-sized mask merge — the bitmask replaces what would
-    * be a 64× wider (node, src) frontier. Set-bit explosion to
-    * (id, src, dist) rows happens ONCE at the end, against a 64-row
-    * broadcast bit map, never inside the loop. Above the resolved node
-    * limit the loop degrades to per-round shuffle joins (the mask state
-    * is 64× denser than per-source rows, so the broadcast regime
-    * stretches much further than running k separate BFS).
-    *
-    * @param seeds one `id` column, at most 64 distinct ids
-    * @return (id, src, dist) — dist ∈ [0, maxHops] hops from seed `src` */
   /** Landmark harmonic centrality over [[multiSourceBfs]]: each node's
     * Σ 10⁶ div dist(landmark, node) across the ≤ 64 bit-packed seeds
     * (self-distances excluded; unreached landmarks contribute 0 — the
@@ -630,11 +598,34 @@ object Graph {
           .as("jaccard_ppm"))
   }
 
+  /** Bit-packed multi-source BFS (the MS-BFS idea — Then et al.,
+    * VLDB'15): exact hop distances from up to 64 landmark seeds in ONE
+    * shared frontier sweep. Per-node state is a single 64-bit mask
+    * (bit b set ⇔ reached by landmark b), so k landmarks cost one
+    * traversal with bit-parallel frontier sharing instead of k
+    * [[bfsDistances]] runs — the landmark-distance feature extractor
+    * (graph embeddings, closeness sketches) at corpus scale. Unlike
+    * [[bfsDistances]] (min distance over ALL seeds), the output keeps
+    * the per-landmark distance. (Reference analog: k-hop entity
+    * exposure queries, dataengineering/tigergraph/v1/queries.py.)
+    *
+    * Scale shape per round (broadcast regime): one broadcast join of
+    * the (node, mask) frontier against the dst-partitioned cached edge
+    * table, one `bit_or` agg on the SAME dst key (exchange-free), and
+    * one reached-set-sized mask merge — the bitmask replaces what would
+    * be a 64× wider (node, src) frontier. Set-bit explosion to
+    * (id, src, dist) rows happens ONCE at the end, against a 64-row
+    * broadcast bit map, never inside the loop. Above the resolved node
+    * limit the loop degrades to per-round shuffle joins (the mask state
+    * is 64× denser than per-source rows, so the broadcast regime
+    * stretches much further than running k separate BFS).
+    *
+    * @param seeds one `id` column, at most 64 distinct ids
+    * @return (id, src, dist) — dist ∈ [0, maxHops] hops from seed `src` */
   def multiSourceBfs(edges: DataFrame, seeds: DataFrame, maxHops: Int,
       broadcastNodeLimit: Long = GraphTuning.Auto): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
     import org.apache.spark.sql.expressions.Window
-    val spark = edges.sparkSession
     // Bit assignment = rank of the distinct seed ids: a <= 64-row
     // single-partition window, deterministic across engines.
     val (sd, nSeeds) = GraphTuning.checkpointWithCount(
@@ -642,20 +633,9 @@ object Graph {
         .withColumn("bit",
           row_number().over(Window.orderBy(col("id"))) - 1))
     require(nSeeds <= 64, "multiSourceBfs packs at most 64 seeds")
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val edgeUpper = GraphTuning.rowUpperBound(edges)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if u <= limit => (u, s)
-      case _ => (edges.agg(approx_count_distinct(col("dst")).as("n"))
-        .first().getLong(0), "hll")
-    }
-    val d = GraphTuning.decide(spark, "multiSourceBfs", nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    val small = d.broadcast
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("dst")).cache()
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val d = GraphTuning.resolveRegime("multiSourceBfs", edges,
+      broadcastNodeLimit)(hll(edges, "dst"))
+    val ew = longEdges(edges).repartition(col("dst")).cache()
     // frontier counts observed in the checkpoint jobs (round-15 fusion)
     val f0 = sd.select(col("id"),
         expr("shiftleft(CAST(1 AS BIGINT), bit)").as("bits"),
@@ -674,11 +654,11 @@ object Graph {
         .reduce(_ unionByName _)
         .groupBy("id").agg(expr("bit_or(bits)").as("seen"))
       val gathered = ew
-        .join(maybeB(frontier.select(col("id").as("src"), col("bits"))),
-          Seq("src"))
+        .join(d.maybeBroadcast(
+          frontier.select(col("id").as("src"), col("bits"))), Seq("src"))
         .groupBy(col("dst").as("id")).agg(expr("bit_or(bits)").as("g"))
       val fn = GraphTuning.checkpointWithCount(gathered
-        .join(maybeB(seen), Seq("id"), "left")
+        .join(d.maybeBroadcast(seen), Seq("id"), "left")
         .select(col("id"), col("g")
           .bitwiseAND(bitwise_not(coalesce(col("seen"), lit(0L))))
           .as("bits"))
@@ -712,16 +692,13 @@ object Graph {
     *
     * Contract: symmetric edge set (u→v ⇒ v→u), same as
     * `pageRankFixedPoint(symmetric = true)`; results are bit-identical
-    * to it (same integer fixed-point math). Tables are created under
-    * `tablePrefix` and dropped before returning; the returned frame is
-    * materialized first.
+    * to it (same integer fixed-point math). Work tables live for the
+    * call only ([[WorkTables]]); the returned frame is materialized.
     */
   def pageRankCoBucketed(edges: DataFrame, iterations: Int,
-      numBuckets: Int = 0, scale: Long = 1000000L,
-      dampingScaled: Long = 850000L,
-      tablePrefix: String = "graft_pr"): DataFrame =
+      scale: Long = 1000000L, dampingScaled: Long = 850000L): DataFrame =
     pageRankCoBucketedIterates(edges, iterations, Set(iterations),
-      numBuckets, scale, dampingScaled, tablePrefix)(iterations)
+      scale, dampingScaled)(iterations)
 
   /** Iterate-capturing form of [[pageRankCoBucketed]] (the co-bucketed
     * leg of [[pageRankIterates]]): every round's rank table already
@@ -729,49 +706,34 @@ object Graph {
     * bucketed-table read + localCheckpoint before the `finally` drops
     * the work tables. Same single-Exchange-per-round layout. */
   def pageRankCoBucketedIterates(edges: DataFrame, iterations: Int,
-      captureAt: Set[Int], numBuckets: Int = 0, scale: Long = 1000000L,
-      dampingScaled: Long = 850000L,
-      tablePrefix: String = "graft_pr"): Map[Int, DataFrame] = {
+      captureAt: Set[Int], scale: Long = 1000000L,
+      dampingScaled: Long = 850000L): Map[Int, DataFrame] = {
     import org.apache.spark.sql.expressions.Window
     require(iterations >= 1, "co-bucketed loop needs >= 1 iteration")
-    val spark = edges.sparkSession
-    // numBuckets <= 0 derives from shuffle.partitions: the bucket count
-    // pins every round's Exchange width, so it must scale with cores
-    // (Bucketing.resolveBuckets), not sit at a literal.
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    val edgesTbl = s"${pfx}_edges"
-    def rankTbl(i: Int) = s"${pfx}_ranks_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      // Layout: ONE shuffle on src fuses the degree window and the bucket
-      // placement; every later round reads this table in place.
-      val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-      wt.write(ew, edgesTbl, Seq("src"))
-      val base = scale - dampingScaled
+    // Layout: ONE shuffle on src fuses the degree window and the bucket
+    // placement; every later round reads this table in place.
+    val layout = longEdges(edges)
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
+    WorkTables.runAll("pr", layout) { wt =>
+      def rankTbl(i: Int) = s"ranks_$i"
       // Round 1 propagates the constant flat rank — no join needed.
       wt.write(
-        spark.table(edgesTbl)
+        wt.table("edges")
           .select(col("dst"), expr(s"$scale div deg").as("c"))
           .groupBy("dst").agg(sum(col("c")).as("s"))
-          .select(col("dst").as("src"),
-            (lit(base) + expr(s"($dampingScaled * s) div $scale")).as("rank")),
-        rankTbl(1), Seq("src"))
+          .select(col("dst").as("src"), (lit(scale - dampingScaled) +
+            expr(s"($dampingScaled * s) div $scale")).as("rank")),
+        rankTbl(1), "src")
       var it = 1
       while (it < iterations) {
         it += 1
-        wt.write(
-          coBucketedRound(spark, edgesTbl, rankTbl(it - 1), scale, dampingScaled),
-          rankTbl(it), Seq("src"))
+        wt.write(coBucketedRound(wt.spark, wt.name("edges"),
+          wt.name(rankTbl(it - 1)), scale, dampingScaled), rankTbl(it), "src")
       }
-      // Captures materialize (eager localCheckpoint) BEFORE the finally
-      // drops the bucketed work tables they read from.
       (captureAt + it).filter(r => r >= 1 && r <= it).map { r =>
-        r -> spark.table(rankTbl(r))
-          .select(col("src").as("id"), col("rank")).localCheckpoint(true)
+        r -> wt.table(rankTbl(r)).select(col("src").as("id"), col("rank"))
       }.toMap
-    } finally wt.dropAll()
+    }
   }
 
   /** One co-bucketed propagation round (exposed for plan inspection):
@@ -786,21 +748,25 @@ object Graph {
         (lit(scale - dampingScaled) + expr(s"($dampingScaled * s) div $scale"))
           .as("rank"))
 
-  private def dropTables(spark: SparkSession, tables: String*): Unit =
-    tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-
-  /** Work-table registry for a co-bucketed loop: every bucketed write is
-    * recorded so `dropAll` (called from the loop's `finally`) removes
-    * exactly what was created — a mid-round failure can no longer leak
-    * catalog entries or warehouse files. `unique` appends a
-    * per-invocation random suffix to the caller's prefix so concurrent
-    * invocations (two jobs on one metastore, two threads in one session)
-    * never overwrite each other's intermediate tables. */
-  private class WorkTables(spark: SparkSession, numBuckets: Int) {
+  /** The scaffold every co-bucketed driver runs in. Work tables are
+    * named `graft_<kernel>_<random>_<table>`, so concurrent calls (two
+    * jobs on one metastore, two threads in one session) never share a
+    * table, and are bucketed into `numBuckets` = the session's shuffle
+    * parallelism ([[graft.io.Bucketing.resolveBuckets]]). Every write is
+    * recorded, and [[WorkTables.runAll]] drops exactly the recorded
+    * tables when the call ends, so a failed round cannot leak catalog
+    * entries or warehouse files. */
+  private final class WorkTables(val spark: SparkSession, kernel: String) {
+    val numBuckets: Int = graft.io.Bucketing.resolveBuckets(spark)
+    private val prefix = s"graft_${kernel}_" +
+      java.util.UUID.randomUUID().toString.takeWhile(_ != '-')
     private val created = scala.collection.mutable.ArrayBuffer[String]()
-    def write(df: DataFrame, table: String, bucketCols: Seq[String]): Unit = {
-      graft.io.Bucketing.writeBucketed(df, table, bucketCols, numBuckets)
-      created += table
+    def name(table: String): String = s"${prefix}_$table"
+    def table(table: String): DataFrame = spark.table(name(table))
+    def write(df: DataFrame, table: String, bucketCol: String): Unit = {
+      graft.io.Bucketing.writeBucketed(df, name(table), Seq(bucketCol),
+        numBuckets)
+      created += name(table)
     }
     /** [[write]] with a long-valued aggregate OBSERVED during the
       * bucketed-write job itself (round-15 loop-action fusion, the
@@ -808,16 +774,32 @@ object Graph {
       * co-bucketed regimes): the loops' convergence/frontier counts
       * previously RE-READ the just-written table — at 100 TB a full
       * per-round pass over the round's label/frontier table. */
-    def writeObserving(df: DataFrame, table: String,
-        bucketCols: Seq[String],
+    def writeObserving(df: DataFrame, table: String, bucketCol: String,
         metric: org.apache.spark.sql.Column): Long =
       GraphTuning.observeLongs(df, Seq("n" -> coalesce(metric, lit(0L))),
-        write(_, table, bucketCols))("n")
-    def dropAll(): Unit = dropTables(spark, created.toSeq: _*)
+        write(_, table, bucketCol))("n")
+    private def dropAll(): Unit =
+      created.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
-  private def unique(prefix: String): String =
-    s"${prefix}_${java.util.UUID.randomUUID().toString.takeWhile(_ != '-')}"
+  private object WorkTables {
+    /** Writes `layout` as work table `edges` bucketed by `bucketCol`,
+      * runs `loop`, and materializes (eager localCheckpoint) each frame
+      * it returns BEFORE the work tables those frames read are dropped. */
+    def runAll[K](kernel: String, layout: DataFrame, bucketCol: String = "src")
+        (loop: WorkTables => Map[K, DataFrame]): Map[K, DataFrame] = {
+      val wt = new WorkTables(layout.sparkSession, kernel)
+      try {
+        wt.write(layout, "edges", bucketCol)
+        loop(wt).map { case (k, df) => k -> df.localCheckpoint(true) }
+      } finally wt.dropAll()
+    }
+
+    /** [[runAll]] for a loop with one result. */
+    def run(kernel: String, layout: DataFrame, bucketCol: String = "src")
+        (loop: WorkTables => DataFrame): DataFrame =
+      runAll(kernel, layout, bucketCol)(wt => Map(0 -> loop(wt)))(0)
+  }
 
   /** One co-bucketed LPA round (exposed for plan inspection): the
     * edges⋈labels join is bucket-to-bucket (no Exchange); the single
@@ -845,36 +827,23 @@ object Graph {
     * Results are bit-identical to [[labelPropagation]] (same sync-LPA
     * integer math; parity-tested). Contract: symmetric edge set, like
     * the broadcast variant. */
-  def labelPropagationCoBucketed(edges: DataFrame, iterations: Int,
-      numBuckets: Int = 0, tablePrefix: String = "graft_lpa"): DataFrame = {
+  def labelPropagationCoBucketed(edges: DataFrame,
+      iterations: Int): DataFrame = {
     require(iterations >= 1, "co-bucketed loop needs >= 1 iteration")
-    val spark = edges.sparkSession
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    val edgesTbl = s"${pfx}_edges"
-    def lblTbl(i: Int) = s"${pfx}_labels_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      wt.write(
-        edges.select(col("src").cast("long"), col("dst").cast("long")),
-        edgesTbl, Seq("src"))
+    WorkTables.run("lpa", longEdges(edges)) { wt =>
+      def lblTbl(i: Int) = s"labels_$i"
       // initial labels: own id; distinct-on-src is a bucket-aligned agg
       // (zero Exchange) over the just-written edge table
-      wt.write(
-        spark.table(edgesTbl).select(col("src")).distinct()
-          .withColumn("lbl", col("src")),
-        lblTbl(0), Seq("src"))
+      wt.write(wt.table("edges").select(col("src")).distinct()
+        .withColumn("lbl", col("src")), lblTbl(0), "src")
       var it = 0
       while (it < iterations) {
         it += 1
-        wt.write(
-          lpaCoBucketedRound(spark, edgesTbl, lblTbl(it - 1), nb),
-          lblTbl(it), Seq("src"))
+        wt.write(lpaCoBucketedRound(wt.spark, wt.name("edges"),
+          wt.name(lblTbl(it - 1)), wt.numBuckets), lblTbl(it), "src")
       }
-      spark.table(lblTbl(it))
-        .select(col("src").as("id"), col("lbl").as("label"))
-        .localCheckpoint(true)
-    } finally wt.dropAll()
+      wt.table(lblTbl(it)).select(col("src").as("id"), col("lbl").as("label"))
+    }
   }
 
   /** One co-bucketed HITS half-round (exposed for plan inspection):
@@ -899,52 +868,36 @@ object Graph {
     * never re-shuffle. Round-1 authority (= in-degree) is a
     * bucket-aligned agg with zero Exchange. Bit-identical to [[hits]]
     * (same unnormalized integer fixed point; parity-tested). */
-  def hitsCoBucketed(edges: DataFrame, iterations: Int,
-      numBuckets: Int = 0, tablePrefix: String = "graft_hits"): DataFrame = {
+  def hitsCoBucketed(edges: DataFrame, iterations: Int): DataFrame = {
     require(iterations >= 1, "HITS needs at least one round")
-    val spark = edges.sparkSession
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    val eSrcTbl = s"${pfx}_esrc"
-    val eDstTbl = s"${pfx}_edst"
-    def authTbl(i: Int) = s"${pfx}_auth_$i"
-    def hubTbl(i: Int) = s"${pfx}_hub_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      wt.write(
-        edges.select(col("src").cast("long"), col("dst").cast("long")),
-        eSrcTbl, Seq("src"))
-      wt.write(spark.table(eSrcTbl), eDstTbl, Seq("dst"))
-      wt.write(
-        spark.table(eDstTbl).groupBy(col("dst").as("id"))
-          .agg(count(lit(1)).as("auth")),
-        authTbl(1), Seq("id"))
-      wt.write(
-        hitsCoBucketedHalfRound(spark, eDstTbl, authTbl(1), "dst", "src",
-          "auth", "hub"),
-        hubTbl(1), Seq("id"))
+    WorkTables.run("hits", longEdges(edges)) { wt =>
+      def authTbl(i: Int) = s"auth_$i"
+      def hubTbl(i: Int) = s"hub_$i"
+      def half(edgesTbl: String, scoreTbl: String, joinKey: String,
+          aggKey: String, scoreCol: String, outCol: String): DataFrame =
+        hitsCoBucketedHalfRound(wt.spark, wt.name(edgesTbl),
+          wt.name(scoreTbl), joinKey, aggKey, scoreCol, outCol)
+      wt.write(wt.table("edges"), "edst", "dst")
+      wt.write(wt.table("edst").groupBy(col("dst").as("id"))
+        .agg(count(lit(1)).as("auth")), authTbl(1), "id")
+      wt.write(half("edst", authTbl(1), "dst", "src", "auth", "hub"),
+        hubTbl(1), "id")
       var it = 1
       while (it < iterations) {
         it += 1
-        wt.write(
-          hitsCoBucketedHalfRound(spark, eSrcTbl, hubTbl(it - 1), "src", "dst",
-            "hub", "auth"),
-          authTbl(it), Seq("id"))
-        wt.write(
-          hitsCoBucketedHalfRound(spark, eDstTbl, authTbl(it), "dst", "src",
-            "auth", "hub"),
-          hubTbl(it), Seq("id"))
+        wt.write(half("edges", hubTbl(it - 1), "src", "dst", "hub", "auth"),
+          authTbl(it), "id")
+        wt.write(half("edst", authTbl(it), "dst", "src", "auth", "hub"),
+          hubTbl(it), "id")
       }
-      val nodes = spark.table(eSrcTbl).select(col("src").as("id"))
-        .unionByName(spark.table(eDstTbl).select(col("dst").as("id"))).distinct()
-      nodes
-        .join(spark.table(hubTbl(it)), Seq("id"), "left")
-        .join(spark.table(authTbl(it)), Seq("id"), "left")
+      wt.table("edges").select(col("src").as("id"))
+        .unionByName(wt.table("edst").select(col("dst").as("id"))).distinct()
+        .join(wt.table(hubTbl(it)), Seq("id"), "left")
+        .join(wt.table(authTbl(it)), Seq("id"), "left")
         .select(col("id"),
           coalesce(col("hub"), lit(0L)).as("hub"),
           coalesce(col("auth"), lit(0L)).as("auth"))
-        .localCheckpoint(true)
-    } finally wt.dropAll()
+    }
   }
 
   /** One co-bucketed hash-min + pointer-jump CC round (exposed for plan
@@ -988,38 +941,24 @@ object Graph {
     * @return (id, label) for every node appearing as a src; label is the
     *         component's minimum id */
   def connectedComponentsCoBucketed(edges: DataFrame,
-      maxIterations: Int = 20, numBuckets: Int = 0,
-      tablePrefix: String = "graft_cc"): DataFrame = {
-    val spark = edges.sparkSession
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    val edgesTbl = s"${pfx}_edges"
-    def lblTbl(i: Int) = s"${pfx}_labels_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      wt.write(
-        edges.select(col("src").cast("long"), col("dst").cast("long")),
-        edgesTbl, Seq("src"))
-      wt.write(
-        spark.table(edgesTbl).select(col("src").as("id")).distinct()
-          .withColumn("label", col("id")),
-        lblTbl(0), Seq("id"))
+      maxIterations: Int = 20): DataFrame =
+    WorkTables.run("cc", longEdges(edges)) { wt =>
+      def lblTbl(i: Int) = s"labels_$i"
+      wt.write(wt.table("edges").select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")), lblTbl(0), "id")
       var converged = false
       var it = 0
       while (!converged && it < maxIterations) {
         it += 1
         // changed-row count observed in the bucketed write itself —
         // the old convergence check re-read the whole label table
-        val nChanged = wt.writeObserving(
-          ccCoBucketedRound(spark, edgesTbl, lblTbl(it - 1)),
-          lblTbl(it), Seq("id"),
-          sum(when(col("__changed"), 1L).otherwise(0L)))
+        val nChanged = wt.writeObserving(ccCoBucketedRound(wt.spark,
+            wt.name("edges"), wt.name(lblTbl(it - 1))),
+          lblTbl(it), "id", sum(when(col("__changed"), 1L).otherwise(0L)))
         converged = nChanged == 0
       }
-      spark.table(lblTbl(it)).select(col("id"), col("label"))
-        .localCheckpoint(true)
-    } finally wt.dropAll()
-  }
+      wt.table(lblTbl(it)).select(col("id"), col("label"))
+    }
 
   /** One co-bucketed BFS expansion round (exposed for plan inspection):
     * bucket join against the frontier [0 Exchange] → repartition+distinct
@@ -1048,41 +987,30 @@ object Graph {
     * the edge table never re-shuffles. Results equal
     * [[bfsDistances]] (parity-tested). */
   def bfsDistancesCoBucketed(edges: DataFrame, seeds: DataFrame,
-      maxHops: Int, numBuckets: Int = 0,
-      tablePrefix: String = "graft_bfs"): DataFrame = {
+      maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    val spark = edges.sparkSession
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    val edgesTbl = s"${pfx}_edges"
-    def frontTbl(i: Int) = s"${pfx}_frontier_$i"
-    def visTbl(i: Int) = s"${pfx}_visited_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      wt.write(
-        edges.select(col("src").cast("long"), col("dst").cast("long")),
-        edgesTbl, Seq("src"))
-      val seed0 = seeds.select(col("id").cast("long").as("src"),
-        lit(0L).as("dist")).distinct()
+    WorkTables.run("bfs", longEdges(edges)) { wt =>
+      def frontTbl(i: Int) = s"frontier_$i"
+      def visTbl(i: Int) = s"visited_$i"
       // frontier sizes observed in the bucketed writes themselves —
       // the old loop re-read each just-written frontier table to count
-      var frontierSize =
-        wt.writeObserving(seed0, frontTbl(0), Seq("src"), count(lit(1)))
-      wt.write(spark.table(frontTbl(0)), visTbl(0), Seq("src"))
+      var frontierSize = wt.writeObserving(
+        seeds.select(col("id").cast("long").as("src"), lit(0L).as("dist"))
+          .distinct(), frontTbl(0), "src", count(lit(1)))
+      wt.write(wt.table(frontTbl(0)), visTbl(0), "src")
       var hop = 0
       while (hop < maxHops && frontierSize > 0) {
         hop += 1
         frontierSize = wt.writeObserving(
-          bfsCoBucketedRound(spark, edgesTbl, frontTbl(hop - 1), visTbl(hop - 1),
-            nb, hop),
-          frontTbl(hop), Seq("src"), count(lit(1)))
-        wt.write(
-          spark.table(visTbl(hop - 1)).unionByName(spark.table(frontTbl(hop))),
-          visTbl(hop), Seq("src"))
+          bfsCoBucketedRound(wt.spark, wt.name("edges"),
+            wt.name(frontTbl(hop - 1)), wt.name(visTbl(hop - 1)),
+            wt.numBuckets, hop),
+          frontTbl(hop), "src", count(lit(1)))
+        wt.write(wt.table(visTbl(hop - 1)).unionByName(wt.table(frontTbl(hop))),
+          visTbl(hop), "src")
       }
-      spark.table(visTbl(hop))
-        .select(col("src").as("id"), col("dist")).localCheckpoint(true)
-    } finally wt.dropAll()
+      wt.table(visTbl(hop)).select(col("src").as("id"), col("dist"))
+    }
   }
 
   /** Multi-source WEIGHTED shortest paths — bounded-round Bellman-Ford
@@ -1126,32 +1054,17 @@ object Graph {
       coBucketAboveBroadcast: Boolean = true,
       coBucketEdgeThreshold: Long = 50000000L): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val spark = edges.sparkSession
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val edgeUpper = GraphTuning.rowUpperBound(edges)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if u <= limit => (u, s)
-      case _ => (edges.agg(approx_count_distinct(col("dst")).as("n"))
-        .first().getLong(0), "hll")
-    }
-    val d = GraphTuning.decide(spark, "ssspDistances", nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    val small = d.broadcast
-    if (!d.fits && coBucketAboveBroadcast) {
-      // the plan bound can prove the edge count BELOW the threshold for
-      // free; otherwise one exact count (the non-fitting case is a big
-      // graph — the same stats-job class as the PR route)
-      val m = edgeUpper match {
-        case Some((u, _)) if u < coBucketEdgeThreshold => -1L
-        case _ => edges.count()
-      }
-      if (m >= coBucketEdgeThreshold)
-        return ssspDistancesCoBucketed(edges, seeds, maxRounds)
-    }
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("w").cast("long")).repartition(col("dst")).cache()
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val d = GraphTuning.resolveRegime("ssspDistances", edges,
+      broadcastNodeLimit)(hll(edges, "dst"))
+    // the plan bound (the decision's edge estimate) can prove the edge
+    // count BELOW the threshold for free; otherwise one exact count (the
+    // non-fitting case is a big graph — the same stats-job class as the
+    // PR route)
+    if (!d.fits && coBucketAboveBroadcast &&
+        (d.edgeEstimate < 0 || d.edgeEstimate >= coBucketEdgeThreshold) &&
+        edges.count() >= coBucketEdgeThreshold)
+      return ssspDistancesCoBucketed(edges, seeds, maxRounds)
+    val ew = longEdges(edges, "w").repartition(col("dst")).cache()
     // frontier counts observed in the checkpoint jobs (round-15
     // fusion) — the old loop paid TWO isEmpty jobs per round (the
     // while guard plus the best-rewrite guard)
@@ -1162,12 +1075,13 @@ object Graph {
     while (round < maxRounds && nFrontier > 0) {
       round += 1
       val cand = ew
-        .join(maybeB(frontier.select(col("id").as("src"),
+        .join(d.maybeBroadcast(frontier.select(col("id").as("src"),
           col("dist").as("fd"))), Seq("src"))
         .groupBy(col("dst").as("id"))
         .agg(min(col("fd") + col("w")).as("cand"))
       val fn = GraphTuning.checkpointWithCount(cand
-        .join(maybeB(best.withColumnRenamed("dist", "old")), Seq("id"), "left")
+        .join(d.maybeBroadcast(best.withColumnRenamed("dist", "old")),
+          Seq("id"), "left")
         .filter(col("old").isNull || col("cand") < col("old"))
         .select(col("id"), col("cand").as("dist")))
       frontier = fn._1
@@ -1182,7 +1096,8 @@ object Graph {
       // spread — the checkpoint write dominates at this size); kept
       // for the structural zero-shuffle edge when `best` is large.
       if (nFrontier > 0)
-        best = best.join(maybeB(frontier.select("id")), Seq("id"), "left_anti")
+        best = best
+          .join(d.maybeBroadcast(frontier.select("id")), Seq("id"), "left_anti")
           .unionByName(frontier)
           .localCheckpoint(true)
     }
@@ -1218,21 +1133,9 @@ object Graph {
       maxRounds: Int,
       broadcastNodeLimit: Long = GraphTuning.Auto): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val spark = edges.sparkSession
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val edgeUpper = GraphTuning.rowUpperBound(edges)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if u <= limit => (u, s)
-      case _ => (edges.agg(approx_count_distinct(col("dst")).as("n"))
-        .first().getLong(0), "hll")
-    }
-    val d = GraphTuning.decide(spark, "temporalEarliestArrival", nodeEst,
-      nodeSrc, edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    val small = d.broadcast
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"),
-      col("t").cast("long")).repartition(col("dst")).cache()
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val d = GraphTuning.resolveRegime("temporalEarliestArrival", edges,
+      broadcastNodeLimit)(hll(edges, "dst"))
+    val ew = longEdges(edges, "t").repartition(col("dst")).cache()
     // frontier counts observed in the checkpoint jobs (round-15 fusion)
     var (best, nFrontier) = GraphTuning.checkpointWithCount(
       seeds.select(col("id").cast("long"), lit(-1L).as("arr")).distinct())
@@ -1241,18 +1144,20 @@ object Graph {
     while (round < maxRounds && nFrontier > 0) {
       round += 1
       val cand = ew
-        .join(maybeB(frontier.select(col("id").as("src"),
+        .join(d.maybeBroadcast(frontier.select(col("id").as("src"),
           col("arr").as("fa"))), Seq("src"))
         .filter(col("t") > col("fa"))
         .groupBy(col("dst").as("id")).agg(min(col("t")).as("cand"))
       val fn = GraphTuning.checkpointWithCount(cand
-        .join(maybeB(best.withColumnRenamed("arr", "old")), Seq("id"), "left")
+        .join(d.maybeBroadcast(best.withColumnRenamed("arr", "old")),
+          Seq("id"), "left")
         .filter(col("old").isNull || col("cand") < col("old"))
         .select(col("id"), col("cand").as("arr")))
       frontier = fn._1
       nFrontier = fn._2
       if (nFrontier > 0)
-        best = best.join(maybeB(frontier.select("id")), Seq("id"), "left_anti")
+        best = best
+          .join(d.maybeBroadcast(frontier.select("id")), Seq("id"), "left_anti")
           .unionByName(frontier)
           .localCheckpoint(true)
     }
@@ -1290,46 +1195,34 @@ object Graph {
     * table never re-shuffles; best is rewritten per round (O(reached)
     * rows). Results equal [[ssspDistances]] (parity-tested). */
   def ssspDistancesCoBucketed(edges: DataFrame, seeds: DataFrame,
-      maxRounds: Int, numBuckets: Int = 0,
-      tablePrefix: String = "graft_sssp"): DataFrame = {
+      maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val spark = edges.sparkSession
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    val edgesTbl = s"${pfx}_edges"
-    def frontTbl(i: Int) = s"${pfx}_frontier_$i"
-    def bestTbl(i: Int) = s"${pfx}_best_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      wt.write(
-        edges.select(col("src").cast("long"), col("dst").cast("long"),
-          col("w").cast("long")),
-        edgesTbl, Seq("src"))
-      val seed0 = seeds.select(col("id").cast("long").as("src"),
-        lit(0L).as("dist")).distinct()
+    WorkTables.run("sssp", longEdges(edges, "w")) { wt =>
+      def frontTbl(i: Int) = s"frontier_$i"
+      def bestTbl(i: Int) = s"best_$i"
       // frontier sizes observed in the bucketed writes themselves —
       // the old loop re-read each just-written frontier table to count
-      var frontierSize =
-        wt.writeObserving(seed0, frontTbl(0), Seq("src"), count(lit(1)))
-      wt.write(spark.table(frontTbl(0)), bestTbl(0), Seq("src"))
+      var frontierSize = wt.writeObserving(
+        seeds.select(col("id").cast("long").as("src"), lit(0L).as("dist"))
+          .distinct(), frontTbl(0), "src", count(lit(1)))
+      wt.write(wt.table(frontTbl(0)), bestTbl(0), "src")
       var round = 0
       while (round < maxRounds && frontierSize > 0) {
         round += 1
         frontierSize = wt.writeObserving(
-          ssspCoBucketedRound(spark, edgesTbl, frontTbl(round - 1),
-            bestTbl(round - 1), nb),
-          frontTbl(round), Seq("src"), count(lit(1)))
+          ssspCoBucketedRound(wt.spark, wt.name("edges"),
+            wt.name(frontTbl(round - 1)), wt.name(bestTbl(round - 1)),
+            wt.numBuckets),
+          frontTbl(round), "src", count(lit(1)))
         wt.write(
-          spark.table(bestTbl(round - 1))
-            .join(spark.table(frontTbl(round)).withColumnRenamed("dist", "nd"),
+          wt.table(bestTbl(round - 1))
+            .join(wt.table(frontTbl(round)).withColumnRenamed("dist", "nd"),
               Seq("src"), "full_outer")
-            .select(col("src"),
-              coalesce(col("nd"), col("dist")).as("dist")),
-          bestTbl(round), Seq("src"))
+            .select(col("src"), coalesce(col("nd"), col("dist")).as("dist")),
+          bestTbl(round), "src")
       }
-      spark.table(bestTbl(round))
-        .select(col("src").as("id"), col("dist")).localCheckpoint(true)
-    } finally wt.dropAll()
+      wt.table(bestTbl(round)).select(col("src").as("id"), col("dist"))
+    }
   }
 
   /** DETERMINISTIC random walks — the node2vec/DeepWalk corpus-prep
@@ -1358,23 +1251,15 @@ object Graph {
   def deterministicWalks(edges: DataFrame, seeds: DataFrame, steps: Int,
       broadcastNodeLimit: Long = GraphTuning.Auto): DataFrame = {
     require(steps >= 0, "steps must be >= 0")
-    val spark = edges.sparkSession
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    // the plan bound only counts when it PROVES the fit — a unioned /
+    // the seed bound only counts when it PROVES the fit — a unioned /
     // filtered seed source can over-estimate by orders of magnitude,
     // and mis-demoting a tiny walk set costs a shuffle join per step
     // (the BFS discipline: bound-or-stats-job, never bound-or-guess)
-    val walkUpper = GraphTuning.rowUpperBound(seeds)
-    val (walkEst, walkSrc) = walkUpper match {
-      case Some((u, s)) if u <= limit => (u, s)
-      case _ => (seeds.select(col("id")).distinct().count(), "exact")
+    val d = GraphTuning.resolveRegime("deterministicWalks", edges,
+        broadcastNodeLimit, stateRows = Some(seeds)) {
+      (seeds.select(col("id")).distinct().count(), "exact")
     }
-    val d = GraphTuning.decide(spark, "deterministicWalks", walkEst, walkSrc,
-      edgeEstimate = GraphTuning.rowUpperBound(edges).map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    def maybeB(df: DataFrame): DataFrame = if (d.broadcast) broadcast(df) else df
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("src")).cache()
+    val ew = longEdges(edges).repartition(col("src")).cache()
     // walk-state counts observed in the checkpoint jobs (round-15
     // fusion) — the old per-step isEmpty was one extra job per step
     val (seed0, nSeed) = GraphTuning.checkpointWithCount(
@@ -1391,7 +1276,8 @@ object Graph {
         lit(s":$t:"), col("dst").cast("string")).cast("binary")), 1, 8),
         16, 10).cast("bigint")
       val cn = GraphTuning.checkpointWithCount(ew
-        .join(maybeB(cur.select(col("node").as("src"), col("walk"))), Seq("src"))
+        .join(d.maybeBroadcast(cur.select(col("node").as("src"), col("walk"))),
+          Seq("src"))
         .select(col("walk"), col("dst"), h.as("h"))
         .groupBy("walk").agg(min(struct(col("h"), col("dst"))).as("m"))
         .select(col("walk"), col("m.dst").as("node")))
@@ -1402,6 +1288,19 @@ object Graph {
     ew.unpersist(blocking = false)
     out.reduce(_ unionByName _).select("walk", "step", "node")
   }
+
+  /** [[walkCooccurrence]]'s association score over columns
+    * (c_ab, t, ca, cb, p): `c_ab·T²·10⁶ div (c_a·c_b·P)` with BOTH
+    * products in DECIMAL(38,0) (the q227/q229 discipline) — the long
+    * spelling wraps SILENTLY once c_ab·T²·10⁶ passes 2⁶³ (at T = 3·10⁶
+    * any c_ab ≥ 2 already does — VERDICT r14 #2) while DuckDB would
+    * raise, an unguarded cross-engine divergence. Decimal keeps the
+    * products exact through ~10³⁸; `div` floors back to BIGINT
+    * identically in both engines, and values are unchanged wherever
+    * the long math didn't wrap (GraphSpec lift-overflow test). */
+  private[graft] def liftPpm: org.apache.spark.sql.Column =
+    expr("(cast(c_ab as decimal(38,0)) * t * t * 1000000) div " +
+      "(cast(ca as decimal(38,0)) * cb * p)")
 
   /** Skip-gram co-occurrence statistics over [[deterministicWalks]] —
     * the corpus-prep step BETWEEN walking and training graph features
@@ -1430,19 +1329,6 @@ object Graph {
     * c_ab ≥ 2), floored back to BIGINT by `div` — identical in DuckDB.
     *
     * @return (na, nb, c_ab, lift_ppm), na < nb, c_ab >= minCount */
-  /** [[walkCooccurrence]]'s association score over columns
-    * (c_ab, t, ca, cb, p): `c_ab·T²·10⁶ div (c_a·c_b·P)` with BOTH
-    * products in DECIMAL(38,0) (the q227/q229 discipline) — the long
-    * spelling wraps SILENTLY once c_ab·T²·10⁶ passes 2⁶³ (at T = 3·10⁶
-    * any c_ab ≥ 2 already does — VERDICT r14 #2) while DuckDB would
-    * raise, an unguarded cross-engine divergence. Decimal keeps the
-    * products exact through ~10³⁸; `div` floors back to BIGINT
-    * identically in both engines, and values are unchanged wherever
-    * the long math didn't wrap (GraphSpec lift-overflow test). */
-  private[graft] def liftPpm: org.apache.spark.sql.Column =
-    expr("(cast(c_ab as decimal(38,0)) * t * t * 1000000) div " +
-      "(cast(ca as decimal(38,0)) * cb * p)")
-
   def walkCooccurrence(edges: DataFrame, seeds: DataFrame, steps: Int,
       window: Int, minCount: Long = 2L,
       broadcastNodeLimit: Long = GraphTuning.Auto): DataFrame = {
@@ -1470,80 +1356,6 @@ object Graph {
       .join(occ.select(col("node").as("nb"), col("c").as("cb")), Seq("nb"))
       .crossJoin(broadcast(tot)).crossJoin(broadcast(ptot))
       .select(col("na"), col("nb"), col("c_ab"), liftPpm.as("lift_ppm"))
-  }
-
-  /** One co-bucketed k-core survivor filter (exposed for plan
-    * inspection): semi-join on src is bucket-to-bucket [0 Exchange];
-    * the dst-side semi-join re-clusters the shrinking edge set [the
-    * round's 1 Exchange] while the keep table side stays in place. */
-  def kCoreCoBucketedFilter(spark: SparkSession, srcEdgesTable: String,
-      keepTable: String): DataFrame = {
-    val keep = spark.table(keepTable)
-    spark.table(srcEdgesTable)
-      .join(keep.withColumnRenamed("id", "src"), Seq("src"), "semi")
-      .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "semi")
-      .select("src", "dst")
-  }
-
-  /** Big-graph k-core peeling — [[kCore]] above `broadcastNodeLimit`.
-    * Layout keeps TWO bucketed copies of the (shrinking) edge set — by
-    * src and by dst, the HITS discipline — so each round's degree
-    * computation is two bucket-aligned aggs merged by a bucket-aligned
-    * full outer join: ZERO Exchange for degrees (the broadcast variant
-    * pays a node-id shuffle). The survivor filter is one bucket
-    * semi-join on src [0 exch] + one semi-join on dst (1 Exchange of
-    * the shrinking edge set — the round's only one, asserted in
-    * GraphSpec); both next-round copies are then bucketed WRITES (no
-    * exchange: bucketed writes cluster into per-bucket files task-
-    * locally). The keep set never shuffles. Results equal [[kCore]]
-    * (parity-tested). Input contract: canonical undirected edges, like
-    * [[kCore]] (dedup + self-loop drop applied here too). */
-  def kCoreCoBucketed(edges: DataFrame, k: Int, maxRounds: Int,
-      numBuckets: Int = 0, tablePrefix: String = "graft_kcore"): DataFrame = {
-    val spark = edges.sparkSession
-    val nb = graft.io.Bucketing.resolveBuckets(spark, numBuckets)
-    val pfx = unique(tablePrefix)
-    def srcTbl(i: Int) = s"${pfx}_esrc_$i"
-    def dstTbl(i: Int) = s"${pfx}_edst_$i"
-    def keepTbl(i: Int) = s"${pfx}_keep_$i"
-    val wt = new WorkTables(spark, nb)
-    try {
-      val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .filter(col("src") =!= col("dst")).distinct()
-      // edge counts observed in the bucketed writes themselves —
-      // the old loop re-read each just-written edge table to count
-      var m = wt.writeObserving(e0, srcTbl(0), Seq("src"), count(lit(1)))
-      wt.write(spark.table(srcTbl(0)), dstTbl(0), Seq("dst"))
-      // degrees with zero Exchange: out-half aggregated on the src-bucketed
-      // copy, in-half on the dst-bucketed copy, merged bucket-to-bucket
-      def degrees(i: Int): DataFrame = {
-        val out = spark.table(srcTbl(i)).groupBy(col("src").as("id"))
-          .agg(count(lit(1)).as("od"))
-        val in = spark.table(dstTbl(i)).groupBy(col("dst").as("id"))
-          .agg(count(lit(1)).as("in_d"))
-        out.join(in, Seq("id"), "full_outer")
-          .select(col("id"),
-            (coalesce(col("od"), lit(0L)) + coalesce(col("in_d"), lit(0L)))
-              .as("deg"))
-      }
-      var round = 0
-      var done = m == 0L
-      while (!done && round < maxRounds) {
-        round += 1
-        wt.write(
-          degrees(round - 1).filter(col("deg") >= k).select("id"),
-          keepTbl(round), Seq("id"))
-        wt.write(
-          kCoreCoBucketedFilter(spark, srcTbl(round - 1), keepTbl(round)),
-          dstTbl(round), Seq("dst"))
-        val m2 = wt.writeObserving(spark.table(dstTbl(round)),
-          srcTbl(round), Seq("src"), count(lit(1)))
-        done = m2 == m
-        m = m2
-      }
-      degrees(round).filter(col("deg") > 0)
-        .select(col("id"), col("deg")).localCheckpoint(true)
-    } finally wt.dropAll()
   }
 
   /** Per-item butterfly counts — the bipartite clustering signal
@@ -1670,15 +1482,17 @@ object Graph {
     * count round removes nothing is semantics-preserving for the
     * fixed-unroll oracle because post-fixpoint rounds are no-ops in any
     * engine. All-integer, so the loop is oracle-checked bit-for-bit.
-    * Above `broadcastNodeLimit` use [[kCoreCoBucketed]]. */
+    * There is no co-bucketed regime: the bucketed k-core twin lost both
+    * times it was measured (27.3 s vs 13.1 s shuffle in round 6,
+    * 24.84 s vs 13.97 s with the honest round-9 arms — CROSSOVER.json
+    * "kCore") and was deleted. */
   def kCore(edges: DataFrame, k: Int, maxRounds: Int,
       broadcastNodeLimit: Long = GraphTuning.Auto): DataFrame = {
     // edge counts observed in the checkpoint jobs (round-15 fusion) —
     // the old per-round e.count() was a whole extra PASS over the
     // round's surviving edge set
     var (e, m) = GraphTuning.checkpointWithCount(
-      edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .filter(col("src") =!= col("dst")).distinct())
+      longEdges(edges).filter(col("src") =!= col("dst")).distinct())
     def degrees(ed: DataFrame): DataFrame =
       ed.select(col("src").as("id"))
         .unionAll(ed.select(col("dst").as("id")))
@@ -1695,22 +1509,20 @@ object Graph {
     // the veto would compare 64m against max(24m, floor) and
     // structurally demote every graph above the floor regardless of
     // the conf limit — the conf-resolved fit test alone governs.
-    def regime(mNow: Long): Boolean = GraphTuning.decide(
-      edges.sparkSession, "kCore",
-      nodeEstimate = if (mNow > Long.MaxValue / 2) Long.MaxValue else 2 * mNow,
-      nodeEstimateSource = "edge-count-bound",
-      requestedLimit = broadcastNodeLimit).broadcast
     var round = 0
     var done = m == 0L
     while (!done && round < maxRounds) {
       round += 1
-      val small = regime(m)
-      def maybeB(df: DataFrame): DataFrame =
-        if (small) broadcast(df) else df
+      val d = GraphTuning.decide(edges.sparkSession, "kCore",
+        nodeEstimate = if (m > Long.MaxValue / 2) Long.MaxValue else 2 * m,
+        nodeEstimateSource = "edge-count-bound",
+        requestedLimit = broadcastNodeLimit)
       val keep = degrees(e).filter(col("deg") >= k).select("id")
       val en = GraphTuning.checkpointWithCount(e
-        .join(maybeB(keep.withColumnRenamed("id", "src")), Seq("src"), "semi")
-        .join(maybeB(keep.withColumnRenamed("id", "dst")), Seq("dst"), "semi")
+        .join(d.maybeBroadcast(keep.withColumnRenamed("id", "src")),
+          Seq("src"), "semi")
+        .join(d.maybeBroadcast(keep.withColumnRenamed("id", "dst")),
+          Seq("dst"), "semi")
         .select("src", "dst"))
       e = en._1
       done = en._2 == m
@@ -1750,19 +1562,10 @@ object Graph {
   def labelPropagation(edges: DataFrame, iterations: Int,
       broadcastNodeLimit: Long = GraphTuning.Auto,
       coBucketAboveBroadcast: Boolean = true): DataFrame = {
-    val spark = edges.sparkSession
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
     // distinct src <= #edge rows: a plan-stats bound proving the fit
     // skips the HLL job (no pre-loop stats job for tiny graphs).
-    val edgeUpper = GraphTuning.rowUpperBound(edges)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if u <= limit => (u, s)
-      case _ => (edges.agg(approx_count_distinct(col("src")).as("n"))
-        .first().getLong(0), "hll")
-    }
-    val d = GraphTuning.decide(spark, "labelPropagation", nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
+    val d = GraphTuning.resolveRegime("labelPropagation", edges,
+      broadcastNodeLimit)(hll(edges, "src"))
     // Routing tests FITS (see [[hits]]): non-fitting labels leave for
     // the bucketed loop; fitting-but-cost-vetoed stays on shuffle joins.
     if (!d.fits && coBucketAboveBroadcast)
@@ -1777,17 +1580,15 @@ object Graph {
     // hash(dst) output partitioning (a checkpoint's LogicalRDD drops it
     // — measured: both round aggs re-shuffle), which is what makes the
     // rounds exchange-free.
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .repartition(col("dst")).cache()
-    def maybeB(df: DataFrame): DataFrame =
-      if (d.broadcast) broadcast(df) else df
+    val ew = longEdges(edges).repartition(col("dst")).cache()
     var labels = ew.select(col("src").as("id")).distinct()
       .withColumn("lbl", col("id")).localCheckpoint(true)
     var it = 0
     while (it < iterations) {
       it += 1
       labels = ew
-        .join(maybeB(labels.withColumnRenamed("id", "src")), Seq("src"))
+        .join(d.maybeBroadcast(labels.withColumnRenamed("id", "src")),
+          Seq("src"))
         .groupBy(col("dst").as("id"), col("lbl"))
         .agg(count(lit(1)).as("c"))
         .groupBy("id")
@@ -1799,37 +1600,12 @@ object Graph {
     labels.select(col("id"), col("lbl").as("label"))
   }
 
-  /** Exact per-node triangle counts via degree orientation (the MPC/
-    * MapReduce-standard algorithm: Suri & Vassilvitskii "Counting
-    * Triangles and the Curse of the Last Reducer", WWW'11). Each
-    * undirected edge is oriented from its (degree, id)-smaller endpoint,
-    * which bounds every node's OUT-degree by O(√m) regardless of how
-    * skewed the raw degree distribution is — the hub that would
-    * otherwise emit deg² wedges emits none, because all its edges point
-    * INTO it. Total wedge volume is O(m^1.5) worst-case, the provable
-    * optimum for exact counting, and each triangle is generated exactly
-    * once (at its unique (deg,id)-minimal apex).
-    *
-    * Shuffle shape: canonical dedup (1), degree partial-agg (1), two
-    * degree-attach joins (node-sized build — broadcast below
-    * `broadcastNodeLimit`). Then, below `broadcastEdgeLimit`: a
-    * node-sized adjacency agg (1 narrow shuffle) and per-edge sorted
-    * intersection — no wedge ever materializes. Above it: wedge
-    * self-join on the apex (one Exchange, reused for both sides via
-    * repartition+cache), Bloom-pruned closure join against the canonical
-    * edge set on the (v, w) pair. Only (long, long) pairs ever shuffle —
-    * no payload columns.
-    *
-    * @param edges undirected edges as (src, dst) in either/both
-    *              directions; duplicates and self-loops are dropped
-    * @return (id, triangles) for EVERY node of the graph, zero included
-    */
   /** Shared engine of [[triangleCounts]] and [[edgeSupport]]: degree
     * orientation + triangle enumeration over a cached canonical edge
     * set, regime-routed exactly as documented on [[triangleCounts]].
     * Caller owns `canon`; everything this allocates is in `cleanup`. */
   private case class TriangleStream(tris: DataFrame, deg: DataFrame,
-      small: Boolean, cleanup: Seq[DataFrame])
+      regime: GraphTuning.RegimeDecision, cleanup: Seq[DataFrame])
 
   private def orientedTriangleStream(spark: org.apache.spark.sql.SparkSession,
       canon: DataFrame, st: org.apache.spark.sql.Row, nEdges: Long,
@@ -1838,10 +1614,9 @@ object Graph {
       .unionByName(canon.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
       .cache()
-    val small = GraphTuning.decide(spark, "triangleCounts",
+    val d = GraphTuning.decide(spark, "triangleCounts",
       nodeEstimate = st.getLong(3), nodeEstimateSource = "hll-sum",
-      edgeEstimate = nEdges, requestedLimit = broadcastNodeLimit).broadcast
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+      edgeEstimate = nEdges, requestedLimit = broadcastNodeLimit)
     // When ids fit in 31 bits, the wedge-volume closure probe joins on
     // ONE packed long instead of a (long, long) pair — Spark builds a
     // LongHashedRelation (dense long-keyed map) instead of hashing
@@ -1852,8 +1627,10 @@ object Graph {
     val aFirst = col("da") < col("db") ||
       (col("da") === col("db") && col("a") < col("b"))
     val orientedBase = canon
-      .join(maybeB(deg.select(col("id").as("a"), col("d").as("da"))), Seq("a"))
-      .join(maybeB(deg.select(col("id").as("b"), col("d").as("db"))), Seq("b"))
+      .join(d.maybeBroadcast(deg.select(col("id").as("a"), col("d").as("da"))),
+        Seq("a"))
+      .join(d.maybeBroadcast(deg.select(col("id").as("b"), col("d").as("db"))),
+        Seq("b"))
       .select(when(aFirst, col("a")).otherwise(col("b")).as("u"),
         when(aFirst, col("b")).otherwise(col("a")).as("v"))
     // Broadcast regime — sorted-adjacency INTERSECTION, not wedge
@@ -1927,10 +1704,31 @@ object Graph {
             .select("u", "v", "w")
         (Some(o), t)
       }
-    TriangleStream(tris, deg, small, oriented.toSeq :+ deg)
+    TriangleStream(tris, deg, d, oriented.toSeq :+ deg)
   }
 
-  /** `broadcastEdgeLimit` (the adjacency-intersection vs wedge+Bloom
+  /** Exact per-node triangle counts via degree orientation (the MPC/
+    * MapReduce-standard algorithm: Suri & Vassilvitskii "Counting
+    * Triangles and the Curse of the Last Reducer", WWW'11). Each
+    * undirected edge is oriented from its (degree, id)-smaller endpoint,
+    * which bounds every node's OUT-degree by O(√m) regardless of how
+    * skewed the raw degree distribution is — the hub that would
+    * otherwise emit deg² wedges emits none, because all its edges point
+    * INTO it. Total wedge volume is O(m^1.5) worst-case, the provable
+    * optimum for exact counting, and each triangle is generated exactly
+    * once (at its unique (deg,id)-minimal apex).
+    *
+    * Shuffle shape: canonical dedup (1), degree partial-agg (1), two
+    * degree-attach joins (node-sized build — broadcast below
+    * `broadcastNodeLimit`). Then, below `broadcastEdgeLimit`: a
+    * node-sized adjacency agg (1 narrow shuffle) and per-edge sorted
+    * intersection — no wedge ever materializes. Above it: wedge
+    * self-join on the apex (one Exchange, reused for both sides via
+    * repartition+cache), Bloom-pruned closure join against the canonical
+    * edge set on the (v, w) pair. Only (long, long) pairs ever shuffle —
+    * no payload columns.
+    *
+    * `broadcastEdgeLimit` (the adjacency-intersection vs wedge+Bloom
     * switch for the whole triangle family) was raised 8M → 32M in
     * round 10 from a measured grid (graft.Crossover `tri` family,
     * honest AQE-disabled arms, CROSSOVER.json
@@ -1941,7 +1739,11 @@ object Graph {
     * EXECUTOR MEMORY, not time: the broadcast adjacency costs
     * ~8 B/edge per executor copy (32M edges ≈ 256 MB), so
     * memory-tight clusters should lower the limit; the wedge+Bloom
-    * regime remains the only option once the adjacency cannot fit. */
+    * regime remains the only option once the adjacency cannot fit.
+    *
+    * @param edges undirected edges as (src, dst) in either/both
+    *              directions; duplicates and self-loops are dropped
+    * @return (id, triangles) for EVERY node of the graph, zero included */
   def triangleCounts(edges: DataFrame,
       broadcastNodeLimit: Long = GraphTuning.Auto,
       broadcastEdgeLimit: Long = 32000000L): DataFrame = {
@@ -1973,12 +1775,11 @@ object Graph {
     }
     val tm = orientedTriangleStream(edges.sparkSession, canon, st, nEdges,
       broadcastNodeLimit, broadcastEdgeLimit)
-    def maybeB(df: DataFrame): DataFrame = if (tm.small) broadcast(df) else df
     val counts = tm.tris
       .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
     val out = tm.deg.select("id")
-      .join(maybeB(counts), Seq("id"), "left")
+      .join(tm.regime.maybeBroadcast(counts), Seq("id"), "left")
       .select(col("id"),
         coalesce(col("triangles"), lit(0L)).as("triangles"))
       .localCheckpoint(true)
@@ -2030,12 +1831,11 @@ object Graph {
     }
     val tm = orientedTriangleStream(canon.sparkSession, canon, st, nEdges,
       broadcastNodeLimit, broadcastEdgeLimit)
-    def maybeB(df: DataFrame): DataFrame = if (tm.small) broadcast(df) else df
     val counts = tm.tris
       .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
       .groupBy("id").agg(count(lit(1)).as("triangles"))
     val out = tm.deg.select(col("id"), col("d").as("degree"))
-      .join(maybeB(counts), Seq("id"), "left")
+      .join(tm.regime.maybeBroadcast(counts), Seq("id"), "left")
       .select(col("id"), col("degree"),
         coalesce(col("triangles"), lit(0L)).as("triangles"),
         when(col("degree") >= 2,
@@ -2241,26 +2041,18 @@ object Graph {
   def sccColoring(edges: DataFrame, maxRounds: Int,
       broadcastNodeLimit: Long = GraphTuning.Auto): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    val spark = edges.sparkSession
-    val edgeUpper = GraphTuning.rowUpperBound(edges)
-    val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val (nodeEst, nodeSrc) = edgeUpper match {
-      case Some((u, s)) if 2 * u <= limit => (2 * u, s)
-      // Estimate what actually broadcasts: the best table holds 2 rows
-      // per node of src∪dst (the tagged/doubled edge set makes every
-      // node a src). Counting only the ORIGINAL srcs under-estimates a
-      // hub-and-spokes graph by ~n and would wrongly license broadcast.
-      case _ => (2 * edges.select(col("src").cast("long").as("id"))
+    // Estimate what actually broadcasts: the best table holds 2 rows per
+    // node of src∪dst (the tagged/doubled edge set makes every node a
+    // src). Counting only the ORIGINAL srcs under-estimates a
+    // hub-and-spokes graph by ~n and would wrongly license broadcast.
+    val d = GraphTuning.resolveRegime("sccColoring", edges,
+        broadcastNodeLimit, statePerRow = 2L, edgeRowsPerRow = 2L) {
+      (2 * edges.select(col("src").cast("long").as("id"))
         .unionByName(edges.select(col("dst").cast("long").as("id")))
         .agg(approx_count_distinct(col("id")).as("n"))
         .first().getLong(0), "hll")
     }
-    val d = GraphTuning.decide(spark, "sccColoring", nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(2 * _._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    def maybeB(df: DataFrame): DataFrame = if (d.broadcast) broadcast(df) else df
-    val base = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst"))
+    val base = longEdges(edges)
     val e = base.select(lit(0).as("tag"), col("src"), col("dst"))
       .unionByName(base.select(lit(1).as("tag"),
         col("dst").as("src"), col("src").as("dst")))
@@ -2278,14 +2070,14 @@ object Graph {
     while (round < maxRounds && nFrontier > 0) {
       round += 1
       val cand = e
-        .join(maybeB(frontier.select(col("tag"), col("id").as("dst"),
-          col("lbl").as("fl"))), Seq("tag", "dst"))
+        .join(d.maybeBroadcast(frontier.select(col("tag"),
+          col("id").as("dst"), col("lbl").as("fl"))), Seq("tag", "dst"))
         .groupBy(col("tag"), col("src").as("id"))
         .agg(min(col("fl")).as("cnd"))
       // ONE materialization carries both outputs of the round: the
       // rewritten best table and (via the `imp` flag) the frontier.
       val (joined, nImp) = GraphTuning.checkpointObserving(
-        best.join(maybeB(cand), Seq("tag", "id"), "left_outer")
+        best.join(d.maybeBroadcast(cand), Seq("tag", "id"), "left_outer")
           .select(col("tag"), col("id"),
             when(col("cnd") < col("lbl"), col("cnd"))
               .otherwise(col("lbl")).as("lbl"),

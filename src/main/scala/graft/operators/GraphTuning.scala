@@ -82,10 +82,6 @@ object GraphTuning extends Logging {
     * to veto a fitting broadcast. */
   val CostFloorBytes: Long = 64L << 20
 
-  /** Last decision taken, for specs and postmortems ([[decide]] logs the
-    * same string at INFO). */
-  @volatile private[graft] var lastDecision: Option[RegimeDecision] = None
-
   /** Last free-form routing message ([[logRouting]]) — the edge-count
     * regimes (duplicateClusters) that aren't broadcast decisions. */
   @volatile private[graft] var lastRouting: Option[String] = None
@@ -93,8 +89,12 @@ object GraphTuning extends Logging {
   /** Rolling journal of recent decisions (newest first, capped) — lets
     * specs and postmortems see a LOOP's decision sequence, e.g. kCore's
     * per-round re-check switching shuffle → broadcast as the core
-    * prunes, which `lastDecision` alone overwrites. */
+    * prunes. [[decide]] logs the same string at INFO. */
   @volatile private[graft] var decisionLog: List[RegimeDecision] = Nil
+
+  /** Last decision taken: the journal's head, so the two never disagree. */
+  private[graft] def lastDecision: Option[RegimeDecision] =
+    decisionLog.headOption
 
   private[graft] def logRouting(msg: String): Unit = {
     lastRouting = Some(msg)
@@ -105,7 +105,6 @@ object GraphTuning extends Logging {
     * call this before each shape so the decision they report afterwards
     * is the shape's own, not a stale one from a previous shape. */
   private[graft] def resetLast(): Unit = {
-    lastDecision = None
     lastRouting = None
     decisionLog = Nil
   }
@@ -320,6 +319,9 @@ object GraphTuning extends Logging {
         f"limit=$limit%d($limitSource) copies=$executorCopies%d " +
         f"bcastBytes/round=${broadcastBytesPerRound}%.0f " +
         f"shuffleBytes/round=${shuffleBytesPerRound}%.0f"
+    /** `df` with a broadcast hint iff this decision chose broadcast. */
+    def maybeBroadcast(df: DataFrame): DataFrame =
+      if (broadcast) org.apache.spark.sql.functions.broadcast(df) else df
   }
 
   /** The resolver every graph entry point funnels through: fit test
@@ -359,9 +361,31 @@ object GraphTuning extends Logging {
     val d = RegimeDecision(op, broadcast = fits && costOk, fits = fits,
       nodeEstimate, nodeEstimateSource, edgeEstimate, limit, limitSource,
       copies)
-    lastDecision = Some(d)
     decisionLog = (d :: decisionLog).take(64)
     logInfo(d.describe)
     d
+  }
+
+  /** The regime preamble the graph kernels share: resolve the limit,
+    * bound the state from the plan (no job), run the `stats` job only
+    * when that bound does not prove the fit, then [[decide]]. The plan
+    * bound of `edges` × `edgeRowsPerRow` is the edge estimate; that of
+    * `stateRows` (default `edges`; walks pass their seeds) × `statePerRow`
+    * bounds the state — 2 for hits' hub/authority sides and
+    * sccColoring's two tags, whose doubled edge table is 2 rows per edge. */
+  def resolveRegime(op: String, edges: DataFrame, requestedLimit: Long,
+      statePerRow: Long = 1L, edgeRowsPerRow: Long = 1L,
+      stateRows: Option[DataFrame] = None)
+      (stats: => (Long, String)): RegimeDecision = {
+    val spark = edges.sparkSession
+    val (limit, _) = resolveNodeLimit(spark, requestedLimit)
+    val edgeUpper = rowUpperBound(edges)
+    val (nodeEst, nodeSrc) = stateRows.fold(edgeUpper)(rowUpperBound(_)) match {
+      case Some((u, s)) if u <= limit / statePerRow => (statePerRow * u, s)
+      case _ => stats
+    }
+    decide(spark, op, nodeEst, nodeSrc,
+      edgeEstimate = edgeUpper.fold(-1L)(edgeRowsPerRow * _._1),
+      requestedLimit = requestedLimit)
   }
 }

@@ -139,6 +139,9 @@ class DedupSpec extends SparkSpec {
       localEdgeThreshold = 0L, coBucketEdgeThreshold = 0L)
       .as[(Long, Long)].collect().toMap
     assert(cb == expected)
+    // the routed loop's work tables are dropped on exit
+    assert(!spark.catalog.listTables().collect()
+      .exists(_.name.startsWith("graft_cc_")))
   }
 
   test("duplicateClusters shuffle regime: convergence count rides the " +

@@ -82,7 +82,7 @@ class GraphSpec extends SparkSpec {
       .filter { case (a, b) => a != b }.distinct
     val e = (pairs ++ pairs.map(_.swap)).distinct.toDF("src", "dst")
     val its = Graph.pageRankCoBucketedIterates(e, iterations = 3,
-      captureAt = Set(2), numBuckets = 4, tablePrefix = "graftspec_pri")
+      captureAt = Set(2))
     assert(its.keySet == Set(2, 3))
     for (k <- Seq(2, 3)) {
       val want = Graph.pageRankFixedPoint(e, iterations = k, symmetric = true)
@@ -91,7 +91,7 @@ class GraphSpec extends SparkSpec {
     }
     // captures stay readable after the work tables are dropped
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_pri")))
+      .exists(_.name.startsWith("graft_pr_")))
   }
 
   test("co-bucketed regime matches the broadcast regime bit-for-bit") {
@@ -102,13 +102,12 @@ class GraphSpec extends SparkSpec {
     val e = (pairs ++ pairs.map(_.swap)).distinct.toDF("src", "dst")
     val want = Graph.pageRankFixedPoint(e, iterations = 3, symmetric = true)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val got = Graph.pageRankCoBucketed(e, iterations = 3, numBuckets = 4,
-      tablePrefix = "graftspec_pr")
+    val got = Graph.pageRankCoBucketed(e, iterations = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == want)
     // work tables are dropped on exit
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_pr")))
+      .exists(_.name.startsWith("graft_pr_")))
   }
 
   test("co-bucketed round plans exactly one Exchange (the dst agg), none for the join") {
@@ -154,12 +153,11 @@ class GraphSpec extends SparkSpec {
     val e = symGraph
     val want = Graph.labelPropagation(e, iterations = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val got = Graph.labelPropagationCoBucketed(e, iterations = 3,
-      numBuckets = 4, tablePrefix = "graftspec_lpa")
+    val got = Graph.labelPropagationCoBucketed(e, iterations = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == want)
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_lpa")))
+      .exists(_.name.startsWith("graft_lpa_")))
   }
 
   test("big-graph routing agrees with the small-graph regimes bit-for-bit") {
@@ -199,24 +197,22 @@ class GraphSpec extends SparkSpec {
     val seeds = Seq(100L).toDF("id")
     val want = Graph.bfsDistances(e, seeds, maxHops = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val got = Graph.bfsDistancesCoBucketed(e, seeds, maxHops = 3,
-      numBuckets = 4, tablePrefix = "graftspec_bfs")
+    val got = Graph.bfsDistancesCoBucketed(e, seeds, maxHops = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == want)
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_bfs")))
+      .exists(_.name.startsWith("graft_bfs_")))
   }
 
   test("co-bucketed HITS matches the broadcast regime bit-for-bit") {
     val e = symGraph
     val want = Graph.hits(e, iterations = 2)
       .orderBy("id").as[(Long, Long, Long)].collect().toSeq
-    val got = Graph.hitsCoBucketed(e, iterations = 2,
-      numBuckets = 4, tablePrefix = "graftspec_hits")
+    val got = Graph.hitsCoBucketed(e, iterations = 2)
       .orderBy("id").as[(Long, Long, Long)].collect().toSeq
     assert(got == want)
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_hits")))
+      .exists(_.name.startsWith("graft_hits_")))
   }
 
   test("co-bucketed HITS half-round plans exactly one Exchange") {
@@ -239,19 +235,6 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("co-bucketed k-core matches the peeling regime") {
-    // canonical (src < dst) undirected edges: ring + hub spokes
-    val e = symGraph.filter(col("src") < col("dst"))
-    val want = Graph.kCore(e, k = 3, maxRounds = 5)
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    val got = Graph.kCoreCoBucketed(e, k = 3, maxRounds = 5,
-      numBuckets = 4, tablePrefix = "graftspec_kc")
-      .orderBy("id").as[(Long, Long)].collect().toSeq
-    assert(got == want)
-    assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_kc")))
-  }
-
   test("co-bucketed CC matches the independent driver union-find") {
     val e = symGraph // already symmetric (both directions present)
     import org.apache.spark.sql.functions.col
@@ -263,13 +246,12 @@ class GraphSpec extends SparkSpec {
     // shares its round math with the co-bucketed variant)
     val want = operators.Dedup.duplicateClusters(nodes, "doc_id", pairs)
       .orderBy("doc_id").as[(Long, Long)].collect().toSeq
-    val got = Graph.connectedComponentsCoBucketed(e,
-      numBuckets = 4, tablePrefix = "graftspec_cc")
+    val got = Graph.connectedComponentsCoBucketed(e)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == want)
     // work tables are per-invocation unique AND dropped — none survive
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_cc")))
+      .exists(_.name.startsWith("graft_cc_")))
   }
 
   test("co-bucketed CC round plans exactly two node-sized Exchanges") {
@@ -291,7 +273,7 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("co-bucketed LPA/BFS/k-core rounds plan exactly one Exchange each") {
+  test("co-bucketed LPA/BFS rounds plan exactly one Exchange each") {
     val saved = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -304,9 +286,6 @@ class GraphSpec extends SparkSpec {
         Seq((1L, 0L)).toDF("src", "dist"), "graftspec_cb_front", Seq("src"), 4)
       io.Bucketing.writeBucketed(
         Seq((1L, 0L)).toDF("src", "dist"), "graftspec_cb_vis", Seq("src"), 4)
-      io.Bucketing.writeBucketed(
-        e.select("src").distinct().withColumnRenamed("src", "id"),
-        "graftspec_cb_keep", Seq("id"), 4)
       val lpaPlan = Graph.lpaCoBucketedRound(spark, "graftspec_cb_edges",
         "graftspec_cb_labels", 4).queryExecution.executedPlan.toString
       assert("Exchange".r.findAllIn(lpaPlan).length == 1, lpaPlan)
@@ -314,12 +293,9 @@ class GraphSpec extends SparkSpec {
         "graftspec_cb_front", "graftspec_cb_vis", 4, 1)
         .queryExecution.executedPlan.toString
       assert("Exchange".r.findAllIn(bfsPlan).length == 1, bfsPlan)
-      val kcPlan = Graph.kCoreCoBucketedFilter(spark, "graftspec_cb_edges",
-        "graftspec_cb_keep").queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(kcPlan).length == 1, kcPlan)
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      Seq("edges", "labels", "front", "vis", "keep").foreach(t =>
+      Seq("edges", "labels", "front", "vis").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS graftspec_cb_$t"))
     }
   }
@@ -585,12 +561,11 @@ class GraphSpec extends SparkSpec {
     val seeds = Seq(100L).toDF("id")
     val want = Graph.ssspDistances(e, seeds, maxRounds = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
-    val got = Graph.ssspDistancesCoBucketed(e, seeds, maxRounds = 3,
-      numBuckets = 4, tablePrefix = "graftspec_sssp")
+    val got = Graph.ssspDistancesCoBucketed(e, seeds, maxRounds = 3)
       .orderBy("id").as[(Long, Long)].collect().toSeq
     assert(got == want && want.nonEmpty)
     assert(!spark.catalog.listTables().collect()
-      .exists(_.name.startsWith("graftspec_sssp")))
+      .exists(_.name.startsWith("graft_sssp_")))
   }
 
   test("sssp big-graph routing agrees with the broadcast regime") {
