@@ -1432,7 +1432,7 @@ object Graph {
     // stats pass — the frontier is checkpointed and tiny by contract).
     val (rankLimit, _) =
       GraphTuning.resolveNodeLimit(edges.sparkSession, broadcastRankLimit)
-    val ew = edges.select(col("src").cast("long"), col("dst").cast("long"))
+    val ew = longEdges(edges)
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
       .repartition(col("dst")).cache()
     val sd = seeds.select(col("id").cast("long")).distinct()
