@@ -1,5 +1,26 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import java.nio.file.{Files, Paths}
+import java.util.Properties
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerStageSubmitted}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FormattedMode
+import scala.collection.mutable
+
+/** Per-query wall-time bench over `SparkEntry.queries`: sf0.001 warm-up,
+  * noop sink, min over reps. Besides the stdout record it prints, per rep,
+  * one stderr line with that rep's jobs, stages, tasks and task
+  * run/CPU/GC seconds (`[bench-rep]`), and per query the last rep's
+  * costliest stages (`[bench-stage]`).
+  *
+  * Environment: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1),
+  * `SPARK_GRAFT_CPUS` (see [[GraftSession.harnessCpus]]),
+  * `SPARK_GRAFT_ONLY` (comma list of queries), `SPARK_GRAFT_REPS`
+  * (default 3), `SPARK_GRAFT_CONF` (`k=v;k=v` runtime confs for A/B
+  * runs) and `SPARK_GRAFT_PLANDIR` (also write each query's formatted
+  * plan at the target SF to `<dir>/<query>.txt`). */
 object Bench {
   /** Timing action: a `noop`-format write consumes every output row
     * through the complete physical plan — unlike `.count()`, which lets
@@ -23,7 +44,7 @@ object Bench {
     *
     * What this does NOT cure — the recurring ~16 s q143 outlier rep
     * (r7 spread 7.8 s, r8 15.8 s): round-9 instrumentation
-    * (SPARK_GRAFT_DEBUG per-rep GC + task profile) measured 13 q143
+    * (per-rep GC + task profile) measured 13 q143
     * reps across isolated and full-suite runs at gcSec <= 0.1,
     * taskMax <= 0.6 s, taskTotal a constant ~20-24 s — so the
     * outlier is EXTERNAL CPU contention, not JIT or GC: q143 packs
@@ -46,14 +67,14 @@ object Bench {
     * TASK-TOTAL UNCHANGED (an in-task slowdown — more data, worse
     * plan, GC — inflates task time too). A rep is tagged contended
     * when its wall exceeds the query's best rep by >30% plus a 0.3 s
-    * floor while its task-time stays within 25% (+0.5 s floor) of the
+    * floor while its task run time stays within 25% (+0.5 s floor) of the
     * best rep's. The RECORD is tagged when tagged reps cost >5 s of
     * spread or >=10 queries show the signature — a quiet run trips
     * neither; r9/r10-style pollution (one 54 s q143 burst, or a
     * +0.5-3.8 s smear across ~100 cheap queries) trips both.
     *
     * @param results per query: None if it threw, else every rep's
-    *        (wall sec, task-time-delta sec)
+    *        (wall sec, task run sec)
     * @return (per-query contended extra wall, total, record flag) */
   private[graft] def contentionStats(
       results: Seq[(String, Option[Seq[(Double, Double)]])])
@@ -71,17 +92,119 @@ object Bench {
     (perQuery, spread, spread > 5.0 || perQuery.size >= 10)
   }
 
+  /** One completed stage: id, tasks, task run and CPU seconds, and the
+    * RDD scopes it ran, innermost first (AQE stages all share one
+    * callsite, so the scopes are what names the operators). */
+  final case class StageRecord(
+      id: Int, tasks: Int, runSec: Double, cpuSec: Double, scopes: String)
+
+  /** What the jobs of one key did. */
+  final case class Record(
+      jobs: Int = 0, stages: Int = 0, tasks: Long = 0, runSec: Double = 0,
+      cpuSec: Double = 0, gcSec: Double = 0,
+      stageRecords: Vector[StageRecord] = Vector.empty)
+
+  /** Job, stage and task totals per key: Bench's per-rep records and the
+    * specs' job pins. The key is a local property, so every job a thread
+    * submits inside [[Counters.keyed]] carries it, broadcast and subquery
+    * jobs included (Spark submits them with the caller's properties).
+    * Sums happen in `onJobStart` and `onStageCompleted`; there is no
+    * per-task work, and an unkeyed event costs one property lookup. */
+  final class Counters extends SparkListener {
+    private val records = mutable.Map.empty[String, Record]
+    private val stageKeys = mutable.Map.empty[Int, String]
+    private val drained = mutable.Set.empty[String]
+
+    private def keyOf(p: Properties): Option[String] =
+      Option(p).flatMap(p => Option(p.getProperty(Counters.KeyProperty)))
+
+    private def update(key: String)(f: Record => Record): Unit =
+      records(key) = f(records.getOrElse(key, Record()))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      keyOf(e.properties).foreach { k =>
+        if (k.startsWith(Counters.Sentinel)) { drained += k; notifyAll() }
+        else update(k)(r => r.copy(jobs = r.jobs + 1))
+      }
+    }
+
+    override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+      synchronized {
+        keyOf(e.properties).filterNot(_.startsWith(Counters.Sentinel))
+          .foreach(stageKeys(e.stageInfo.stageId) = _)
+      }
+
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized {
+        val info = e.stageInfo
+        stageKeys.remove(info.stageId).foreach { k =>
+          val m = Option(info.taskMetrics)
+          val run = m.fold(0L)(_.executorRunTime) / 1e3
+          val cpu = m.fold(0L)(_.executorCpuTime) / 1e9
+          val gc = m.fold(0L)(_.jvmGCTime) / 1e3
+          val scopes = info.rddInfos.sortBy(_.id)
+            .flatMap(r => r.scope.map(_.name).orElse(Option(r.name)))
+            .distinct.mkString(" | ").take(200)
+          update(k)(r => r.copy(stages = r.stages + 1,
+            tasks = r.tasks + info.numTasks, runSec = r.runSec + run,
+            cpuSec = r.cpuSec + cpu, gcSec = r.gcSec + gc,
+            stageRecords = r.stageRecords :+
+              StageRecord(info.stageId, info.numTasks, run, cpu, scopes)))
+        }
+      }
+
+    /** Blocks until this listener has seen every event posted before the
+      * call: the start of one sentinel job queues behind them. */
+    def drain(sc: SparkContext): Unit = {
+      val token = Counters.Sentinel + java.util.UUID.randomUUID()
+      Counters.keyed(sc, token)(sc.parallelize(Seq(0), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      synchronized {
+        while (!drained.remove(token)) {
+          val leftMs = (deadline - System.nanoTime()) / 1000000L
+          if (leftMs <= 0) throw new IllegalStateException(
+            "Bench.Counters: listener bus did not drain within 60 s")
+          wait(leftMs)
+        }
+      }
+    }
+
+    /** Drains the bus, then removes and returns each key's record (an
+      * empty one for a key that started no job). */
+    def take(sc: SparkContext, keys: Seq[String]): Seq[Record] = {
+      drain(sc)
+      synchronized(keys.map(k => records.remove(k).getOrElse(Record())))
+    }
+  }
+
+  object Counters {
+    val KeyProperty = "graft.bench.key"
+    private[graft] val Sentinel = "graft.bench.drain:"
+
+    /** Runs `body` with its jobs keyed to `key`; clears the key after. */
+    def keyed[T](sc: SparkContext, key: String)(body: => T): T = {
+      sc.setLocalProperty(KeyProperty, key)
+      try body finally sc.setLocalProperty(KeyProperty, null)
+    }
+  }
+
+  /** Stages per query in the `[bench-stage]` lines. */
+  private val TopStages = 5
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("graft-bench", GraftSession.harnessCpus)
+    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) => spark.conf.set(k, v)
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF: malformed segment '$kv' (expected key=value)")
+      }
+    })
+    val planDir = sys.env.get("SPARK_GRAFT_PLANDIR")
+    val sc = spark.sparkContext
+    val counters = new Counters
+    sc.addSparkListener(counters)
     // JVM/codegen/parquet-reader warm-up on the tiny sf so the timed runs
     // measure steady-state throughput, not one-time cost: running every
     // query shape at sf0.001 compiles its whole-stage codegen (Janino
@@ -121,73 +244,41 @@ object Bench {
     // total): it is reported as JSON null (type-stable for numeric
     // consumers, unlike the old "err" string) and excluded from the
     // total; the error itself goes to stderr.
-    // SPARK_GRAFT_DEBUG=1: per-rep line to stderr with the rep's wall
-    // time and the JVM-wide GC time/count delta across it — the
-    // instrument for outlier-rep forensics (is a recurring slow rep GC,
-    // or genuinely slower work?). Stderr so the stdout JSON contract is
-    // untouched.
-    val debug = sys.env.get("SPARK_GRAFT_DEBUG").exists(_ != "0")
-    val gcBeans =
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-    def gcNow(): (Long, Long) = {
-      var t = 0L; var c = 0L
-      gcBeans.forEach { b => t += b.getCollectionTime; c += b.getCollectionCount }
-      (t, c)
-    }
-    // Task profile — ALWAYS ON (round-11): the contention forensics
-    // were debug-only, and two consecutive rounds' driver refreshes
-    // landed on a loaded box and recorded polluted totals that only
-    // the round-over-round judge could diagnose. The cumulative
-    // task-time counter costs one atomic add per task-end; per-rep
-    // deltas come from snapshots, so no reset race with the async
-    // listener bus (a late event credits the next rep; totals are
-    // conserved). taskMax stays debug-only — it needs a reset plus
-    // bus-drain sleeps that would add minutes to a 202-query run.
-    val taskTotalCumMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskMaxMs = new java.util.concurrent.atomic.AtomicLong(0)
-    val taskNCum = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onTaskEnd(
-            te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-          val d = te.taskInfo.duration
-          taskTotalCumMs.addAndGet(d)
-          taskNCum.incrementAndGet()
-          taskMaxMs.updateAndGet(m => math.max(m, d))
-          ()
-        }
-      })
-    // Per-query record: every rep's (wall sec, task-time-delta sec).
+    // Per-query record: every rep's (wall sec, task run sec), the run
+    // seconds read from the rep's own key.
     val results: Seq[(String, Option[Seq[(Double, Double)]])] =
       selected.map { case (name, fn) =>
-        var failed = false
-        val rs = (0 until reps).map { rep =>
-          if (debug) {
-            Thread.sleep(300) // let the async listener bus drain
-            taskMaxMs.set(0)
+        planDir.foreach { d =>
+          try Files.writeString(
+            Files.createDirectories(Paths.get(d)).resolve(s"$name.txt"),
+            fn(spark, sfDir).queryExecution.explainString(FormattedMode))
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] $name plan failed: ${e.getMessage}")
           }
-          val (gt0, gc0) = if (debug) gcNow() else (0L, 0L)
-          val tt0 = taskTotalCumMs.get
+        }
+        var failed = false
+        val keys = (0 until reps).map(rep => s"$name#$rep")
+        val walls = keys.map { key =>
           val t0 = System.nanoTime()
-          try { exec(fn(spark, sfDir)) }
+          try Counters.keyed(sc, key)(exec(fn(spark, sfDir)))
           catch { case e: Throwable =>
             failed = true
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (debug) Thread.sleep(300)
-          val ttSec = (taskTotalCumMs.get - tt0) / 1e3
-          if (debug) {
-            val (gt1, gc1) = gcNow()
-            System.err.println(
-              f"[bench-debug] $name rep=$rep%d sec=$sec%.3f " +
-                f"gcSec=${(gt1 - gt0) / 1e3}%.3f gcN=${gc1 - gc0}%d " +
-                f"taskTotalSec=$ttSec%.3f " +
-                f"taskMaxSec=${taskMaxMs.get / 1e3}%.3f")
-          }
-          (sec, ttSec)
+          (System.nanoTime() - t0) / 1e9
         }
-        name -> (if (failed) None else Some(rs))
+        val records = counters.take(sc, keys)
+        walls.zip(records).zipWithIndex.foreach { case ((sec, r), rep) =>
+          System.err.println(f"[bench-rep] $name rep=$rep%d sec=$sec%.3f " +
+            f"jobs=${r.jobs}%d stages=${r.stages}%d tasks=${r.tasks}%d " +
+            f"runSec=${r.runSec}%.3f cpuSec=${r.cpuSec}%.3f gcSec=${r.gcSec}%.3f")
+        }
+        records.last.stageRecords.sortBy(-_.runSec).take(TopStages).foreach { st =>
+          System.err.println(f"[bench-stage] $name id=${st.id}%d " +
+            f"tasks=${st.tasks}%d runSec=${st.runSec}%.2f " +
+            f"cpuSec=${st.cpuSec}%.2f  ${st.scopes}")
+        }
+        name -> (if (failed) None else Some(walls.zip(records.map(_.runSec))))
       }
     val (contendedPerQuery, contendedSpread, contended) =
       contentionStats(results)
@@ -196,13 +287,9 @@ object Bench {
         .map { case (n, s) => f"$n%s(+$s%.1fs)" }.mkString(", ")
       System.err.println(
         f"[bench] WARN: contended record — ${contendedPerQuery.size}%d " +
-          f"queries show wall-up/taskTotal-flat reps costing " +
+          f"queries show wall-up/task-run-flat reps costing " +
           f"$contendedSpread%.1f s of spread (top: $top). Re-run on a " +
-          "quiet box before quoting round-over-round. (Task-time deltas " +
-          "snapshot the async listener bus without draining it, so a " +
-          "heavy rep's tail can credit the NEXT rep — per-query " +
-          "attribution is approximate; the flag is a tripwire, not an " +
-          "alibi.)")
+          "quiet box before quoting round-over-round.")
     }
     def fmt(sel: Seq[(Double, Double)] => Double): String = results.map {
       case (k, v) =>
@@ -231,7 +318,7 @@ object Bench {
     // any tail and carries the headline numbers.
     println(line)
     System.out.flush()
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH.json"),
+    Files.write(Paths.get("BENCH.json"),
       (line + "\n").getBytes("UTF-8"))
     try spark.stop() catch { case _: Throwable => }
     val compact =

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-executor smoke: runs EVERY SparkEntry query on a
   * `local-cluster[2,8,8192]` session — two genuinely separate executor
   * JVMs — and fails on any query that throws. local[N] (one JVM) can
@@ -20,6 +18,9 @@ import org.apache.spark.sql.SparkSession
   * source, so no packaging step is needed.
   *
   * Usage: runMain graft.ClusterSmoke [sfDir] [onlyCsv]
+  * `SPARK_GRAFT_MASTER` replaces the master; a
+  * `local-cluster[workers,cores,MB]` master sizes each executor to its
+  * worker's `MB`.
   */
 object ClusterSmoke {
   def main(args: Array[String]): Unit = {
@@ -27,16 +28,12 @@ object ClusterSmoke {
     val only = args.drop(1).headOption.map(_.split(",").toSet)
     val classesDir = SparkEntry.getClass.getProtectionDomain
       .getCodeSource.getLocation.getPath
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,8192]"))
-      .appName("graft-cluster-smoke")
-      .withExtensions(new GraftExtensions)
-      .config("spark.executor.memory", "8g")
+    val master =
+      sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,8,8192]")
+    val b = GraftSession.builder("graft-cluster-smoke", "16").master(master)
       .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    GraftSession.tune(spark)
+    val spark = GraftSession.localClusterExecutorMemory(master)
+      .fold(b)(b.config("spark.executor.memory", _)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Executors register asynchronously after the app starts; wait so
     // the first query doesn't race an empty cluster (and so the

@@ -77,7 +77,7 @@ object Crossover {
         .config("spark.executor.extraClassPath",
           SparkEntry.getClass.getProtectionDomain.getCodeSource.getLocation.getPath)
         .config("spark.executor.memory",
-          master.split(",")(2).takeWhile(_.isDigit) + "m")
+          GraftSession.localClusterExecutorMemory(master).get)
       else b
       val s = b2.getOrCreate()
       s.sparkContext.setLogLevel("WARN")

@@ -42,12 +42,18 @@ object GraftSession {
     s
   }
 
-  /** Apply the engine confs to an externally-created session (e.g. the
-    * driver-owned sessions in Verify/Bench). Runtime-settable confs only. */
-  def tune(spark: SparkSession): SparkSession = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark
-  }
+  /** Worker threads of the harness mains' `local[N]` sessions:
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  def harnessCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  private val LocalCluster = """local-cluster\[\s*\d+\s*,\s*\d+\s*,\s*(\d+)\s*\]""".r
+
+  /** `spark.executor.memory` for a `local-cluster[workers,cores,MB]`
+    * master: the worker's whole `MB`. Spark refuses to start an executor
+    * that asks for more than its worker has. */
+  def localClusterExecutorMemory(master: String): Option[String] =
+    master match {
+      case LocalCluster(mb) => Some(mb + "m")
+      case _ => None
+    }
 }

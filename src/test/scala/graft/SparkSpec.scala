@@ -1,13 +1,19 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run
   * sequentially under sbt's forked test JVM). */
 object TestSession {
-  lazy val spark: SparkSession = GraftSession.local("graft-test", 4)
+  /** Bench's job counter, installed on the shared session. */
+  val counters = new Bench.Counters
+
+  lazy val spark: SparkSession = {
+    val s = GraftSession.local("graft-test", 4)
+    s.sparkContext.addSparkListener(counters)
+    s
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {
@@ -16,24 +22,8 @@ trait SparkSpec extends AnyFunSuite {
 
   /** Spark jobs started while `body` runs. */
   def countJobs(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      // the listener bus is async: wait until the count stops moving
-      var last = -1
-      var stable = 0
-      val deadline = System.nanoTime() + 5000000000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val c = jobs.get()
-        if (c == last) stable += 1 else { stable = 0; last = c }
-        Thread.sleep(100)
-      }
-    } finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
+    val key = "spec:" + java.util.UUID.randomUUID()
+    Bench.Counters.keyed(spark.sparkContext, key)(body)
+    TestSession.counters.take(spark.sparkContext, Seq(key)).head.jobs
   }
 }
