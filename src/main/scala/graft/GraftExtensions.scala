@@ -10,9 +10,9 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * `spark.sql("SELECT cosine_f(a, b) …")` plans the same codegen'd
   * operators the DataFrame API uses.
   *
-  * Register with:
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
-  * or spark.sql.extensions=graft.GraftExtensions.
+  * `GraftSession.builder` installs it. Register it elsewhere with
+  * `withExtensions(new GraftExtensions)` on a session builder, or with
+  * spark.sql.extensions=graft.GraftExtensions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
