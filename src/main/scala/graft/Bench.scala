@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import java.util.Properties
 import org.apache.spark.SparkContext
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
@@ -11,9 +12,9 @@ import scala.collection.mutable
 
 /** Per-query wall-time bench over `SparkEntry.queries`: sf0.001 warm-up,
   * noop sink, min over reps. Besides the stdout record it prints, per rep,
-  * one stderr line with that rep's jobs, stages, tasks and task
-  * run/CPU/GC seconds (`[bench-rep]`), and per query the last rep's
-  * costliest stages (`[bench-stage]`).
+  * one stderr line with that rep's jobs, stages, tasks, task
+  * run/CPU/GC seconds and Janino compiles (`[bench-rep]`), and per query
+  * the last rep's costliest stages (`[bench-stage]`).
   *
   * Environment: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1),
   * `SPARK_GRAFT_CPUS` (see [[GraftSession.harnessCpus]]),
@@ -208,8 +209,10 @@ object Bench {
     // JVM/codegen/parquet-reader warm-up on the tiny sf so the timed runs
     // measure steady-state throughput, not one-time cost: running every
     // query shape at sf0.001 compiles its whole-stage codegen (Janino
-    // caches by generated source, which is identical across data dirs)
-    // and JITs the hot paths. Standard benchmarking practice; the timed
+    // caches by generated source, identical across data dirs except where
+    // a data-derived literal outside a filter is inlined — filter literals
+    // are hoisted, graft.plans.HoistLiterals; `compiles=` on each
+    // `[bench-rep]` line shows any recompile) and JITs the hot paths. Standard benchmarking practice; the timed
     // loop below still does all its own IO/compute at the target SF.
     // SPARK_GRAFT_ONLY=q65_pagerank,q28_minhash_neardup narrows the run
     // while iterating on one query's plan
@@ -258,27 +261,32 @@ object Bench {
         }
         var failed = false
         val keys = (0 until reps).map(rep => s"$name#$rep")
+        // (wall sec, Janino compiles): the compile count is JVM-wide, and
+        // only this rep runs while it is read
         val walls = keys.map { key =>
           val t0 = System.nanoTime()
+          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
           try Counters.keyed(sc, key)(exec(fn(spark, sfDir)))
           catch { case e: Throwable =>
             failed = true
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
-          (System.nanoTime() - t0) / 1e9
+          ((System.nanoTime() - t0) / 1e9,
+            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
         }
         val records = counters.take(sc, keys)
-        walls.zip(records).zipWithIndex.foreach { case ((sec, r), rep) =>
+        walls.zip(records).zipWithIndex.foreach { case (((sec, compiles), r), rep) =>
           System.err.println(f"[bench-rep] $name rep=$rep%d sec=$sec%.3f " +
             f"jobs=${r.jobs}%d stages=${r.stages}%d tasks=${r.tasks}%d " +
-            f"runSec=${r.runSec}%.3f cpuSec=${r.cpuSec}%.3f gcSec=${r.gcSec}%.3f")
+            f"runSec=${r.runSec}%.3f cpuSec=${r.cpuSec}%.3f gcSec=${r.gcSec}%.3f " +
+            f"compiles=$compiles%d")
         }
         records.last.stageRecords.sortBy(-_.runSec).take(TopStages).foreach { st =>
           System.err.println(f"[bench-stage] $name id=${st.id}%d " +
             f"tasks=${st.tasks}%d runSec=${st.runSec}%.2f " +
             f"cpuSec=${st.cpuSec}%.2f  ${st.scopes}")
         }
-        name -> (if (failed) None else Some(walls.zip(records.map(_.runSec))))
+        name -> (if (failed) None else Some(walls.map(_._1).zip(records.map(_.runSec))))
       }
     val (contendedPerQuery, contendedSpread, contended) =
       contentionStats(results)

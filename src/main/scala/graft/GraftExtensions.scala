@@ -4,11 +4,17 @@ import graft.expressions._
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
 
 /** SparkSessionExtensions entry point: exposes the engine's native
   * Catalyst expressions to SQL users, so
   * `spark.sql("SELECT cosine_f(a, b) …")` plans the same codegen'd
-  * operators the DataFrame API uses.
+  * operators the DataFrame API uses, and installs the engine's rules at
+  * three tiers: optimizer (`ArgmaxWindowRewrite`), planner strategy
+  * (`GraftStrategy`) and physical plan (`HoistLiterals`, through the
+  * columnar-rule hook because that hook runs before whole-stage codegen
+  * with and without AQE).
   *
   * `GraftSession.builder` installs it. Register it elsewhere with
   * `withExtensions(new GraftExtensions)` on a session builder, or with
@@ -31,6 +37,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Strategy tier: custom whole-operator physical planning (broadcast
     // as-of join — see graft.plans.BroadcastAsOfJoin).
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
+    // Physical tier: filter literals move out of the generated source so
+    // per-call bounds reuse compiled classes (graft.plans.HoistLiterals).
+    // The columnar hook is the one rule slot that runs before whole-stage
+    // codegen with AQE on and off; a post-planner strategy rule runs only
+    // inside adaptive plans.
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.HoistLiterals
+    })
 
     def register(name: String, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
+  PartitioningAwareFileIndex}
 
 /** Regime selection for the iterative graph operators — ONE resolver for
   * the broadcast-vs-shuffle/co-bucketed decision every loop in [[Graph]]
@@ -173,21 +175,24 @@ object GraphTuning extends Logging {
     }.getOrElse(default)
 
   /** Session-scoped memoized exact count, keyed by an md5 digest of the
-    * CANONICALIZED optimized plan — the count-probe memo the quantile
-    * router introduced (`Aggregations.routeOneWindow`), hoisted here so
-    * every proven-fit broadcast license shares one implementation
+    * CANONICALIZED optimized plan plus every file its file-source scans
+    * list (path, size, modification time) — the count-probe memo the
+    * quantile router introduced (`Aggregations.routeOneWindow`), hoisted
+    * here so every proven-fit broadcast license shares one implementation
     * (ADVICE r13: `Sketch.mergeTrailing` re-counted its day list per
-    * invocation). The digest (not the plan string) keeps entries
-    * O(32 B); eviction is access-ordered LRU, never a wholesale clear;
-    * the count JOB runs OUTSIDE the map lock (computeIfAbsent would
-    * hold the bin lock across a whole Spark job), and the
-    * get→count→putIfAbsent race at worst double-counts the same frame,
-    * which is idempotent. A stale entry is only possible if the
-    * underlying files change under a live session — and the memo only
-    * feeds PHYSICAL regime routing, so results cannot change. Note a
-    * `localCheckpoint`ed frame gets a fresh RDD id per checkpoint, so
-    * per-invocation checkpoints always miss — counting checkpointed
-    * blocks is one cheap job, which is why callers checkpoint first. */
+    * invocation). The plan alone does not name the files (`Relation
+    * [cols] parquet`), so a store appended to under a live session, or
+    * another store of the same schema, would reuse a stale count and
+    * license a broadcast on it; the file stamps come from each scan's
+    * own listing, so a lookup makes no file-system calls. The digest (not
+    * the plan string) keeps entries O(32 B); eviction is access-ordered
+    * LRU, never a wholesale clear; the count JOB runs OUTSIDE the map
+    * lock (computeIfAbsent would hold the bin lock across a whole Spark
+    * job), and the get→count→putIfAbsent race at worst double-counts the
+    * same frame, which is idempotent. Note a `localCheckpoint`ed frame
+    * gets a fresh RDD id per checkpoint, so per-invocation checkpoints
+    * always miss — counting checkpointed blocks is one cheap job, which
+    * is why callers checkpoint first. */
   private val countCache: java.util.Map[String, java.lang.Long] =
     java.util.Collections.synchronizedMap(
       new java.util.LinkedHashMap[String, java.lang.Long](64, 0.75f, true) {
@@ -196,8 +201,18 @@ object GraphTuning extends Logging {
           size() > 256
       })
   def memoizedCount(df: DataFrame): Long = {
+    val plan = df.queryExecution.optimizedPlan
+    val files = plan.collectWithSubqueries { case l: LogicalRelation => l.relation }
+      .flatMap {
+        case r: HadoopFsRelation => r.location match {
+          case idx: PartitioningAwareFileIndex => idx.allFiles()
+            .map(f => s"${f.getPath} ${f.getLen} ${f.getModificationTime}")
+          case idx => idx.inputFiles.toSeq
+        }
+        case _ => Nil
+      }.sorted
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(df.queryExecution.optimizedPlan.canonicalized.toString
+      .digest((plan.canonicalized.toString +: files).mkString("\n")
         .getBytes("UTF-8")).map("%02x".format(_)).mkString
     Option(countCache.get(key)).map(_.longValue()).getOrElse {
       val c = df.count() // the job runs with NO map lock held

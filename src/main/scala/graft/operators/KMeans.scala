@@ -154,10 +154,14 @@ object KMeans {
     * `array_contains` over them) instead of k baked scalar literals in
     * a k-wide `array(dist2…)`/`isin` tree. Every round's plan is now
     * STRUCTURALLY IDENTICAL — generated code is reused across rounds
-    * and across k (no per-round recompile, no expression-tree blowup
-    * at large k); the arithmetic (exact integer dist², argmax by
-    * (d desc, id asc)) is unchanged — KMeansSpec's greedy-replay and
-    * extension-prefix tests pin selection identity. */
+    * and across k. Scalar filter literals are now hoisted out of the
+    * generated code engine-wide (`graft.plans.HoistLiterals`), so
+    * the objects no longer buy the cache hit alone; they stay because
+    * they keep the expression tree O(1) instead of k-wide, and the
+    * centers feed a projection, which the hoisting does not touch. The
+    * arithmetic (exact integer dist², argmax by (d desc, id asc)) is
+    * unchanged — KMeansSpec's greedy-replay and extension-prefix tests
+    * pin selection identity. */
   private def greedyRounds(q: DataFrame,
       selected0: Vector[(Long, Seq[Long], Long)], k: Int)
       : Vector[(Long, Seq[Long], Long)] = {

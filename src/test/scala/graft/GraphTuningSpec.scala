@@ -10,16 +10,6 @@ import org.apache.spark.sql.functions._
 class GraphTuningSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withConf[A](key: String, value: String)(body: => A): A = {
-    val saved = spark.conf.getOption(key)
-    spark.conf.set(key, value)
-    try body
-    finally saved match {
-      case Some(v) => spark.conf.set(key, v)
-      case None    => spark.conf.unset(key)
-    }
-  }
-
   test("resolveNodeLimit: explicit beats conf beats default, with provenance") {
     assert(GraphTuning.resolveNodeLimit(spark, 7L) == ((7L, "explicit")))
     assert(GraphTuning.resolveNodeLimit(spark, GraphTuning.Auto) ==
@@ -334,5 +324,20 @@ class GraphTuningSpec extends SparkSpec {
     // frame (fresh expr ids) must hit
     val n2 = countJobs(GraphTuning.memoizedCount(frame()))
     assert(n2 < n1, s"expected a memo hit: first=$n1 jobs, second=$n2")
+  }
+
+  test("memoizedCount: a store appended under a live session is counted again") {
+    val dir = java.nio.file.Files.createTempDirectory("memo").toString
+    val (store, other) = (s"$dir/store", s"$dir/other")
+    spark.range(0, 30).write.parquet(store)
+    spark.range(0, 7).write.parquet(other)
+    assert(GraphTuning.memoizedCount(spark.read.parquet(store)) == 30)
+    // the same plan over another store of the same schema
+    assert(GraphTuning.memoizedCount(spark.read.parquet(other)) == 7)
+    spark.range(30, 42).write.mode("append").parquet(store)
+    // a rebuilt frame lists the appended file
+    assert(GraphTuning.memoizedCount(spark.read.parquet(store)) == 42)
+    val again = spark.read.parquet(store) // reading infers the schema in a job
+    assert(countJobs(GraphTuning.memoizedCount(again)) == 0)
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.checks.Validations
 import graft.streaming.{MicroBatchRunner, SyncState, SyncStatus}
 import graft.sources.Tables
 import org.apache.spark.sql.functions._
@@ -158,6 +159,27 @@ class SyncSpec extends SparkSpec {
     assert(res.ranges == Seq((last, last + 150)))
     // any read of the sink (a recount) would add at least one job
     assert(runJobs == 1 + writeJobs, s"run: $runJobs jobs, the write alone: $writeJobs")
+  }
+
+  test("the next batch and its parity check compile no class") {
+    val dir = Files.createTempDirectory("mbcompile").toString
+    val sink = s"$dir/sink"
+    val events = Tables.events(spark, sfDir).select("event_id", "event_type", "value")
+    val state = new SyncState(s"$dir/state")
+    // one sync run: one batch, then V1 parity of the sink against the
+    // source over the batch's range
+    def sync(): Unit = {
+      val res = MicroBatchRunner.run(spark, events, "event_id", state, "compiles",
+        streamingLag = 0, batchSize = 150, pipeline = _.withColumn("tagged", lit(1)),
+        sinkPath = sink, maxBatches = 1)
+      val Seq((lo, hi)) = res.ranges
+      val chk = Validations.countParity(spark.read.parquet(sink), events,
+        col("event_id") > lo && col("event_id") <= hi)
+      assert(chk.passed, chk.detail)
+    }
+    sync()
+    // the range bounds change; the generated code must not
+    assert(countCompiles(sync()) == 0)
   }
 
   test("stateful dedup suppresses replayed keys across micro-batches (T5)") {
