@@ -212,8 +212,9 @@ object Bench {
     // caches by generated source, identical across data dirs except where
     // a data-derived literal outside a filter is inlined — filter literals
     // are hoisted, graft.plans.HoistLiterals; `compiles=` on each
-    // `[bench-rep]` line shows any recompile) and JITs the hot paths. Standard benchmarking practice; the timed
-    // loop below still does all its own IO/compute at the target SF.
+    // `[bench-rep]` line shows any recompile) and JITs the hot paths.
+    // Standard benchmarking practice; the timed loop below still does all
+    // its own IO/compute at the target SF.
     // SPARK_GRAFT_ONLY=q65_pagerank,q28_minhash_neardup narrows the run
     // while iterating on one query's plan
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)

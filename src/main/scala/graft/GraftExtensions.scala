@@ -13,8 +13,9 @@ import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
   * operators the DataFrame API uses, and installs the engine's rules at
   * three tiers: optimizer (`ArgmaxWindowRewrite`), planner strategy
   * (`GraftStrategy`) and physical plan (`HoistLiterals`, through the
-  * columnar-rule hook because that hook runs before whole-stage codegen
-  * with and without AQE).
+  * columnar-rule hook: it runs before whole-stage codegen with and
+  * without AQE, where a post-planner strategy rule runs only inside
+  * adaptive plans).
   *
   * `GraftSession.builder` installs it. Register it elsewhere with
   * `withExtensions(new GraftExtensions)` on a session builder, or with
@@ -37,11 +38,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // Strategy tier: custom whole-operator physical planning (broadcast
     // as-of join — see graft.plans.BroadcastAsOfJoin).
     ext.injectPlannerStrategy(_ => graft.plans.GraftStrategy)
-    // Physical tier: filter literals move out of the generated source so
+    // Physical tier: filter literals leave the generated source, so
     // per-call bounds reuse compiled classes (graft.plans.HoistLiterals).
-    // The columnar hook is the one rule slot that runs before whole-stage
-    // codegen with AQE on and off; a post-planner strategy rule runs only
-    // inside adaptive plans.
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.HoistLiterals
     })
