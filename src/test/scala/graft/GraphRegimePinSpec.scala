@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Graph, GraphTuning}
+import graft.operators.{Dedup, Graph, GraphTuning}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -136,5 +136,51 @@ class GraphRegimePinSpec extends SparkSpec {
       assert((jobs, n) == pin, s"$name: got (jobs, rows) = ($jobs, $n)")
       assert(graftTables == before,
         s"$name left work tables: ${graftTables -- before}")
+    }
+
+  private def canonical: DataFrame = local.filter(col("src") < col("dst"))
+
+  /** kernel → (jobs, rows) for the loops the regime pins above do not
+    * reach: the PageRank family, k-core and truss peel, the triangle
+    * family in both of its regimes, and the distributed CC loop */
+  private val loops: Seq[(String, () => Seq[DataFrame], (Int, Long))] = Seq(
+    ("pageRankFixedPoint symmetric", () => Seq(
+      Graph.pageRankFixedPoint(local, 3, symmetric = true)), (9, 41L)),
+    ("pageRankFixedPoint asymmetric", () => Seq(
+      Graph.pageRankFixedPoint(canonical, 3)), (15, 41L)),
+    ("pageRankIterates capture", () => Graph.pageRankIterates(local, 3,
+      Set(1, 2), symmetric = true).toSeq.sortBy(_._1).map(_._2), (11, 123L)),
+    ("weightedPageRank symmetric", () => Seq(
+      Graph.weightedPageRank(local, 3, symmetric = true)), (9, 41L)),
+    ("weightedPageRank asymmetric", () => Seq(
+      Graph.weightedPageRank(canonical, 3)), (17, 41L)),
+    ("personalizedPageRank", () => Seq(
+      Graph.personalizedPageRank(local, localSeeds, 3)), (16, 25L)),
+    // the two pendant chains peel one node per round until a round
+    // removes nothing
+    ("kCore", () => Seq(Graph.kCore(
+      canonical.filter(col("src") <= 30), 2, 20)), (40, 21L)),
+    ("trussPeel", () => Seq(Graph.trussPeel(local, 3, 5)), (37, 39L)),
+    ("triangleCounts adjacency", () => Seq(Graph.triangleCounts(local)),
+      (23, 41L)),
+    ("triangleCounts wedge", () => Seq(
+      Graph.triangleCounts(local, broadcastEdgeLimit = 0L)), (21, 41L)),
+    ("clusteringCoefficient adjacency", () => Seq(
+      Graph.clusteringCoefficient(local)), (23, 41L)),
+    ("clusteringCoefficient wedge", () => Seq(
+      Graph.clusteringCoefficient(local, broadcastEdgeLimit = 0L)), (21, 41L)),
+    ("edgeSupport adjacency", () => Seq(Graph.edgeSupport(local)), (21, 60L)),
+    ("edgeSupport wedge", () => Seq(
+      Graph.edgeSupport(local, broadcastEdgeLimit = 0L)), (19, 60L)),
+    ("duplicateClusters distributed", () => Seq(Dedup.duplicateClusters(
+      (1L to 80L).toDF("doc_id"), "doc_id",
+      canonical.select(col("src").as("id_a"), col("dst").as("id_b")),
+      localEdgeThreshold = 0L)), (51, 80L)))
+
+  for ((name, run, pin) <- loops)
+    test(s"loop pin: $name") {
+      var n = 0L
+      val jobs = countJobs { n = run().map(_.collect().length.toLong).sum }
+      assert((jobs, n) == pin, s"$name: got (jobs, rows) = ($jobs, $n)")
     }
 }
