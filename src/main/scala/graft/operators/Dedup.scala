@@ -737,55 +737,22 @@ object Dedup {
     // singleton clusters and join back at the end
     val active = edges.select(col("src").as("id")).distinct()
     // localCheckpoint each round: iterative self-joins otherwise nest the
-    // plan exponentially (the analyzer, not the data, runs out of heap)
-    var labels = active.withColumn("label", col("id")).localCheckpoint(true)
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIterations) {
-      // min label among self + neighbors, then a pointer-jump
-      // (label ← label-of-label) so label chains halve every round:
-      // converges in O(log diameter) rounds instead of O(diameter)
-      val neighborMin = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
-      val cand = labels.join(neighborMin, Seq("id"), "left")
-        .select(col("id"), col("label").as("__old"),
-          least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-      val parent = labels.select(col("id").as("__pid"), col("label").as("__plabel"))
-      // changed-row count observed in the checkpoint job itself
-      // (round-15 loop-action fusion, GraphTuning.checkpointWithCount
-      // pattern) — the old convergence check was one extra job per
-      // round over the just-checkpointed label table
-      val (next, nChanged) = GraphTuning.checkpointObserving(
-        cand.join(parent, cand("label") === parent("__pid"), "left")
-          .select(cand("id"),
-            least(cand("label"), coalesce(col("__plabel"), cand("label"))).as("label"),
-            (least(cand("label"), coalesce(col("__plabel"), cand("label"))) <
-              col("__old")).as("__changed")),
-        sum(when(col("__changed"), 1L).otherwise(0L)))
-      converged = nChanged == 0
-      labels = next.drop("__changed")
-      iter += 1
+    // plan exponentially (the analyzer, not the data, runs out of heap).
+    // The changed-row count is observed in the checkpoint job itself
+    // (round-15 loop-action fusion, GraphTuning.checkpointWithCount
+    // pattern) — the old convergence check was one extra job per round
+    // over the just-checkpointed label table.
+    val (labels, _) = Graph.iterate(
+        active.withColumn("label", col("id")).localCheckpoint(true), -1L,
+        maxIterations, Graph.Stop.Empty) { (labels, _) =>
+      GraphTuning.checkpointObserving(Graph.ccRound(edges, labels),
+        Graph.ccChangedRows)
     }
     nodes.join(labels, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("label"), col("id")).as("cluster_id"))
   }
 
-  /** n-gram Jaccard similarity join: all pairs (within an optional
-    * blocking key) with word-set Jaccard ≥ threshold. O(n²) within a
-    * block — callers block on cheap keys (lang, length bucket) so the
-    * cross product never materializes globally. Kept as the reference
-    * formulation; [[prefixJaccardPairs]] is the scale path. */
-  /** n-gram CONTAINMENT join: ordered pairs (a, b), a ≠ b, with
-    * |grams(a) ∩ grams(b)| / |grams(a)| ≥ threshold — the asymmetric
-    * near-dup measure that catches a short document quoted inside a long
-    * one (Jaccard stays near |a|/|b| there and never fires). Same
-    * blocked-cross-product scale shape as [[ngramJaccardPairs]]: one
-    * cached shingle pass, pairs only within cheap blocking keys, the
-    * merge-scan containment a single codegen'd expression. Emitted both
-    * directions when both clear the threshold (containment is directed).
-    */
   /** Empty `blockCols` means a TRUE cross product — n² pairs with no
     * blocking to bound it. That is only sane for small inputs (unit
     * tests, a pre-filtered candidate set), so the unblocked path counts
@@ -853,6 +820,15 @@ object Dedup {
       .select("id_a", "id_b", "dist")
   }
 
+  /** n-gram CONTAINMENT join: ordered pairs (a, b), a ≠ b, with
+    * |grams(a) ∩ grams(b)| / |grams(a)| ≥ threshold — the asymmetric
+    * near-dup measure that catches a short document quoted inside a long
+    * one (Jaccard stays near |a|/|b| there and never fires). Same
+    * blocked-cross-product scale shape as [[ngramJaccardPairs]]: one
+    * cached shingle pass, pairs only within cheap blocking keys, the
+    * merge-scan containment a single codegen'd expression. Emitted both
+    * directions when both clear the threshold (containment is directed).
+    */
   def ngramContainmentPairs(
       df: DataFrame, idCol: String, textCol: String, blockCols: Seq[String],
       threshold: Double, shingleSize: Int = 1,
@@ -873,6 +849,11 @@ object Dedup {
       .select("id_a", "id_b", "containment")
   }
 
+  /** n-gram Jaccard similarity join: all pairs (within an optional
+    * blocking key) with word-set Jaccard ≥ threshold. O(n²) within a
+    * block — callers block on cheap keys (lang, length bucket) so the
+    * cross product never materializes globally. Kept as the reference
+    * formulation; [[prefixJaccardPairs]] is the scale path. */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String, blockCols: Seq[String],
       threshold: Double, shingleSize: Int = 1,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph algorithms over plain (src, dst) edge DataFrames —
@@ -37,6 +37,16 @@ import org.apache.spark.sql.functions._
   * dedup into the repartition (partition-local dropDuplicates) —
   * complete-mode agg over the full edge table beat by the smaller
   * pre-doubling distinct. Re-measure before re-attempting any of them.
+  *
+  * Every round loop here runs through [[iterate]], the one loop
+  * primitive (the Pregel shape: Malewicz et al., SIGMOD 2010). A kernel
+  * supplies its start, a round cap, one of three [[Stop]] rules over the
+  * count each round observes — `Never` for fixed-round kernels (the
+  * PageRank family, HITS, LPA), `Empty` for frontier and changed-row
+  * loops (BFS, SSSP, walks, SCC, connected components) and `Unchanged`
+  * for peels (k-core, truss) — and the cached frames the loop owns,
+  * which are released whether the loop returns or throws. The regime
+  * decision and the checkpointing stay in each kernel's round body.
   */
 object Graph {
 
@@ -48,6 +58,42 @@ object Graph {
     * decision whose plan bound does not prove the fit. */
   private def hll(df: DataFrame, c: String): (Long, String) =
     (df.agg(approx_count_distinct(col(c)).as("n")).first().getLong(0), "hll")
+
+  /** When an [[iterate]] loop stops, judged on (previous count, this
+    * round's count). */
+  private[graft] object Stop {
+    type Rule = (Long, Long) => Boolean
+    /** fixed rounds: only the cap ends the loop */
+    val Never: Rule = (_, _) => false
+    /** the round observed nothing (empty frontier, no changed row) */
+    val Empty: Rule = (_, n) => n == 0
+    /** the round removed nothing (a peel's fixpoint) */
+    val Unchanged: Rule = (prev, n) => n == prev
+  }
+
+  /** Runs `step(state, round)` for rounds 1, 2, … until `maxRounds`
+    * rounds have run or `stop(previous count, count)` holds. Each count
+    * is the one the step observed, usually in its checkpoint job;
+    * fixed-round steps return 0. The start's `count` is tested too,
+    * against a previous count of 0, so an empty start runs no round;
+    * a start that has no count passes -1. The `owned` frames are
+    * unpersisted when the loop ends, whether it returns or throws.
+    *
+    * @return the final state and the number of rounds run */
+  private[graft] def iterate[S](init: S, count: Long, maxRounds: Int,
+      stop: Stop.Rule, owned: DataFrame*)
+      (step: (S, Int) => (S, Long)): (S, Int) =
+    try {
+      var (state, prev, n, round) = (init, 0L, count, 0)
+      while (round < maxRounds && !stop(prev, n)) {
+        round += 1
+        val (next, m) = step(state, round)
+        state = next
+        prev = n
+        n = m
+      }
+      (state, round)
+    } finally owned.foreach(_.unpersist(blocking = false))
 
   /** @param edges     directed edges (src, dst), both LongType
     * @param iterations number of damped propagation rounds
@@ -139,13 +185,47 @@ object Graph {
     // Degree is loop-invariant, so attach it in the SAME pass that
     // materializes the working edge table: a count window over src fuses
     // scan + degree + attach into one shuffle, where agg-then-join would
-    // scan the upstream twice (or pay a second cache). The repartition by
-    // dst then makes every iteration's groupBy(dst) exchange-free in
-    // broadcast mode — the loop body is one broadcast join + one local
-    // hash agg per round.
-    val ew = longEdges(edges)
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-      .repartition(col("dst")).cache()
+    // scan the upstream twice (or pay a second cache).
+    dampedRanks(longEdges(edges)
+        .withColumn("deg", count(lit(1)).over(Window.partitionBy("src"))),
+        r => s"$r div deg", symmetric, iterations, captureAt, scale,
+        dampingScaled) { (ew, nodes) =>
+      val (nodeEst, nodeSrc) =
+        if (provablySmall) (2 * edgeUpper.get._1, edgeUpper.get._2)
+        else nodes.map(n => (n.count(), "exact-count")).getOrElse(
+          symStats.map(st => (st.getLong(1), "stats-agg-hll")).getOrElse(
+            hll(ew, "src")))
+      // Adaptive plan, same idea as the CC edge threshold: the rank table
+      // is node-sized; below the limit broadcast it so the edge table
+      // NEVER shuffles per iteration. Above it, fall back to shuffle joins
+      // — there, co-bucketing edges and ranks by src (io/Bucketing) is the
+      // cluster-scale answer. Checkpointed loop tables lose stats, so AQE
+      // cannot make this call on its own.
+      GraphTuning.decide(spark, "pageRankFixedPoint",
+        nodeEst, nodeSrc,
+        edgeEstimate = symStats.map(_.getLong(0))
+          .orElse(edgeUpper.map(_._1)).getOrElse(-1L),
+        requestedLimit = broadcastNodeLimit)
+    }
+  }
+
+  /** The damped-propagation loop of [[pageRankIterates]] and
+    * [[weightedPageRank]] in the broadcast and shuffle regimes. `layout`
+    * is the long edge table with its per-src out-weight attached, and
+    * `contrib(r)` spells one edge's share of the source rank `r`. The
+    * table is repartitioned by dst once, so in broadcast mode every
+    * round's groupBy(dst) is exchange-free — one broadcast join + one
+    * local hash agg per round. `decide` takes the node estimate from the
+    * cached edge table and, for asymmetric graphs, the exact node table.
+    *
+    * @return round → (id, rank) for the rounds in `captureAt` and the
+    *         last round (round 0, the flat start, when `iterations <= 0`) */
+  private def dampedRanks(layout: DataFrame, contrib: String => String,
+      symmetric: Boolean, iterations: Int, captureAt: Set[Int],
+      scale: Long, dampingScaled: Long)
+      (decide: (DataFrame, Option[DataFrame]) => GraphTuning.RegimeDecision)
+      : Map[Int, DataFrame] = {
+    val ew = layout.repartition(col("dst")).cache()
     def allNodes: DataFrame =
       if (symmetric) ew.select(col("src").as("id")).distinct()
       else ew.select(col("src").as("id"))
@@ -155,22 +235,7 @@ object Graph {
     // need a node COUNT to pick the plan, and an estimate is plenty for
     // a broadcast threshold — skip the corpus-sized distinct entirely.
     val nodes = if (symmetric) None else Some(allNodes.cache())
-    val (nodeEst, nodeSrc) =
-      if (provablySmall) (2 * edgeUpper.get._1, edgeUpper.get._2)
-      else nodes.map(n => (n.count(), "exact-count")).getOrElse(
-        symStats.map(st => (st.getLong(1), "stats-agg-hll")).getOrElse(
-          hll(ew, "src")))
-    // Adaptive plan, same idea as the CC edge threshold: the rank table
-    // is node-sized; below the limit broadcast it so the edge table
-    // NEVER shuffles per iteration. Above it, fall back to shuffle joins
-    // — there, co-bucketing edges and ranks by src (io/Bucketing) is the
-    // cluster-scale answer. Checkpointed loop tables lose stats, so AQE
-    // cannot make this call on its own.
-    val d = GraphTuning.decide(spark, "pageRankFixedPoint",
-      nodeEst, nodeSrc,
-      edgeEstimate = symStats.map(_.getLong(0))
-        .orElse(edgeUpper.map(_._1)).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
+    val d = decide(ew, nodes)
     val base = scale - dampingScaled
     def damped(sums: DataFrame): DataFrame = {
       // symmetric ⇒ every node has an in-edge ⇒ the contribution sums
@@ -188,28 +253,24 @@ object Graph {
           .as("rank"))
         .localCheckpoint(true)
     }
+    val flat = allNodes.withColumn("rank", lit(scale))
     val captures = scala.collection.mutable.Map[Int, DataFrame]()
-    var ranks =
-      if (iterations <= 0) allNodes.withColumn("rank", lit(scale)).localCheckpoint(true)
-      else damped( // round 1 propagates the constant flat rank — no join
-        ew.select(col("dst").as("id"), expr(s"$scale div deg").as("c"))
-          .groupBy("id").agg(sum(col("c")).as("s")))
-    var it = if (iterations <= 0) 0 else 1
-    if (captureAt(it)) captures(it) = ranks
-    while (it < iterations) {
-      it += 1
-      ranks = damped(ew
-        .join(d.maybeBroadcast(ranks.withColumnRenamed("id", "src")),
-          Seq("src"))
-        .select(col("dst").as("id"), expr("rank div deg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("s")))
-      if (captureAt(it)) captures(it) = ranks
+    val (ranks, last) = iterate(
+        if (iterations <= 0) flat.localCheckpoint(true) else flat, 0L,
+        iterations, Stop.Never, ew +: nodes.toSeq: _*) { (r, round) =>
+      val c =
+        if (round == 1) // propagates the constant flat rank — no join
+          ew.select(col("dst").as("id"), expr(contrib(scale.toString)).as("c"))
+        else ew.join(d.maybeBroadcast(r.withColumnRenamed("id", "src")),
+            Seq("src"))
+          .select(col("dst").as("id"), expr(contrib("rank")).as("c"))
+      val next = damped(c.groupBy("id").agg(sum(col("c")).as("s")))
+      if (captureAt(round)) captures(round) = next
+      (next, 0L)
     }
-    captures(it) = ranks // final round always captured
-    // every captured table is checkpointed (no lineage into the caches) —
-    // release the working tables so repeated invocations don't leak storage
-    nodes.foreach(_.unpersist(blocking = false))
-    ew.unpersist(blocking = false)
+    // every captured table is checkpointed (no lineage into the caches
+    // the loop released)
+    captures(last) = ranks
     captures.toMap
   }
 
@@ -250,62 +311,26 @@ object Graph {
     import org.apache.spark.sql.expressions.Window
     val spark = edges.sparkSession
     val (limit, _) = GraphTuning.resolveNodeLimit(spark, broadcastNodeLimit)
-    val ew = longEdges(edges, "w")
-      .withColumn("wout", sum(col("w")).over(Window.partitionBy("src")))
-      .repartition(col("dst")).cache()
-    def allNodes: DataFrame =
-      if (symmetric) ew.select(col("src").as("id")).distinct()
-      else ew.select(col("src").as("id"))
-        .unionByName(ew.select(col("dst").as("id"))).distinct()
-    // Asymmetric graphs need the exact node table anyway (nodes with no
-    // in-edges keep the base rank via a left join); symmetric ones only
-    // need a node COUNT to pick the plan — a proven plan bound
-    // (#nodes <= #edge rows, every node is a src) or one HLL agg
-    // replaces the distinct + exact count entirely.
-    val nodes = if (symmetric && iterations >= 1) None else Some(allNodes.cache())
-    val edgeUpper = GraphTuning.rowUpperBound(ew)
-    val (nodeEst, nodeSrc) = nodes match {
-      case Some(n) => (n.count(), "exact-count")
-      case None => edgeUpper match {
-        case Some((u, s)) if u <= limit => (u, s)
-        case _ => hll(ew, "src")
+    dampedRanks(longEdges(edges, "w")
+        .withColumn("wout", sum(col("w")).over(Window.partitionBy("src"))),
+        r => s"($r * w) div wout", symmetric, iterations, Set.empty, scale,
+        dampingScaled) { (ew, nodes) =>
+      // symmetric graphs only need a node COUNT to pick the plan — a
+      // proven plan bound (#nodes <= #edge rows, every node is a src) or
+      // one HLL agg replaces the distinct + exact count entirely
+      val edgeUpper = GraphTuning.rowUpperBound(ew)
+      val (nodeEst, nodeSrc) = nodes match {
+        case Some(n) => (n.count(), "exact-count")
+        case None => edgeUpper match {
+          case Some((u, s)) if u <= limit => (u, s)
+          case _ => hll(ew, "src")
+        }
       }
-    }
-    val d = GraphTuning.decide(spark, "weightedPageRank",
-      nodeEst, nodeSrc,
-      edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
-      requestedLimit = broadcastNodeLimit)
-    val base = scale - dampingScaled
-    def damped(sums: DataFrame): DataFrame = {
-      // symmetric ⇒ every node has an in-edge ⇒ the contribution sums
-      // already cover the whole node set — skip the nodes left-join
-      val withBase = nodes match {
-        case Some(n) => n.join(d.maybeBroadcast(sums), Seq("id"), "left")
-        case None    => sums
-      }
-      withBase.select(col("id"), (lit(base) +
-          expr(s"($dampingScaled * coalesce(s, CAST(0 AS BIGINT))) div $scale"))
-          .as("rank"))
-        .localCheckpoint(true)
-    }
-    var ranks =
-      if (iterations <= 0)
-        allNodes.withColumn("rank", lit(scale)).localCheckpoint(true)
-      else damped(ew.select(col("dst").as("id"),
-          expr(s"($scale * w) div wout").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("s")))
-    var it = 1
-    while (it < iterations) {
-      it += 1
-      ranks = damped(ew
-        .join(d.maybeBroadcast(ranks.withColumnRenamed("id", "src")),
-          Seq("src"))
-        .select(col("dst").as("id"), expr("(rank * w) div wout").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("s")))
-    }
-    nodes.foreach(_.unpersist(blocking = false))
-    ew.unpersist(blocking = false)
-    ranks
+      GraphTuning.decide(spark, "weightedPageRank",
+        nodeEst, nodeSrc,
+        edgeEstimate = edgeUpper.map(_._1).getOrElse(-1L),
+        requestedLimit = broadcastNodeLimit)
+    }(iterations)
   }
 
   /** HITS hubs & authorities (Kleinberg 1999) over a directed edge set,
@@ -376,28 +401,26 @@ object Graph {
       .join(d.maybeBroadcast(a.select(col("id").as("dst"), col("auth"))),
         Seq("dst"))
       .groupBy(col("src").as("id")).agg(sum(col("auth")).as("hub"))
-    // round 1 authority = in-degree (h₀ is the constant 1) — no join
-    var authLazy: DataFrame = eDst.groupBy(col("dst").as("id"))
-      .agg(count(lit(1)).as("auth"))
-    var it = 1
-    while (it < iterations) {
-      it += 1
-      authLazy = authOf(hubOf(authLazy).localCheckpoint(true))
-    }
-    val authFinal =
-      if (d.broadcast) authLazy else authLazy.localCheckpoint(true)
-    val nodes = eSrc.select(col("src").as("id"))
-      .unionByName(eDst.select(col("dst").as("id"))).distinct()
-    val out = nodes
-      .join(d.maybeBroadcast(hubOf(authFinal)), Seq("id"), "left")
-      .join(d.maybeBroadcast(authFinal), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("hub"), lit(0L)).as("hub"),
-        coalesce(col("auth"), lit(0L)).as("auth"))
-      .localCheckpoint(true)
-    eSrc.unpersist(blocking = false)
-    eDst.unpersist(blocking = false)
-    out
+    // The output join still reads both edge caches after the last round,
+    // so this kernel releases them itself instead of handing them to the
+    // loop.
+    try {
+      // round 1 authority = in-degree (h₀ is the constant 1) — no join
+      val (authLazy, _) = iterate(eDst.groupBy(col("dst").as("id"))
+          .agg(count(lit(1)).as("auth")), 0L, iterations - 1, Stop.Never) {
+        (auth, _) => (authOf(hubOf(auth).localCheckpoint(true)), 0L)
+      }
+      val authFinal =
+        if (d.broadcast) authLazy else authLazy.localCheckpoint(true)
+      eSrc.select(col("src").as("id"))
+        .unionByName(eDst.select(col("dst").as("id"))).distinct()
+        .join(d.maybeBroadcast(hubOf(authFinal)), Seq("id"), "left")
+        .join(d.maybeBroadcast(authFinal), Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("hub"), lit(0L)).as("hub"),
+          coalesce(col("auth"), lit(0L)).as("auth"))
+        .localCheckpoint(true)
+    } finally Seq(eSrc, eDst).foreach(_.unpersist(blocking = false))
   }
 
   /** Multi-source BFS: exact shortest hop distance from ANY seed, up to
@@ -438,33 +461,27 @@ object Graph {
     // fitting-but-cost-vetoed stays on plain shuffle joins here.
     if (!d.fits && coBucketAboveBroadcast)
       return bfsDistancesCoBucketed(edges, seeds, maxHops)
-    val ew = longEdges(edges).repartition(col("dst")).cache()
     // frontier counts OBSERVED in the checkpoint jobs (round-15 fusion)
     // — the old per-hop isEmpty was one extra job per hop
     val (seed0, nSeed) = GraphTuning.checkpointWithCount(
       seeds.select(col("id").cast("long"), lit(0L).as("dist")).distinct())
+    val ew = longEdges(edges).repartition(col("dst")).cache()
     // Only each hop's NEW frontier is ever materialized: the visited set
     // stays a lazy union of the checkpointed frontiers (scanning k small
     // flat frames per anti-join), where re-checkpointing the union would
     // rewrite every visited row once per hop — O(hops · nodes) total.
-    var frontiers = List(seed0)
-    var frontier = seed0
-    var nFrontier = nSeed
-    var hop = 0
-    while (hop < maxHops && nFrontier > 0) {
-      hop += 1
-      val visited = frontiers.map(_.select("id")).reduce(_ unionByName _)
-      val fn = GraphTuning.checkpointWithCount(ew
-        .join(d.maybeBroadcast(frontier.select(col("id").as("src"))),
+    // State: the frontiers, newest first.
+    val (frontiers, _) = iterate(List(seed0), nSeed, maxHops, Stop.Empty,
+        ew) { (fs, hop) =>
+      val visited = fs.map(_.select("id")).reduce(_ unionByName _)
+      val (next, n) = GraphTuning.checkpointWithCount(ew
+        .join(d.maybeBroadcast(fs.head.select(col("id").as("src"))),
           Seq("src"))
         .select(col("dst").as("id")).distinct()
         .join(d.maybeBroadcast(visited), Seq("id"), "left_anti")
         .withColumn("dist", lit(hop.toLong)))
-      frontier = fn._1
-      nFrontier = fn._2
-      frontiers ::= frontier
+      (next :: fs, n)
     }
-    ew.unpersist(blocking = false)
     frontiers.reduce(_ unionByName _)
   }
 
@@ -635,40 +652,33 @@ object Graph {
     require(nSeeds <= 64, "multiSourceBfs packs at most 64 seeds")
     val d = GraphTuning.resolveRegime("multiSourceBfs", edges,
       broadcastNodeLimit)(hll(edges, "dst"))
-    val ew = longEdges(edges).repartition(col("dst")).cache()
     // frontier counts observed in the checkpoint jobs (round-15 fusion)
     val f0 = sd.select(col("id"),
         expr("shiftleft(CAST(1 AS BIGINT), bit)").as("bits"),
         lit(0L).as("hop"))
       .localCheckpoint(true)
-    var frontiers = List(f0)
-    var frontier = f0
-    var nFrontier = nSeeds
-    var hop = 0
-    while (hop < maxHops && nFrontier > 0) {
-      hop += 1
+    val ew = longEdges(edges).repartition(col("dst")).cache()
+    val (frontiers, _) = iterate(List(f0), nSeeds, maxHops, Stop.Empty,
+        ew) { (fs, hop) =>
       // Reached masks so far: lazy union of the checkpointed frontiers,
       // re-merged per round (reached-set-sized, the bfsDistances
       // anti-join-scan discipline — never rewritten, only re-read).
-      val seen = frontiers.map(_.select("id", "bits"))
+      val seen = fs.map(_.select("id", "bits"))
         .reduce(_ unionByName _)
         .groupBy("id").agg(expr("bit_or(bits)").as("seen"))
       val gathered = ew
         .join(d.maybeBroadcast(
-          frontier.select(col("id").as("src"), col("bits"))), Seq("src"))
+          fs.head.select(col("id").as("src"), col("bits"))), Seq("src"))
         .groupBy(col("dst").as("id")).agg(expr("bit_or(bits)").as("g"))
-      val fn = GraphTuning.checkpointWithCount(gathered
+      val (next, n) = GraphTuning.checkpointWithCount(gathered
         .join(d.maybeBroadcast(seen), Seq("id"), "left")
         .select(col("id"), col("g")
           .bitwiseAND(bitwise_not(coalesce(col("seen"), lit(0L))))
           .as("bits"))
         .filter(col("bits") =!= 0L)
         .withColumn("hop", lit(hop.toLong)))
-      frontier = fn._1
-      nFrontier = fn._2
-      frontiers ::= frontier
+      (next :: fs, n)
     }
-    ew.unpersist(blocking = false)
     frontiers.reduce(_ unionByName _)
       .select(col("id"), col("hop").as("dist"), explode(expr(
         "filter(sequence(0, 63), b -> ((bits >> b) & 1) = 1)")).as("bit"))
@@ -716,19 +726,18 @@ object Graph {
       .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
     WorkTables.runAll("pr", layout) { wt =>
       def rankTbl(i: Int) = s"ranks_$i"
-      // Round 1 propagates the constant flat rank — no join needed.
-      wt.write(
-        wt.table("edges")
-          .select(col("dst"), expr(s"$scale div deg").as("c"))
-          .groupBy("dst").agg(sum(col("c")).as("s"))
-          .select(col("dst").as("src"), (lit(scale - dampingScaled) +
-            expr(s"($dampingScaled * s) div $scale")).as("rank")),
-        rankTbl(1), "src")
-      var it = 1
-      while (it < iterations) {
-        it += 1
-        wt.write(coBucketedRound(wt.spark, wt.name("edges"),
-          wt.name(rankTbl(it - 1)), scale, dampingScaled), rankTbl(it), "src")
+      val (_, it) = iterate((), 0L, iterations, Stop.Never) { (_, it) =>
+        wt.write(
+          if (it == 1) // propagates the constant flat rank — no join
+            wt.table("edges")
+              .select(col("dst"), expr(s"$scale div deg").as("c"))
+              .groupBy("dst").agg(sum(col("c")).as("s"))
+              .select(col("dst").as("src"), (lit(scale - dampingScaled) +
+                expr(s"($dampingScaled * s) div $scale")).as("rank"))
+          else coBucketedRound(wt.spark, wt.name("edges"),
+            wt.name(rankTbl(it - 1)), scale, dampingScaled),
+          rankTbl(it), "src")
+        ((), 0L)
       }
       (captureAt + it).filter(r => r >= 1 && r <= it).map { r =>
         r -> wt.table(rankTbl(r)).select(col("src").as("id"), col("rank"))
@@ -836,11 +845,10 @@ object Graph {
       // (zero Exchange) over the just-written edge table
       wt.write(wt.table("edges").select(col("src")).distinct()
         .withColumn("lbl", col("src")), lblTbl(0), "src")
-      var it = 0
-      while (it < iterations) {
-        it += 1
+      val (_, it) = iterate((), 0L, iterations, Stop.Never) { (_, it) =>
         wt.write(lpaCoBucketedRound(wt.spark, wt.name("edges"),
           wt.name(lblTbl(it - 1)), wt.numBuckets), lblTbl(it), "src")
+        ((), 0L)
       }
       wt.table(lblTbl(it)).select(col("src").as("id"), col("lbl").as("label"))
     }
@@ -878,17 +886,16 @@ object Graph {
         hitsCoBucketedHalfRound(wt.spark, wt.name(edgesTbl),
           wt.name(scoreTbl), joinKey, aggKey, scoreCol, outCol)
       wt.write(wt.table("edges"), "edst", "dst")
-      wt.write(wt.table("edst").groupBy(col("dst").as("id"))
-        .agg(count(lit(1)).as("auth")), authTbl(1), "id")
-      wt.write(half("edst", authTbl(1), "dst", "src", "auth", "hub"),
-        hubTbl(1), "id")
-      var it = 1
-      while (it < iterations) {
-        it += 1
-        wt.write(half("edges", hubTbl(it - 1), "src", "dst", "hub", "auth"),
+      val (_, it) = iterate((), 0L, iterations, Stop.Never) { (_, it) =>
+        wt.write(
+          if (it == 1) // authority = in-degree, a bucket-aligned agg
+            wt.table("edst").groupBy(col("dst").as("id"))
+              .agg(count(lit(1)).as("auth"))
+          else half("edges", hubTbl(it - 1), "src", "dst", "hub", "auth"),
           authTbl(it), "id")
         wt.write(half("edst", authTbl(it), "dst", "src", "auth", "hub"),
           hubTbl(it), "id")
+        ((), 0L)
       }
       wt.table("edges").select(col("src").as("id"))
         .unionByName(wt.table("edst").select(col("dst").as("id"))).distinct()
@@ -909,9 +916,20 @@ object Graph {
     * re-clusters [Exchange 2]. The `__changed` flag rides along for the
     * caller's convergence check. Edge rows never move. */
   def ccCoBucketedRound(spark: SparkSession, edgesTable: String,
-      labelsTable: String): DataFrame = {
-    val labels = spark.table(labelsTable).select("id", "label")
-    val neighborMin = spark.table(edgesTable)
+      labelsTable: String): DataFrame =
+    ccRound(spark.table(edgesTable), spark.table(labelsTable))
+
+  /** One hash-min + pointer-jump connected-components round over
+    * (src, dst) `edges` and (id, label) `labels`, shared by
+    * [[ccCoBucketedRound]] and the distributed loop of
+    * `Dedup.duplicateClusters`: each node takes the min label among
+    * itself and its neighbors, then the label of that label (the pointer
+    * jump halves label chains, so the loop converges in O(log diameter)
+    * rounds). Emits (id, label, __changed). */
+  private[graft] def ccRound(edges: DataFrame, labelsIn: DataFrame)
+      : DataFrame = {
+    val labels = labelsIn.select("id", "label")
+    val neighborMin = edges
       .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
       .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
     val cand = labels.join(neighborMin, Seq("id"), "left")
@@ -924,6 +942,11 @@ object Graph {
         (least(cand("label"), coalesce(col("__plabel"), cand("label"))) <
           col("__old")).as("__changed"))
   }
+
+  /** The convergence count of a [[ccRound]] loop: rows whose label
+    * changed this round. */
+  private[graft] def ccChangedRows: org.apache.spark.sql.Column =
+    sum(when(col("__changed"), 1L).otherwise(0L))
 
   /** Big-graph connected components — the bucketed-table regime of the
     * hash-min/pointer-jump loop in `Dedup.duplicateClusters` (the dedup
@@ -946,16 +969,12 @@ object Graph {
       def lblTbl(i: Int) = s"labels_$i"
       wt.write(wt.table("edges").select(col("src").as("id")).distinct()
         .withColumn("label", col("id")), lblTbl(0), "id")
-      var converged = false
-      var it = 0
-      while (!converged && it < maxIterations) {
-        it += 1
-        // changed-row count observed in the bucketed write itself —
-        // the old convergence check re-read the whole label table
-        val nChanged = wt.writeObserving(ccCoBucketedRound(wt.spark,
+      // changed-row count observed in the bucketed write itself — the
+      // old convergence check re-read the whole label table
+      val (_, it) = iterate((), -1L, maxIterations, Stop.Empty) { (_, it) =>
+        ((), wt.writeObserving(ccCoBucketedRound(wt.spark,
             wt.name("edges"), wt.name(lblTbl(it - 1))),
-          lblTbl(it), "id", sum(when(col("__changed"), 1L).otherwise(0L)))
-        converged = nChanged == 0
+          lblTbl(it), "id", ccChangedRows))
       }
       wt.table(lblTbl(it)).select(col("id"), col("label"))
     }
@@ -989,29 +1008,42 @@ object Graph {
   def bfsDistancesCoBucketed(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, "maxHops must be >= 0")
-    WorkTables.run("bfs", longEdges(edges)) { wt =>
+    coBucketedFrontier("bfs", longEdges(edges), seeds, maxHops)(
+        (wt, frontier, visited, hop) => bfsCoBucketedRound(wt.spark,
+          wt.name("edges"), frontier, visited, wt.numBuckets, hop))(
+      _ unionByName _)
+  }
+
+  /** The co-bucketed delta-frontier loop of [[bfsDistancesCoBucketed]]
+    * and [[ssspDistancesCoBucketed]]: seeds start at dist 0, and the
+    * frontier and reached (src, dist) tables are work tables bucketed
+    * by src. Each round writes the next frontier from
+    * `round(wt, frontier table, reached table, round)` and the next
+    * reached table as `merge(reached, frontier)`.
+    *
+    * @return (id, dist) for every reached node */
+  private def coBucketedFrontier(kernel: String, layout: DataFrame,
+      seeds: DataFrame, maxRounds: Int)
+      (round: (WorkTables, String, String, Int) => DataFrame)
+      (merge: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    WorkTables.run(kernel, layout) { wt =>
       def frontTbl(i: Int) = s"frontier_$i"
-      def visTbl(i: Int) = s"visited_$i"
+      def reachTbl(i: Int) = s"reached_$i"
       // frontier sizes observed in the bucketed writes themselves —
       // the old loop re-read each just-written frontier table to count
-      var frontierSize = wt.writeObserving(
+      val n0 = wt.writeObserving(
         seeds.select(col("id").cast("long").as("src"), lit(0L).as("dist"))
           .distinct(), frontTbl(0), "src", count(lit(1)))
-      wt.write(wt.table(frontTbl(0)), visTbl(0), "src")
-      var hop = 0
-      while (hop < maxHops && frontierSize > 0) {
-        hop += 1
-        frontierSize = wt.writeObserving(
-          bfsCoBucketedRound(wt.spark, wt.name("edges"),
-            wt.name(frontTbl(hop - 1)), wt.name(visTbl(hop - 1)),
-            wt.numBuckets, hop),
-          frontTbl(hop), "src", count(lit(1)))
-        wt.write(wt.table(visTbl(hop - 1)).unionByName(wt.table(frontTbl(hop))),
-          visTbl(hop), "src")
+      wt.write(wt.table(frontTbl(0)), reachTbl(0), "src")
+      val (_, last) = iterate((), n0, maxRounds, Stop.Empty) { (_, r) =>
+        val n = wt.writeObserving(round(wt, wt.name(frontTbl(r - 1)),
+          wt.name(reachTbl(r - 1)), r), frontTbl(r), "src", count(lit(1)))
+        wt.write(merge(wt.table(reachTbl(r - 1)), wt.table(frontTbl(r))),
+          reachTbl(r), "src")
+        ((), n)
       }
-      wt.table(visTbl(hop)).select(col("src").as("id"), col("dist"))
+      wt.table(reachTbl(last)).select(col("src").as("id"), col("dist"))
     }
-  }
 
   /** Multi-source WEIGHTED shortest paths — bounded-round Bellman-Ford
     * with a delta frontier. After `maxRounds` rounds every returned
@@ -1064,45 +1096,8 @@ object Graph {
         (d.edgeEstimate < 0 || d.edgeEstimate >= coBucketEdgeThreshold) &&
         edges.count() >= coBucketEdgeThreshold)
       return ssspDistancesCoBucketed(edges, seeds, maxRounds)
-    val ew = longEdges(edges, "w").repartition(col("dst")).cache()
-    // frontier counts observed in the checkpoint jobs (round-15
-    // fusion) — the old loop paid TWO isEmpty jobs per round (the
-    // while guard plus the best-rewrite guard)
-    var (best, nFrontier) = GraphTuning.checkpointWithCount(
-      seeds.select(col("id").cast("long"), lit(0L).as("dist")).distinct())
-    var frontier = best
-    var round = 0
-    while (round < maxRounds && nFrontier > 0) {
-      round += 1
-      val cand = ew
-        .join(d.maybeBroadcast(frontier.select(col("id").as("src"),
-          col("dist").as("fd"))), Seq("src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("fd") + col("w")).as("cand"))
-      val fn = GraphTuning.checkpointWithCount(cand
-        .join(d.maybeBroadcast(best.withColumnRenamed("dist", "old")),
-          Seq("id"), "left")
-        .filter(col("old").isNull || col("cand") < col("old"))
-        .select(col("id"), col("cand").as("dist")))
-      frontier = fn._1
-      nFrontier = fn._2
-      // best rewrite as REPLACE (anti-join old rows out, union the
-      // strictly-better frontier in) rather than union+groupBy-min: in
-      // the broadcast regime the anti side broadcasts, so the rewrite
-      // costs ZERO shuffle of the reached set (the groupBy spelling
-      // shuffles best+frontier every round). Equivalent by
-      // construction — frontier rows are strictly smaller. Measured
-      // parity at sf0.1 (3.12 s vs 3.23 s min-of-5, inside the 0.6 s
-      // spread — the checkpoint write dominates at this size); kept
-      // for the structural zero-shuffle edge when `best` is large.
-      if (nFrontier > 0)
-        best = best
-          .join(d.maybeBroadcast(frontier.select("id")), Seq("id"), "left_anti")
-          .unionByName(frontier)
-          .localCheckpoint(true)
-    }
-    ew.unpersist(blocking = false)
-    best
+    minLabelFrontier(edges, "w", seeds, 0L, "dist", maxRounds, d)(
+      _.select(col("dst"), (col("f") + col("w")).as("v")))
   }
 
   /** Time-respecting earliest-arrival reachability: over temporal edges
@@ -1135,33 +1130,56 @@ object Graph {
     require(maxRounds >= 0, "maxRounds must be >= 0")
     val d = GraphTuning.resolveRegime("temporalEarliestArrival", edges,
       broadcastNodeLimit)(hll(edges, "dst"))
-    val ew = longEdges(edges, "t").repartition(col("dst")).cache()
-    // frontier counts observed in the checkpoint jobs (round-15 fusion)
-    var (best, nFrontier) = GraphTuning.checkpointWithCount(
-      seeds.select(col("id").cast("long"), lit(-1L).as("arr")).distinct())
-    var frontier = best
-    var round = 0
-    while (round < maxRounds && nFrontier > 0) {
-      round += 1
-      val cand = ew
-        .join(d.maybeBroadcast(frontier.select(col("id").as("src"),
-          col("arr").as("fa"))), Seq("src"))
-        .filter(col("t") > col("fa"))
-        .groupBy(col("dst").as("id")).agg(min(col("t")).as("cand"))
-      val fn = GraphTuning.checkpointWithCount(cand
-        .join(d.maybeBroadcast(best.withColumnRenamed("arr", "old")),
+    minLabelFrontier(edges, "t", seeds, -1L, "arr", maxRounds, d)(
+      _.filter(col("t") > col("f")).select(col("dst"), col("t").as("v")))
+  }
+
+  /** The delta-frontier min-label loop of [[ssspDistances]] and
+    * [[temporalEarliestArrival]] in the broadcast and shuffle regimes.
+    * Seeds start at `seedValue` in column `out`. Each round joins the
+    * frontier (value as `f`) to the dst-partitioned cached edge table
+    * (src, dst, `edgeCol`), `relax` turns the joined rows into (dst, v)
+    * candidates, and the min candidate per node that beats the node's
+    * best value joins the next frontier.
+    *
+    * @return (id, `out`): the best value of every reached node */
+  private def minLabelFrontier(edges: DataFrame, edgeCol: String,
+      seeds: DataFrame, seedValue: Long, out: String, maxRounds: Int,
+      d: GraphTuning.RegimeDecision)
+      (relax: DataFrame => DataFrame): DataFrame = {
+    // frontier counts observed in the checkpoint jobs (round-15
+    // fusion) — the old loop paid TWO isEmpty jobs per round (the
+    // while guard plus the best-rewrite guard)
+    val (seed0, nSeed) = GraphTuning.checkpointWithCount(
+      seeds.select(col("id").cast("long"), lit(seedValue).as(out)).distinct())
+    val ew = longEdges(edges, edgeCol).repartition(col("dst")).cache()
+    val ((best, _), _) = iterate((seed0, seed0), nSeed, maxRounds,
+        Stop.Empty, ew) { case ((best, frontier), _) =>
+      val cand = relax(ew.join(d.maybeBroadcast(frontier.select(
+          col("id").as("src"), col(out).as("f"))), Seq("src")))
+        .groupBy(col("dst").as("id")).agg(min(col("v")).as("cand"))
+      val (next, n) = GraphTuning.checkpointWithCount(cand
+        .join(d.maybeBroadcast(best.withColumnRenamed(out, "old")),
           Seq("id"), "left")
         .filter(col("old").isNull || col("cand") < col("old"))
-        .select(col("id"), col("cand").as("arr")))
-      frontier = fn._1
-      nFrontier = fn._2
-      if (nFrontier > 0)
-        best = best
-          .join(d.maybeBroadcast(frontier.select("id")), Seq("id"), "left_anti")
-          .unionByName(frontier)
+        .select(col("id"), col("cand").as(out)))
+      // best rewrite as REPLACE (anti-join old rows out, union the
+      // strictly-better frontier in) rather than union+groupBy-min: in
+      // the broadcast regime the anti side broadcasts, so the rewrite
+      // costs ZERO shuffle of the reached set (the groupBy spelling
+      // shuffles best+frontier every round). Equivalent by
+      // construction — frontier rows are strictly smaller. Measured
+      // parity at sf0.1 (3.12 s vs 3.23 s min-of-5, inside the 0.6 s
+      // spread — the checkpoint write dominates at this size); kept
+      // for the structural zero-shuffle edge when `best` is large.
+      val rewritten =
+        if (n == 0) best
+        else best
+          .join(d.maybeBroadcast(next.select("id")), Seq("id"), "left_anti")
+          .unionByName(next)
           .localCheckpoint(true)
+      ((rewritten, next), n)
     }
-    ew.unpersist(blocking = false)
     best
   }
 
@@ -1197,31 +1215,14 @@ object Graph {
   def ssspDistancesCoBucketed(edges: DataFrame, seeds: DataFrame,
       maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, "maxRounds must be >= 0")
-    WorkTables.run("sssp", longEdges(edges, "w")) { wt =>
-      def frontTbl(i: Int) = s"frontier_$i"
-      def bestTbl(i: Int) = s"best_$i"
-      // frontier sizes observed in the bucketed writes themselves —
-      // the old loop re-read each just-written frontier table to count
-      var frontierSize = wt.writeObserving(
-        seeds.select(col("id").cast("long").as("src"), lit(0L).as("dist"))
-          .distinct(), frontTbl(0), "src", count(lit(1)))
-      wt.write(wt.table(frontTbl(0)), bestTbl(0), "src")
-      var round = 0
-      while (round < maxRounds && frontierSize > 0) {
-        round += 1
-        frontierSize = wt.writeObserving(
-          ssspCoBucketedRound(wt.spark, wt.name("edges"),
-            wt.name(frontTbl(round - 1)), wt.name(bestTbl(round - 1)),
-            wt.numBuckets),
-          frontTbl(round), "src", count(lit(1)))
-        wt.write(
-          wt.table(bestTbl(round - 1))
-            .join(wt.table(frontTbl(round)).withColumnRenamed("dist", "nd"),
-              Seq("src"), "full_outer")
-            .select(col("src"), coalesce(col("nd"), col("dist")).as("dist")),
-          bestTbl(round), "src")
-      }
-      wt.table(bestTbl(round)).select(col("src").as("id"), col("dist"))
+    coBucketedFrontier("sssp", longEdges(edges, "w"), seeds, maxRounds)(
+        (wt, frontier, best, _) => ssspCoBucketedRound(wt.spark,
+          wt.name("edges"), frontier, best, wt.numBuckets)) {
+      // the frontier side wins: it is strictly smaller by construction
+      (best, frontier) => best
+        .join(frontier.withColumnRenamed("dist", "nd"), Seq("src"),
+          "full_outer")
+        .select(col("src"), coalesce(col("nd"), col("dist")).as("dist"))
     }
   }
 
@@ -1259,33 +1260,28 @@ object Graph {
         broadcastNodeLimit, stateRows = Some(seeds)) {
       (seeds.select(col("id")).distinct().count(), "exact")
     }
-    val ew = longEdges(edges).repartition(col("src")).cache()
     // walk-state counts observed in the checkpoint jobs (round-15
     // fusion) — the old per-step isEmpty was one extra job per step
     val (seed0, nSeed) = GraphTuning.checkpointWithCount(
       seeds.select(col("id").cast("long").as("walk")).distinct())
-    var cur = seed0.withColumn("node", col("walk"))
-    var nCur = nSeed
-    var out = List(cur.withColumn("step", lit(0L)))
-    var t = 0
-    while (t < steps && nCur > 0) {
-      t += 1
+    val ew = longEdges(edges).repartition(col("src")).cache()
+    val start = seed0.withColumn("node", col("walk"))
+    // State: the walks' current nodes, and every step so far, newest first.
+    val ((_, out), _) = iterate((start, List(start.withColumn("step", lit(0L)))),
+        nSeed, steps, Stop.Empty, ew) { case ((cur, out), t) =>
       // the portable per-step key: md5_32("walk:t:candidate") — the
       // exact string the oracle rebuilds (Corpus.md5Uniform contract)
       val h = conv(substring(md5(concat(col("walk").cast("string"),
         lit(s":$t:"), col("dst").cast("string")).cast("binary")), 1, 8),
         16, 10).cast("bigint")
-      val cn = GraphTuning.checkpointWithCount(ew
+      val (next, n) = GraphTuning.checkpointWithCount(ew
         .join(d.maybeBroadcast(cur.select(col("node").as("src"), col("walk"))),
           Seq("src"))
         .select(col("walk"), col("dst"), h.as("h"))
         .groupBy("walk").agg(min(struct(col("h"), col("dst"))).as("m"))
         .select(col("walk"), col("m.dst").as("node")))
-      cur = cn._1
-      nCur = cn._2
-      out ::= cur.withColumn("step", lit(t.toLong))
+      ((next, next.withColumn("step", lit(t.toLong)) :: out), n)
     }
-    ew.unpersist(blocking = false)
     out.reduce(_ unionByName _).select("walk", "step", "node")
   }
 
@@ -1432,34 +1428,31 @@ object Graph {
     // stats pass — the frontier is checkpointed and tiny by contract).
     val (rankLimit, _) =
       GraphTuning.resolveNodeLimit(edges.sparkSession, broadcastRankLimit)
-    val ew = longEdges(edges)
-      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
-      .repartition(col("dst")).cache()
     val sd = seeds.select(col("id").cast("long")).distinct()
       .localCheckpoint(true)
     val base = scale - dampingScaled
     // per-round count OBSERVED in the checkpoint job (the round-15
     // loop-action fusion, GraphTuning.checkpointWithCount) — the old
     // separate ranks.count() was one extra job per round
-    var (ranks, nRanks) = GraphTuning.checkpointWithCount(
+    val start = GraphTuning.checkpointWithCount(
       sd.withColumn("rank", lit(scale)))
-    var it = 0
-    while (it < iterations) {
-      it += 1
+    val ew = longEdges(edges)
+      .withColumn("deg", count(lit(1)).over(Window.partitionBy("src")))
+      .repartition(col("dst")).cache()
+    val ((ranks, _), _) = iterate(start, start._2, iterations, Stop.Never,
+        ew) { case ((ranks, nRanks), _) =>
       val r = if (nRanks <= rankLimit) broadcast(ranks) else ranks
       val contrib = ew
         .join(r.withColumnRenamed("id", "src"), Seq("src"))
         .select(col("dst").as("id"), expr("rank div deg").as("c"))
         .groupBy("id").agg(sum(col("c")).as("s"))
-      val rn = GraphTuning.checkpointWithCount(
+      val next = GraphTuning.checkpointWithCount(
         sd.withColumn("r", lit(base))
           .unionByName(contrib.select(col("id"),
             expr(s"($dampingScaled * s) div $scale").as("r")))
           .groupBy("id").agg(sum(col("r")).as("rank")))
-      ranks = rn._1
-      nRanks = rn._2
+      (next, next._2)
     }
-    ew.unpersist(blocking = false)
     ranks
   }
 
@@ -1491,7 +1484,7 @@ object Graph {
     // edge counts observed in the checkpoint jobs (round-15 fusion) —
     // the old per-round e.count() was a whole extra PASS over the
     // round's surviving edge set
-    var (e, m) = GraphTuning.checkpointWithCount(
+    val start = GraphTuning.checkpointWithCount(
       longEdges(edges).filter(col("src") =!= col("dst")).distinct())
     def degrees(ed: DataFrame): DataFrame =
       ed.select(col("src").as("id"))
@@ -1509,26 +1502,22 @@ object Graph {
     // the veto would compare 64m against max(24m, floor) and
     // structurally demote every graph above the floor regardless of
     // the conf limit — the conf-resolved fit test alone governs.
-    var round = 0
-    var done = m == 0L
-    while (!done && round < maxRounds) {
-      round += 1
+    val ((core, _), _) = iterate(start, start._2, maxRounds,
+        Stop.Unchanged) { case ((e, m), _) =>
       val d = GraphTuning.decide(edges.sparkSession, "kCore",
         nodeEstimate = if (m > Long.MaxValue / 2) Long.MaxValue else 2 * m,
         nodeEstimateSource = "edge-count-bound",
         requestedLimit = broadcastNodeLimit)
       val keep = degrees(e).filter(col("deg") >= k).select("id")
-      val en = GraphTuning.checkpointWithCount(e
+      val next = GraphTuning.checkpointWithCount(e
         .join(d.maybeBroadcast(keep.withColumnRenamed("id", "src")),
           Seq("src"), "semi")
         .join(d.maybeBroadcast(keep.withColumnRenamed("id", "dst")),
           Seq("dst"), "semi")
         .select("src", "dst"))
-      e = en._1
-      done = en._2 == m
-      m = en._2
+      (next, next._2)
     }
-    degrees(e).select(col("id"), col("deg"))
+    degrees(core).select(col("id"), col("deg"))
   }
 
   /** Synchronous label propagation (community detection): every node
@@ -1581,12 +1570,10 @@ object Graph {
     // — measured: both round aggs re-shuffle), which is what makes the
     // rounds exchange-free.
     val ew = longEdges(edges).repartition(col("dst")).cache()
-    var labels = ew.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id")).localCheckpoint(true)
-    var it = 0
-    while (it < iterations) {
-      it += 1
-      labels = ew
+    val (labels, _) = iterate(ew.select(col("src").as("id")).distinct()
+        .withColumn("lbl", col("id")).localCheckpoint(true), 0L, iterations,
+        Stop.Never, ew) { (labels, _) =>
+      (ew
         .join(d.maybeBroadcast(labels.withColumnRenamed("id", "src")),
           Seq("src"))
         .groupBy(col("dst").as("id"), col("lbl"))
@@ -1594,27 +1581,67 @@ object Graph {
         .groupBy("id")
         .agg(min_by(col("lbl"),
           struct((-col("c")).as("nc"), col("lbl"))).as("lbl"))
-        .localCheckpoint(true)
+        .localCheckpoint(true), 0L)
     }
-    ew.unpersist(blocking = false)
     labels.select(col("id"), col("lbl").as("label"))
   }
 
-  /** Shared engine of [[triangleCounts]] and [[edgeSupport]]: degree
-    * orientation + triangle enumeration over a cached canonical edge
-    * set, regime-routed exactly as documented on [[triangleCounts]].
-    * Caller owns `canon`; everything this allocates is in `cleanup`. */
+  /** Canonical undirected simple edges — (a, b) with a < b,
+    * deduplicated, self-loops dropped — cached: the input of every
+    * triangle kernel. */
+  private def canonicalEdges(edges: DataFrame): DataFrame =
+    edges.select(
+        least(col("src"), col("dst")).cast("long").as("a"),
+        greatest(col("src"), col("dst")).cast("long").as("b"))
+      .filter(col("a") =!= col("b"))
+      .distinct()
+      .cache()
+
+  /** Shared engine of the triangle family: runs `body` over the
+    * degree-oriented triangle stream of the cached canonical edge set
+    * `canon`, or returns `empty` when `canon` holds no edge. `stats` is
+    * the (m, lo, hi, nUpper) row when the caller already observed it.
+    * `canon` and everything the stream caches are released when `body`
+    * returns or throws, so `body` materializes what it returns. */
+  private def withTriangles[R](canon: DataFrame, stats: Option[Row],
+      broadcastNodeLimit: Long, broadcastEdgeLimit: Long)(empty: => R)
+      (body: TriangleStream => R): R =
+    try {
+      // ONE stats action decides every regime knob (edge count, id
+      // bounds, node-count upper bound): the previous canon.count /
+      // deg.count / bounds.first sequence serialized three jobs for ~1 s
+      // of pure latency at sf0.1. The node estimate a+b double-counts
+      // nodes seen on both sides — only ever conservative (skips
+      // broadcast early, never OOMs late). canon has a < b, so
+      // min(a)/max(b) bound all ids.
+      val st = stats.getOrElse(canon.agg(count(lit(1)).as("m"),
+        min(col("a")).as("lo"), max(col("b")).as("hi"),
+        (approx_count_distinct(col("a")) + approx_count_distinct(col("b")))
+          .as("nUpper")).first())
+      if (st.getLong(0) == 0) empty
+      else {
+        val tm = orientedTriangleStream(canon, st, broadcastNodeLimit,
+          broadcastEdgeLimit)
+        try body(tm) finally tm.cleanup.foreach(_.unpersist(blocking = false))
+      }
+    } finally canon.unpersist(blocking = false)
+
+  /** Degree orientation + triangle enumeration over a cached canonical
+    * edge set, regime-routed exactly as documented on
+    * [[triangleCounts]]: `tris` holds each triangle once as (u, v, w),
+    * `deg` is the (id, d) degree table. Everything this caches is in
+    * `cleanup`. */
   private case class TriangleStream(tris: DataFrame, deg: DataFrame,
       regime: GraphTuning.RegimeDecision, cleanup: Seq[DataFrame])
 
-  private def orientedTriangleStream(spark: org.apache.spark.sql.SparkSession,
-      canon: DataFrame, st: org.apache.spark.sql.Row, nEdges: Long,
+  private def orientedTriangleStream(canon: DataFrame, st: Row,
       broadcastNodeLimit: Long, broadcastEdgeLimit: Long): TriangleStream = {
+    val nEdges = st.getLong(0)
     val deg = canon.select(col("a").as("id"))
       .unionByName(canon.select(col("b").as("id")))
       .groupBy("id").agg(count(lit(1)).as("d"))
       .cache()
-    val d = GraphTuning.decide(spark, "triangleCounts",
+    val d = GraphTuning.decide(canon.sparkSession, "triangleCounts",
       nodeEstimate = st.getLong(3), nodeEstimateSource = "hll-sum",
       edgeEstimate = nEdges, requestedLimit = broadcastNodeLimit)
     // When ids fit in 31 bits, the wedge-volume closure probe joins on
@@ -1741,52 +1768,17 @@ object Graph {
     * memory-tight clusters should lower the limit; the wedge+Bloom
     * regime remains the only option once the adjacency cannot fit.
     *
+    * The counts are the `triangles` column of [[clusteringCoefficient]],
+    * which runs this enumeration and carries degree alongside.
+    *
     * @param edges undirected edges as (src, dst) in either/both
     *              directions; duplicates and self-loops are dropped
     * @return (id, triangles) for EVERY node of the graph, zero included */
   def triangleCounts(edges: DataFrame,
       broadcastNodeLimit: Long = GraphTuning.Auto,
-      broadcastEdgeLimit: Long = 32000000L): DataFrame = {
-    val canon = edges.select(
-        least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .cache()
-    // Below `broadcastEdgeLimit` the adjacency-intersection regime runs
-    // entirely on broadcast node-sized state (8M edges ≈ 128 MB of
-    // packed adjacency longs); above it, wedge enumeration by shuffle.
-    //
-    // ONE stats action decides every regime knob (edge count, id bounds,
-    // node-count upper bound): the previous canon.count / deg.count /
-    // bounds.first sequence serialized three jobs for ~1 s of pure
-    // latency at sf0.1. The node estimate a+b double-counts nodes seen
-    // on both sides — only ever conservative (skips broadcast early,
-    // never OOMs late). canon has a < b, so min(a)/max(b) bound all ids.
-    val st = canon.agg(count(lit(1)).as("m"),
-      min(col("a")).as("lo"), max(col("b")).as("hi"),
-      (approx_count_distinct(col("a")) + approx_count_distinct(col("b")))
-        .as("nUpper")).first()
-    val nEdges = st.getLong(0)
-    if (nEdges == 0) {
-      val out = canon.select(col("a").as("id"), col("b").as("triangles"))
-      canon.unpersist(blocking = false)
-      return out
-    }
-    val tm = orientedTriangleStream(edges.sparkSession, canon, st, nEdges,
-      broadcastNodeLimit, broadcastEdgeLimit)
-    val counts = tm.tris
-      .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("triangles"))
-    val out = tm.deg.select("id")
-      .join(tm.regime.maybeBroadcast(counts), Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"))
-      .localCheckpoint(true)
-    tm.cleanup.foreach(_.unpersist(blocking = false))
-    canon.unpersist(blocking = false)
-    out
-  }
+      broadcastEdgeLimit: Long = 32000000L): DataFrame =
+    clusteringCoefficient(edges, broadcastNodeLimit, broadcastEdgeLimit)
+      .select("id", "triangles")
 
   /** Local clustering coefficient per node, in exact integer ppm:
     * `1e6 · 2·tri(v) / (deg(v)·(deg(v)−1))` over the canonical
@@ -1812,39 +1804,22 @@ object Graph {
     // and cached (tm.deg IS degree: both endpoints of every canonical
     // edge, counted). Same kernel, two fewer edge passes, one fewer
     // exchange — plans/r16/{before,after}/q170_clustering_coeff.txt.
-    val canon = edges.select(
-        least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .cache()
-    val st = canon.agg(count(lit(1)).as("m"),
-      min(col("a")).as("lo"), max(col("b")).as("hi"),
-      (approx_count_distinct(col("a")) + approx_count_distinct(col("b")))
-        .as("nUpper")).first()
-    val nEdges = st.getLong(0)
-    if (nEdges == 0) {
-      val out = canon.select(col("a").as("id"), col("b").as("degree"),
-        lit(0L).as("triangles"), lit(0L).as("cc_ppm"))
-      canon.unpersist(blocking = false)
-      return out
+    val canon = canonicalEdges(edges)
+    withTriangles(canon, None, broadcastNodeLimit, broadcastEdgeLimit)(
+      canon.select(col("a").as("id"), col("b").as("degree"),
+        lit(0L).as("triangles"), lit(0L).as("cc_ppm"))) { tm =>
+      val counts = tm.tris
+        .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
+        .groupBy("id").agg(count(lit(1)).as("triangles"))
+      tm.deg.select(col("id"), col("d").as("degree"))
+        .join(tm.regime.maybeBroadcast(counts), Seq("id"), "left")
+        .select(col("id"), col("degree"),
+          coalesce(col("triangles"), lit(0L)).as("triangles"),
+          when(col("degree") >= 2,
+            expr("(2000000 * coalesce(triangles, 0)) div (degree * (degree - 1))"))
+            .otherwise(lit(0L)).as("cc_ppm"))
+        .localCheckpoint(true)
     }
-    val tm = orientedTriangleStream(canon.sparkSession, canon, st, nEdges,
-      broadcastNodeLimit, broadcastEdgeLimit)
-    val counts = tm.tris
-      .select(explode(array(col("u"), col("v"), col("w"))).as("id"))
-      .groupBy("id").agg(count(lit(1)).as("triangles"))
-    val out = tm.deg.select(col("id"), col("d").as("degree"))
-      .join(tm.regime.maybeBroadcast(counts), Seq("id"), "left")
-      .select(col("id"), col("degree"),
-        coalesce(col("triangles"), lit(0L)).as("triangles"),
-        when(col("degree") >= 2,
-          expr("(2000000 * coalesce(triangles, 0)) div (degree * (degree - 1))"))
-          .otherwise(lit(0L)).as("cc_ppm"))
-      .localCheckpoint(true)
-    tm.cleanup.foreach(_.unpersist(blocking = false))
-    canon.unpersist(blocking = false)
-    out
   }
 
   /** Per-edge triangle support — the k-truss kernel: an edge survives
@@ -1860,17 +1835,9 @@ object Graph {
     * @return (a, b, support) for EVERY canonical edge, zero included */
   def edgeSupport(edges: DataFrame,
       broadcastNodeLimit: Long = GraphTuning.Auto,
-      broadcastEdgeLimit: Long = 32000000L): DataFrame = {
-    val canon = edges.select(
-        least(col("src"), col("dst")).cast("long").as("a"),
-        greatest(col("src"), col("dst")).cast("long").as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct()
-      .cache()
-    // edgeSupportCanon unpersists `canon` itself (a no-op for the
-    // checkpointed frames the trussPeel rounds pass in)
-    edgeSupportCanon(canon, broadcastNodeLimit, broadcastEdgeLimit)
-  }
+      broadcastEdgeLimit: Long = 32000000L): DataFrame =
+    edgeSupportCanon(canonicalEdges(edges), broadcastNodeLimit,
+      broadcastEdgeLimit)
 
   /** [[edgeSupport]] over an ALREADY-canonical edge set: `canon` must
     * hold (a, b) with a < b, de-duplicated, and be cheap to re-scan
@@ -1904,53 +1871,39 @@ object Graph {
       survivorMin: Option[Long],
       broadcastNodeLimit: Long = GraphTuning.Auto,
       broadcastEdgeLimit: Long = 32000000L,
-      precomputedStats: Option[org.apache.spark.sql.Row] = None)
-      : (DataFrame, Option[org.apache.spark.sql.Row]) = {
-    val st = precomputedStats.getOrElse(
-      canon.agg(count(lit(1)).as("m"),
-        min(col("a")).as("lo"), max(col("b")).as("hi"),
-        (approx_count_distinct(col("a")) + approx_count_distinct(col("b")))
-          .as("nUpper")).first())
-    val nEdges = st.getLong(0)
-    if (nEdges == 0) {
-      val out = canon.select(col("a"), col("b"), col("a").as("support"))
-      canon.unpersist(blocking = false)
-      return (out, Some(org.apache.spark.sql.Row(0L, 0L, 0L, 0L)))
+      precomputedStats: Option[Row] = None): (DataFrame, Option[Row]) =
+    withTriangles[(DataFrame, Option[Row])](canon, precomputedStats,
+        broadcastNodeLimit, broadcastEdgeLimit)(
+      (canon.select(col("a"), col("b"), col("a").as("support")),
+        Some(Row(0L, 0L, 0L, 0L)))) { tm =>
+      // No join for the zero-fill: every canonical edge enters the SAME
+      // partial agg with weight 0 alongside the triangle fan-out's 1s —
+      // support is edge-sized, so a broadcast would be unbounded and a
+      // shuffle join redundant with the aggregation's own exchange.
+      val sup = tm.tris.select(explode(array(
+          struct(least(col("u"), col("v")).as("a"),
+            greatest(col("u"), col("v")).as("b")),
+          struct(least(col("u"), col("w")).as("a"),
+            greatest(col("u"), col("w")).as("b")),
+          struct(least(col("v"), col("w")).as("a"),
+            greatest(col("v"), col("w")).as("b")))).as("e"))
+        .select(col("e.a").as("a"), col("e.b").as("b"), lit(1L).as("s"))
+      val unioned = canon.select(col("a"), col("b"), lit(0L).as("s"))
+        .unionByName(sup)
+        .groupBy("a", "b").agg(sum(col("s")).as("support"))
+      survivorMin match {
+        case Some(thr) =>
+          val surv = col("support") >= thr
+          val (cp, ms) = GraphTuning.checkpointObservingAll(unioned, Seq(
+            "m" -> sum(when(surv, 1L)),
+            "lo" -> min(when(surv, col("a"))),
+            "hi" -> max(when(surv, col("b"))),
+            "nUpper" -> (approx_count_distinct(when(surv, col("a"))) +
+              approx_count_distinct(when(surv, col("b"))))))
+          (cp, Some(Row(ms("m"), ms("lo"), ms("hi"), ms("nUpper"))))
+        case None => (unioned.localCheckpoint(true), None)
+      }
     }
-    val tm = orientedTriangleStream(canon.sparkSession, canon, st, nEdges,
-      broadcastNodeLimit, broadcastEdgeLimit)
-    // No join for the zero-fill: every canonical edge enters the SAME
-    // partial agg with weight 0 alongside the triangle fan-out's 1s —
-    // support is edge-sized, so a broadcast would be unbounded and a
-    // shuffle join redundant with the aggregation's own exchange.
-    val sup = tm.tris.select(explode(array(
-        struct(least(col("u"), col("v")).as("a"),
-          greatest(col("u"), col("v")).as("b")),
-        struct(least(col("u"), col("w")).as("a"),
-          greatest(col("u"), col("w")).as("b")),
-        struct(least(col("v"), col("w")).as("a"),
-          greatest(col("v"), col("w")).as("b")))).as("e"))
-      .select(col("e.a").as("a"), col("e.b").as("b"), lit(1L).as("s"))
-    val unioned = canon.select(col("a"), col("b"), lit(0L).as("s"))
-      .unionByName(sup)
-      .groupBy("a", "b").agg(sum(col("s")).as("support"))
-    val (out, nextStats) = survivorMin match {
-      case Some(thr) =>
-        val surv = col("support") >= thr
-        val (cp, ms) = GraphTuning.checkpointObservingAll(unioned, Seq(
-          "m" -> sum(when(surv, 1L)),
-          "lo" -> min(when(surv, col("a"))),
-          "hi" -> max(when(surv, col("b"))),
-          "nUpper" -> (approx_count_distinct(when(surv, col("a"))) +
-            approx_count_distinct(when(surv, col("b"))))))
-        (cp, Some(org.apache.spark.sql.Row(
-          ms("m"), ms("lo"), ms("hi"), ms("nUpper"))))
-      case None => (unioned.localCheckpoint(true), None)
-    }
-    tm.cleanup.foreach(_.unpersist(blocking = false))
-    canon.unpersist(blocking = false)
-    (out, nextStats)
-  }
 
   /** Bounded k-truss peel: up to `maxRounds` rounds of (recompute
     * [[edgeSupport]] → drop edges with support < k − 2). A true
@@ -1967,9 +1920,9 @@ object Graph {
       broadcastEdgeLimit: Long = 32000000L): DataFrame = {
     require(k >= 2, "k must be >= 2")
     require(maxRounds >= 1, "maxRounds must be >= 1")
-    // Round 1 canonicalizes the raw input; every later round's survivor
-    // set is canonical BY CONSTRUCTION (a filter of round 1's canon
-    // set) and goes straight to [[edgeSupportCanonCounting]] — the
+    // The raw input is canonicalized once; every round's survivor set
+    // is canonical BY CONSTRUCTION (a filter of that canon set) and
+    // goes straight to [[edgeSupportCanonCounting]] — the
     // public entry's re-canonicalize distinct would be a full edge-set
     // exchange per round. The survivor set stays a LAZY narrow filter
     // of the round's already-checkpointed support table; its count AND
@@ -1978,32 +1931,16 @@ object Graph {
     // support pass — no separate count job, and no full-pass stats agg
     // after round 1.
     val thr = (k - 2).toLong
-    var cur: DataFrame = null
-    var stats: Option[org.apache.spark.sql.Row] = None
-    var round = 0
-    var m = -1L
-    var converged = false
-    while (round < maxRounds && !converged) {
-      round += 1
-      val (sup, next) =
-        if (round == 1) {
-          val canon = edges.select(
-              least(col("src"), col("dst")).cast("long").as("a"),
-              greatest(col("src"), col("dst")).cast("long").as("b"))
-            .filter(col("a") =!= col("b"))
-            .distinct()
-            .cache()
-          edgeSupportCanonCounting(canon, Some(thr), broadcastNodeLimit,
-            broadcastEdgeLimit, None)
-        } else edgeSupportCanonCounting(cur, Some(thr), broadcastNodeLimit,
-          broadcastEdgeLimit, stats)
-      cur = sup.filter(col("support") >= thr).select("a", "b")
-      val m2 = next.get.getLong(0)
-      converged = m2 == m
-      m = m2
-      stats = next
+    // the start has no count yet: round 1 observes it
+    val canon = canonicalEdges(edges)
+    val ((survivors, _), _) = iterate((canon, Option.empty[Row]), -1L,
+        maxRounds, Stop.Unchanged, canon) { case ((cur, stats), _) =>
+      val (sup, next) = edgeSupportCanonCounting(cur, Some(thr),
+        broadcastNodeLimit, broadcastEdgeLimit, stats)
+      ((sup.filter(col("support") >= thr).select("a", "b"), next),
+        next.get.getLong(0))
     }
-    cur
+    survivors
   }
 
   /** k-bounded FW-BW coloring — the partition-refinement step of
@@ -2061,14 +1998,12 @@ object Graph {
     // observed in the same checkpoint job (round-15 fusion); per round
     // the improved-row count rides the joined checkpoint, so the old
     // per-round frontier isEmpty job is gone
-    var (best, nFrontier) = GraphTuning.checkpointWithCount(
+    val (best0, n0) = GraphTuning.checkpointWithCount(
       e.select(col("tag"), col("src").as("id"))
         .unionByName(e.select(col("tag"), col("dst").as("id")))
         .distinct().select(col("tag"), col("id"), col("id").as("lbl")))
-    var frontier = best
-    var round = 0
-    while (round < maxRounds && nFrontier > 0) {
-      round += 1
+    val ((best, _), _) = iterate((best0, best0), n0, maxRounds, Stop.Empty,
+        e) { case ((best, frontier), _) =>
       val cand = e
         .join(d.maybeBroadcast(frontier.select(col("tag"),
           col("id").as("dst"), col("lbl").as("fl"))), Seq("tag", "dst"))
@@ -2083,11 +2018,9 @@ object Graph {
               .otherwise(col("lbl")).as("lbl"),
             (col("cnd") < col("lbl")).as("imp")),
         sum(when(col("imp"), 1L).otherwise(0L)))
-      best = joined.select("tag", "id", "lbl")
-      frontier = joined.filter(col("imp")).select("tag", "id", "lbl")
-      nFrontier = nImp
+      ((joined.select("tag", "id", "lbl"),
+        joined.filter(col("imp")).select("tag", "id", "lbl")), nImp)
     }
-    e.unpersist(blocking = false)
     best.groupBy("id").agg(
         min(when(col("tag") === 0, col("lbl"))).as("fwd_min"),
         min(when(col("tag") === 1, col("lbl"))).as("bwd_min"))

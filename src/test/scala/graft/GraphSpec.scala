@@ -2,6 +2,7 @@ package graft
 
 import graft.operators.Graph
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 class GraphSpec extends SparkSpec {
   import spark.implicits._
@@ -940,4 +941,46 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  test("iterate: each stop rule runs the expected rounds, a cap of 0 included") {
+    import Graph.Stop._
+    def rounds(count: Long, cap: Int, stop: Graph.Stop.Rule)
+        (counts: Int => Long): Int =
+      Graph.iterate((), count, cap, stop)((_, r) => ((), counts(r)))._2
+    // Never: only the cap ends the loop
+    assert(rounds(0L, 5, Never)(_ => 0L) == 5)
+    assert(rounds(7L, 0, Never)(_ => 0L) == 0)
+    // Empty: the first round that observes 0 is the last; an empty start
+    // runs no round, a start without a count (-1) runs
+    assert(rounds(3L, 10, Empty)(r => if (r < 4) 5L else 0L) == 4)
+    assert(rounds(0L, 10, Empty)(_ => 5L) == 0)
+    assert(rounds(-1L, 10, Empty)(_ => 0L) == 1)
+    assert(rounds(3L, 2, Empty)(_ => 5L) == 2)
+    assert(rounds(3L, 0, Empty)(_ => 5L) == 0)
+    // Unchanged: counts 8, 6, 4, 4 stop after round 4; an empty start
+    // runs no round
+    assert(rounds(10L, 20, Unchanged)(r => math.max(10L - 2 * r, 4L)) == 4)
+    assert(rounds(0L, 20, Unchanged)(_ => 5L) == 0)
+    assert(rounds(-1L, 20, Unchanged)(_ => 0L) == 2)
+    assert(rounds(10L, 0, Unchanged)(_ => 1L) == 0)
+    // the state threads through the rounds in order
+    assert(Graph.iterate(List.empty[Int], 0L, 3, Never)(
+      (s, r) => (r :: s, 0L)) == ((List(3, 2, 1), 3)))
+  }
+
+  test("iterate: a round that throws propagates and releases the owned frames") {
+    val a = Seq(1L, 2L).toDF("id").cache()
+    val b = Seq(3L).toDF("id").cache()
+    assert(a.count() == 2 && b.count() == 1)
+    var last = 0
+    val e = intercept[IllegalStateException] {
+      Graph.iterate(0L, 1L, 5, Graph.Stop.Never, a, b) { (s, r) =>
+        last = r
+        if (r == 2) throw new IllegalStateException("round 2")
+        (s + 1, 1L)
+      }
+    }
+    assert(e.getMessage == "round 2" && last == 2)
+    assert(a.storageLevel == StorageLevel.NONE)
+    assert(b.storageLevel == StorageLevel.NONE)
+  }
 }
