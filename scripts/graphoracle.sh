@@ -6,27 +6,25 @@
 #   scripts/graphoracle.sh <sf-dir> [<sf-dir> ...]
 #
 # Each <sf-dir> is a scale-factor data directory (the one compare.py and
-# graft.Verify take). The query list is derived from SparkEntry.scala on
-# every run, so new graph queries join without an edit here. Results go
-# to a fresh temporary directory, printed first. SPARK_GRAFT_CPUS
-# defaults to 4. Exits non-zero if any scale factor has a failing query.
+# graft.Verify take). The query list is derived from the family files
+# under src/main/scala/graft/queries on every run, so new graph queries
+# join without an edit here. Results go to a fresh temporary directory,
+# printed first. SPARK_GRAFT_CPUS defaults to 4. Exits non-zero if any
+# scale factor has a failing query.
 set -euo pipefail
 [ $# -ge 1 ] || { echo "usage: $0 <sf-dir> [<sf-dir> ...]" >&2; exit 2; }
 dirs=()
 for sf in "$@"; do dirs+=("$(cd "$sf" && pwd)"); done
 cd "$(dirname "$0")/.."
 
-queries=$(python3 - <<'PY'
-import re
-lines = open("src/main/scala/graft/SparkEntry.scala").read().split("\n")
-end = next(i for i, l in enumerate(lines) if "def preconditions" in l)
-ents = [(i, m.group(1)) for i, l in enumerate(lines[:end])
-        for m in [re.match(r'    "(q\d+\w*)" -> ', l)] if m]
-bounds = [i for i, _ in ents[1:]] + [end]
-print(",".join(n for (i, n), j in zip(ents, bounds) if re.search(
-    r"\bGraph\.|Dedup\.duplicateClusters", "\n".join(lines[i:j]))))
-PY
-)
+# A query starts at its `QueryDef("qNN_...",` line; comment lines are
+# skipped, so a neighbour's comment naming `Graph.` does not count.
+queries=$(awk '
+  FNR == 1 { q = "" }
+  match($0, /^    QueryDef\("q[0-9]+[a-z0-9_]*"/) { q = substr($0, 15, RLENGTH - 15) }
+  q && !/^ *\/\// && /(^|[^A-Za-z0-9_])Graph\.|Dedup\.duplicateClusters/ && !seen[q]++ {
+    printf "%s%s", (n++ ? "," : ""), q }
+' src/main/scala/graft/queries/*.scala)
 echo "graph-family queries ($(tr ',' '\n' <<<"$queries" | wc -l)): $queries"
 
 out=$(mktemp -d -t graphoracle.XXXXXX)

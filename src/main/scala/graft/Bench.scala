@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.QueryDef
 import java.nio.file.{Files, Paths}
 import java.util.Properties
 import org.apache.spark.SparkContext
@@ -10,7 +11,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import scala.collection.mutable
 
-/** Per-query wall-time bench over `SparkEntry.queries`: sf0.001 warm-up,
+/** Per-query wall-time bench over `SparkEntry.registry`: sf0.001 warm-up,
   * noop sink, min over reps. Besides the stdout record it prints, per rep,
   * one stderr line with that rep's jobs, stages, tasks, task
   * run/CPU/GC seconds and Janino compiles (`[bench-rep]`), and per query
@@ -29,39 +30,6 @@ object Bench {
     * projection, flattering the numbers. */
   private def exec(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
-
-  /** Queries that deliberately FORCE a scale regime the fixture doesn't
-    * warrant (oracle coverage of the big-graph code path, not a
-    * representative workload). They stay in `value`/`queries` but are
-    * excluded from `core_value`, so round-over-round totals compare
-    * without a mental footnote. */
-  private[graft] val forcedRegime: Set[String] = Set("q145_cc_cobucket")
-
-  /** Families whose first rep at the TARGET SF pays one-time costs the
-    * sf0.001 warm-up can't burn: codec/mapPartitions queries JIT their
-    * per-row decode loops only after thousands of invocations (sf0.001
-    * has ~600 docs), and the iterative-graph loops JIT per-round
-    * codegen + checkpoint paths. One untimed target-SF rep each.
-    *
-    * What this does NOT cure — the recurring ~16 s q143 outlier rep
-    * (r7 spread 7.8 s, r8 15.8 s): round-9 instrumentation
-    * (per-rep GC + task profile) measured 13 q143
-    * reps across isolated and full-suite runs at gcSec <= 0.1,
-    * taskMax <= 0.6 s, taskTotal a constant ~20-24 s — so the
-    * outlier is EXTERNAL CPU contention, not JIT or GC: q143 packs
-    * ~21 s of task CPU into ~0.9 s wall (the suite's highest CPU
-    * density), so a competing load burst during its window inflates
-    * wall near-proportionally (16 s ≈ 1.3 effective cores), exactly
-    * when r8's first timed queries (q01/q02) were also elevated.
-    * Diagnostic signature of a contended rep: wall up, taskTotal
-    * unchanged. In-task slowdown would inflate taskTotal too. */
-  private[graft] val warmAtTargetSf: Set[String] = Set(
-    "q37_media_meta", "q38_media_features", "q39_frame_counts",
-    "q143_video_frames", "q144_audio_features", "q153_image_dhash",
-    "q154_audio_fp",
-    "q48_dup_clusters", "q65_pagerank", "q111_triangles",
-    "q114_label_prop", "q122_kcore", "q125_ppr", "q131_hits",
-    "q136_bfs", "q145_cc_cobucket", "q150_sssp")
 
   /** Contention self-identification (round-11, VERDICT-r10 #3): the
     * measured signature of an external CPU-load burst is WALL UP,
@@ -218,19 +186,18 @@ object Bench {
     // SPARK_GRAFT_ONLY=q65_pagerank,q28_minhash_neardup narrows the run
     // while iterating on one query's plan
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.registry.sortBy(_.name)
+      .filter(d => only.forall(_.contains(d.name)))
     try exec(SparkEntry.entry(spark)) catch { case _: Throwable => }
     val warmDir = "/root/testdata/sf0.001"
-    selected.foreach { case (_, fn) =>
-      try exec(fn(spark, warmDir)) catch { case _: Throwable => }
+    selected.foreach { d =>
+      try exec(d.run(spark, warmDir)) catch { case _: Throwable => }
     }
     // One untimed TARGET-SF rep for the codec and iterative-graph
-    // families (see warmAtTargetSf) — their dominant one-time cost is
-    // data-volume-dependent JIT that the tiny-SF pass cannot reach.
-    selected.foreach { case (name, fn) =>
-      if (warmAtTargetSf.contains(name))
-        try exec(fn(spark, sfDir)) catch { case _: Throwable => }
+    // families (see QueryDef.WarmAtTargetSf) — their dominant one-time cost
+    // is data-volume-dependent JIT that the tiny-SF pass cannot reach.
+    selected.filter(_.tags(QueryDef.WarmAtTargetSf)).foreach { d =>
+      try exec(d.run(spark, sfDir)) catch { case _: Throwable => }
     }
     // Drop every warm-up InMemoryRelation so the timed loop can never
     // read a cache built above — even when the target SF IS sf0.001.
@@ -251,7 +218,7 @@ object Bench {
     // Per-query record: every rep's (wall sec, task run sec), the run
     // seconds read from the rep's own key.
     val results: Seq[(String, Option[Seq[(Double, Double)]])] =
-      selected.map { case (name, fn) =>
+      selected.map { case QueryDef(name, fn, _, _, _) =>
         planDir.foreach { d =>
           try Files.writeString(
             Files.createDirectories(Paths.get(d)).resolve(s"$name.txt"),
@@ -311,11 +278,11 @@ object Bench {
     // core_value excludes the deliberately-forced-regime queries so
     // round-over-round totals are comparable without footnotes; `value`
     // stays the all-in total for continuity with earlier rounds.
+    val forcedNames = selected.filter(_.tags(QueryDef.ForcedRegime)).map(_.name)
     val coreTotal = results.collect {
-      case (name, Some(rs)) if !forcedRegime.contains(name) =>
+      case (name, Some(rs)) if !forcedNames.contains(name) =>
         rs.map(_._1).min }.sum
-    val forced = forcedRegime.intersect(selected.map(_._1).toSet)
-      .toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val forced = forcedNames.map("\"" + _ + "\"").mkString("[", ",", "]")
     val nOk = results.count(_._2.isDefined)
     val line =
       s"""{"metric":"total","value":$total,"core_value":$coreTotal,"forced_regime":$forced,"contended":$contended,"contended_queries":${contendedPerQuery.size},"contended_spread_sec":${"%.2f".formatLocal(java.util.Locale.ROOT, contendedSpread)},"unit":"sec","queries":$best,"spread":$spread,"reps":$reps,"n":$nOk,"sf":"$sfDir"}"""

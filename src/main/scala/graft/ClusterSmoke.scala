@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.QueryDef
+
 /** Multi-executor smoke: runs EVERY SparkEntry query on a
   * `local-cluster[2,8,8192]` session — two genuinely separate executor
   * JVMs — and fails on any query that throws. local[N] (one JVM) can
@@ -43,10 +45,10 @@ object ClusterSmoke {
         System.nanoTime() < deadline) Thread.sleep(200)
     val copies = operators.GraphTuning.executorCopies(spark)
     println(s"SMOKE executors=$copies (expected 2)")
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.registry.sortBy(_.name)
+      .filter(d => only.forall(_.contains(d.name)))
     var failures = List.empty[String]
-    selected.foreach { case (name, fn) =>
+    selected.foreach { case QueryDef(name, fn, _, _, _) =>
       val t0 = System.nanoTime()
       try {
         val n = fn(spark, sfDir).count()

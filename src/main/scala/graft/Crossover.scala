@@ -148,31 +148,8 @@ object Crossover {
     // duplicateClusters' distributed regime: hash-min + pointer jump,
     // edges re-join the label table every round (3 shuffles/round on the
     // edge side) — the loop the co-bucketed layout is meant to beat.
-    def ccShuffleLoop(edges: DataFrame): Long = {
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint(true)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < 20) {
-        val neighborMin = edges
-          .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-          .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
-        val cand = labels.join(neighborMin, Seq("id"), "left")
-          .select(col("id"), col("label").as("__old"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        val parent = labels.select(col("id").as("__pid"), col("label").as("__plabel"))
-        val next = cand.join(parent, cand("label") === parent("__pid"), "left")
-          .select(cand("id"),
-            least(cand("label"), coalesce(col("__plabel"), cand("label"))).as("label"),
-            (least(cand("label"), coalesce(col("__plabel"), cand("label"))) <
-              col("__old")).as("__changed"))
-          .localCheckpoint(true)
-        converged = next.filter(col("__changed")).limit(1).count() == 0
-        labels = next.drop("__changed")
-        iter += 1
-      }
-      labels.count()
-    }
+    def ccShuffleLoop(edges: DataFrame): Long =
+      Graph.ccShuffleLoop(edges, 20).count()
 
     // Honest-shuffle arm: broadcastNodeLimit=0 removes OUR hint, but
     // AQE can still convert a sub-threshold build side to a broadcast

@@ -643,8 +643,9 @@ object Scale {
     time(s"bfs_cobucket_${mult}x") { bfsBucketShape(liT) }
 
     // connected components (dedup-clustering backbone): the plain
-    // shuffle loop (duplicateClusters' distributed regime — inlined so
-    // the A/B stays honest regardless of how duplicateClusters routes)
+    // shuffle loop (duplicateClusters' distributed regime, called
+    // directly so the A/B stays honest regardless of how
+    // duplicateClusters routes)
     // vs the co-bucketed regime (edges shuffle once at layout; 2
     // node-sized exchanges per round). Warm interleaved A/B: the
     // shuffle loop wins at local[32] scales; the co-bucketed loop's
@@ -657,32 +658,8 @@ object Scale {
       canon.unionByName(
         canon.select(col("dst").as("src"), col("src").as("dst")))
     }
-    def ccShuffleLoopShape(li: DataFrame): Long = {
-      val edges = ccEdges(li).localCheckpoint(true)
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("label", col("id")).localCheckpoint(true)
-      var converged = false
-      var iter = 0
-      while (!converged && iter < 20) {
-        val neighborMin = edges
-          .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-          .groupBy(col("dst").as("id")).agg(min(col("label")).as("nlabel"))
-        val cand = labels.join(neighborMin, Seq("id"), "left")
-          .select(col("id"), col("label").as("__old"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        val parent = labels.select(col("id").as("__pid"), col("label").as("__plabel"))
-        val next = cand.join(parent, cand("label") === parent("__pid"), "left")
-          .select(cand("id"),
-            least(cand("label"), coalesce(col("__plabel"), cand("label"))).as("label"),
-            (least(cand("label"), coalesce(col("__plabel"), cand("label"))) <
-              col("__old")).as("__changed"))
-          .localCheckpoint(true)
-        converged = next.filter(col("__changed")).limit(1).count() == 0
-        labels = next.drop("__changed")
-        iter += 1
-      }
-      labels.count()
-    }
+    def ccShuffleLoopShape(li: DataFrame): Long =
+      Graph.ccShuffleLoop(ccEdges(li).localCheckpoint(true), 20).count()
     time("cc_shuffleloop_1x") { ccShuffleLoopShape(li1) }
     time(s"cc_shuffleloop_${mult}x") { ccShuffleLoopShape(liT) }
     def ccBucketShape(li: DataFrame): Long =

@@ -1,8509 +1,32 @@
 package graft
 
-import graft.operators._
-import graft.functions.TextFunctions
-import graft.functions.VectorFunctions
-import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.queries._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — one `queries` entry per implemented operator from
-  * SURVEY.md §2, each with a DuckDB-equivalent `oracleSql` (hash-compared
-  * by the driver at sf0.01), plus the training-pipeline operators (dedup /
-  * similarity / text analysis / ANN) over `documents` and `embeddings`.
-  *
-  * Determinism discipline (needed for cross-engine hash parity):
-  *  - double sums go through DECIMAL(28,10) (order-independent, exact);
-  *  - timestamps are surfaced as DATE (events.ts is parquet NANOS, which
-  *    Spark truncates to µs but DuckDB keeps — dates agree);
-  *  - every query ends in a total-order ORDER BY on its key columns.
-  */
+/** Driver contract: the flagship `entry` and the string-keyed views of the
+  * query registry. Each query — Spark body, DuckDB oracle, precondition
+  * and Bench tags — is one [[queries.QueryDef]] in its family's file under
+  * `graft/queries/`; the cross-engine determinism rules are on
+  * [[queries.QueryDef]]. */
 object SparkEntry {
 
-  // ---- shared frame builders -------------------------------------------
-
-  /** Lineitem recast as the reference's transaction stream: the flagship
-    * enrichment input (SURVEY.md §3.1). */
-  private def lineitemTxns(s: SparkSession, dir: String): DataFrame =
-    LogIndex.addLogIndex(
-      Tables.lineitem(s, dir).select(
-        col("l_orderkey").as("transaction_id"),
-        col("l_linenumber"),
-        col("l_partkey").as("token_address"),
-        col("l_extendedprice").as("coin_value"),
-        col("l_tax").as("fee"),
-        (col("l_linenumber") % 3).as("type"),
-        col("l_shipdate")),
-      partitionCol = "transaction_id",
-      // (l_orderkey, l_linenumber) is NOT unique in the synthetic data, so
-      // the order-by must form a total order within each transaction for a
-      // deterministic rank (SURVEY.md §7.4 risk 1).
-      orderBy = Seq("l_shipdate" -> true, "l_linenumber" -> true,
-        "token_address" -> true, "coin_value" -> true, "fee" -> true))
-
-  /** Part recast as token metadata + a per-brand price dimension (J1). */
-  private def partDims(s: SparkSession, dir: String): DataFrame = {
-    val part = Tables.part(s, dir)
-    val meta = part.select(
-      col("p_partkey").as("token_address"),
-      col("p_brand").as("symbol"),
-      (col("p_size") % 4).as("decimals"))
-    val price = part.groupBy(col("p_brand").as("symbol"))
-      .agg((max(col("p_retailprice")) / 1000.0).as("coin_price_usd"))
-    Enrichment.dims(meta, price)
-  }
-
-  /** Events recast as the reference's typed-transfer frame (A3-A5 input):
-    * type codes from event_type, synthetic fee/USD columns (deterministic
-    * per-row arithmetic), and a DATE-typed block date. */
-  private def eventTxns(s: SparkSession, dir: String): DataFrame =
-    Tables.events(s, dir).select(
-      col("user_id").as("transaction_id"),
-      col("event_type"),
-      when(col("event_type") === "click", 0)
-        .when(col("event_type") === "view", 1)
-        .when(col("event_type") === "purchase", 2)
-        .otherwise(3).as("type"),
-      // value is 2-decimal; ×1.5/×0.25 keep products on short decimal
-      // grids (3-5 digits), so DECIMAL(28,10) casts never round — exact
-      // cross-engine sums with no HALF_UP/HALF_EVEN ambiguity.
-      col("value").as("coin_value"),
-      (col("value") * 1.5).as("coin_value_usd"),
-      (col("value") * 0.25).as("fee"),
-      (col("value") * 0.25 * 1.5).as("fee_usd"),
-      col("ts").cast("date").as("block_date_time"),
-      col("ts_ns"),
-      col("event_id"))
-
-  private val eventTxnsSql =
-    """SELECT user_id AS transaction_id, event_type,
-      | CASE WHEN event_type = 'click' THEN 0 WHEN event_type = 'view' THEN 1
-      |      WHEN event_type = 'purchase' THEN 2 ELSE 3 END AS "type",
-      | value AS coin_value, value * 1.5 AS coin_value_usd,
-      | value * 0.25 AS fee, value * 0.25 * 1.5 AS fee_usd,
-      | CAST(ts AS DATE) AS block_date_time, event_id
-      |FROM events""".stripMargin
-
-  private def dSum(sqlExpr: String) =
-    s"CAST(sum(CAST($sqlExpr AS DECIMAL(28,10))) AS DOUBLE)"
-  private def dSumWhere(pred: String, sqlExpr: String) =
-    s"CAST(sum(CAST(CASE WHEN $pred THEN $sqlExpr END AS DECIMAL(28,10))) AS DOUBLE)"
-
-  // ---- flagship --------------------------------------------------------
+  /** Every query, built once: perfbench times `queries(n)` inside its
+    * build span, so the views must not rebuild the oracle strings. */
+  val registry: Seq[QueryDef] = QueryDef.registry(
+    RelationalQueries.defs ++ SyncQueries.defs ++ TextQueries.defs ++
+      DedupQueries.defs ++ VectorQueries.defs ++ GraphQueries.defs ++
+      MediaQueries.defs ++ SketchQueries.defs)
 
   /** Flagship enrichment slice (SURVEY.md §7.2) on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
-    q03Enrich(spark, "/root/testdata/sf0.001")
+    queries("q03_enrich")(spark, "/root/testdata/sf0.001")
 
-  private def q03Enrich(s: SparkSession, dir: String): DataFrame =
-    Enrichment.enrich(lineitemTxns(s, dir), partDims(s, dir), tronFeeRule = true)
-      .select("transaction_id", "l_linenumber", "token_address", "log_index",
-        "coin_value", "coin_value_usd", "fee", "fee_usd")
-      .orderBy("transaction_id", "l_linenumber")
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
 
-  // ---- registry --------------------------------------------------------
+  val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
 
-  /** q209's before/after snapshot pair — shared between the query and
-    * its Verify-time key-uniqueness precondition. */
-  private def q209Frames(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val o = Tables.orders(s, dir).select(col("o_orderkey"),
-      col("o_custkey"), col("o_orderstatus"),
-      expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-    val after = o.filter(col("o_orderkey") % 13 =!= 0)
-      .withColumn("price_c", when(col("o_orderkey") % 7 === 0,
-        col("price_c") + 1L).otherwise(col("price_c")))
-      .unionByName(o.filter(col("o_orderkey") % 17 === 0)
-        .withColumn("o_orderkey", col("o_orderkey") + lit(1000000000L)))
-    (o, after)
-  }
-
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // A2/A3-style pricing summary (TPC-H Q1 shape): filtered scan →
-    // grouped filtered aggregation, partial+final hash agg.
-    "q01_pricing_summary" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          sum(col("l_quantity").cast("bigint")).cast("bigint").as("sum_qty"),
-          // 2/4-decimal summands with ~1e9 totals → scale 4 (see exactSum)
-          Aggregations.exactSum(col("l_extendedprice"), 4).as("sum_base_price"),
-          Aggregations.exactSum(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)
-            .as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // W1 log_index: per-transaction row_number with total-order tiebreak.
-    "q02_log_index" -> ((s, dir) =>
-      lineitemTxns(s, dir)
-        .select("transaction_id", "l_linenumber", "log_index")
-        .orderBy("transaction_id", "l_linenumber")),
-
-    // §3.1 flagship enrichment: J1+J2 broadcast joins, P8 conditional
-    // decimals, F1 scaling, F2 USD, tron fee rule.
-    "q03_enrich" -> (q03Enrich(_, _)),
-
-    // A3 transactions_agg: filtered sums by type code.
-    "q04_transactions_agg" -> ((s, dir) =>
-      Aggregations.transactionsAgg(eventTxns(s, dir)).orderBy("transaction_id")),
-
-    // A4 link_inputs_agg: composite key, filtered + unfiltered sums.
-    "q05_link_inputs" -> ((s, dir) =>
-      Aggregations.linkInputsAgg(
-        eventTxns(s, dir).withColumn("sender_address", col("event_type")))
-        .orderBy("transaction_id", "sender_address")),
-
-    // A5 link_outputs_agg.
-    "q06_link_outputs" -> ((s, dir) =>
-      Aggregations.linkOutputsAgg(
-        eventTxns(s, dir)
-          .withColumn("receiver_address", (col("transaction_id") % 7).cast("string")))
-        .orderBy("transaction_id", "receiver_address")),
-
-    // A6 chain_state pivot-table max.
-    "q07_chain_state" -> ((s, dir) =>
-      eventTxns(s, dir).groupBy("event_type").agg(
-        max(col("coin_value")).as("max_value"),
-        max(col("block_date_time")).as("max_date"),
-        max(col("event_id")).as("max_event_id"))
-        .orderBy("event_type")),
-
-    // A7 distinct.
-    "q08_distinct" -> ((s, dir) =>
-      Tables.orders(s, dir).select("o_orderstatus", "o_orderpriority")
-        .distinct().orderBy("o_orderstatus", "o_orderpriority")),
-
-    // J1 chained left joins through two broadcast dimensions.
-    "q09_left_join" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val n = broadcast(Tables.nation(s, dir))
-      val r = broadcast(Tables.region(s, dir))
-      c.join(n, c("c_nationkey") === n("n_nationkey"), "left")
-        .join(r, n("n_regionkey") === r("r_regionkey"), "left")
-        .select("c_custkey", "n_name", "r_name")
-        .orderBy("c_custkey")
-    }),
-
-    // J2 inner equi-join doubling as a semi-filter.
-    "q10_inner_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val p = broadcast(Tables.part(s, dir).filter(col("p_size") > 40))
-      li.join(p, li("l_partkey") === p("p_partkey"), "inner")
-        .select("l_orderkey", "l_linenumber", "p_brand", "p_size")
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // J5 anti-join (parts never shipped in small quantities).
-    "q11_anti_join" -> ((s, dir) =>
-      Tables.part(s, dir).join(
-          Tables.lineitem(s, dir).filter(col("l_quantity") <= 2.0),
-          col("p_partkey") === col("l_partkey"), "left_anti")
-        .select("p_partkey").orderBy("p_partkey")),
-
-    // J4 full outer join of two aggregates.
-    "q12_full_outer" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n_customers"))
-      val sp = Tables.supplier(s, dir).groupBy("s_nationkey")
-        .agg(count(lit(1)).as("n_suppliers"))
-      c.join(sp, c("c_nationkey") === sp("s_nationkey"), "full_outer")
-        .select(coalesce(col("c_nationkey"), col("s_nationkey")).as("nationkey"),
-          col("n_customers"), col("n_suppliers"))
-        .orderBy("nationkey")
-    }),
-
-    // Left-semi join (EXISTS).
-    "q13_semi_join" -> ((s, dir) =>
-      Tables.customer(s, dir).join(Tables.orders(s, dir),
-          col("c_custkey") === col("o_custkey"), "left_semi")
-        .select("c_custkey").orderBy("c_custkey")),
-
-    // P4-P7 predicate stack: IN-list, date range, comparison.
-    "q14_filters" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .filter(col("l_quantity").isin(1.0, 2.0, 3.0) &&
-          col("l_shipdate") >= lit("1995-07-01").cast("timestamp") &&
-          col("l_discount") > 0.05)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_quantity").cast("bigint").as("qty"), col("l_discount"))
-        .orderBy("l_orderkey", "l_linenumber")),
-
-    // P8/P9/P10 conditional update, constant column, null fill.
-    "q15_cond_update" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .withColumn("status_flag",
-          when(col("o_orderstatus") === "F", "final")
-            .when(col("o_orderstatus") === "O", "open")
-            .otherwise("other"))
-        .withColumn("big_order", when(col("o_totalprice") > 150000.0, 1).otherwise(0))
-        .withColumn("source_tag", lit("tpch"))
-        .select("o_orderkey", "status_flag", "big_order", "source_tag")
-        .orderBy("o_orderkey")),
-
-    // U1 union all.
-    "q16_union_all" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type") === "click").select("event_id", "event_type")
-        .unionByName(
-          ev.filter(col("event_type") === "purchase").select("event_id", "event_type"))
-        .orderBy("event_id")
-    }),
-
-    // U2 except (set difference).
-    "q17_except" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.select("user_id").distinct()
-        .except(ev.filter(col("event_type") === "purchase" && col("value") > 95.0)
-          .select("user_id").distinct())
-        .orderBy("user_id")
-    }),
-
-    // O1/O2 multi-column sort + limit (top-k).
-    "q18_topk" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-        .limit(10).select("o_orderkey", "o_totalprice")),
-
-    // A1 one-pass max_by (the reference's two-query max fix, SURVEY.md §4).
-    "q19_latest_block" -> ((s, dir) =>
-      Tables.events(s, dir).agg(
-        max(col("event_id")).as("head_event"),
-        max_by(col("event_id"), col("ts_ns")).as("latest_event_id"),
-        max(col("ts").cast("date")).as("head_date"))),
-
-    // A2 grouped count by date.
-    "q20_count_by_date" -> ((s, dir) =>
-      Tables.events(s, dir).groupBy(col("ts").cast("date").as("d"))
-        .agg(count(lit(1)).as("n")).orderBy("d")),
-
-    // F5/P6 date functions + range predicate.
-    "q21_date_funcs" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= lit("1996-01-01").cast("timestamp") &&
-          col("o_orderdate") < lit("1997-01-01").cast("timestamp"))
-        .select(col("o_orderkey"),
-          year(col("o_orderdate")).as("y"),
-          month(col("o_orderdate")).as("m"),
-          col("o_orderdate").cast("date").as("d"),
-          date_format(col("o_orderdate"), "yyyy-MM").as("ym"))
-        .orderBy("o_orderkey")),
-
-    // F4 regex/string functions.
-    "q22_regex" -> ((s, dir) =>
-      Tables.documents(s, dir).select(
-        col("doc_id"),
-        regexp_replace(col("text"), "[aeiou]", "").as("devoweled"),
-        upper(substring(col("text"), 1, 20)).as("head_upper"),
-        length(col("text")).as("n_len"))
-        .orderBy("doc_id")),
-
-    // D1 exact dedup groups (keep-min-id survivor rule); byte-exact
-    // grouping to match the oracle's GROUP BY raw text.
-    "q23_dedup_exact" -> ((s, dir) =>
-      Dedup.exactGroups(Tables.documents(s, dir), "doc_id", "text",
-        normalize = false)
-        .select("keep_id", "n_dups").orderBy("keep_id")),
-
-    // Token counting (training-pipeline text op).
-    "q24_token_stats" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      d.select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"),
-        size(array_distinct(TextFunctions.tokens(lower(col("text"))))).as("n_distinct"),
-        length(col("text")).as("n_len"))
-        .orderBy("doc_id")
-    }),
-
-    // BPE-ish sub-word token estimate (whitespace + boundary-transition
-    // pre-tokenizer heuristic), RE2-portable and oracle-checked.
-    "q47_subword_count" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.subwordCount(col("text")).as("n_subwords"),
-        TextFunctions.tokenCount(col("text")).as("n_tokens"))
-        .orderBy("doc_id")),
-
-    // Training-data prep flagship: exact dedup (keep min id) → quality
-    // gate (length + stopword incidence) → deterministic split →
-    // stratified per-split/lang stats. The whole prep is one lazy plan:
-    // dedup's groupBy is the only wide stage before the final count agg.
-    "q56_training_prep" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // exact dedup via one window over the 128-bit content hash (keep
-      // min doc_id): one shuffle on a narrow 16-byte key — the full text
-      // is never a shuffle key, and no keep-set join is needed. md5 (not
-      // xxhash64): at 1e10 docs a 64-bit key expects collisions (n²/2⁶⁵),
-      // a 128-bit one doesn't (n²/2¹²⁹ ≈ 1e-19); adversarial md5
-      // collisions would need a within-group byte-compare pass.
-      val w = Window.partitionBy(md5(col("text").cast("binary"))).orderBy("doc_id")
-      val deduped = docs.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      val stop = Seq("the", "a", "of", "and", "to")
-      val gated = deduped
-        .withColumn("n_tok", TextFunctions.tokenCount(col("text")))
-        .withColumn("stop_ratio", TextFunctions.stopwordRatio(col("text"), stop))
-        .filter(col("n_tok") >= 20 && col("stop_ratio") >= 0.02)
-      gated.withColumn("split", TextFunctions.stableSplit(col("doc_id")))
-        .groupBy("split", "lang").agg(
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tok").cast("bigint")).cast("bigint").as("n_tokens"))
-        .orderBy("split", "lang")
-    }),
-
-    // Deterministic train/val/test split + per-split stratified counts.
-    "q55_train_split" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("split", TextFunctions.stableSplit(col("doc_id")))
-        .groupBy("split", "lang").agg(count(lit(1)).as("n"))
-        .orderBy("split", "lang")),
-
-    // Quality scoring: stopword ratio, mean token length, composite score.
-    "q25_quality" -> ((s, dir) => {
-      val stop = Seq("the", "a", "of", "and", "to")
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.stopwordRatio(col("text"), stop).as("stop_ratio"),
-        TextFunctions.meanTokenLength(col("text")).as("mean_tok_len"))
-        .orderBy("doc_id")
-    }),
-
-    // Language-ID heuristic (stopword-marker argmax).
-    "q26_lang_id" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.langId(col("text"), Seq(
-          "en" -> Seq("the", "a", "of"),
-          "de" -> Seq("der", "die", "das"),
-          "fr" -> Seq("le", "la", "les"))).as("predicted_lang"))
-        .orderBy("doc_id")),
-
-    // Document fingerprinting (MD5 content hash — cross-engine standard).
-    "q27_fingerprint" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.md5Fingerprint(col("text")).as("fp_md5"))
-        .orderBy("doc_id")),
-
-    // MinHash+LSH near-duplicate pairs, portable md5-based hash family so
-    // banding + signature estimation are reproduced exactly by the DuckDB
-    // oracle. Signature-estimate verification: candidate joins carry 64
-    // longs, not shingle sets — the scale path for low thresholds.
-    "q28_minhash_neardup" -> ((s, dir) =>
-      Dedup.minHashNearDuplicates(Tables.documents(s, dir), "doc_id", "text",
-        shingleSize = 2, numHashes = 64, bands = 32, threshold = 0.10,
-        exactVerify = false, portableHash = true)
-        .orderBy("id_a", "id_b")),
-
-    // SimHash 64-bit signatures (portable md5 bit votes, hex output —
-    // oracle-checked bit-for-bit).
-    "q29_simhash" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        Dedup.simHashHex(col("text")).as("simhash"))
-        .orderBy("doc_id")),
-
-    // SimHash hamming-radius retrieval: pigeonhole banding (4 bands of
-    // 16 bits > radius 3 ⇒ recall 1.0) generates candidates, exact
-    // xor-popcount verifies — the radius-k retrieval SimHash exists for,
-    // not just exact-band collisions. Portable md5 signatures.
-    "q102_simhash_radius" -> ((s, dir) =>
-      Dedup.simHashNearDuplicates(Tables.documents(s, dir), "doc_id", "text",
-        maxHamming = 3, bands = 4, maxBucketSize = 1 << 16,
-        portableHash = true)
-        .orderBy("id_a", "id_b")),
-
-    // n-gram (2-gram shingle) Jaccard similarity self-join, blocked on
-    // (lang, source): low thresholds defeat prefix filtering, so the
-    // economical exact plan is tight blocking + per-block quadratic —
-    // block sizes stay O(corpus/|lang×source|), pairs never cross blocks.
-    "q30_jaccard_pairs" -> ((s, dir) =>
-      Dedup.ngramJaccardPairs(Tables.documents(s, dir), "doc_id", "text",
-        blockCols = Seq("lang", "source"), threshold = 0.08, shingleSize = 2)
-        .orderBy("id_a", "id_b")),
-
-    // Near-duplicate clustering: connected components (hash-min label
-    // propagation) over the q30 pair graph — every doc mapped to the min
-    // doc_id of its duplicate component.
-    "q48_dup_clusters" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq("lang", "source"), threshold = 0.08, shingleSize = 2)
-      Dedup.duplicateClusters(docs, "doc_id", pairs)
-        .orderBy("doc_id")
-    }),
-
-    // Brute-force cosine top-k ANN baseline.
-    "q31_ann_bruteforce" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Ann.bruteForceTopK(e, e.filter(col("vec_id") < 5), k = 10)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // LSH-bucketed ANN (scale path), md5-seeded Rademacher hyperplanes so
-    // bucketing — and therefore the exact candidate set — is reproduced
-    // by the DuckDB oracle; recall vs q31 measured in AnnSpec.
-    "q32_ann_lsh" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Ann.lshTopK(e, e.filter(col("vec_id") < 5), k = 10, nBits = 6,
-        nTables = 16, portableHash = true)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // IVF ANN: sampled coarse quantizer (centroids = lowest-id vectors,
-    // no Lloyd refinement) + probe — fully deterministic, oracle-checked;
-    // the k-means-refined variant is exercised in SkewIvfSpec.
-    "q43_ann_ivf" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Ann.ivfTopK(e, e.filter(col("vec_id") < 5), k = 10,
-        nCentroids = 8, nProbe = 4, lloydIterations = 0, initById = true)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // Embedding stats per label (codegen'd vector math over array<float>).
-    "q33_embed_stats" -> ((s, dir) => {
-      val n2 = graft.expressions.VectorExpressions.norm2F(col("embedding"))
-      Tables.embeddings(s, dir).groupBy("label").agg(
-        count(lit(1)).as("n"),
-        max(n2.cast("decimal(28,10)")).cast("double").as("max_norm_sq"),
-        min(n2.cast("decimal(28,10)")).cast("double").as("min_norm_sq"))
-        .orderBy("label")
-    }),
-
-    // Pivot (explicit value list) with exact sums.
-    "q34_pivot" -> ((s, dir) =>
-      Tables.events(s, dir).groupBy("user_id")
-        .pivot("event_type", Seq("click", "error", "purchase", "signup", "view"))
-        .agg(Aggregations.exactSum(col("value")))
-        .orderBy("user_id")),
-
-    // Window functions: lag/lead/row_number/running sum.
-    "q35_window_funcs" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
-      Tables.events(s, dir).select(col("event_id"), col("user_id"),
-        lag(col("event_id"), 1).over(w).as("prev_event_id"),
-        lead(col("event_type"), 1).over(w).as("next_type"),
-        row_number().over(w).as("rn"),
-        sum(col("value").cast("decimal(28,10)"))
-          .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          .cast("double").as("running_value"))
-        .orderBy("event_id")
-    }),
-
-    // Multimodal metadata via GENUINE decode: one real PNG per doc_id
-    // (Multimodal.syntheticPng, closed-form pixels), dimensions read by
-    // actually decoding the payload header with javax.imageio — the
-    // mislabeled/corrupt-media check of a real ingest pipeline. The
-    // oracle predicts width/height from the id-only dims function.
-    "q37_media_meta" -> ((s, dir) =>
-      multimodal.Multimodal.imageMeta(
-        multimodal.Multimodal.fromSyntheticImages(Tables.documents(s, dir)))
-        .orderBy("media_id")),
-
-    // Multimodal decode→feature-extract via per-partition mapPartitions
-    // with the REAL ImageIO codec: PNG payloads are decoded to pixels and
-    // histogrammed (bin = red >> 4). The pixel function is closed-form in
-    // media_id, so the oracle recomputes every bin count in SQL — a real
-    // encode→decode round trip, hash-checked. Counts are recovered from
-    // the normalized float features via round(f · n_pixels).
-    "q38_media_features" -> ((s, dir) => {
-      val feats = multimodal.Multimodal.extractFeatures(
-        multimodal.Multimodal.fromSyntheticImages(Tables.documents(s, dir)),
-        () => new multimodal.Multimodal.ImageIOCodec)
-      val npix = ((col("media_id") % 9) + 8) * ((col("media_id") % 7) + 8)
-      val counts = (0 until 16).map(i =>
-        round(element_at(col("features"), i + 1) * npix)
-          .cast("bigint").as(f"c$i%02d"))
-      feats.select(col("media_id") +: npix.cast("bigint").as("n_pixels") +: counts: _*)
-        .orderBy("media_id")
-    }),
-
-    // Video-style frame sampling: per-media frame counts are deterministic
-    // functions of payload size → oracle-checkable. Left join back to the
-    // media set so zero-frame (empty-payload) media still emit a 0 row.
-    "q39_frame_counts" -> ((s, dir) => {
-      val media = multimodal.Multimodal.fromDocuments(Tables.documents(s, dir))
-      val counts = multimodal.Multimodal.sampleFrames(
-          media, everyMs = 64, () => new multimodal.Multimodal.StubCodec)
-        .groupBy("media_id").agg(count(lit(1)).as("__n"))
-      media.select("media_id").join(counts, Seq("media_id"), "left")
-        .select(col("media_id"),
-          coalesce(col("__n"), lit(0L)).as("n_frames"))
-        .orderBy("media_id")
-    }),
-
-    // Embedding-cosine near-duplicate pairs (exact quadratic; the LSH
-    // variant is q32's bucketing applied as a pre-filter at scale).
-    "q40_embed_neardup" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val a = e.select(col("vec_id").as("id_a"), col("embedding").as("va"))
-      val b = e.select(col("vec_id").as("id_b"), col("embedding").as("vb"))
-      a.crossJoin(b).filter(col("id_a") < col("id_b"))
-        .withColumn("sim",
-          graft.expressions.VectorExpressions.cosineF(col("va"), col("vb")))
-        .filter(col("sim") >= 0.3)
-        .select("id_a", "id_b")
-        .orderBy("id_a", "id_b")
-    }),
-
-    // §3.1+§3.2 composed pipeline: enrichment spine → transactions-vertex
-    // aggregation (compute-once fan-out is exercised in PipelinesSpec;
-    // here the vertex branch is oracle-checked end-to-end).
-    "q41_pipeline_vertices" -> ((s, dir) => {
-      val part = Tables.part(s, dir)
-      val enriched = pipelines.Pipelines.enrichmentPipeline(
-        Tables.lineitem(s, dir).select(
-          col("l_orderkey").as("transaction_id"),
-          col("l_linenumber"),
-          col("l_partkey").as("token_address"),
-          col("l_extendedprice").as("coin_value"),
-          col("l_tax").as("fee"),
-          (col("l_linenumber") % 3).as("type"),
-          col("l_shipdate"),
-          col("l_shipdate").cast("date").as("block_date_time")),
-        metadata = part.select(
-          col("p_partkey").as("token_address"),
-          col("p_brand").as("symbol"),
-          (col("p_size") % 4).as("decimals")),
-        prices = part.groupBy(col("p_brand").as("symbol"))
-          .agg((max(col("p_retailprice")) / 1000.0).as("coin_price_usd")),
-        sortSpec = Seq("l_shipdate" -> true, "l_linenumber" -> true,
-          "token_address" -> true, "coin_value" -> true, "fee" -> true),
-        tronFeeRule = true)
-      Aggregations.transactionsAgg(enriched).orderBy("transaction_id")
-    }),
-
-    // J3 Ripple constant-key enrichment: degenerate join = broadcast of
-    // one price row; in/out value math (SURVEY.md §2.3 J3, §2.8 F3).
-    "q42_ripple_enrich" -> ((s, dir) => {
-      val txns = Tables.events(s, dir).select(
-        col("event_id").as("transaction_id"),
-        col("value").as("coin_value"),
-        (col("value") * 0.25).as("fee"))
-      val price = Tables.events(s, dir)
-        .agg((max(col("value")) / 100.0).as("coin_price_usd"))
-      Enrichment.enrichConstantKey(txns, price)
-        .select("transaction_id", "outgoing_value", "incoming_value",
-          "outgoing_value_usd", "incoming_value_usd")
-        .orderBy("transaction_id")
-    }),
-
-    // Exact percentiles (median / p90) per group — interpolated, exact
-    // (not approx) so it can be oracle-checked.
-    "q44_percentiles" -> ((s, dir) =>
-      Tables.lineitem(s, dir).groupBy("l_returnflag").agg(
-        expr("percentile(l_quantity, 0.5)").as("median_qty"),
-        expr("percentile(l_quantity, 0.9)").as("p90_qty"),
-        expr("percentile(l_discount, 0.5)").as("median_disc"))
-        .orderBy("l_returnflag")),
-
-    // ROLLUP hierarchy totals with grouping flags.
-    "q45_rollup" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(count(lit(1)).as("n"),
-          sum(col("l_quantity").cast("bigint")).cast("bigint").as("qty"),
-          grouping_id(col("l_returnflag"), col("l_linestatus")).cast("int").as("gflag"))
-        .orderBy(col("gflag"), col("l_returnflag"), col("l_linestatus"))),
-
-    // Exact multi-column distinct counts per group.
-    // Three distinct counts in ONE Aggregate would make Catalyst plan an
-    // Expand that replicates every lineitem row once per distinct agg
-    // (the q105 lesson, measured 17 s vs 3 s there). Manual unpivot to
-    // (flag, kind, key-as-long) instead: the distinct is a narrow
-    // partial-agg shuffle with map-side dedup, the final per-flag counts
-    // a tiny conditional agg. The pair key packs (part, supp) into one
-    // long (both < 2³¹) so nothing wider than 3 longs ever shuffles.
-    "q46_distinct_counts" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_returnflag"),
-          col("l_partkey").cast("long").as("p"),
-          col("l_suppkey").cast("long").as("sk"))
-        .select(col("l_returnflag"), explode(array(
-          struct(lit(1).as("k"), col("p").as("key")),
-          struct(lit(2).as("k"), col("sk").as("key")),
-          struct(lit(3).as("k"),
-            (shiftleft(col("p"), 32) + col("sk")).as("key")))).as("e"))
-        .select(col("l_returnflag"), col("e.k").as("k"), col("e.key").as("key"))
-        .distinct()
-        .groupBy("l_returnflag")
-        .agg(count(when(col("k") === 1, 1)).as("n_parts"),
-          count(when(col("k") === 2, 1)).as("n_supps"),
-          count(when(col("k") === 3, 1)).as("n_pairs"))
-        .orderBy("l_returnflag")),
-
-    // As-of backward join: each click joined to the user's most recent
-    // prior-or-equal purchase (one shuffle + window; DuckDB oracle uses
-    // its native ASOF JOIN, so semantics are cross-validated).
-    "q49_asof_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_ns")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_ns"),
-          col("value").as("last_purchase_value"))
-      AsOfJoin.asofBackward(clicks, purchases,
-        keyCols = Seq("user_id"), tsCol = "ts_ns",
-        valueCols = Seq("last_purchase_value"))
-        .select("event_id", "user_id", "last_purchase_value")
-        .orderBy("event_id")
-    }),
-
-    // As-of FORWARD join: each click joined to the user's next
-    // at-or-after purchase (same one-shuffle window as q49, reverse
-    // time order; DuckDB oracle = native ASOF with <=).
-    "q68_asof_forward" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("event_id", "user_id", "ts_ns")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_ns"),
-          col("value").as("next_purchase_value"))
-      AsOfJoin.asofForward(clicks, purchases,
-        keyCols = Seq("user_id"), tsCol = "ts_ns",
-        valueCols = Seq("next_purchase_value"))
-        .select("event_id", "user_id", "next_purchase_value")
-        .orderBy("event_id")
-    }),
-
-    // As-of join through the engine's CUSTOM PHYSICAL OPERATOR
-    // (BroadcastAsOfJoin logical node → GraftStrategy → binary-search
-    // probe of a broadcast sorted timeline): the fact side is never
-    // shuffled or sorted — zero exchanges in the whole plan. Two value
-    // columns ride the matched row; oracle = DuckDB native ASOF.
-    "q87_asof_broadcast" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select("event_id", "user_id", "ts_ns")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts_ns"),
-          col("value").as("last_purchase_value"),
-          col("props").as("last_purchase_props"))
-      AsOfJoin.asofBroadcast(views, purchases,
-        keyCols = Seq("user_id"), tsCol = "ts_ns",
-        valueCols = Seq("last_purchase_value", "last_purchase_props"))
-        .select("event_id", "user_id", "last_purchase_value",
-          "last_purchase_props")
-        .orderBy("event_id")
-    }),
-
-    // Gap-based sessionization (1h gap): lag boundary + running sum.
-    "q50_sessionize" -> ((s, dir) =>
-      Sessions.sessionize(
-        Tables.events(s, dir).select("event_id", "user_id", "ts_ns"),
-        keyCol = "user_id", tsCol = "ts_ns", gapNanos = 3600L * 1000000000L)
-        .select("event_id", "user_id", "session_id")
-        .orderBy("event_id")),
-
-    // Bounded interval self-join (2h window) via time-bucket equi-join —
-    // O(events × density) candidates, never a per-key cross join.
-    "q51_interval_join" -> ((s, dir) =>
-      Sessions.intervalSelfJoin(
-        Tables.events(s, dir).select("event_id", "user_id", "ts_ns"),
-        keyCol = "user_id", idCol = "event_id", tsCol = "ts_ns",
-        windowNanos = 2L * 3600L * 1000000000L)
-        .orderBy("user_id", "id_a", "id_b")),
-
-    // CUBE over two dimensions with grouping flags.
-    "q52_cube" -> ((s, dir) =>
-      Tables.orders(s, dir)
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("n"),
-          grouping_id(col("o_orderstatus"), col("o_orderpriority"))
-            .cast("int").as("gflag"))
-        .orderBy("gflag", "o_orderstatus", "o_orderpriority")),
-
-    // INTERSECT (set semantics).
-    "q53_intersect" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_type") === "purchase").select("user_id").distinct()
-        .intersect(ev.filter(col("event_type") === "error")
-          .select("user_id").distinct())
-        .orderBy("user_id")
-    }),
-
-    // Deterministic ordered string aggregation per group.
-    "q54_string_agg" -> ((s, dir) =>
-      Tables.nation(s, dir).groupBy("n_regionkey")
-        .agg(array_join(array_sort(collect_list(col("n_name"))), ",")
-          .as("nations"))
-        .orderBy("n_regionkey")),
-
-    // T2 sync-advance decision as a one-pass aggregate (SURVEY.md §2.10).
-    "q36_sync_advance" -> ((s, dir) =>
-      Tables.events(s, dir).agg(
-        least(max(col("event_id")) - lit(50L), lit(2000L)).as("next_watermark"),
-        (least(max(col("event_id")) - lit(50L), lit(2000L)) > lit(0L)).as("should_run"))),
-
-    // Per-group top-k (window rank): top 3 orders per customer.
-    "q57_group_topk" -> ((s, dir) =>
-      Corpus.topKPerGroup(
-        Tables.orders(s, dir).select("o_custkey", "o_orderkey", "o_totalprice"),
-        Seq("o_custkey"), Seq(col("o_totalprice").desc, col("o_orderkey").asc), 3)
-        .orderBy("o_custkey", "rank")),
-
-    // UNPIVOT / melt: wide measures → long (id, measure, value) rows.
-    "q58_unpivot" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice",
-          "l_discount")
-        .unpivot(Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount")),
-          "measure", "val")
-        .orderBy("l_orderkey", "l_linenumber", "measure")),
-
-    // Vocabulary building: global token frequencies, top-50 with stable
-    // tie-break — the map-side-combine shape (shuffle is O(|vocab|)).
-    "q59_vocab" -> ((s, dir) =>
-      Corpus.vocabulary(Tables.documents(s, dir), "text", 50)),
-
-    // Deterministic stratified cap: ≤20 docs per (lang, source) chosen
-    // by md5(id) order — reproducible unbiased downsampling.
-    "q60_stratified_cap" -> ((s, dir) =>
-      Corpus.stratifiedCap(
-        Tables.documents(s, dir).select("doc_id", "lang", "source"),
-        "doc_id", Seq("lang", "source"), cap = 20)
-        .orderBy("doc_id")),
-
-    // Sequence packing (concat-and-chunk): documents concatenated in
-    // deterministic order within each split, cut every 2048 tokens —
-    // each doc mapped to its [start_win, end_win] context-window span.
-    // One window shuffle per split partition; integer division
-    // throughout (no float boundary drift).
-    "q62_seq_pack" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.stableSplit(col("doc_id")).as("split"),
-        TextFunctions.tokenCount(col("text")).cast("bigint").as("n_tok"))
-      val w = Window.partitionBy("split").orderBy("doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      d.withColumn("cum", sum(col("n_tok")).over(w))
-        .select(col("doc_id"), col("split"), col("n_tok"),
-          expr("(cum - n_tok) div 2048").as("start_win"),
-          expr("(cum - 1) div 2048").as("end_win"))
-        .orderBy("doc_id")
-    }),
-
-    // Train/heldout contamination detection via n-gram collision (the
-    // standard 13-gram decontamination check, 8-gram at this doc size):
-    // a train doc is contaminated iff it shares any 8-token shingle with
-    // a val/test doc. Joins carry 31-bit shingle hashes, never text.
-    "q63_contamination" -> ((s, dir) => {
-      val sh = Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.stableSplit(col("doc_id")).as("split"),
-        explode(graft.expressions.TextHash.shingleHashes31(col("text"), 8)).as("g"))
-      val heldout = sh.filter(col("split") =!= "train").select("g").distinct()
-      sh.filter(col("split") === "train")
-        .join(heldout, Seq("g"), "left_semi")
-        .select("doc_id").distinct().orderBy("doc_id")
-    }),
-
-    // Count-min sketch over corpus tokens (portable md5 hash rows, d=4 ×
-    // w=1024 counters): frequency estimation in FIXED memory — the
-    // sketch is O(d·w) counters regardless of vocabulary size, the
-    // at-scale alternative to a full frequency table, mergeable across
-    // partitions by counter addition (partial-agg for free). Emits the
-    // 20 most frequent tokens' true counts beside their sketch estimates
-    // (estimate ≥ truth by construction; hash-exact in both engines).
-    "q101_cms_sketch" -> ((s, dir) => {
-      val w = 1024L; val d = 4
-      // Single corpus scan: the exploded tokens are reduced to a distinct
-      // per-token frequency table first (one tokenize pass, one partial-agg
-      // shuffle on tok), and BOTH the CMS counter table and the top-20
-      // truth table derive from that small table — the counters by summing
-      // frequencies into (row, bucket) cells, the top-20 by ordering it.
-      // At corpus scale this replaces a second full tokenize scan with a
-      // distinct-vocabulary-sized aggregation.
-      val freq = Tables.documents(s, dir)
-        .select(explode(TextFunctions.tokens(lower(trim(col("text"))))).as("tok"))
-        .filter(col("tok") =!= "")
-        .groupBy("tok").agg(count(lit(1)).as("n"))
-      def bucket(tok: Column, r: Column): Column =
-        pmod(conv(substring(md5(concat(tok, lit("#"), r.cast("string"))
-          .cast("binary")), 1, 8), 16, 10).cast("bigint"), lit(w))
-      val rowIds = array((0 until d).map(lit(_)): _*)
-      val counters = freq
-        .select(col("tok"), col("n"), explode(rowIds).as("r"))
-        .select(col("r"), bucket(col("tok"), col("r")).as("bucket"), col("n"))
-        .groupBy("r", "bucket").agg(sum(col("n")).as("c"))
-      val top20 = freq.orderBy(col("n").desc, col("tok").asc).limit(20)
-      top20.select(col("tok"), col("n"), explode(rowIds).as("r"))
-        .select(col("tok"), col("n"), col("r"),
-          bucket(col("tok"), col("r")).as("bucket"))
-        .join(counters, Seq("r", "bucket"))
-        .groupBy("tok", "n").agg(min(col("c")).as("cms_estimate"))
-        .select(col("tok"), col("n").as("true_count"), col("cms_estimate"))
-        .orderBy(col("true_count").desc, col("tok").asc)
-    }),
-
-    // Sessionized conversion funnel (view → click → purchase, strictly
-    // ordered within a 1h-gap session): staged conditional-min
-    // aggregations — each stage is a partial-agg groupBy on the session
-    // key joined to the previous stage's timestamps, never a per-session
-    // sort or collect. The funnel emits one row of stage survivor
-    // counts.
-    "q100_funnel" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("user_id", "ts_ns", "event_type")
-      val sess = Sessions.sessionize(ev, "user_id", "ts_ns",
-        gapNanos = 3600L * 1000000000L)
-      val v = sess.groupBy("user_id", "session_id")
-        .agg(min(when(col("event_type") === "view", col("ts_ns"))).as("t_view"))
-        .filter(col("t_view").isNotNull)
-      val c = sess.join(v, Seq("user_id", "session_id"))
-        .filter(col("event_type") === "click" && col("ts_ns") > col("t_view"))
-        .groupBy("user_id", "session_id").agg(min("ts_ns").as("t_click"))
-      val p = sess.join(c, Seq("user_id", "session_id"))
-        .filter(col("event_type") === "purchase" && col("ts_ns") > col("t_click"))
-        .groupBy("user_id", "session_id").agg(min("ts_ns").as("t_purchase"))
-      v.agg(count(lit(1)).as("n_view"))
-        .crossJoin(c.agg(count(lit(1)).as("n_view_click")))
-        .crossJoin(p.agg(count(lit(1)).as("n_full_funnel")))
-    }),
-
-    // Label-centroid cosine similarity matrix (embedding-space class
-    // analytics). Float-sum order-dependence would break the oracle, so
-    // components are quantized to exact 1e-4 integer units at the scan;
-    // centroid cosines reduce to integer sum-vector cosines (the counts
-    // cancel), exact 64-bit until the final division and two
-    // correctly-rounded sqrts. Shuffle keys are (label, pos) — O(labels
-    // × dims) — and the pairwise stage is label-count-sized.
-    "q98_centroid_sim" -> ((s, dir) => {
-      val q = Tables.embeddings(s, dir)
-        .select(col("label"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .select(col("label"), col("pos"),
-          floor(col("x").cast("double") * 10000.0 + 0.5).cast("long").as("qx"))
-      val sums = q.groupBy("label", "pos").agg(sum(col("qx")).as("sv"))
-      val norms = sums.groupBy("label").agg(sum(col("sv") * col("sv")).as("nrm"))
-      sums.as("a").join(sums.as("b"), Seq("pos"))
-        .filter(col("a.label") < col("b.label"))
-        .groupBy(col("a.label").as("label_a"), col("b.label").as("label_b"))
-        .agg(sum(col("a.sv") * col("b.sv")).as("dot"))
-        .join(norms.select(col("label").as("label_a"), col("nrm").as("na")),
-          Seq("label_a"))
-        .join(norms.select(col("label").as("label_b"), col("nrm").as("nb")),
-          Seq("label_b"))
-        .select(col("label_a"), col("label_b"),
-          (col("dot").cast("double") /
-            (sqrt(col("na").cast("double")) * sqrt(col("nb").cast("double"))))
-            .as("cos_sim"))
-        .orderBy("label_a", "label_b")
-    }),
-
-    // Blocked fuzzy string matching (entity resolution): part names
-    // within edit distance 12, candidates generated by a (brand, size)
-    // equi-join — the quadratic runs only inside blocks, and the
-    // levenshtein evaluates only on candidates. Both engines implement
-    // the same integer edit distance → exact oracle.
-    "q99_fuzzy_match" -> ((s, dir) => {
-      val p = Tables.part(s, dir)
-        .select("p_partkey", "p_brand", "p_size", "p_name")
-      p.as("a").join(p.as("b"),
-          col("a.p_brand") === col("b.p_brand") &&
-            col("a.p_size") === col("b.p_size") &&
-            col("a.p_partkey") < col("b.p_partkey"))
-        .select(col("a.p_partkey").as("id_a"), col("b.p_partkey").as("id_b"),
-          levenshtein(col("a.p_name"), col("b.p_name")).as("dist"))
-        .filter(col("dist") <= 12)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Cross-source contamination matrix: for every source pair, how many
-    // distinct 8-grams they share — the curation diagnostic that tells
-    // you which corpora overlap before you budget dedup between them.
-    // The gram table is distinct (source, gram) pairs (primitive longs);
-    // the self-join shuffles on the gram key, counts partial-agg. Same
-    // portable gram family as q63/q93 → hash-exact oracle.
-    "q97_source_overlap" -> ((s, dir) => {
-      val sh = Tables.documents(s, dir).select(col("source"),
-        explode(graft.expressions.TextHash.shingleHashes31(col("text"), 8))
-          .as("g")).distinct()
-      sh.as("a").join(sh.as("b"), Seq("g"))
-        .filter(col("a.source") < col("b.source"))
-        .groupBy(col("a.source").as("source_a"), col("b.source").as("source_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy("source_a", "source_b")
-    }),
-
-    // Group-wise feature normalization (per-lang z-score of doc length —
-    // the ML-prep standardization step). Cross-engine float discipline
-    // (the q75 Gini pattern): everything stays exact 64-bit integer
-    // arithmetic — z = (x·n − Σx) / √(n·Σx² − (Σx)²) — until ONE double
-    // division and ONE correctly-rounded sqrt, so even the float scores
-    // hash-match. Never var_pop/stddev: engines disagree in ulps
-    // (Welford vs naive). Stats side is O(groups) → broadcast join.
-    "q96_zscore" -> ((s, dir) => {
-      // moments in DECIMAL(38,0): Spark's long would wrap ss·n − s² past
-      // 2⁶³ (~3M same-lang docs of 1k chars) while DuckDB's HUGEINT stays
-      // exact — decimal keeps both sides exact to 38 digits, cast to
-      // double only at the end
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"),
-          col("n_chars").cast("decimal(38,0)").as("x"))
-      val stats = d.groupBy("lang").agg(
-        count(lit(1)).cast("decimal(38,0)").as("n"), sum(col("x")).as("s"),
-        sum(col("x") * col("x")).as("ss"))
-      d.join(broadcast(stats), Seq("lang"))
-        .withColumn("varnum", col("ss") * col("n") - col("s") * col("s"))
-        .filter(col("varnum") > 0)
-        .select(col("doc_id"), col("lang"),
-          ((col("x") * col("n") - col("s")).cast("double") /
-            sqrt(col("varnum").cast("double"))).as("z"))
-        .orderBy("doc_id")
-    }),
-
-    // Overlapping-window document chunking (embedding / RAG prep): each
-    // doc explodes into 64-token chunks at stride 48. All row-local —
-    // the explode happens in the scan stage, no shuffle until the final
-    // determinism sort; chunk counts are ceil((n-64)/48)+1 via the
-    // sequence of start offsets. Emits (doc_id, chunk_id, n_tokens).
-    "q95_chunking" -> ((s, dir) => {
-      val win = 64; val stride = 48
-      // last start is the largest stride multiple ≤ n-(win-stride)-1 (or
-      // 0): any later start would yield a tail chunk fully contained in
-      // the previous window — redundant downstream. Empty/whitespace
-      // texts are excluded on the text itself (a tokenizer on "" yields
-      // [""], n=1 — not a real token).
-      Tables.documents(s, dir)
-        .filter(length(trim(col("text"))) > 0)
-        .select(col("doc_id"),
-          size(TextFunctions.tokens(trim(col("text")))).as("n"))
-        .select(col("doc_id"), col("n"),
-          posexplode(sequence(lit(0),
-            greatest(col("n") - lit(win - stride + 1), lit(0)), lit(stride)))
-            .as(Seq("chunk_id", "start")))
-        .select(col("doc_id"), col("chunk_id").cast("int").as("chunk_id"),
-          least(lit(win), col("n") - col("start")).cast("int").as("n_tokens"))
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // Token-balanced shard assignment over the GLOBAL doc order: each
-    // document's shard = its starting token offset div 20k. Computed by
-    // the distributed prefix sum (range partition → per-partition totals
-    // → broadcast offsets → carry pass), NEVER the single-partition
-    // window Spark would plan for an unpartitioned running sum — the
-    // oracle IS that window spelling, so the gate proves the distributed
-    // plan reproduces it exactly.
-    "q94_shard_assign" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"),
-        TextFunctions.tokenCount(col("text")).cast("bigint").as("n_tok"))
-      PrefixSum.globalRunningSum(d, "doc_id", "n_tok", "cum")
-        .select(col("doc_id"), col("n_tok").cast("int").as("n_tok"),
-          expr("(cum - n_tok) div 20000").as("shard"))
-        .orderBy("doc_id")
-    }),
-
-    // Exact-substring duplication signal (the distributed shape of
-    // suffix-array train-data dedup): per document, the fraction of its
-    // distinct 8-token windows that also occur in ANOTHER document.
-    // Two partial-agg shuffles over primitive (gram, doc) longs + one
-    // semi join — the gram table is O(corpus tokens) but 16 bytes/row,
-    // and nothing ever carries text. Same portable 31-bit md5 gram
-    // family as q63, so the whole pipeline is oracle-exact.
-    "q93_dup_ngram_coverage" -> ((s, dir) => {
-      val sh = Tables.documents(s, dir).select(col("doc_id"),
-        explode(graft.expressions.TextHash.shingleHashes31(col("text"), 8))
-          .as("g"))
-      // shingleHashes31 is per-doc distinct, so count(*) counts docs
-      val dup = sh.groupBy("g").agg(count(lit(1)).as("nd"))
-        .filter(col("nd") >= 2).select("g")
-      val tot = sh.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-      val cov = sh.join(dup, Seq("g"), "left_semi")
-        .groupBy("doc_id").agg(count(lit(1)).as("n_dup"))
-      tot.join(cov, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("n_grams").cast("int").as("n_grams"),
-          (coalesce(col("n_dup"), lit(0L)).cast("double") /
-            col("n_grams").cast("double")).as("dup_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // Tumbling event-time windows (1h) per event type — the batch
-    // equivalent of the watermarked streaming aggregation (SyncSpec runs
-    // the Structured Streaming realization); integer nanos bucketing.
-    "q64_tumbling" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(col("event_type"), expr("ts_ns div 3600000000000").as("hour_id"))
-        .agg(count(lit(1)).as("n"),
-          Aggregations.exactSum(col("value")).as("sum_value"))
-        .orderBy("event_type", "hour_id")),
-
-    // Fixed-point PageRank over the undirected order↔part bipartite
-    // graph: 3 damped propagation rounds, all-integer arithmetic so the
-    // iterative loop itself is oracle-checked bit-for-bit (the graph
-    // analog of the reference's TigerGraph rank/centrality workloads).
-    "q65_pagerank" -> ((s, dir) => {
-      // dedup the (order, part) pairs BEFORE doubling directions — the
-      // two directed sets are disjoint (odd/even node spaces), so the
-      // union needs no second distinct and the dedup shuffle carries
-      // half the rows
-      val pairs = Tables.lineitem(s, dir).select(
-        (col("l_orderkey") * 2).as("o"), (col("l_partkey") * 2 + 1).as("p"))
-        .distinct()
-      val edges = pairs.select(col("o").as("src"), col("p").as("dst"))
-        .unionByName(pairs.select(col("p").as("src"), col("o").as("dst")))
-      Graph.pageRankFixedPoint(edges, iterations = 3, symmetric = true)
-        .orderBy("id")
-    }),
-
-    // Per-doc distinctive terms: TF-IDF with the rational idf N/df (no
-    // transcendental — libm ln differs in the last ulp across engines),
-    // top 5 per document, stable tie-break on token.
-    "q66_tfidf" -> ((s, dir) =>
-      Corpus.tfIdfTopK(Tables.documents(s, dir), "doc_id", "text", 5)
-        .orderBy("doc_id", "rnk")),
-
-    // Deterministic 10% Bernoulli sample by md5(doc_id) — reproducible
-    // across engines/reruns/partitionings, no RNG state to seed.
-    "q69_hash_sample" -> ((s, dir) =>
-      Corpus.hashSample(Tables.documents(s, dir), "doc_id", 0.1)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-
-    // Deterministic mixture sampling: per-source Bernoulli rates hit a
-    // target corpus mixture (full src0, half src1, quarter src2, eighth
-    // everything else) with the same portable md5 uniform as q69 —
-    // thresholds are exact driver-side longs, the filter is scan-stage,
-    // and the kept set nests monotonically as weights are re-tuned.
-    "q89_mixture_sample" -> ((s, dir) =>
-      Corpus.mixtureSample(Tables.documents(s, dir), "doc_id", "source",
-        Map("src0" -> 1.0, "src1" -> 0.5, "src2" -> 0.25),
-        defaultRate = 0.125)
-        .groupBy("source").agg(count(lit(1)).as("n"))
-        .orderBy("source")),
-
-    // Corpus snapshot diff (CDC): yesterday's crawl vs today's, compared
-    // by 128-bit content hash after a full outer join on doc_id →
-    // added / removed / changed / unchanged counts. One shuffle on the
-    // narrow (id, md5) projection — text never crosses the wire; at
-    // 100 TB both sides prune to two columns at the scan and the diff is
-    // O(|ids|) exchange bytes. Snapshots derived deterministically from
-    // the documents table (id-ranges membership + a simulated edit).
-    "q92_snapshot_diff" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val old = d.filter(col("doc_id") % 10 =!= 0)
-        .select(col("doc_id"), md5(col("text").cast("binary")).as("h_old"))
-      val nw = d.filter(col("doc_id") % 10 =!= 9)
-        .select(col("doc_id"),
-          md5(when(col("doc_id") % 7 === 0, concat(col("text"), lit(" v2")))
-            .otherwise(col("text")).cast("binary")).as("h_new"))
-      old.join(nw, Seq("doc_id"), "full_outer")
-        .select(when(col("h_old").isNull, "added")
-          .when(col("h_new").isNull, "removed")
-          .when(col("h_old") =!= col("h_new"), "changed")
-          .otherwise("unchanged").as("status"))
-        .groupBy("status").agg(count(lit(1)).as("n"))
-        .orderBy("status")
-    }),
-
-    // Broadcast RANGE JOIN (point-in-interval lookup): events assigned
-    // to id-range batches (the reference's sync-batch shape) through the
-    // custom as-of exec + coverage check — O(|left|·log|dim|), zero
-    // exchanges on the probe side, where the naive spelling is a
-    // BETWEEN cross join. The batch dim is derived from a 1-row bounds
-    // agg exploded into a sequence (same device as the q81 date spine);
-    // oracle = DuckDB BETWEEN join.
-    "q91_range_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("event_id", "value")
-      val batches = ev.agg(expr("max(event_id) div 1000").as("mx"))
-        .select(explode(sequence(lit(0L), col("mx"))).as("batch_id"))
-        .select(col("batch_id"), (col("batch_id") * 1000).as("lo"),
-          (col("batch_id") * 1000 + 999).as("hi"))
-      RangeJoin.broadcastRangeLookup(ev, batches, "event_id", "lo", "hi",
-        Seq("batch_id"))
-        .filter(col("batch_id").isNotNull)
-        .groupBy("batch_id").agg(count(lit(1)).as("n"))
-        .orderBy("batch_id")
-    }),
-
-    // Per-group top-k as a BOUNDED-HEAP AGGREGATE (TopKPairsAgg, the
-    // per-group TakeOrderedAndProject Spark lacks): map-side buffers
-    // never exceed k pairs, merges are O(k), shuffle bytes O(groups·k) —
-    // where the window spelling (the oracle) shuffles and sorts every
-    // row, and collect_list would buffer whole hot groups.
-    "q90_topk_agg" -> ((s, dir) =>
-      Tables.events(s, dir).filter(col("event_type") === "purchase")
-        .groupBy("user_id")
-        .agg(graft.expressions.TopKHeap.topKPairs(
-          col("value"), col("event_id"), 3).as("top"))
-        .select(col("user_id"), posexplode(col("top")).as(Seq("r0", "p")))
-        .select(col("user_id"), (col("r0") + 1).cast("int").as("rank"),
-          col("p.id").as("event_id"), col("p.score").as("value"))
-        .orderBy("user_id", "rank")),
-
-    // Per-group argmax as an AGGREGATION (max of a (value, id) struct —
-    // lexicographic ordering gives a deterministic tie-break): O(groups)
-    // shuffle bytes with map-side combine, where the window realization
-    // (q57) pays a full per-group sort. The right shape at 100 TB when
-    // only the top row is needed.
-    "q70_argmax" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy("user_id")
-        .agg(max(struct(col("value"), col("event_id"))).as("m"))
-        .select(col("user_id"), col("m.event_id").as("top_event_id"),
-          col("m.value").as("top_value"))
-        .orderBy("user_id")),
-
-    // F8 JSON parse (`bitquery.py:39-46`): semi-structured props column
-    // → typed extraction at the scan, then a plain grouped agg. At scale
-    // the extraction is codegen'd per-row work with no shuffle cost; the
-    // agg shuffles O(groups).
-    "q71_json_extract" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("k")).as("sum_k"),
-          min(col("k")).as("min_k"), max(col("k")).as("max_k"))
-        .orderBy("event_type")),
-
-    // Frame-spec windows (rolling 3-row + running sums): one shuffle by
-    // user, one sort per partition serves ALL frames over the same
-    // window — decimal-cast sums keep the frames engine-exact.
-    "q72_rolling" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"),
-          sum(col("value").cast("decimal(28,10)")).over(w.rowsBetween(-2, 0))
-            .cast("double").as("roll_sum3"),
-          count(lit(1)).over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .as("row_in_user"),
-          sum(col("value").cast("decimal(28,10)"))
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("double").as("run_sum"))
-        .orderBy("user_id", "row_in_user")
-    }),
-
-    // lead/lag/first_value over the same per-user order — the offset
-    // family shares the q72 sort too. delta is a two-operand double op
-    // (exactly-rounded IEEE, no summation order), so it's oracle-safe.
-    "q73_lead_lag" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id").orderBy("ts_ns", "event_id")
-      Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"),
-          lag(col("value"), 1).over(w).as("prev_value"),
-          lead(col("event_type"), 1).over(w).as("next_type"),
-          (col("value") - coalesce(lag(col("value"), 1).over(w), lit(0.0)))
-            .as("delta"),
-          first(col("event_id"))
-            .over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .as("first_event_id"))
-        .orderBy("user_id", "event_id")
-    }),
-
-    // Histogram by fixed-width bucket: floor(value/width) is exactly-
-    // rounded in both engines (unlike double→int CASTs, which truncate
-    // in Spark but round in DuckDB). One partial-agg shuffle, O(buckets).
-    "q74_histogram" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy(floor(col("value") / 50.0).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n"),
-          Aggregations.exactSum(col("value")).as("sum_value"))
-        .orderBy("bucket")),
-
-    // Gini impurity of each user's event-type mix: all-integer until ONE
-    // final division of exact ints (deterministic in any IEEE engine) —
-    // the portable alternative to entropy, whose ln() differs in the
-    // last ulp across libms.
-    "q75_gini" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .groupBy("user_id", "event_type").agg(count(lit(1)).as("c"))
-        .groupBy("user_id")
-        .agg(sum(col("c") * col("c")).as("ss"), sum(col("c")).as("n"))
-        .select(col("user_id"),
-          (lit(1.0) - col("ss").cast("double")
-            / (col("n") * col("n")).cast("double")).as("gini"),
-          col("n"))
-        .orderBy("user_id")),
-
-    // Int8 embedding quantization (the storage/serving compression step
-    // of a training pipeline): per-vector absmax scale, symmetric round-
-    // half-up via floor(x+0.5) — float→double casts first so both
-    // engines run identical double arithmetic. Two node-sized shuffles
-    // (per-vector max, per-vector stats); the element table never
-    // materializes wider than (id, pos, x).
-    "q76_quantize" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-        .select(col("vec_id"), explode(col("embedding")).as("x"))
-        .select(col("vec_id"), col("x").cast("double").as("xd"))
-      val mx = e.groupBy("vec_id").agg(max(abs(col("xd"))).as("maxabs"))
-        .filter(col("maxabs") > 0)
-      e.join(mx, Seq("vec_id"))
-        .select(col("vec_id"), col("maxabs"),
-          floor(col("xd") * 127.0 / col("maxabs") + 0.5).cast("long").as("q"))
-        .groupBy("vec_id")
-        .agg(sum(col("q")).as("q_sum"), min(col("q")).as("q_min"),
-          max(col("q")).as("q_max"),
-          sum(when(abs(col("q")) === 127, 1L).otherwise(0L)).as("n_sat"),
-          max(col("maxabs")).as("maxabs"))
-        .orderBy("vec_id")
-    }),
-
-    // PII-shaped redaction: scrub digit runs at the scan (codegen'd
-    // regexp, no shuffle), fingerprint the scrubbed text with the
-    // portable md5 so the full output verifies without shipping text.
-    "q77_redact" -> ((s, dir) =>
-      Tables.documents(s, dir).select(col("doc_id"),
-        md5(regexp_replace(col("text"), "[0-9]", "#").cast("binary"))
-          .as("redacted_md5"),
-        (length(col("text"))
-          - length(regexp_replace(col("text"), "[0-9]", ""))).as("n_digits"))
-        .orderBy("doc_id")),
-
-    // Salted fact⋈dim join (hot-key mitigation when the dim is too big
-    // to broadcast and AQE's split isn't available): row-id salt on the
-    // fact, buckets-fold replicated dim — result rows identical to the
-    // plain join, verified against the unsalted oracle.
-    "q78_salted_join" -> ((s, dir) =>
-      Skew.saltedJoin(
-        Tables.events(s, dir).select(col("user_id"), col("value")),
-        Tables.customer(s, dir)
-          .select(col("c_custkey").as("user_id"), col("c_nationkey")),
-        keyCols = Seq("user_id"), buckets = 8)
-        .groupBy("c_nationkey")
-        .agg(count(lit(1)).as("n"),
-          Aggregations.exactSum(col("value")).as("sum_value"))
-        .orderBy("c_nationkey")),
-
-    // Schema-evolution union: unionByName(allowMissingColumns) aligns
-    // heterogeneous extracts by NAME and null-fills the gaps — the Spark
-    // realization of the reference's folder-of-queries UNION ALL (U1)
-    // when file generations drift.
-    "q79_schema_union" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      docs.select(col("doc_id"), col("lang"))
-        .unionByName(docs.select(col("doc_id"), col("source")),
-          allowMissingColumns = true)
-        .orderBy("doc_id", "lang", "source")
-    }),
-
-    // Bigram vocabulary: adjacent-token pairs built by a codegen'd
-    // expression at the scan (no self-join on position — that would
-    // shuffle the posting table twice; and no HOF transform — lambda
-    // expressions are CodegenFallback and drop the stage to interpreted
-    // eval), then the same O(|vocab|) partial-agg shuffle as the
-    // unigram vocabulary.
-    "q80_bigrams" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(graft.expressions.TextHash.adjacentPairs(
-          TextFunctions.tokens(lower(trim(col("text"))))).as("pairs"))
-        .select(explode(col("pairs")).as("bigram"))
-        .groupBy("bigram").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("bigram").asc)
-        .limit(40)),
-
-    // Gopher-style repetition quality signals, per document: fraction of
-    // bigram occurrences consumed by the single most-repeated bigram, and
-    // fraction of tokens that are repeats. Two-stage hash aggregation —
-    // (doc_id, bigram) counts then per-doc extrema — both partial-agg
-    // map-side, so shuffle bytes are O(distinct per-doc bigrams), never
-    // O(token occurrences); the bigrams come from the same codegen'd
-    // scan-stage expression as q80. Int-valued double division only —
-    // cross-engine exact.
-    "q88_repetition" -> ((s, dir) => {
-      val bi = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextFunctions.tokens(lower(trim(col("text")))).as("toks"))
-        .select(col("doc_id"),
-          size(col("toks")).as("n_tok"),
-          size(array_distinct(col("toks"))).as("n_distinct"),
-          explode(graft.expressions.TextHash.adjacentPairs(col("toks")))
-            .as("bigram"))
-        .groupBy("doc_id", "bigram")
-        .agg(max("n_tok").as("n_tok"), max("n_distinct").as("n_distinct"),
-          count(lit(1)).as("c"))
-      bi.groupBy("doc_id").agg(
-          (max(col("c")).cast("double") / sum(col("c")).cast("double"))
-            .as("top_bigram_frac"),
-          ((max(col("n_tok")) - max(col("n_distinct"))).cast("double") /
-            max(col("n_tok")).cast("double")).as("rep_token_frac"))
-        .orderBy("doc_id")
-    }),
-
-    // Date-spine gap fill: sequence(min,max) explodes a calendar from a
-    // 1-row bounds agg (driver-sized), left-joins the daily partials,
-    // zero-fills. The spine side is O(days) — broadcast for free.
-    "q81_date_spine" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val daily = ev.filter(col("event_type") === "purchase" && col("value") > 480)
-        .groupBy(col("ts").cast("date").as("d")).agg(count(lit(1)).as("n"))
-      val spine = ev.agg(min(col("ts").cast("date")).as("lo"),
-        max(col("ts").cast("date")).as("hi"))
-        .select(explode(sequence(col("lo"), col("hi"))).as("d"))
-      spine.join(daily, Seq("d"), "left")
-        .select(col("d"), coalesce(col("n"), lit(0L)).as("n"))
-        .orderBy("d")
-    }),
-
-    // Keep-best dedup policy: per exact-content cluster (md5 of the
-    // normalized text) keep the longest doc, smallest doc_id on ties —
-    // ONE aggregation (min of a (-n_chars, doc_id) struct), O(clusters)
-    // shuffle bytes, where the window realization would sort every
-    // cluster. The canonical "canonical document" selection.
-    "q82_keep_best" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy(TextFunctions.md5Fingerprint(col("text")).as("fp"))
-        .agg(min(struct((-col("n_chars")).as("neg"), col("doc_id").as("doc_id")))
-          .as("m"))
-        .select(col("fp"), col("m.doc_id").as("keep_doc_id"),
-          (-col("m.neg")).as("n_chars"))
-        .orderBy("fp")),
-
-    // Contrastive positive-pair generation: within-label self-join
-    // (label blocking keeps it |label-class|² not corpus²), ordered
-    // a<b, thinned by the deterministic md5 pair hash — the
-    // reproducible pair-sampling step of an embedding training prep.
-    "q83_contrastive_pairs" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).select(col("label"), col("vec_id"))
-      e.select(col("label"), col("vec_id").as("a"))
-        .join(e.select(col("label"), col("vec_id").as("b")), Seq("label"))
-        .filter(col("a") < col("b"))
-        .filter(conv(substring(md5(concat(col("a").cast("string"), lit("_"),
-          col("b").cast("string")).cast("binary")), 1, 8), 16, 10)
-          .cast("bigint") < 1073741824L)
-        .orderBy("label", "a", "b")
-    }),
-
-    // F8 deep JSON: parse props into a typed MAP and explode it —
-    // schema-free key discovery where q71 extracts a known path. The
-    // per-key agg shuffles O(|keyspace|).
-    "q85_json_map" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .select(col("event_type"),
-          explode(from_json(col("props"),
-            org.apache.spark.sql.types.MapType(
-              org.apache.spark.sql.types.StringType,
-              org.apache.spark.sql.types.LongType))).as(Seq("k", "v")))
-        .groupBy("k")
-        .agg(count(lit(1)).as("n"), sum(col("v")).as("sum_v"),
-          count_distinct(col("event_type")).as("n_types"))
-        .orderBy("k")),
-
-    // The WINDOW spelling of q70's argmax — included to exercise the
-    // injected ArgmaxWindowRewrite optimizer rule ON the oracle gate:
-    // the Filter(rn=1)-over-row_number plan is rewritten to the
-    // struct-max aggregation (O(groups) shuffle), and the result must
-    // still hash-match the window-semantics oracle.
-    "q86_argmax_window" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(col("value").desc, col("event_id").desc)
-      Tables.events(s, dir)
-        .select("user_id", "event_id", "value")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("user_id"), col("event_id").as("top_event_id"),
-          col("value").as("top_value"))
-        .orderBy("user_id")
-    }),
-
-    // Multi-aggregate pivot: per source, per-language doc counts AND
-    // char volumes in one pass (Spark names the columns
-    // <pivotValue>_<aggAlias>). sum(lit(1)) not count(): pivot yields
-    // NULL for absent (source,lang) cells and so does a SQL sum with no
-    // matches, keeping both engines aligned.
-    "q84_multi_pivot" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .groupBy("source")
-        .pivot("lang", Seq("en", "de", "es", "fr", "zh"))
-        .agg(sum(lit(1L)).as("n"), sum(col("n_chars")).as("chars"))
-        .orderBy("source")),
-
-    // Ranking-family windows: rank/dense_rank/percent_rank/cume_dist
-    // over a TIE-FUL order (second-granularity buckets — tied rows get
-    // equal values, so ties are cross-engine safe), ntile over a total
-    // order (ntile is arbitrary within ties, so it must never see one).
-    // percent_rank/cume_dist are exact integer ratios in doubles.
-    "q67_rank_funcs" -> ((s, dir) => {
-      val wTies = Window.partitionBy("event_type")
-        .orderBy(expr("ts_ns div 1000000000"))
-      val wTotal = Window.partitionBy("event_type").orderBy("ts_ns", "event_id")
-      Tables.events(s, dir).select(col("event_id"), col("event_type"),
-        rank().over(wTies).as("rnk"),
-        dense_rank().over(wTies).as("drnk"),
-        percent_rank().over(wTies).as("pct_rank"),
-        cume_dist().over(wTies).as("cdist"),
-        ntile(4).over(wTotal).as("quartile"))
-        .orderBy("event_id")
-    }),
-
-    // Composite quality score (C4/Gopher-style heuristic stack) with the
-    // engine-portable punctuation class; all-double arithmetic in a
-    // fixed evaluation order so the oracle matches bit-for-bit.
-    "q61_quality_score" -> ((s, dir) => {
-      val stop = Seq("the", "a", "of", "and", "to")
-      val lenScore = least(length(col("text")).cast("double") / lit(200.0), lit(1.0))
-      val punct = (length(col("text")) -
-          length(regexp_replace(col("text"), "[.,;:!?]", ""))).cast("double") /
-        greatest(length(col("text")), lit(1)).cast("double")
-      val stopR = TextFunctions.stopwordRatio(col("text"), stop)
-      Tables.documents(s, dir).select(col("doc_id"),
-        lenScore.as("len_score"), punct.as("punct_ratio"), stopR.as("stop_ratio"),
-        least(greatest(
-          lenScore * lit(0.4) + (lit(1.0) - punct) * lit(0.3) +
-            least(stopR * lit(5.0), lit(1.0)) * lit(0.3),
-          lit(0.0)), lit(1.0)).as("quality"))
-        .orderBy("doc_id")
-    }),
-
-    // Bloom-filter join pruning: dim keys → portable md5 bitset
-    // (driver collect bounded by mBits, NOT build cardinality) →
-    // zero-shuffle scan-stage probe of the fact side. n_bloom ≥ n_exact
-    // per group shows the false-positive envelope the filter trades for
-    // never shuffling non-candidate rows. The explicit form of Spark's
-    // own runtime bloom_filter_agg rewrite — reproducible cross-engine.
-    "q103_bloom_prune" -> ((s, dir) => {
-      val m = 4096
-      val dim = Tables.part(s, dir).filter(col("p_size") <= 5).select("p_partkey")
-      val bits = Bloom.buildBits(dim, "p_partkey", m)
-      // ONE fact scan carries both counts: the bloom probe is a
-      // scan-stage predicate, the exact branch a broadcast left join
-      // against the (unique-key) dim — vs the two-scan two-agg-join
-      // spelling, which re-read lineitem for each count.
-      Tables.lineitem(s, dir)
-        .join(broadcast(dim.withColumn("__m", lit(1))),
-          col("l_partkey") === col("p_partkey"), "left")
-        .groupBy("l_returnflag").agg(
-          count(when(Bloom.mightContain(bits, col("l_partkey"), m), lit(1)))
-            .as("n_bloom"),
-          count(when(col("__m").isNotNull, lit(1))).as("n_exact"))
-        .orderBy("l_returnflag")
-    }),
-
-    // KMV (bottom-k) distinct-count sketch vs exact ndv, per group: the
-    // mergeable cardinality estimator whose estimate is itself exact
-    // integer arithmetic over the portable md5 uniform — so even the
-    // APPROXIMATION hash-matches the oracle (same property as q101's
-    // CMS). Bounded-heap agg: map-side buffers ≤ k, shuffle O(groups·k).
-    "q104_kmv_distinct" -> ((s, dir) =>
-      Sketch.kmvDistinct(Tables.lineitem(s, dir), "l_partkey",
-        Seq("l_returnflag"), k = 256)
-        .orderBy("l_returnflag")),
-
-    // Dataset profiling: per-column row/null/distinct counts + string-
-    // form min/max in ONE aggregation pass (Expand × |cols|, single
-    // 1-row shuffle). Timestamp pre-cast to DATE — the cross-engine-
-    // stable string form (doubles excluded for the same reason).
-    "q105_profile" -> ((s, dir) =>
-      Profile.profile(
-        Tables.lineitem(s, dir).withColumn("l_shipdate",
-          col("l_shipdate").cast("date")),
-        Seq("l_returnflag", "l_linestatus", "l_orderkey", "l_partkey",
-          "l_suppkey", "l_linenumber", "l_shipdate"))
-        .orderBy("column")),
-
-    // Collocation extraction (lift ≥ liftNum/liftDen, exact integer
-    // cross-multiplication — the no-log PMI): bigram + unigram partial
-    // aggs, vocab-sized broadcasts, corpus never re-shuffles.
-    "q106_collocations" -> ((s, dir) =>
-      Corpus.collocations(Tables.documents(s, dir), "text",
-        minPairCount = 3L, liftNum = 13L, liftDen = 10L)
-        .orderBy("w1", "w2")),
-
-    // CCNet-style span-level dedup: consecutive 8-token spans, global
-    // first-occurrence survivorship, per-doc duplicated-span fraction.
-    // Spans shuffle as 16-byte hashes, never text; window groups are
-    // duplicate-cluster-sized.
-    "q107_span_dedup" -> ((s, dir) =>
-      Dedup.spanDedup(Tables.documents(s, dir), "doc_id", "text",
-        spanTokens = 8)
-        .orderBy("doc_id")),
-
-    // SemDeDup (semantic dedup): cluster-assign each embedding to its
-    // nearest of 8 deterministic seed centroids (broadcast — assignment
-    // is a scan-stage argmax), then near-dup ONLY within clusters
-    // (greedy keep-min over cosine ≥ 0.3 pairs). The cluster blocking is
-    // what keeps the quadratic survivable at corpus scale — pairs never
-    // cross clusters, mirroring q30's (lang, source) blocking in
-    // embedding space. Cosine parity with DuckDB is the q40-proven
-    // in-order float→double summation.
-    "q108_semantic_dedup" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val seeds = e.orderBy("vec_id").limit(8)
-        .select(col("vec_id").as("seed_id"), col("embedding").as("sv"))
-      val w = Window.partitionBy("vec_id")
-        .orderBy(col("sim").desc, col("seed_id").asc)
-      val assign = e.crossJoin(broadcast(seeds))
-        .select(col("vec_id"), col("seed_id"),
-          graft.expressions.VectorExpressions.cosineF(col("embedding"), col("sv"))
-            .as("sim"))
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("seed_id").as("cluster"))
-      val v = e.join(assign, Seq("vec_id"))
-      val dropped = v.as("a").join(v.as("b"),
-          col("a.cluster") === col("b.cluster") &&
-            col("a.vec_id") < col("b.vec_id"))
-        .filter(graft.expressions.VectorExpressions.cosineF(
-          col("a.embedding"), col("b.embedding")) >= 0.3)
-        .select(col("b.vec_id").as("vec_id")).distinct()
-      v.join(dropped.withColumn("__d", lit(1)), Seq("vec_id"), "left")
-        .select(col("vec_id"), col("cluster"), col("__d").isNull.as("kept"))
-        .orderBy("vec_id")
-    }),
-
-    // Corpus-frequency fluency proxy (the no-LM perplexity stand-in a
-    // curation pipeline uses before an LM is available): per document,
-    // the mean corpus frequency of its bigram occurrences. Two
-    // partial-agg shuffles (global bigram counts, per-doc sums) + a
-    // bigram-keyed join (vocab-sized → broadcast); integer sums with
-    // ONE final int-ratio division, so the doubles verify exactly.
-    "q109_bigram_fluency" -> ((s, dir) => {
-      val bi = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(graft.expressions.TextHash.adjacentPairs(
-            TextFunctions.tokens(lower(trim(col("text")))))).as("bigram"))
-      val freq = bi.groupBy("bigram").agg(count(lit(1)).as("c"))
-      bi.join(broadcast(freq), Seq("bigram"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bi"), sum(col("c")).as("freq_sum"))
-        .select(col("doc_id"), col("n_bi"), col("freq_sum"),
-          (col("freq_sum").cast("double") / col("n_bi").cast("double"))
-            .as("fluency"))
-        .orderBy("doc_id")
-    }),
-
-    // First BPE merge-step candidates: within-token adjacent CHARACTER
-    // pair counts over the corpus (space never pairs across tokens —
-    // the word-boundary discipline of BPE). Scan-stage double explode,
-    // one partial-agg shuffle of O(|char-pair vocab|) rows, global
-    // top-40 via TakeOrdered.
-    "q110_bpe_pairs" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .select(explode(TextFunctions.tokens(lower(trim(col("text"))))).as("tok"))
-        .filter(length(col("tok")) >= 2)
-        .select(explode(expr(
-          "transform(sequence(1, length(tok) - 1), i -> substring(tok, i, 2))"))
-          .as("pair"))
-        .groupBy("pair").agg(count(lit(1)).as("n"))
-        .orderBy(col("n").desc, col("pair").asc)
-        .limit(40)),
-
-    // Exact per-part triangle counts on the co-order part graph (parts
-    // sharing an order = the entity-linkage shape of "wallets sharing a
-    // transaction"). The PART graph stays ~0.5%-dense as sf grows (the
-    // supplier projection saturates toward a complete graph — measured
-    // 15 s vs ~3 s at sf0.1). Edge generation is ONE fact-table shuffle:
-    // CollectLongsDistinctCapped dedups AND hub-guards per order inside
-    // the groupBy (vs distinct → window-count → self-join = 3 shuffles +
-    // a sort), pairs explode map-side. Inside Graph.triangleCounts the
-    // degree orientation bounds wedge volume at O(m^1.5) under any skew.
-    "q111_triangles" -> ((s, dir) =>
-      Graph.triangleCounts(
-        Graph.coOccurrenceEdges(
-          Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-          "o", "p", maxGroupSize = 8))
-        .orderBy("id")),
-
-    // Length-proportional importance sampling: keep each document with
-    // probability n_chars/max(n_chars) — the token-budget downsampling
-    // that biases survival toward long documents. All-integer acceptance
-    // test (portable md5 uniform), scan-stage filter, one scalar agg
-    // broadcast back for the max.
-    "q112_weighted_sample" -> ((s, dir) =>
-      Corpus.weightedSample(Tables.documents(s, dir), "doc_id", "n_chars")
-        .select("doc_id", "source", "n_chars")
-        .orderBy("doc_id")),
-
-    // Robust outlier detection: median/MAD (the z-score that doesn't
-    // blow up on the outliers it hunts — complements q96's mean/stddev).
-    // Values go to integer CENTS first, so every median/MAD lands on a
-    // dyadic rational (x.0/x.5) that both engines interpolate EXACTLY —
-    // only f∈{0,.5} percentiles are cross-engine-safe on doubles (q44's
-    // lesson generalized). Three passes by necessity (med → dev → MAD
-    // gate); the events projection is cached narrow, group tables
-    // broadcast back.
-    // k-core decomposition (k=3, 4 peel rounds) of the co-order part
-    // graph — iterative degree peeling where each round is one node-id
-    // partial-agg shuffle + two broadcast semi-joins (the edge table
-    // never re-shuffles in broadcast regime). All-integer, so the whole
-    // loop is oracle-checked bit-for-bit against 4 unrolled DuckDB CTE
-    // rounds; early-exit on a no-op round is oracle-transparent.
-    "q122_kcore" -> ((s, dir) =>
-      Graph.kCore(
-        Graph.coOccurrenceEdges(
-          Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-          "o", "p", maxGroupSize = 8),
-        k = 3, maxRounds = 4)
-        .orderBy("id")),
-
-    // 7-day rolling per-user aggregates via a RANGE-frame window — the
-    // moving-average shape. Events pre-aggregate to (user, day) BEFORE
-    // the window (the frame input shrinks from events to user-days, and
-    // intra-day order can no longer affect sums), day sums stay decimal
-    // through the frame, and day is the unique per-user sort key (total
-    // order). RANGE not ROWS: gap days must still look back 6 calendar
-    // days, not 6 rows.
-    "q128_rolling" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("user_id"), expr("ts_ns div 86400000000000").as("day"))
-        .agg(sum(col("value").cast("decimal(28,10)")).as("d"))
-      val w = Window.partitionBy("user_id").orderBy("day").rangeBetween(-6, 0)
-      daily.select(col("user_id"), col("day"),
-          col("d").cast("double").as("day_value"),
-          sum(col("d")).over(w).cast("double").as("roll7_value"),
-          count(lit(1)).over(w).as("roll7_days"))
-        .orderBy("user_id", "day")
-    }),
-
-    // Incremental rollup maintenance (Incremental.state/merge/finalize):
-    // history and delta are aggregated separately into mergeable states
-    // (count / exact decimal sum / min / max) and COMBINED — history is
-    // never rescanned. The oracle recomputes the rollup from ALL raw
-    // rows directly, so the green row proves merged-incremental ==
-    // full-recompute bit-for-bit (decimal sums are associative; avg is
-    // derived only at finalize).
-    "q127_incremental_rollup" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), col("event_id"), col("value"))
-      val hist = ev.filter(col("event_id") % 10 =!= 0)
-      val delta = ev.filter(col("event_id") % 10 === 0)
-      Incremental.finalizeState(
-        Incremental.merge(Seq("event_type"),
-          Incremental.state(hist, Seq("event_type"), "value"),
-          Incremental.state(delta, Seq("event_type"), "value")),
-        Seq("event_type"))
-        .orderBy("event_type")
-    }),
-
-    // Product-quantization ANN (Ann.pqTopK): corpus compressed to 8
-    // codes/vector against 8×16 subspace codebooks, queries scored by
-    // LUT lookups (ADC) — the scan side is the codes table, never the
-    // raw embeddings. initById + 0 Lloyd rounds makes codebooks, code
-    // assignment (tie → larger codeword) and subspace-ascending ADC sums
-    // engine-independent, so the DuckDB oracle reproduces ranks exactly
-    // (q43's determinism trick applied to PQ).
-    "q126_ann_pq" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Ann.pqTopK(emb, emb.filter(col("vec_id") < 5), k = 10,
-        numSubspaces = 8, codebookSize = 16, lloydIterations = 0,
-        initById = true)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Personalized PageRank from a seed set (orders divisible by 25) on
-    // the doubled order↔part graph — teleport mass returns to seeds, so
-    // the rank table is FRONTIER-sized (r0 = |seeds| rows), the edge
-    // table never re-shuffles, and the whole fixed-point integer loop is
-    // oracle-checked bit-for-bit against 3 unrolled MATERIALIZED CTE
-    // rounds.
-    "q125_ppr" -> ((s, dir) => {
-      val pairs = Tables.lineitem(s, dir).select(
-        (col("l_orderkey") * 2).as("o"), (col("l_partkey") * 2 + 1).as("p"))
-        .distinct()
-      val edges = pairs.select(col("o").as("src"), col("p").as("dst"))
-        .unionByName(pairs.select(col("p").as("src"), col("o").as("dst")))
-      val seeds = pairs.select(col("o").as("id")).filter(col("id") % 50 === 0)
-      Graph.personalizedPageRank(edges, seeds, iterations = 3)
-        .orderBy("id")
-    }),
-
-    // CDC merge / lakehouse MERGE INTO (Merge.mergeChangelog): orders is
-    // the base snapshot, lineitem plays a keyed changelog (seq =
-    // l_linenumber, low-quantity lines are deletes). Last-write-wins via
-    // ONE partial-agg shuffle — max over struct(seq, payload) — instead
-    // of a row_number window that would sort every partition; shuffle
-    // volume is distinct keys per map task, not input rows. Oracle
-    // spells the same semantics as a window (unique (key, seq) makes
-    // both orders total).
-    "q124_merge_upsert" -> ((s, dir) => {
-      val base = Tables.customer(s, dir)
-        .select(col("c_custkey").as("k"), col("c_acctbal").as("v"))
-      val chg = Tables.events(s, dir)
-        .select(col("user_id").as("k"), col("value").as("v"),
-          col("event_id").as("seq"),
-          when(col("event_type") === "error", "D").otherwise("U").as("op"))
-      Merge.mergeChangelog(base, chg, Seq("k"), "seq", "op", baseSeq = -1L)
-        .select(col("k"), col("seq").as("last_seq"), col("v"))
-        .orderBy("k")
-    }),
-
-    // Interval–interval overlap join (IntervalJoin.overlapJoin): lineitem
-    // ship→receipt intervals × per-nation 45-day maintenance windows
-    // (4 per nation, generated from nationkey — tiny → broadcast regime,
-    // so the fact side NEVER shuffles). Binning turns the non-equi
-    // overlap into an equi-join on (nation, 64-day bin); first-shared-bin
-    // reporting makes output exactly-once with no dedup shuffle. The
-    // oracle is the naive inequality join DuckDB plans as IEJoin.
-    "q123_interval_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-        .join(broadcast(Tables.supplier(s, dir)
-          .select(col("s_suppkey").as("l_suppkey"),
-            col("s_nationkey").as("nk"))), Seq("l_suppkey"))
-        .select(col("nk"), col("l_orderkey"), col("l_linenumber"),
-          to_date(col("l_shipdate")).as("ls"),
-          date_add(to_date(col("l_shipdate")),
-            col("l_quantity").cast("int") % 28).as("le"))
-      val win = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("nk"),
-          explode(sequence(lit(0), lit(3))).as("window_id"))
-        .select(col("nk"), col("window_id"),
-          date_add(to_date(lit("1992-01-01")),
-            col("nk").cast("int") * 30 + col("window_id").cast("int") * 400)
-            .as("ws"))
-        .withColumn("we", date_add(col("ws"), 45))
-      IntervalJoin.overlapJoin(li, win, "ls", "le", "ws", "we",
-          keyCols = Seq("nk"), binWidth = 64L, broadcastRight = true)
-        .select(col("nk").cast("long").as("nk"),
-          col("l_orderkey"), col("l_linenumber"),
-          col("window_id").cast("long").as("window_id"),
-          (datediff(least(col("le"), col("we")),
-            greatest(col("ls"), col("ws"))) + 1).cast("long")
-            .as("overlap_days"))
-        .orderBy("nk", "l_orderkey", "l_linenumber", "window_id")
-    }),
-
-    // Z-order layout audit: Morton-interleave (l_partkey, l_suppkey),
-    // bucket on the z-value's high bits, and report per-bucket ranges of
-    // BOTH dimensions — the evidence that one clustering key localizes
-    // two filter columns at once (io/Layout.zorder2 feeds zorderedWrite;
-    // here the bucket stats are the oracle-checkable surface). Pure
-    // codegen'd integer bit ops, zero shuffles beyond the bucket agg.
-    "q121_zorder" -> ((s, dir) =>
-      Tables.lineitem(s, dir)
-        .select(col("l_partkey"), col("l_suppkey"),
-          graft.io.Layout.zorder2(col("l_partkey"), col("l_suppkey"))
-            .as("z"))
-        .groupBy(expr("z div 4096").as("zbucket"))
-        .agg(count(lit(1)).as("n_rows"),
-          min("l_partkey").as("min_part"), max("l_partkey").as("max_part"),
-          min("l_suppkey").as("min_supp"), max("l_suppkey").as("max_supp"))
-        .orderBy("zbucket")),
-
-    // Capped inverted index: token → df + top-3 "doc:tf" postings. The
-    // cap is a bounded-heap AGGREGATE (O(k) map-side state even for
-    // stopword tokens), not a window sort over the hot-token partition;
-    // shuffle bytes O(|vocab|·k). df≥5 prunes the long hapax tail.
-    "q120_inverted_index" -> ((s, dir) =>
-      Corpus.invertedIndex(Tables.documents(s, dir), "doc_id", "text",
-        k = 3, minDf = 5L)
-        .orderBy("token")),
-
-    // Cohort retention: first-touch weekly cohorts × week-offset activity
-    // cells. One hash(user) shuffle serves first-touch agg + join-back +
-    // per-user cell dedup (subset-rule partitioning reuse); only the tiny
-    // cohort×offset matrix re-shuffles. All-integer period arithmetic.
-    "q119_retention" -> ((s, dir) =>
-      Sessions.cohortRetention(
-        Tables.events(s, dir).select("user_id", "ts_ns"),
-        userCol = "user_id", tsNanosCol = "ts_ns", periodDays = 7)
-        .orderBy("cohort", "offset")),
-
-    "q118_mad_outliers" -> ((s, dir) => {
-      val c = Tables.events(s, dir)
-        .select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-        .cache()
-      val med = c.groupBy("event_type")
-        .agg(expr("percentile(c, 0.5)").as("med"))
-      val dev = c.join(broadcast(med), Seq("event_type"))
-        .select(col("event_type"), col("med"),
-          abs(col("c").cast("double") - col("med")).as("dev"))
-      val mad = dev.groupBy("event_type")
-        .agg(expr("percentile(dev, 0.5)").as("mad"))
-      dev.join(broadcast(mad), Seq("event_type"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          max(col("med")).as("med_cents"),
-          max(col("mad")).as("mad_cents"),
-          count(when(col("dev") > lit(3d) * col("mad"), 1)).as("n_outliers"))
-        .orderBy("event_type")
-    }),
-
-    // Equi-depth (quantile) histogram — the complement of q74's
-    // equi-WIDTH bins: 10 bins of equal row count over price. Rank comes
-    // from the distributed prefix-sum (range-partitioned sort + carry
-    // pass), NEVER a global row_number window (which Spark plans as one
-    // single-partition task — the canonical 100 TB anti-pattern; q94's
-    // machinery). Ties: price is non-unique, but per-bin count/min/max
-    // are invariant to tie order — equal-price rows are interchangeable
-    // across the bin boundary — so the oracle's row_number agrees.
-    "q117_equidepth" -> ((s, dir) => {
-      val k = 10
-      val ranked = PrefixSum.globalRunningSum(
-        Tables.lineitem(s, dir).select(col("l_extendedprice").as("price"))
-          .withColumn("__one", lit(1L)),
-        "price", "__one", "rnk")
-      ranked.crossJoin(broadcast(ranked.agg(max(col("rnk")).as("n"))))
-        .select(expr(s"((rnk - 1) * $k) div n").as("bin"), col("price"))
-        .groupBy("bin").agg(count(lit(1)).as("n_rows"),
-          min("price").as("min_price"), max("price").as("max_price"))
-        .orderBy("bin")
-    }),
-
-    // Distributed BPE merge training, 5 rounds: the corpus collapses to
-    // a vocab-sized (word, count) table in ONE scan, then every round is
-    // a narrow pair-count shuffle + a 1-row argmax collect + a map-side
-    // literal replace on the double-space symbol encoding (greedy
-    // left-to-right merge semantics identical in every engine — the
-    // whole loop is oracle-checked). q110 is round-0 candidates only.
-    "q116_bpe_train" -> ((s, dir) =>
-      Bpe.trainMerges(Tables.documents(s, dir), "text", steps = 5)
-        .orderBy("step")),
-
-    // Asymmetric near-dup: n-gram CONTAINMENT |A∩B|/|A| — fires when a
-    // short doc is quoted inside a long one, where Jaccard stays near
-    // |A|/|B| and misses it. Directed pairs within (lang, source)
-    // blocks; merge-scan containment is one codegen'd expression over
-    // the cached shingle table.
-    "q115_containment" -> ((s, dir) =>
-      Dedup.ngramContainmentPairs(Tables.documents(s, dir), "doc_id", "text",
-        blockCols = Seq("lang", "source"), threshold = 0.5, shingleSize = 2)
-        .orderBy("id_a", "id_b")),
-
-    // Deterministic synchronous label propagation on the co-order part
-    // graph: 3 mode-vote rounds (smallest label wins ties) — the
-    // community-detection complement to CC (q48), PageRank (q65) and
-    // triangles (q111). All-integer, so the iterative loop itself is
-    // oracle-checked bit-for-bit against 3 unrolled DuckDB CTE rounds.
-    "q114_label_prop" -> ((s, dir) => {
-      val canon = Graph.coOccurrenceEdges(
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-        "o", "p", maxGroupSize = 8).distinct()
-      val edges = canon.unionByName(
-        canon.select(col("dst").as("src"), col("src").as("dst")))
-      Graph.labelPropagation(edges, iterations = 3).orderBy("id")
-    }),
-
-    // Hopping (sliding) event-time windows, 30-min size / 10-min hop, via
-    // the built-in `window()` — the Structured-Streaming-compatible
-    // windowing (same operator runs on readStream). Each event lands in
-    // exactly size/hop = 3 windows; the explode happens scan-stage, the
-    // agg is one partial-agg shuffle. Window bounds surface as epoch
-    // SECONDS (never raw timestamps — cross-engine parity discipline).
-    "q113_hopping" -> ((s, dir) =>
-      Tables.events(s, dir)
-        .withColumn("t", expr("CAST(ts_ns div 1000000000 AS TIMESTAMP)"))
-        .groupBy(col("event_type"),
-          window(col("t"), "30 minutes", "10 minutes").as("w"))
-        .agg(count(lit(1)).as("n"),
-          Aggregations.exactSum(col("value")).as("sum_value"))
-        .select(col("event_type"), col("w.start").cast("long").as("w_start"),
-          col("n"), col("sum_value"))
-        .orderBy("event_type", "w_start")),
-
-    // HyperLogLog distinct-user sketch per event type: the register
-    // table itself (integer-exact over the portable md5 uniform) is the
-    // oracle-checked artifact; the float estimate is Sketch.hllEstimate
-    // (spec-checked against exact ndv). max() is idempotent → no
-    // distinct pre-pass, one partial-agg shuffle, O(groups·64) rows out.
-    "q129_hll_sketch" -> ((s, dir) =>
-      Sketch.hllRegisters(Tables.events(s, dir), "user_id",
-          Seq("event_type"), b = 6)
-        .orderBy("event_type", "bucket")),
-
-    // SCD Type-2 dimension build: each user's event_type stream becomes
-    // validity-ranged version rows (consecutive unchanged states
-    // compressed away). Duplicate (user, ts) rows are pre-collapsed
-    // deterministically (min state) so the change log is unique-keyed.
-    "q130_scd2" -> ((s, dir) => {
-      // epoch MICROS, not ts_ns: DuckDB's parquet reader truncates the
-      // nanos timestamp to its micro-precision TIMESTAMP, so nanos are
-      // not cross-engine representable (same rule as q128's day math)
-      val ch = Tables.events(s, dir)
-        .groupBy(col("user_id"), expr("ts_ns div 1000").as("seq"))
-        .agg(min(col("event_type")).as("state"))
-      Merge.scdType2(ch, Seq("user_id"), "seq", Seq("state"))
-        .orderBy("user_id", "version")
-    }),
-
-    // HITS hubs/authorities over the bipartite order→part graph (same
-    // 2x / 2x+1 node encoding as q65 so order and part ids never
-    // collide). Two full rounds, unnormalized integer fixed point —
-    // bit-exact against the unrolled oracle.
-    "q131_hits" -> ((s, dir) =>
-      Graph.hits(
-        Tables.lineitem(s, dir).select(
-          (col("l_orderkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst")).distinct(),
-        iterations = 2)
-        .orderBy("id")),
-
-    // CUSUM change-point detection over the per-type daily event volume:
-    // dev = n_days·count − total (exact-integer mean deviation), running
-    // sum flags sustained level shifts. The heavy reduction is the
-    // map-side-combined daily groupBy; the window runs over tiny
-    // per-type day series.
-    "q132_cusum" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          expr("ts_ns div 86400000000000").as("day"))
-        .agg(count(lit(1)).as("c"))
-      Anomaly.cusum(daily, Seq("event_type"), "day", "c")
-        .orderBy("event_type", "day")
-    }),
-
-    // TPC-H Q5-shaped star join: revenue by nation where customer and
-    // supplier share the nation, one region, one order-date year. Only
-    // the constant-size dims (nation 25, region 5) are broadcast
-    // explicitly; customer/supplier scale with the data, so their join
-    // strategy is left to Catalyst stats + AQE (broadcast at bench SFs,
-    // shuffle at 100 TB). Both filters reach the scans as PushedFilters
-    // (asserted in QueriesSpec).
-    "q133_star_join" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val o = Tables.orders(s, dir)
-        .filter(expr("o_orderdate >= TIMESTAMP '1996-01-01'") &&
-          expr("o_orderdate < TIMESTAMP '1997-01-01'"))
-      li.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(Tables.supplier(s, dir),
-          col("l_suppkey") === col("s_suppkey") &&
-            col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(Tables.nation(s, dir)),
-          col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .groupBy(col("n_name").as("nation"))
-        .agg(Aggregations.exactSum(
-            col("l_extendedprice") * (lit(1.0) - col("l_discount")), 4)
-          .as("revenue"),
-          count(lit(1)).as("n_items"))
-        .orderBy(desc("revenue"), col("nation"))
-    }),
-
-    // Sorted-neighborhood near-dup: sort by (lang, n_chars, doc_id),
-    // compare each doc to its 8 successors, verify by exact SimHash
-    // hamming. The rank is the distributed prefix sum — no
-    // single-partition window anywhere (see Dedup scaladoc).
-    "q134_sorted_neighborhood" -> ((s, dir) =>
-      Dedup.sortedNeighborhoodPairs(Tables.documents(s, dir), "doc_id",
-          "text", sortCols = Seq("lang", "n_chars"), windowSize = 8,
-          maxHamming = 3)
-        .orderBy("id_a", "id_b")),
-
-    // Pareto frontier per (returnflag, linestatus): line items no other
-    // item beats on BOTH quantity and price — dominance analytics via
-    // one dedup + one window, never the O(n²) anti-join. Prices compare
-    // as exact integer cents.
-    "q135_pareto" -> ((s, dir) =>
-      Skyline.skyline2D(
-        Tables.lineitem(s, dir).select(
-          col("l_returnflag").as("rf"), col("l_linestatus").as("ls"),
-          expr("CAST(round(l_quantity) AS BIGINT)").as("qty"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c")),
-        Seq("rf", "ls"), "qty", "price_c")
-        .orderBy("rf", "ls", "qty"))
-,
-    // Multi-source BFS over the undirected order↔part graph: exact hop
-    // distance from the seed parts (partkey ≡ 0 mod 97) within 4 hops.
-    // Frontier-sized per-round state — the reached set never re-joins.
-    "q136_bfs" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val fwd = li.select((col("l_orderkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-      Graph.bfsDistances(edges, seeds, maxHops = 4).orderBy("id")
-    }),
-
-    // Mixture epoch balancing: per-source token budgets + exact integer
-    // repeat factors ("repeat scarce sources until every source matches
-    // the largest") — ONE corpus scan, metrics-sized everything after.
-    "q137_mix_epochs" -> ((s, dir) =>
-      Corpus.mixtureEpochs(Tables.documents(s, dir), "source", "text")
-        .orderBy("source")),
-
-    // Functional-dependency audit over TPC-H: one held FD, one key
-    // check, two violated FDs, unioned into a single data-quality
-    // report. Each audit is a distinct-pair agg keyed on the
-    // determinant — count(DISTINCT) is deliberately absent (the Expand
-    // trap), and nothing collects.
-    "q138_fd_audit" -> ((s, dir) => {
-      import graft.checks.Validations.fdAudit
-      fdAudit(Tables.nation(s, dir), "nation->region",
-          Seq("n_nationkey"), "n_regionkey")
-        .unionByName(fdAudit(Tables.lineitem(s, dir), "orderline->part",
-          Seq("l_orderkey", "l_linenumber"), "l_partkey"))
-        .unionByName(fdAudit(Tables.lineitem(s, dir), "part->supp",
-          Seq("l_partkey"), "l_suppkey"))
-        .unionByName(fdAudit(Tables.orders(s, dir), "cust->priority",
-          Seq("o_custkey"), "o_orderpriority"))
-        .orderBy("fd")
-    }),
-
-    // BPE train-then-encode: learn 5 merges, size every document in
-    // subword tokens. The corpus tokenizes once (cached doc-token
-    // pairs feed trainer AND encoder); the merge chain itself is
-    // oracle-replayed CTE-for-CTE in DuckDB.
-    "q139_bpe_encode" -> ((s, dir) =>
-      Bpe.encodeCounts(Tables.documents(s, dir), "doc_id", "text", steps = 5)
-        .orderBy("doc_id")),
-
-    // Int8 Gram matrix over absmax-quantized embeddings (the similarity
-    // / covariance precompute of an embedding pipeline, in the int8
-    // arithmetic a serving stack would use): quantization is a
-    // scan-stage array expression, and the d·(d+1)/2 = 2080 cells
-    // accumulate in ONE GramUpperTriangleAgg buffer (a 16.6 KB long
-    // array per partition, folded with a tight multiply-add loop) —
-    // no per-row struct explode, no 41.6M-row hash agg; the only thing
-    // that ever moves is P partial buffers. Sums are exact 64-bit
-    // (|q|≤127 ⇒ ~5.7e14 rows of headroom per cell).
-    "q140_int8_gram" -> ((s, dir) => {
-      val q = Tables.embeddings(s, dir)
-        .select(col("vec_id"), expr(
-          "aggregate(embedding, CAST(0.0 AS DOUBLE), " +
-            "(m, x) -> greatest(m, abs(CAST(x AS DOUBLE))))").as("maxabs"),
-          col("embedding"))
-        .filter(col("maxabs") > 0)
-        .select(expr(
-          "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0" +
-            " / maxabs + 0.5) AS BIGINT))").as("q"))
-      q.agg(graft.expressions.GramAggregate.gramUpperTriangle(col("q"))
-          .as("cells"))
-        .select(explode(col("cells")).as("cell"))
-        .select(col("cell.i").as("i"), col("cell.j").as("j"),
-          col("cell.g").as("g"))
-        .orderBy("i", "j")
-    }),
-
-    // KMV sketch algebra: |A|, |B|, |A∪B|, |A∩B| and Jaccard for the
-    // view-vs-click user sets estimated from the two bottom-256
-    // sketches ALONE — after the base scans everything is k-sized array
-    // math on one row, the compose-without-rescanning counterpart of
-    // q97's exact overlap matrix. All-integer; exact below k.
-    "q141_kmv_setops" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      Sketch.kmvSetOps(
-        ev.filter(col("event_type") === "view").select(col("user_id")),
-        ev.filter(col("event_type") === "click").select(col("user_id")),
-        "user_id", k = 256)
-    }),
-
-    // Exact weighted median (weight = integer quantity) of the cent-
-    // encoded price per return flag: occurrences collapse to one row
-    // per distinct price before a single window pass — the window sorts
-    // distinct values, never raw lineitems.
-    "q142_weighted_median" -> ((s, dir) =>
-      Aggregations.weightedMedian(
-        Tables.lineitem(s, dir).select(col("l_returnflag"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c"),
-          expr("CAST(round(l_quantity) AS BIGINT)").as("qty")),
-        Seq("l_returnflag"), "price_c", "qty")
-        .orderBy("l_returnflag")),
-
-    // REAL video frame sampling: animated-GIF payloads (closed-form
-    // per-frame pixels, one 100 ms GraphicControlExtension delay per
-    // frame) sampled at 150 ms by genuinely reading the GIF frame
-    // delays; each sampled frame is decoded and summed. The oracle
-    // recomputes sample count, sampled frame index and pixel sum from
-    // the id-only synthetic functions — an encode→sample→decode round
-    // trip through a true multi-frame container, hash-checked.
-    "q143_video_frames" -> ((s, dir) =>
-      multimodal.Multimodal.frameGraySums(
-        multimodal.Multimodal.fromSyntheticVideos(Tables.documents(s, dir)),
-        everyMs = 150L)
-        .select(col("media_id"),
-          col("sample_idx").cast("bigint").as("sample_idx"),
-          col("gray_sum"))
-        .orderBy("media_id", "sample_idx")),
-
-    // REAL audio decode: RIFF/WAVE PCM16 payloads (closed-form samples)
-    // pushed through the JDK's javax.sound.sampled reader and reduced to
-    // integer-exact features (sum|s|, max|s|) — the oracle recomputes
-    // them from the id-only sample function. Completes the
-    // image/audio/video triple on genuine JDK codecs.
-    "q144_audio_features" -> ((s, dir) =>
-      multimodal.Multimodal.audioFeatures(
-        multimodal.Multimodal.fromSyntheticAudio(Tables.documents(s, dir)))
-        .orderBy("media_id"))
-        ,
-
-    // q48's clustering FORCED through the big-graph co-bucketed CC
-    // regime (both thresholds 0): the bucketed-table loop that round-6's
-    // crossover grid made the >24M-edge production route runs here under
-    // the driver's own DuckDB oracle — hash-checked end-to-end, not just
-    // parity-tested against its sibling in GraphSpec. Same answer as
-    // q48 by construction (same integer hash-min fixpoint).
-    "q145_cc_cobucket" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text",
-        blockCols = Seq("lang", "source"), threshold = 0.08, shingleSize = 2)
-      Dedup.duplicateClusters(docs, "doc_id", pairs,
-        localEdgeThreshold = 0L, coBucketEdgeThreshold = 0L)
-        .orderBy("doc_id")
-    }),
-
-    // Exact p50/p90/p99 discrete quantiles of the cent-encoded order
-    // total per priority class — the distribution-cutoff primitive a
-    // quality pipeline thresholds on. Rank semantics defined by the
-    // operator's own integer rank formula (NOT an engine quantile
-    // builtin — those differ in interpolation/rounding across
-    // engines); bracket+exact two-pass (r12): a ≤513-bucket log
-    // histogram locates each rank's bucket, the exact scan windows
-    // over in-bracket values only — never the column's cardinality
-    // on one task.
-    "q146_quantiles" -> ((s, dir) =>
-      Aggregations.quantilesDisc(
-        Tables.orders(s, dir).select(col("o_orderpriority"),
-          expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("price_c"))
-          .withColumn("one", lit(1L)),
-        Seq("o_orderpriority"), "price_c", "one",
-        Seq(500000L, 900000L, 990000L))
-        .orderBy("o_orderpriority")),
-
-    // Exact grouped Pearson correlation (price vs quantity per return
-    // flag): five DECIMAL(38,0) moments in ONE partial+final agg, exact
-    // integer numerator/variances, one double division + two
-    // correctly-rounded sqrts — hash-matches DuckDB (never corr():
-    // engines disagree in ulps between Welford and naive accumulation).
-    "q149_grouped_corr" -> ((s, dir) =>
-      Aggregations.groupedPearson(
-        Tables.lineitem(s, dir).select(col("l_returnflag"),
-          expr("CAST(round(l_quantity) AS BIGINT)").as("qty"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c")),
-        Seq("l_returnflag"), "qty", "price_c")
-        .orderBy("l_returnflag")),
-
-    // Watermarked windowed rollup, BATCH-parity path: the same
-    // WindowedAgg.eventTimeRollup call that runs as a Structured
-    // Streaming append query (WindowedAggSpec drives the stream side)
-    // computes the identical hourly rollup on the batch events table —
-    // which puts the operator's window/agg semantics under the DuckDB
-    // gate. Buckets surface as epoch MILLIS of the hour start (never
-    // raw timestamps — the cross-engine determinism rule), sums ride
-    // DECIMAL(28,10) and cast to double only on output (q128 pattern).
-    "q148_windowed_rollup" -> ((s, dir) =>
-      graft.streaming.WindowedAgg.eventTimeRollup(
-        Tables.events(s, dir).select(col("ts"), col("event_type"), col("value")),
-        "ts", watermarkDelay = "0 seconds", windowDuration = "1 hour",
-        keyCols = Seq("event_type"), valueCol = "value")
-        .select(unix_millis(col("window_start")).as("bucket_ms"),
-          col("event_type"), col("n"),
-          col("total").cast("double").as("total"))
-        .orderBy("bucket_ms", "event_type")),
-
-    // Benchmark decontamination: per-doc 8-gram containment of every
-    // non-benchmark document in the src0/src1 "benchmark" gram set —
-    // map-side per-doc gram dedup, broadcast benchmark probe, one
-    // (doc_id) partial-agg shuffle. Same portable gram family as
-    // q97 → hash-exact oracle; flag threshold 20% in integer ppm.
-    "q147_contamination" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val isBench = col("source").isin("src0", "src1")
-      Corpus.benchmarkContamination(
-        docs.filter(!isBench), "doc_id", "text",
-        docs.filter(isBench), "text",
-        shingleSize = 8, thresholdPpm = 200000L)
-        .orderBy("doc_id")
-    }),
-
-    // Weighted shortest paths (bounded-round Bellman-Ford, delta
-    // frontier) over the order↔part graph with integer edge weights
-    // (min linenumber-derived weight per pair): exact minimum ≤4-edge
-    // path weight from the seed parts. Only improved nodes re-enter the
-    // relaxation; the best table rewrites O(reached)/round. The oracle
-    // replays all four relaxation rounds CTE-for-CTE (relaxing from the
-    // full table is min-equivalent to the frontier form).
-    "q150_sssp" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val e0 = li.groupBy((col("l_orderkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst"))
-        .agg(min(col("l_linenumber") % 5 + 1).cast("long").as("w"))
-      val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-      Graph.ssspDistances(edges, seeds, maxRounds = 4).orderBy("id")
-    }),
-
-    // Exact heavy hitters in two bounded-memory corpus scans: per-
-    // partition Misra-Gries summaries prune the exact-count pass to a
-    // provably complete broadcast-sized candidate set (tokens >= 2.5%
-    // of the corpus) — the sketch routes, the exact count answers, so
-    // the result hash-matches the plain DuckDB GROUP BY.
-    "q151_heavy_hitters" -> ((s, dir) =>
-      Corpus.heavyHitters(Tables.documents(s, dir), "text",
-        thresholdPpm = 25000L, capacity = 4096)
-        .orderBy(col("cnt").desc, col("token"))),
-
-    // Deterministic random walks (node2vec corpus prep) from the seed
-    // parts over the doubled order↔part graph: 3 hops, each step an
-    // md5-argmin neighbor choice — reproducible walk corpora with no
-    // RNG, replayed step-for-step by the oracle.
-    "q152_walks" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val fwd = li.select((col("l_orderkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-      Graph.deterministicWalks(edges, seeds, steps = 3)
-        .orderBy("walk", "step")
-    }),
-
-    // Perceptual image dedup: REAL PNG decode → grid-sampled 64-bit
-    // dHash per image in the scan stage (payloads never shuffle), then
-    // exact-perceptual-dup clusters (canonical id + size). The hash
-    // rides as two 32-bit halves — DuckDB BIGINT shifts overflow at bit
-    // 63 — and the oracle recomputes every bit from the closed-form
-    // synthetic pixel function (the q38 encode→decode discipline).
-    "q153_image_dhash" -> ((s, dir) => {
-      val hashes = multimodal.Multimodal.imageDHash(
-        multimodal.Multimodal.fromSyntheticImages(Tables.documents(s, dir)))
-      hashes.select(col("media_id"),
-          shiftrightunsigned(col("dhash"), 32).as("hash_hi"),
-          col("dhash").bitwiseAND(lit(0xFFFFFFFFL)).as("hash_lo"))
-        .groupBy("hash_hi", "hash_lo")
-        .agg(min("media_id").as("canon_id"), count(lit(1)).as("n_dup"))
-        .select("hash_hi", "hash_lo", "canon_id", "n_dup")
-        .orderBy("canon_id")
-    }),
-
-    // Audio fingerprinting: REAL WAV decode → 63-bit frame-energy-delta
-    // fingerprint per clip, scan-stage only (payloads never shuffle).
-    // Pure integer arithmetic — no FFT — so the oracle recomputes every
-    // frame energy and delta bit from the closed-form sample function.
-    "q154_audio_fp" -> ((s, dir) =>
-      multimodal.Multimodal.audioFingerprint(
-        multimodal.Multimodal.fromSyntheticAudio(Tables.documents(s, dir)))
-        .orderBy("media_id")),
-
-    // Video fingerprinting: frames sampled through the real GIF
-    // decode+composite path (q143's sampler), each hashed with the
-    // still-image dHash — a clip's signature is its frame-hash
-    // sequence. The oracle replays the sampler AND the hash bits from
-    // the closed-form frame pixel function (the f·17 term).
-    "q155_video_fp" -> ((s, dir) =>
-      multimodal.Multimodal.videoFrameHashes(
-        multimodal.Multimodal.fromSyntheticVideos(Tables.documents(s, dir)),
-        everyMs = 150L)
-        .select(col("media_id"),
-          col("sample_idx").cast("bigint").as("sample_idx"),
-          shiftrightunsigned(col("dhash"), 32).as("hash_hi"),
-          col("dhash").bitwiseAND(lit(0xFFFFFFFFL)).as("hash_lo"))
-        .orderBy("media_id", "sample_idx")),
-
-    // Image NEAR-dup retrieval: dHash signatures verified through the
-    // sorted-neighborhood core (rank window ±8 in unsigned hash order,
-    // exact hamming ≤ 4) — deterministic candidate set, so the oracle
-    // replays it with a row_number window over the same key. Sort key
-    // = the unsigned halves (a signed-long sig key would order bit-63
-    // hashes differently per engine).
-    "q156_image_neardup" -> ((s, dir) => {
-      val sigs = multimodal.Multimodal.imageDHash(
-        multimodal.Multimodal.fromSyntheticImages(Tables.documents(s, dir)))
-        .select(col("media_id"), col("dhash"),
-          shiftrightunsigned(col("dhash"), 32).as("hash_hi"),
-          col("dhash").bitwiseAND(lit(0xFFFFFFFFL)).as("hash_lo"))
-      Dedup.sortedNeighborhoodPairsFromSigs(sigs, "media_id", "dhash",
-        sortCols = Seq("hash_hi", "hash_lo"), windowSize = 8, maxHamming = 4)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Audio near-dup retrieval: the same signature-generic sorted-
-    // neighborhood core over the 63-bit audio fingerprints — afp is
-    // non-negative by construction, so the fingerprint itself is a
-    // sign-safe sort key (no halves split needed, unlike q156).
-    "q157_audio_neardup" -> ((s, dir) => {
-      val sigs = multimodal.Multimodal.audioFingerprint(
-        multimodal.Multimodal.fromSyntheticAudio(Tables.documents(s, dir)))
-      Dedup.sortedNeighborhoodPairsFromSigs(sigs, "media_id", "afp",
-        sortCols = Seq("afp"), windowSize = 8, maxHamming = 8)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Image near-dup pairs with GUARANTEED recall: exact perceptual
-    // dedup first (distinct dHash classes, canonical id), then
-    // pigeonhole banding — 4×16-bit bands, radius 3, so every
-    // within-radius class pair shares a band bucket (recall 1.0, the
-    // property q156's sorted neighborhood trades away). The cap-free
-    // band self-join makes the candidate set SQL-replayable, which is
-    // what finally puts hamming banding under the oracle gate.
-    "q158_image_hamming_pairs" -> ((s, dir) => {
-      val classes = multimodal.Multimodal.imageDHash(
-        multimodal.Multimodal.fromSyntheticImages(Tables.documents(s, dir)))
-        .groupBy("dhash").agg(min("media_id").as("canon_id"))
-      Dedup.hammingBandedPairsFromSigs(classes, "canon_id", "dhash",
-        maxHamming = 3, bands = 4)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Semantic clustering: MULTI-ROUND Lloyd k-means under the oracle
-    // gate — the whole loop runs on an integer grid (fixed-point
-    // quantize, exact integer L2, grid-rounded centroid means), so
-    // round 2's assignment is bit-reproducible in DuckDB. q43's IVF
-    // had to ship its oracle with lloydIterations = 0; this is the
-    // refined-centroid path done honestly. Corpus never shuffles —
-    // assignment maps against k·dim centroid literals; each update is
-    // one k·dim-row partial agg.
-    "q159_kmeans" -> ((s, dir) =>
-      KMeans.integerLloydAssign(Tables.embeddings(s, dir),
-        "vec_id", "embedding", k = 8, rounds = 2, scale = 1000)
-        .orderBy("vec_id")),
-
-    // Bounded SCC coloring (FW-BW / Orzan): fwd_min = min id reached
-    // within 3 hops, bwd_min = min id reaching the node within 3 hops,
-    // scc_id set exactly when they agree (a sound SCC certificate —
-    // the bound only limits how far it looks). Directed graph from the
-    // order→part incidence folded into one 16384-id space; two
-    // delta-frontier min-label passes share the regime discipline of
-    // bfs/sssp.
-    "q160_scc" -> ((s, dir) => {
-      val e = Tables.lineitem(s, dir)
-        .select((col("l_orderkey") % 16384).as("src"),
-          (col("l_partkey") % 16384).as("dst"))
-        .distinct()
-      Graph.sccColoring(e, maxRounds = 3).orderBy("id")
-    }),
-
-    // Perplexity-style quality filter: add-one-smoothed bigram LM
-    // trained on the corpus itself, every doc scored by its mean
-    // transition probability in integer ppm — exact cross-engine
-    // arithmetic, no float/log anywhere.
-    "q161_bigram_lm" -> ((s, dir) =>
-      Corpus.bigramLmScore(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")),
-
-    // k-truss kernel: per-edge triangle support over q111's
-    // co-occurrence graph — same oriented enumeration, fanned out to
-    // the three canonical edges of each triangle instead of the three
-    // vertices.
-    "q162_edge_support" -> ((s, dir) =>
-      Graph.edgeSupport(
-        Graph.coOccurrenceEdges(
-          Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-          "o", "p", maxGroupSize = 8))
-        .orderBy("a", "b")),
-
-    // Bounded 4-truss peel (2 rounds): keep edges whose triangle
-    // support stays ≥ 2 as weaker edges peel away — the community
-    // backbone extraction on a third of the co-occurrence graph
-    // (orderkey ≡ 0 mod 3).
-    "q163_truss_peel" -> ((s, dir) =>
-      Graph.trussPeel(
-        Graph.coOccurrenceEdges(
-          Tables.lineitem(s, dir).filter(col("l_orderkey") % 3 === 0)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-          "o", "p", maxGroupSize = 8),
-        k = 4, maxRounds = 2)
-        .orderBy("a", "b")),
-
-    // Winnowed fingerprints (MOSS): per-doc sliding-window minima over
-    // md5-31 gram hashes, rightmost-on-ties — the sub-linear local
-    // fingerprinting sketch behind plagiarism / near-clone detection.
-    // One doc-keyed window shuffle; everything else is scan-stage.
-    "q164_winnow" -> ((s, dir) =>
-      Corpus.winnowedFingerprints(Tables.documents(s, dir),
-        "doc_id", "text", n = 3, w = 4)
-        .orderBy("doc_id", "pos")),
-
-    // Near-clone candidates from the winnow sketch: pairs sharing ≥ 2
-    // fingerprints after dropping stop-fingerprints (df > 8). The fp
-    // blocking bounds every bucket at maxDf docs BEFORE the self-join —
-    // recall-exact, no silent cap.
-    "q165_winnow_pairs" -> ((s, dir) =>
-      Corpus.winnowedNearClonePairs(Tables.documents(s, dir),
-        "doc_id", "text", n = 3, w = 4, minShared = 2, maxDf = 8)
-        .orderBy("id_a", "id_b")),
-
-    // Bit-packed multi-source BFS: per-landmark hop distances from the
-    // 16 smallest seed parts in ONE shared sweep (64-bit mask state) —
-    // contrast q136, which keeps only min-over-seeds. Landmark distance
-    // features for graph ML.
-    "q166_msbfs" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val fwd = li.select((col("l_orderkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-        .orderBy("id").limit(16)
-      Graph.multiSourceBfs(edges, seeds, maxHops = 2)
-        .orderBy("id", "src")
-    }),
-
-    // Time-respecting earliest arrival over the user↔entity interaction
-    // graph (edge time = event time, both directions): exposure within
-    // 3 strictly-time-increasing hops from the seed users. Plain BFS
-    // walks backwards in time; this can't.
-    "q167_temporal_reach" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(get_json_object(col("props"), "$.k").isNotNull)
-        .select((col("user_id") * 2).as("u"),
-          (get_json_object(col("props"), "$.k").cast("long") * 2 + 1)
-            .as("kk"),
-          expr("ts_ns div 1000").as("t"))
-      val edges = ev.select(col("u").as("src"), col("kk").as("dst"), col("t"))
-        .unionByName(
-          ev.select(col("kk").as("src"), col("u").as("dst"), col("t")))
-      val seeds = Tables.events(s, dir).filter(col("user_id") % 17 === 0)
-        .select((col("user_id") * 2).as("id")).distinct()
-      Graph.temporalEarliestArrival(edges, seeds, maxRounds = 3)
-        .orderBy("id")
-    }),
-
-    // BM25 lexical retrieval in exact integer ppm (rational plus-one
-    // odds-ratio IDF — see Corpus.bm25Scores): one corpus scan, tf via
-    // scan-stage filter() expressions, 1-row broadcast stats join; the
-    // only exchange is the single-row stats agg.
-    "q168_bm25" -> ((s, dir) =>
-      Corpus.bm25Scores(Tables.documents(s, dir), "doc_id", "text",
-        Seq("spark", "merge", "window"))
-        .orderBy("doc_id")),
-
-    // Hybrid retrieval: reciprocal-rank fusion of the BM25 lexical
-    // ranking (q168) and the bigram-LM fluency ranking (q161), top-100
-    // each. Both candidate lists reduce via TakeOrdered top-k — the
-    // fusion join touches <= 200 rows regardless of corpus size.
-    "q169_rrf_fusion" -> ((s, dir) => {
-      val lex = Corpus.bm25Scores(Tables.documents(s, dir), "doc_id",
-          "text", Seq("spark", "merge", "window"))
-        .select(col("doc_id").as("id"), col("score_ppm").as("score"))
-      val lm = Corpus.bigramLmScore(Tables.documents(s, dir), "doc_id",
-          "text")
-        .select(col("doc_id").as("id"), col("lm_ppm").as("score"))
-      Corpus.rrfFuse(Seq(lex, lm), kRrf = 60L, topK = 100)
-        .withColumnRenamed("id", "doc_id")
-        .orderBy("doc_id")
-    }),
-
-    // Local clustering coefficient over q111's co-occurrence graph:
-    // exact integer-ppm neighborhood-clique density per node (the
-    // oriented triangle core plus one node-sized degree agg).
-    "q170_clustering_coeff" -> ((s, dir) =>
-      Graph.clusteringCoefficient(
-        Graph.coOccurrenceEdges(
-          Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-          "o", "p", maxGroupSize = 8))
-        .orderBy("id")),
-
-    // Dominant principal direction of the embedding Gram matrix:
-    // two fixed-point power-iteration rounds, every half-matvec
-    // re-normalized to max-abs = 1e6 with truncating integer division
-    // (identical in Spark div and DuckDB //) — bit-exact spectral
-    // analytics, d-row state, corpus never leaves the two matvec aggs.
-    "q171_power_iteration" -> ((s, dir) =>
-      Spectral.dominantDirection(Tables.embeddings(s, dir),
-        "vec_id", "embedding", rounds = 2)
-        .select(col("pos").cast("long").as("pos"), col("v"))
-        .orderBy("pos")),
-
-    // Embedding drift monitor: per-label mean projection onto the
-    // 2-round dominant direction — when a class's mass moves along the
-    // corpus's leading axis, this number moves first.
-    "q172_label_drift" -> ((s, dir) =>
-      Spectral.labelProjections(Tables.embeddings(s, dir),
-        "vec_id", "embedding", "label", rounds = 2)
-        .orderBy("label")),
-
-    // Vocabulary-free featurization: signed feature hashing into 64
-    // bins (portable md5 bin + sign), the linear-probe input that needs
-    // no vocab table and no OOV handling.
-    "q173_feature_hash" -> ((s, dir) =>
-      Corpus.hashedBagOfWords(Tables.documents(s, dir), "doc_id", "text",
-        bins = 64)
-        .orderBy("doc_id", "bin")),
-
-    // Seasonal anomaly surface: per-(dow, hour) integer cent baseline
-    // (pure epoch arithmetic — engine date functions disagree on week
-    // start, `(days + 4) % 7` doesn't), top-100 residuals via
-    // TakeOrdered. Baseline is 168 rows, broadcast back over the scan.
-    "q174_seasonal" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_id"),
-          expr("((ts_ns div 1000) div 86400000000 + 4) % 7").as("dow"),
-          expr("((ts_ns div 1000) div 3600000000) % 24").as("hr"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-      val base = ev.groupBy("dow", "hr")
-        .agg(expr("sum(c) div count(1)").as("base_c"))
-      ev.join(broadcast(base), Seq("dow", "hr"))
-        .select(col("event_id"), col("dow"), col("hr"), col("c"),
-          (col("c") - col("base_c")).as("resid_c"))
-        .orderBy(abs(col("resid_c")).desc, col("event_id")).limit(100)
-        .orderBy("event_id")
-    }),
-
-    // Behavioral Markov chain: per-user event-type transition counts
-    // and integer-ppm probabilities. The lag window sorts on MICROS
-    // (ts_ns div 1000) — the oracle's timestamps are micro-truncated,
-    // so nano-resolution sorting would diverge on sub-µs ties.
-    "q175_markov" -> ((s, dir) => {
-      val w = Window.partitionBy("user_id")
-        .orderBy(expr("ts_ns div 1000"), col("event_id"))
-      val tr = Tables.events(s, dir)
-        .select(col("user_id"), col("event_id"), col("ts_ns"),
-          col("event_type"))
-        .withColumn("next_type", lead(col("event_type"), 1).over(w))
-        .filter(col("next_type").isNotNull)
-        .groupBy(col("event_type").as("from_type"),
-          col("next_type").as("to_type"))
-        .agg(count(lit(1)).as("n"))
-      val tot = tr.groupBy("from_type").agg(sum("n").as("tot"))
-      tr.join(broadcast(tot), Seq("from_type"))
-        .select(col("from_type"), col("to_type"), col("n"),
-          expr("(n * 1000000) div tot").as("p_ppm"))
-        .orderBy("from_type", "to_type")
-    }),
-
-    // Training-data governance: k-anonymity / l-diversity audit over
-    // quasi-identifier classes (nation, segment, balance-thousand) with
-    // exact balance cents as the sensitive attribute. One grouped agg;
-    // the single count(DISTINCT) plans as a plain two-phase agg (no
-    // Expand — that trap needs multiple distincts).
-    "q176_k_anonymity" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).select(
-        col("c_nationkey").cast("long").as("nation"),
-        col("c_mktsegment").as("segment"),
-        expr("CAST(round(c_acctbal) AS BIGINT) div 1000").as("bal_k"),
-        expr("CAST(round(c_acctbal * 100) AS BIGINT)").as("cents"))
-      c.groupBy("nation", "segment", "bal_k")
-        .agg(count(lit(1)).as("n"),
-          countDistinct(col("cents")).as("l_div"))
-        .select(col("nation"), col("segment"), col("bal_k"), col("n"),
-          col("l_div"),
-          (col("n") < 5).cast("int").as("k_risk"),
-          (col("l_div") < 2).cast("int").as("l_risk"))
-        .orderBy("nation", "segment", "bal_k")
-    }),
-
-    // Volume-weighted PageRank over the order↔part graph: mass splits
-    // by total line quantity instead of edge count (multi-edges folded
-    // first — per-row flooring is semantics, see weightedPageRank).
-    "q177_weighted_pagerank" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).select(
-        (col("l_orderkey") * 2).as("o"), (col("l_partkey") * 2 + 1).as("p"),
-        expr("CAST(round(l_quantity) AS BIGINT)").as("q"))
-      val e = li.select(col("o").as("src"), col("p").as("dst"), col("q"))
-        .unionByName(
-          li.select(col("p").as("src"), col("o").as("dst"), col("q")))
-        .groupBy("src", "dst").agg(sum("q").as("w"))
-      // the union construction makes the edge set symmetric by
-      // construction — declares it so the loop skips the exact node
-      // table and the per-round node left-join (results identical:
-      // every node has an in-edge)
-      Graph.weightedPageRank(e, iterations = 2, symmetric = true)
-        .orderBy("id")
-    }),
-
-    // Bipartite cohesion: per-part butterfly (4-cycle) counts over the
-    // order↔part incidence — bipartite graphs have no triangles, the
-    // butterfly is their clustering primitive. Hub-capped like q111.
-    "q178_butterflies" -> ((s, dir) =>
-      Graph.butterflyCounts(
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-        "o", "p", maxGroupSize = 8)
-        .orderBy("id")),
-
-    // Categorical data profiling with exact integer Gini impurity:
-    // unpivot -> (key, value) counts -> per-key rollup (the Profile
-    // lesson: never multi-count(DISTINCT) in one Aggregate). Shares are
-    // ppm floors; gini_ppm = 1e6 - sum(share^2 div 1e6) — an exact
-    // integer contract, overflow-safe at any n.
-    "q179_gini_profile" -> ((s, dir) => {
-      val u = Tables.orders(s, dir).select(expr(
-        "stack(3, 'status', o_orderstatus, 'priority', o_orderpriority," +
-          " 'cust', CAST(o_custkey AS STRING)) AS (k, value)"))
-      val counts = u.groupBy("k", "value").agg(count(lit(1)).as("cnt"))
-      val tot = counts.groupBy("k")
-        .agg(sum("cnt").as("n"), count(lit(1)).as("n_distinct"),
-          max("cnt").as("top"))
-      counts.join(broadcast(tot), Seq("k"))
-        .withColumn("share", expr("(cnt * 1000000) div n"))
-        .groupBy(col("k"), col("n"), col("n_distinct"),
-          expr("(top * 1000000) div n").as("top_share_ppm"))
-        .agg((lit(1000000L) - sum(expr("(share * share) div 1000000")))
-          .as("gini_ppm"))
-        .select("k", "n", "n_distinct", "top_share_ppm", "gini_ppm")
-        .orderBy("k")
-    }),
-
-    // Corpus originality: fraction of a doc's distinct 3-gram hashes
-    // that appear in NO other document (df = 1) — the inverse of q147's
-    // contamination. Gram df is one gram-keyed agg; the doc score is a
-    // doc-keyed agg over the df join (the TF-IDF shuffle shape).
-    "q180_originality" -> ((s, dir) => {
-      val dg = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextFunctions.tokens(lower(trim(col("text")))).as("toks"))
-        .filter(size(col("toks")) >= 3)
-        .select(col("doc_id"), explode(expr(
-          "array_distinct(transform(sequence(0, size(toks) - 3)," +
-            " i -> CAST(conv(substring(md5(concat_ws(' '," +
-            " slice(toks, i + 1, 3))), 1, 8), 16, 10) AS BIGINT)" +
-            " % 2147483647))")).as("g"))
-      val df = dg.groupBy("g").agg(count(lit(1)).as("df"))
-      dg.join(df, Seq("g"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_grams"),
-          sum(when(col("df") === 1, 1L).otherwise(0L)).as("n_unique"))
-        .select(col("doc_id"), col("n_grams"), col("n_unique"),
-          expr("(n_unique * 1000000) div n_grams").as("originality_ppm"))
-        .orderBy("doc_id")
-    }),
-
-    // Recency-decayed activity scores with EXACT halving decay: each
-    // event contributes cents >> age_days (arithmetic shift = floor
-    // halving per day — bit-identical cross-engine, no float decay).
-    "q181_decay_score" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"),
-        expr("(ts_ns div 1000) div 86400000000").as("day"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-      val mx = ev.agg(max("day").as("maxd"))
-      ev.join(broadcast(mx))
-        .select(col("user_id"),
-          expr("shiftright(c, CAST(least(maxd - day, 62) AS INT))").as("d"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n"), sum("d").as("decayed_c"))
-        .orderBy("user_id")
-    }),
-
-    // Degree assortativity of the co-occurrence graph — do high-degree
-    // parts co-occur with high-degree parts? Pearson over (deg_src,
-    // deg_dst) of every directed edge, through the exact DECIMAL(38,0)
-    // moment machinery of q149 (hash-exact where corr() cannot be).
-    "q182_assortativity" -> ((s, dir) => {
-      val e = Graph.coOccurrenceEdges(
-          Tables.lineitem(s, dir)
-            .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-          "o", "p", maxGroupSize = 8)
-        .select(least(col("src"), col("dst")).as("a"),
-          greatest(col("src"), col("dst")).as("b"))
-        .filter(col("a") =!= col("b")).distinct()
-        .localCheckpoint(true)
-      // deg feeds BOTH endpoint joins; left lazy it is planned as two
-      // independent Generate+agg subtrees (no exchange reuse across the
-      // differently-aliased broadcast builds) — a whole duplicate pass
-      // over the edge set (round-16; the shared-branch rule, guide §5).
-      // Node-sized, so the checkpoint is cheap and both broadcasts
-      // build from the materialized table.
-      val deg = e.select(explode(array(col("a"), col("b"))).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("d"))
-        .localCheckpoint(true)
-      val dir2 = e.unionByName(e.select(col("b").as("a"), col("a").as("b")))
-      val xy = dir2
-        .join(deg.select(col("id").as("a"), col("d").as("dx")), Seq("a"))
-        .join(deg.select(col("id").as("b"), col("d").as("dy")), Seq("b"))
-        .select(lit("all").as("g"), col("dx"), col("dy"))
-      Aggregations.groupedPearson(xy, Seq("g"), "dx", "dy").orderBy("g")
-    }),
-
-    // Near-clone CLUSTERS: the q165 winnow candidate pairs closed into
-    // connected components (hash-min CC over the measured regime
-    // ladder) — the dedup unit a curation pipeline actually deletes by.
-    "q183_clone_clusters" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Corpus.winnowedNearClonePairs(docs, "doc_id", "text",
-        n = 3, w = 4, minShared = 2, maxDf = 8)
-      Dedup.duplicateClusters(docs, "doc_id", pairs).orderBy("doc_id")
-    }),
-
-    // Co-visitation item similarity: binary-incidence cosine² in exact
-    // ppm — cos²(a,b) = shared² / (deg_a · deg_b), top-200 via
-    // TakeOrdered. The squared cosine avoids sqrt entirely, keeping the
-    // ranking integer-exact.
-    "q184_item_sim" -> ((s, dir) => {
-      // ONE order-keyed shuffle (the coOccurrenceEdges discipline,
-      // round-16): CollectLongsDistinctCapped dedups AND hub-guards per
-      // order inside the groupBy — the old construction paid a (o, p)
-      // distinct exchange, an order-keyed window pass and an order-keyed
-      // SELF-JOIN for the pair explosion. Pairs now explode map-side
-      // over the checkpointed capped groups; the degree table is a
-      // second narrow scan of the same groups. Identical qualifying
-      // orders (a >8-distinct group collects cap+1 items and is
-      // filtered, exactly the old ns <= 8 window test), identical
-      // pair counts and degrees — oracle re-proven at all three SFs.
-      val grouped = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(graft.expressions.CollectCapped.collectLongsDistinctCapped(
-          col("l_partkey").cast("long"), 8).as("items"))
-        .filter(size(col("items")) <= 8)
-        .localCheckpoint(true)
-      val deg = grouped.select(explode(col("items")).as("id"))
-        .groupBy("id").agg(count(lit(1)).as("d"))
-      val pw = grouped.select(explode(expr(
-          "filter(flatten(transform(items, x -> transform(items, " +
-            "y -> named_struct('a', x, 'b', y)))), s -> s.a < s.b)"))
-          .as("e"))
-        .select(col("e.a").as("a"), col("e.b").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("w"))
-        .filter(col("w") >= 2)
-      pw.join(deg.select(col("id").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("id").as("b"), col("d").as("db")), Seq("b"))
-        .select(col("a"), col("b"), col("w"),
-          expr("(w * w * 1000000) div (da * db)").as("cos2_ppm"))
-        .orderBy(col("cos2_ppm").desc, col("a"), col("b")).limit(200)
-        .orderBy("a", "b")
-    }),
-
-    // Referential-integrity audit: orphan foreign keys per relationship
-    // (the complement of q138's FD audit) — three anti-join counts
-    // unioned into one report.
-    "q185_ri_audit" -> ((s, dir) => {
-      def audit(rel: String, child: DataFrame, fk: String,
-          parent: DataFrame, pk: String) = {
-        val orphans = child.select(col(fk).as("k"))
-          .join(parent.select(col(pk).as("k")), Seq("k"), "left_anti")
-        child.agg(count(lit(1)).as("n_child"))
-          .crossJoin(orphans.agg(count(lit(1)).as("n_orphans")))
-          .select(lit(rel).as("relation"), col("n_child"), col("n_orphans"))
-      }
-      val li = Tables.lineitem(s, dir)
-      audit("lineitem->orders", li, "l_orderkey",
-          Tables.orders(s, dir), "o_orderkey")
-        .unionByName(audit("lineitem->part", li, "l_partkey",
-          Tables.part(s, dir), "p_partkey"))
-        .unionByName(audit("orders->customer", Tables.orders(s, dir),
-          "o_custkey", Tables.customer(s, dir), "c_custkey"))
-        .orderBy("relation")
-    }),
-
-    // Iteration-convergence monitor: L1 and max deltas between PR
-    // iterations 2 and 3 in exact scaled integers — the fixed-point
-    // stopping-criterion telemetry an operator dashboard needs.
-    "q186_pr_convergence" -> ((s, dir) => {
-      val fwd = Tables.lineitem(s, dir)
-        .select((col("l_orderkey") * 2).as("src"),
-          (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      // ONE fixed-point loop with the round-2 iterate captured (each
-      // round already localCheckpoints, so the capture is a free
-      // reference) — running two independent loops would recompute
-      // rounds 1-2, the edge cache, the degree window and the stats job
-      // (the round-9 shared-branch lesson across loop invocations).
-      val its = Graph.pageRankIterates(edges, iterations = 3,
-        captureAt = Set(2), symmetric = true)
-      val (r2, r3) = (its(2), its(3))
-      r2.withColumnRenamed("rank", "rank2")
-        .join(r3.withColumnRenamed("rank", "rank3"), Seq("id"))
-        .agg(count(lit(1)).as("n_nodes"),
-          sum(abs(col("rank3") - col("rank2"))).as("l1_delta"),
-          max(abs(col("rank3") - col("rank2"))).as("max_delta"))
-    }),
-
-    // Cluster-label purity: q159's integer Lloyd assignment judged
-    // against the embedding labels — per-cluster majority share in ppm
-    // (deterministic count-desc/label-asc majority tie-break).
-    "q187_cluster_purity" -> ((s, dir) => {
-      val a = KMeans.integerLloydAssign(Tables.embeddings(s, dir),
-        "vec_id", "embedding", k = 8, rounds = 2, scale = 1000)
-      val lab = Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"))
-      val cl = a.join(lab, Seq("vec_id"))
-        .groupBy("cluster", "label").agg(count(lit(1)).as("cnt"))
-      val w = Window.partitionBy("cluster")
-        .orderBy(col("cnt").desc, col("label"))
-      cl.withColumn("rk", row_number().over(w))
-        .withColumn("n", sum("cnt").over(Window.partitionBy("cluster")))
-        .filter(col("rk") === 1)
-        .select(col("cluster"), col("n"),
-          col("label").as("top_label"), col("cnt").as("top_n"),
-          expr("(cnt * 1000000) div n").as("purity_ppm"))
-        .orderBy("cluster")
-    }),
-
-    // Dataset card: the one-row corpus summary a data release ships
-    // with. Each count(DISTINCT) lives in its OWN single-row aggregate
-    // crossJoined together — never several distincts in one Aggregate
-    // (the q105 Expand lesson: Catalyst would replicate every input row
-    // once per distinct).
-    "q188_dataset_card" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("lang"), col("source"),
-        TextFunctions.tokenCount(col("text")).cast("long").as("tok"),
-        md5(col("text")).as("h"))
-      d.agg(count(lit(1)).as("n_docs"), sum("tok").as("total_tokens"))
-        .crossJoin(d.agg(countDistinct("lang").as("n_langs")))
-        .crossJoin(d.agg(countDistinct("source").as("n_sources")))
-        .crossJoin(d.agg((count(lit(1)) - countDistinct("h"))
-          .as("redundant_docs")))
-    }),
-
-    // Lexical diversity: per-doc Gini impurity of the token
-    // distribution in exact ppm (1e6 = every token distinct, 0 = one
-    // token repeated) — the q88 repetition score's distribution-shaped
-    // sibling. Shares are ppm floors, so the contract is integer-exact.
-    "q189_token_gini" -> ((s, dir) => {
-      val tf = Tables.documents(s, dir)
-        .select(col("doc_id"),
-          explode(TextFunctions.tokens(lower(trim(col("text"))))).as("t"))
-        .filter(col("t") =!= "")
-        .groupBy("doc_id", "t").agg(count(lit(1)).as("c"))
-      tf.withColumn("n", sum("c").over(Window.partitionBy("doc_id")))
-        .withColumn("share", expr("(c * 1000000) div n"))
-        .groupBy("doc_id")
-        .agg(max("n").as("n_tokens"), count(lit(1)).as("n_types"),
-          (lit(1000000L) - sum(expr("(share * share) div 1000000")))
-            .as("gini_ppm"))
-        .orderBy("doc_id")
-    }),
-
-    // Join-skew diagnosis: the 50 hottest join-key values with ppm
-    // shares — the report that decides salting/AQE-skew settings.
-    "q190_skew_report" -> ((s, dir) => {
-      val cnt = Tables.lineitem(s, dir)
-        .groupBy(col("l_partkey").as("k")).agg(count(lit(1)).as("cnt"))
-      cnt.join(broadcast(cnt.agg(sum("cnt").as("n"))))
-        .select(col("k"), col("cnt"),
-          expr("(cnt * 1000000) div n").as("share_ppm"))
-        .orderBy(col("cnt").desc, col("k")).limit(50)
-        .orderBy("k")
-    }),
-
-    // Session-duration quantiles: gap sessions (1 h) -> per-session
-    // duration in micros -> exact p50/p90 through the one-window-pass
-    // discrete quantile machinery (q146).
-    "q191_session_quantiles" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts_ns"),
-          expr("ts_ns div 1000").as("tus"))
-      val sess = Sessions.sessionize(ev, "user_id", "ts_ns",
-        gapNanos = 3600L * 1000000000L)
-      val dur = sess.groupBy("user_id", "session_id")
-        .agg((max("tus") - min("tus")).as("dur_us"))
-        .select(lit("all").as("g"), col("dur_us"), lit(1L).as("w"))
-      Aggregations.quantilesDisc(dur, Seq("g"), "dur_us", "w",
-        Seq(500000L, 900000L)).orderBy("g")
-    }),
-
-    // Activity heatmap: the full (dow, hour) grid of event counts and
-    // exact cent sums — q174's baseline surface as a first-class
-    // report. One grouped agg, 168 output rows at any scale.
-    "q192_activity_heatmap" -> ((s, dir) =>
-      Tables.events(s, dir).select(
-          expr("((ts_ns div 1000) div 86400000000 + 4) % 7").as("dow"),
-          expr("((ts_ns div 1000) div 3600000000) % 24").as("hr"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-        .groupBy("dow", "hr")
-        .agg(count(lit(1)).as("n"), sum("c").as("total_c"))
-        .orderBy("dow", "hr")),
-
-    // First-seen bigram novelty curve per 50-doc ingest bucket — the
-    // marginal-value telemetry that gates further ingestion from a
-    // source (Corpus.ngramNovelty: map-side gram dedup, partial-agg
-    // first-seen — no gram-keyed window, so df-skewed stopword grams
-    // collapse map-side — then two bucket-sized aggs joined).
-    "q193_ngram_novelty" -> ((s, dir) =>
-      Corpus.ngramNovelty(Tables.documents(s, dir), "doc_id", "text",
-        shingleSize = 2, bucketSize = 50L)),
-
-    // Order-independent content checksums for three tables in one sync
-    // report — count parity upgraded to content parity
-    // (Validations.tableChecksum: scan-stage md5 prefix, one single-row
-    // agg per table, zero wide exchanges).
-    "q194_table_checksum" -> ((s, dir) =>
-      checks.Validations.tableChecksum(Tables.orders(s, dir), "orders",
-          Seq("o_orderkey", "o_custkey", "o_orderstatus"))
-        .unionByName(checks.Validations.tableChecksum(
-          Tables.lineitem(s, dir), "lineitem",
-          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")))
-        .unionByName(checks.Validations.tableChecksum(
-          Tables.customer(s, dir), "customer",
-          Seq("c_custkey", "c_nationkey")))
-        .orderBy("tbl")),
-
-    // Exact chi-square independence of (lang, source) — the
-    // composition-drift test a dataset release runs; full grid
-    // including zero cells, integer-ppm statistic, one corpus-sized
-    // exchange (Aggregations.chiSquareIndependence).
-    "q195_chi2_mix" -> ((s, dir) =>
-      Aggregations.chiSquareIndependence(Tables.documents(s, dir),
-        "lang", "source")),
-
-    // Watermark-bounded stream dedup, batch-parity path: replayed
-    // event_ids (exact copies, the at-least-once redelivery shape)
-    // collapse before a per-type rollup — streaming side is
-    // spec-driven (StreamDedupSpec), this gates the batch semantics
-    // through DuckDB. The plain-SELECT oracle is valid ONLY while
-    // event_id is unique in the source table (the injected duplicates
-    // are exact copies), so that precondition is asserted loudly here:
-    // a generator change introducing natural event_id duplicates fails
-    // the verify run instead of silently invalidating the oracle.
-    "q196_stream_dedup" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select("event_id", "ts", "event_type", "value")
-      // the event_id-uniqueness precondition runs in `preconditions`
-      // (Verify-time), not here: an eager count() in the builder lambda
-      // executes inside Bench's timed region on every rep (ADVICE r11)
-      val withDupes = ev.unionByName(ev.filter(col("event_id") % 7 === 0))
-      streaming.StreamDedup.dedupWithinWatermark(withDupes,
-          Seq("event_id"), "ts", "10 minutes")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(expr("CAST(round(value * 100) AS BIGINT)")).as("total_c"))
-        .orderBy("event_type")
-    }),
-
-    // Top-2 drift plane: dominant direction + exactly-deflated second
-    // direction (Spectral.deflatedDirections — integer deflation, the
-    // residual pass in DECIMAL(38,0) ≙ DuckDB HUGEINT, oracle replays
-    // both loops round-for-round).
-    "q197_drift_plane" -> ((s, dir) =>
-      Spectral.deflatedDirections(Tables.embeddings(s, dir),
-        "vec_id", "embedding", rounds = 2)),
-
-    // Stream-stream band join, batch-parity path: views attributed to
-    // same-user purchases within 30 minutes (streaming/StreamJoin —
-    // watermark + time-band keeps join state finite; the stream side
-    // is StreamJoinSpec's job, this gates the join semantics).
-    "q198_band_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("v_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("p_c"))
-      streaming.StreamJoin.bandedEquiJoin(views, purchases,
-          Seq("user_id"), "v_ts", "p_ts",
-          "0 seconds", "0 seconds", "30 minutes")
-        .groupBy((col("user_id") % 10).as("user_mod"))
-        .agg(count(lit(1)).as("n_pairs"), sum(col("p_c")).as("total_c"))
-        .orderBy("user_mod")
-    }),
-
-    // Outlier-robust rollup: per-flag winsorized price-cent sums at
-    // the exact p05/p95 discrete quantiles
-    // (Aggregations.winsorizedSums — two scans, broadcast cutoffs).
-    "q199_winsorized" -> ((s, dir) =>
-      Aggregations.winsorizedSums(
-        Tables.lineitem(s, dir).select(col("l_returnflag"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c")),
-        Seq("l_returnflag"), "price_c", 50000L, 950000L)
-        .orderBy("l_returnflag")),
-
-    // Landmark harmonic centrality over the bit-packed msbfs core
-    // (q166's 16 seeds, 2 hops): Σ 1e6 div dist per node, top 100 by
-    // score (Graph.harmonicCentrality).
-    "q200_harmonic" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val fwd = li.select((col("l_orderkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-        .orderBy("id").limit(16)
-      Graph.harmonicCentrality(edges, seeds, maxHops = 2)
-        .orderBy(col("harmonic_ppm").desc, col("id")).limit(100)
-    }),
-
-    // Containment-family canonicalization: q115's asymmetric-containment
-    // pairs → CC clusters → keep the LONGEST doc per family (the
-    // curation rule for quoted-in/extended-by families that symmetric
-    // near-dup misses). The keep decision is encoded arithmetically
-    // ((1e8 − n_chars)·1e10 + doc_id, one min agg) so the tie-break is
-    // total and engine-exact.
-    "q201_containment_canonical" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.ngramContainmentPairs(docs, "doc_id", "text",
-          blockCols = Seq("lang", "source"), threshold = 0.5,
-          shingleSize = 2)
-        .select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"))
-        .distinct()
-      Dedup.duplicateClusters(docs, "doc_id", pairs)
-        .join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_docs"),
-          min((lit(100000000L) - col("n_chars")) * 10000000000L +
-            col("doc_id")).as("__k"))
-        .select(col("cluster_id"), col("n_docs"),
-          expr("__k % 10000000000").as("keep_id"),
-          expr("100000000 - __k div 10000000000").as("keep_chars"))
-        .orderBy("cluster_id")
-    }),
-
-    // Greedy quality-ordered budget mix: spend half the corpus's token
-    // budget on the highest-avg-quality sources first — the mixture
-    // planning step in front of q89's mixture sampler. Source-count-
-    // sized window, integer ppm allocation.
-    "q202_budget_mix" -> ((s, dir) => {
-      val agg = Tables.documents(s, dir)
-        .select(col("source"),
-          TextFunctions.tokenCount(col("text")).cast("long").as("tok"),
-          col("n_chars"))
-        .groupBy("source")
-        .agg(sum(col("tok")).as("toks"),
-          expr("sum(n_chars) div count(1)").as("avg_chars"))
-        // feeds the budget agg AND the allocation window — materialize
-        // the source-count-sized frame once (shared-branch rule)
-        .localCheckpoint(true)
-      val w = Window.orderBy(col("avg_chars").desc, col("source"))
-      agg.crossJoin(broadcast(
-          agg.agg(expr("sum(toks) div 2").as("budget"))))
-        .withColumn("cum", sum(col("toks")).over(w))
-        .select(col("source"), col("toks"), col("avg_chars"),
-          greatest(lit(0L), least(col("toks"),
-            col("budget") - (col("cum") - col("toks")))).as("alloc"))
-        .withColumn("alloc_ppm", expr("(alloc * 1000000) div toks"))
-        .orderBy("source")
-    }),
-
-    // Exact total-variation token-mix drift per source vs the whole
-    // corpus — the integer-exact sibling of KL composition drift
-    // (Corpus.tokenMixDrift: one (source, token) agg checkpointed for
-    // three branches, dense grid incl. absent tokens, DECIMAL(38,0)).
-    "q203_tv_drift" -> ((s, dir) =>
-      Corpus.tokenMixDrift(Tables.documents(s, dir), "source", "text")
-        .orderBy("source")),
-
-    // Per-flag equi-depth price histogram, 8 equal-population buckets
-    // at exact discrete quantile cuts, zero cells emitted
-    // (Aggregations.equiDepthHistogram — two scans, broadcast cuts).
-    "q204_equidepth_hist" -> ((s, dir) =>
-      Aggregations.equiDepthHistogram(
-        Tables.lineitem(s, dir).select(col("l_returnflag"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c")),
-        Seq("l_returnflag"), "price_c", buckets = 8)
-        .orderBy("l_returnflag", "bucket")),
-
-    // Sentence-df boilerplate screen per source — the C4-style template
-    // cleaning report (Corpus.boilerplate: one (doc, sentence-hash)
-    // exchange checkpointed for the df and ratio branches). The
-    // synthetic corpus is template-free (max sentence df = 2), so a
-    // deterministic footer is stamped on every third doc — the q196
-    // injection discipline: exercise the flag-and-ratio path at every
-    // SF instead of asserting on an all-zeros column.
-    "q205_boilerplate" -> ((s, dir) =>
-      Corpus.boilerplate(
-        Tables.documents(s, dir).withColumn("text",
-          when(col("doc_id") % 3 === 0,
-            concat(col("text"),
-              lit(". Subscribe to our newsletter for updates.")))
-            .otherwise(col("text"))),
-        "doc_id", "source", "text", minDf = 5L)
-        .orderBy("source")),
-
-    // Content-defined chunking dedup accounting per source — identical
-    // passages chunk identically regardless of offset shifts
-    // (Corpus.cdcChunkDedup: cut rule and chunk hash both portable
-    // md5-32, one (source, chunk-hash) exchange).
-    "q206_cdc_chunks" -> ((s, dir) =>
-      Corpus.cdcChunkDedup(Tables.documents(s, dir), "source", "text",
-        modulus = 16)
-        .orderBy("source")),
-
-    // Label-noise screen: cell-blocked all-kNN over the embedding
-    // corpus, per-label neighbor-agreement report (Ann.
-    // cellKnnLabelConsistency — IVF-blocked, never all-pairs; float
-    // cosine ranks only, agreement math integer ppm). The cell count
-    // is DERIVED from the corpus (Ann.resolveCellCount: 2^(bitlen(N)
-    // div 2) ≈ √N, logged), not an SF-baked constant — per-cell pair
-    // work stays ~N, and the oracle derives the identical count from
-    // the identical corpus with the same integer rule.
-    "q207_knn_label_consistency" -> ((s, dir) => {
-      val emb = Tables.embeddings(s, dir)
-      Ann.cellKnnLabelConsistency(emb,
-        k = 5, nCentroids = Ann.resolveCellCount(emb))
-        .orderBy("label")
-    }),
-
-    // Per-landmark reach curve over the q200 msbfs core — landmark-side
-    // frontier-growth report (Graph.landmarkReachProfile: one 64-seed
-    // bit-packed sweep, |seeds|×hops output rows).
-    "q208_landmark_reach" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val fwd = li.select((col("l_orderkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-        .orderBy("id").limit(16)
-      Graph.landmarkReachProfile(edges, seeds, maxHops = 2)
-        .orderBy("src", "dist")
-    }),
-
-    // Snapshot reconciliation: orders vs a deterministically perturbed
-    // next-day version (drops % 13, price bumps % 7, new keys % 17 —
-    // the injection discipline); one full-outer key join, md5-32 row
-    // hashes, single summary row (Validations.snapshotDiff).
-    "q209_snapshot_diff" -> ((s, dir) => {
-      val (o, after) = q209Frames(s, dir)
-      // key-uniqueness preconditions run in `preconditions`
-      // (Verify-time), keeping Bench reps measuring the diff plan only
-      checks.Validations.snapshotDiff(o, after, Seq("o_orderkey"),
-        Seq("o_custkey", "o_orderstatus", "price_c"), checkKeys = false)
-    }),
-
-    // Robust anomaly gate: exact per-type MAD screen over event value
-    // cents, outliers beyond median ± 3·MAD
-    // (Aggregations.madOutliers — three scans, the exact-MAD floor).
-    "q210_mad_outliers" -> ((s, dir) =>
-      Aggregations.madOutliers(
-        Tables.events(s, dir).select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("value_c")),
-        Seq("event_type"), "value_c", k = 3L)
-        .orderBy("event_type")),
-
-    // Clustering-quality gate: per-cluster simplified silhouette over
-    // the q159 integer-Lloyd clustering (KMeans.simplifiedSilhouette —
-    // a and b from ONE per-row distance map, k-row rollup).
-    "q211_cluster_silhouette" -> ((s, dir) =>
-      KMeans.simplifiedSilhouette(Tables.embeddings(s, dir),
-        "vec_id", "embedding", k = 8, rounds = 2, scale = 1000)
-        .orderBy("cluster")),
-
-    // Weekly retention cohorts: users bucketed by first-seen epoch
-    // week, distinct active users per (cohort, week offset) — the
-    // classic retention triangle. Two aggs: per-user first week (one
-    // user-keyed exchange), then a (user, week)-deduped count — no
-    // count(DISTINCT) Expand, no window. Week keys derive from event
-    // time in MICROS (ts_ns div 1000 — the DuckDB timestamp grid).
-    "q212_retention_cohorts" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"),
-          expr("((ts_ns div 1000) div 604800000000)").as("wk"))
-        .distinct()
-      val first = ev.groupBy("user_id").agg(min(col("wk")).as("cohort"))
-      ev.join(first, Seq("user_id"))
-        .groupBy(col("cohort"), (col("wk") - col("cohort")).as("offset"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy("cohort", "offset")
-    }),
-
-    // GraphSAGE-style neighbor feature aggregation over the co-order
-    // part graph: per node, degree + sum/max of neighbor degrees, top
-    // 100 by aggregated popularity (Graph.neighborFeatureAgg — one
-    // node-keyed join, no iteration).
-    "q213_neighbor_agg" -> ((s, dir) => {
-      val canon = Graph.coOccurrenceEdges(
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-        "o", "p", maxGroupSize = 8).distinct()
-      val edges = canon.unionByName(
-        canon.select(col("dst").as("src"), col("src").as("dst")))
-      Graph.neighborFeatureAgg(edges)
-        .orderBy(col("sum_nbr_deg").desc, col("id")).limit(100)
-    }),
-
-    // Deterministic 80/10/10 train/val/test split manifest: assignment
-    // = portable md5-32 of the doc id reduced to ppm, so the split is
-    // reproducible from the id alone (no RNG, no state — re-running
-    // the pipeline or adding documents never reshuffles existing
-    // assignments); per (source, split): docs and whitespace tokens.
-    // Scan-stage hash + one grouped agg.
-    "q214_split_manifest" -> ((s, dir) =>
-      Tables.documents(s, dir)
-        .withColumn("__p",
-          conv(substring(md5(col("doc_id").cast("string").cast("binary")),
-            1, 8), 16, 10).cast("long") % 1000000L)
-        .withColumn("split",
-          when(col("__p") < 800000L, "train")
-            .when(col("__p") < 900000L, "val").otherwise("test"))
-        .groupBy("source", "split")
-        .agg(count(lit(1)).as("n_docs"),
-          sum(TextFunctions.tokenCount(col("text")).cast("long"))
-            .as("n_tokens"))
-        .orderBy("source", "split")),
-
-    // Numeric distribution drift between alternating epoch weeks (the
-    // A/B halves a release report compares): per event type, exact
-    // p50/p90 of value cents in each half + integer drift ppm — the
-    // numeric complement of q203's token-mix drift. Two quantilesDisc
-    // passes over disjoint halves; week parity keys off the micros
-    // grid.
-    "q215_quantile_drift" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_type"),
-        expr("CAST(round(value * 100) AS BIGINT)").as("v"),
-        expr("((ts_ns div 1000) div 604800000000) % 2").as("par"))
-      def half(p: Int): DataFrame =
-        Aggregations.quantilesDisc(
-          ev.filter(col("par") === p).withColumn("__w", lit(1L)),
-          Seq("event_type"), "v", "__w", Seq(500000L, 900000L))
-          .select(col("event_type"), col("p500000").as(s"p50_$p"),
-            col("p900000").as(s"p90_$p"))
-      // zero-median guard, identical both sides: Spark `div 0` yields
-      // NULL while DuckDB `// 0` ERRORS, so an unguarded division fails
-      // the two engines asymmetrically (ADVICE r11)
-      half(0).join(half(1), Seq("event_type"))
-        .withColumn("p50_drift_ppm",
-          expr("CASE WHEN p50_0 = 0 THEN NULL " +
-            "ELSE (abs(p50_1 - p50_0) * 1000000) div p50_0 END"))
-        .withColumn("p90_drift_ppm",
-          expr("CASE WHEN p90_0 = 0 THEN NULL " +
-            "ELSE (abs(p90_1 - p90_0) * 1000000) div p90_0 END"))
-        .orderBy("event_type")
-    }),
-
-    // Mergeable log-histogram quantile sketch: bounded-state (≤256
-    // buckets/group) p50/p99 estimates — the mergeable one-agg sibling
-    // of q146's exact quantiles, and the bracket pass those reuse
-    // (Sketch.logHistQuantiles; integer msb buckets, estimates are
-    // true data values).
-    "q216_loghist_quantiles" -> ((s, dir) =>
-      Sketch.logHistQuantiles(
-        Tables.lineitem(s, dir).select(col("l_returnflag"),
-          expr("CAST(round(l_extendedprice * 100) AS BIGINT)").as("price_c")),
-        Seq("l_returnflag"), "price_c", Seq(500000L, 990000L))
-        .orderBy("l_returnflag")),
-
-    // Link prediction over the co-order part graph: common neighbors,
-    // integer resource-allocation index, neighborhood Jaccard for the
-    // top-100 non-edges (Graph.linkPredictionFeatures — wedge stream
-    // capped at middle-degree 64: hub middles carry ~zero RA weight
-    // and uncapped wedges measured 236M vs 1.5M at sf0.1).
-    "q217_link_prediction" -> ((s, dir) => {
-      val canon = Graph.coOccurrenceEdges(
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey").as("o"), col("l_partkey").as("p")),
-        "o", "p", maxGroupSize = 8).distinct()
-      Graph.linkPredictionFeatures(canon)
-        .orderBy(col("ra_ppm").desc, col("id_a"), col("id_b")).limit(100)
-    }),
-
-    // Incremental near-dup against a persisted signature store: the
-    // daily-ingest batch (doc_id % 10 = 0) screens against the corpus
-    // store (the rest) WITHOUT re-banding the corpus — store scanned
-    // once, batch broadcast, agreement computed map-side at match time
-    // (Dedup.signatureStore + incrementalNearDuplicates; portable
-    // md5-31 family, q28's parameters). The parquet round-trip of the
-    // store is IncrementalDedupSpec's job; this gates the join
-    // semantics through DuckDB.
-    "q218_incremental_neardup" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // materialized like the real flow (the store IS a parquet table a
-      // pipeline reads back): composing build+probe into one lazy plan
-      // lets Catalyst's inferred posexplode filters re-derive the whole
-      // signing below the scan, 64-pass MinHash x32 per row (measured
-      // 11.5 s -> 3 s; see incrementalNearDuplicates' scaladoc)
-      val store = Dedup.signatureStore(
-        docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
-        .localCheckpoint(true)
-      Dedup.incrementalNearDuplicates(store,
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          threshold = 0.10)
-        .orderBy("new_id", "corpus_id")
-    }),
-
-    // Fuzzy entity resolution end-to-end: collapse to DISTINCT name
-    // strings first (fuzzy-match the vocabulary, never the rows),
-    // banded edit-distance candidate pairs within first-word blocks
-    // (Dedup.blockedEditDistancePairs — pair work Σ block², DP cost
-    // O(maxDist·len) via Spark's 3-arg levenshtein), then connected
-    // components resolve transitive matches into entities with the
-    // canonical (min-id) spelling and member count. q99 is the raw
-    // blocked-pair screen; this is the resolution step a
-    // record-linkage pipeline runs on top of it.
-    "q219_fuzzy_er_clusters" -> ((s, dir) => {
-      val ents = Tables.part(s, dir)
-        .select(concat(col("p_name"), lit(" "), col("p_type")).as("nm"),
-          col("p_partkey"))
-        .groupBy("nm").agg(min(col("p_partkey")).as("ent_id"))
-        .withColumn("blk", split(col("nm"), " ").getItem(0))
-        .localCheckpoint(true) // feeds the pair legs AND the node frame
-      val pairs = Dedup.blockedEditDistancePairs(
-        ents, "ent_id", "nm", Seq("blk"), maxDist = 4)
-      Dedup.duplicateClusters(ents.select(col("ent_id")), "ent_id", pairs)
-        .groupBy("cluster_id")
-        .agg(count(lit(1)).as("n_entities"))
-        .join(ents.select(col("ent_id").as("cluster_id"),
-          col("nm").as("canon_nm")), Seq("cluster_id"))
-        .orderBy("cluster_id")
-    }),
-
-    // Exact per-value percentile ranks (value → rank ppm), the
-    // normalization inverse of the q146/q215 quantile family — computed
-    // with the bracket discipline generalized to ALL ranks
-    // (Aggregations.percentileRanksPpm): the cumulative window
-    // partitions by (group, log-bucket), never by group alone, so no
-    // task ever holds a group's whole distinct-value set.
-    "q220_percentile_ranks" -> ((s, dir) =>
-      Aggregations.percentileRanksPpm(
-        Tables.events(s, dir).select(col("event_type"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-          .withColumn("__w", lit(1L)),
-        Seq("event_type"), "v", "__w")
-        .orderBy("event_type", "v")),
-
-    // Sliding 7-day distinct users per event type as MERGED HLL
-    // registers (Sketch.hllRegistersTrailing): the corpus is
-    // register-ized once into (type, day, bucket) max-ρ cells; each
-    // window position is a bucket-wise max over the sketch-sized cell
-    // table — count(DISTINCT) per window would rescan 7× the corpus.
-    // Registers are the oracle artifact (integer, portable md5);
-    // the float estimate is the q129 estimator applied per slice.
-    "q221_sliding_distinct" -> ((s, dir) =>
-      Sketch.hllRegistersTrailing(
-        Tables.events(s, dir).withColumn("day",
-          expr("((ts_ns div 1000) div 86400000000)")),
-        "user_id", Seq("event_type"), "day", windowDays = 7)
-        .orderBy("event_type", "day", "bucket")),
-
-    // Trailing 7-day p50/p99 value cents per event type per day from
-    // merged log-histogram sketches (Sketch.logHistQuantilesTrailing)
-    // — the sliding-window observability query the MERGEABLE property
-    // of q216's sketch exists for: one corpus bucketing pass, then
-    // bucket-wise count addition per window position over the
-    // sketch-sized cell table.
-    "q222_trailing_quantiles" -> ((s, dir) =>
-      Sketch.logHistQuantilesTrailing(
-        Tables.events(s, dir).select(col("event_type"),
-          expr("((ts_ns div 1000) div 86400000000)").as("day"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v")),
-        Seq("event_type"), "day", "v", windowDays = 7,
-        Seq(500000L, 990000L))
-        .orderBy("event_type", "day")),
-
-    // Rank-normalized user profile — the join-back use-case
-    // q220's operator exists for: every event's value becomes its
-    // within-type percentile rank (comparable across types whose raw
-    // scales differ), then per user the mean rank surfaces accounts
-    // whose activity is systematically high-value regardless of type.
-    // The rank table is distinct-values-sized and joins back on the
-    // natural (type, value) key.
-    "q223_rank_profile" -> ((s, dir) => {
-      val src = Tables.events(s, dir).select(col("user_id"),
-        col("event_type"), expr("CAST(round(value * 100) AS BIGINT)").as("v"))
-      val ranks = Aggregations.percentileRanksPpm(
-        src.withColumn("__w", lit(1L)), Seq("event_type"), "v", "__w")
-        .select(col("event_type"), col("v"), col("rank_ppm"))
-      src.join(ranks, Seq("event_type", "v"))
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("n_events"),
-          expr("sum(rank_ppm) div count(1)").as("avg_rank_ppm"))
-        .orderBy(col("avg_rank_ppm").desc, col("user_id")).limit(100)
-    }),
-
-    // Join-skew pre-flight (Skew.joinSkewReport): before self-joining
-    // events on user_id (views × clicks), rank the keys by their
-    // output contribution n_left·n_right — the report that decides
-    // between a plain join, AQE skew split, and Skew.saltedJoin. Two
-    // key-sized aggs + one count-table join; the facts never shuffle
-    // beyond their key counts.
-    "q224_join_skew" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      Skew.joinSkewReport(
-        ev.filter(col("event_type") === "view").select("user_id"),
-        ev.filter(col("event_type") === "click").select("user_id"),
-        "user_id", k = 50)
-    }),
-
-    // Split-balance audit: chi-square independence of (source, split)
-    // over q214's md5 split assignment — the release check that the
-    // deterministic splitter did not correlate with any source
-    // (chi2_ppm ≈ dof·1e6 under independence). Reuses the q195
-    // operator; the split column is a scan-stage expression.
-    "q225_split_balance" -> ((s, dir) =>
-      Aggregations.chiSquareIndependence(
-        Tables.documents(s, dir)
-          .withColumn("__p",
-            conv(substring(md5(col("doc_id").cast("string").cast("binary")),
-              1, 8), 16, 10).cast("long") % 1000000L)
-          .withColumn("split",
-            when(col("__p") < 800000L, "train")
-              .when(col("__p") < 900000L, "val").otherwise("test")),
-        "source", "split")),
-
-    // Hourly volume anomalies: events roll up to (type, hour) counts,
-    // then Aggregations.madFlag attaches each type's exact median/MAD
-    // hourly volume and emits the spiking hours themselves — the
-    // row-level sibling of q210's count-only screen, over a derived
-    // time series instead of raw values. The MAD passes run over the
-    // hours-sized rollup, not the corpus.
-    "q226_volume_anomalies" -> ((s, dir) => {
-      val hourly = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          expr("((ts_ns div 1000) div 3600000000)").as("hr"))
-        .agg(count(lit(1)).as("n"))
-      Aggregations.madFlag(hourly, Seq("event_type"), "n", k = 3)
-        .filter(col("is_outlier"))
-        .select("event_type", "hr", "n", "med", "mad")
-        .orderBy("event_type", "hr")
-    }),
-
-    // Market-basket lift over SESSION baskets: events sessionize by
-    // 1-hour gaps (q100's session core), each session's distinct
-    // event types form a basket, and every type pair reports observed
-    // co-occurrence against the independence expectation as integer
-    // lift ppm (the collocations formula lifted from adjacent tokens
-    // to session baskets). The basket self-join is keyed by
-    // (user, session) with ≤ |types| rows per key — never all-pairs —
-    // and the basket table is checkpointed once for its three reads.
-    // Products ride DECIMAL(38,0) (the chi-square discipline).
-    "q227_session_baskets" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("user_id", "ts_ns", "event_type")
-      val sess = Sessions.sessionize(ev, "user_id", "ts_ns",
-        gapNanos = 3600L * 1000000000L)
-      val baskets = sess.select(col("user_id"), col("session_id"),
-        col("event_type").as("t")).distinct()
-        .localCheckpoint(true)
-      val n = baskets.select("user_id", "session_id").distinct()
-        .agg(count(lit(1)).as("__n"))
-      val singles = baskets.groupBy(col("t")).agg(count(lit(1)).as("c"))
-      val pairs = baskets.as("a").join(baskets.as("b"),
-          col("a.user_id") === col("b.user_id") &&
-            col("a.session_id") === col("b.session_id") &&
-            col("a.t") < col("b.t"))
-        .groupBy(col("a.t").as("t_a"), col("b.t").as("t_b"))
-        .agg(count(lit(1)).as("c_ab"))
-      pairs
-        .join(singles.select(col("t").as("t_a"), col("c").as("c_a")), "t_a")
-        .join(singles.select(col("t").as("t_b"), col("c").as("c_b")), "t_b")
-        .crossJoin(broadcast(n))
-        .select(col("t_a"), col("t_b"), col("c_ab"), col("c_a"), col("c_b"),
-          expr("CAST((CAST(c_ab AS DECIMAL(38,0)) * __n * 1000000) div " +
-            "(CAST(c_a AS DECIMAL(38,0)) * c_b) AS BIGINT)").as("lift_ppm"))
-        .orderBy("t_a", "t_b")
-    }),
-
-    // Time-to-convert distribution: per session that converts (first
-    // view followed by a purchase), exact p50/p90 of seconds from the
-    // first view to the first subsequent purchase — q100's funnel core
-    // with a quantile tail instead of survivor counts. Durations in
-    // whole seconds off the shared micros grid; the quantile input is
-    // sessions-sized and join-derived, so routing takes bracket+exact.
-    "q228_conversion_time" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("user_id", "ts_ns", "event_type")
-      val sess = Sessions.sessionize(ev, "user_id", "ts_ns",
-        gapNanos = 3600L * 1000000000L)
-      val v = sess.groupBy("user_id", "session_id")
-        .agg(min(when(col("event_type") === "view", col("ts_ns"))).as("t_view"))
-        .filter(col("t_view").isNotNull)
-      // strictly-after comparison on the shared MICROS grid (the q175
-      // lesson): DuckDB timestamps are micro-truncated, so a nano-grid
-      // `ts_ns > t_view` would include a purchase sharing the first
-      // view's microsecond with later nanos that the oracle excludes.
-      // min commutes with truncation, so t_view needs no change.
-      val p = sess.join(v, Seq("user_id", "session_id"))
-        .filter(col("event_type") === "purchase" &&
-          expr("(ts_ns div 1000) > (t_view div 1000)"))
-        .groupBy("user_id", "session_id").agg(min("ts_ns").as("t_purchase"))
-      val d = p.join(v, Seq("user_id", "session_id"))
-        .select(lit("all").as("g"),
-          expr("((t_purchase div 1000) - (t_view div 1000)) div 1000000")
-            .as("secs"),
-          lit(1L).as("w"))
-      Aggregations.quantilesDisc(d, Seq("g"), "secs", "w",
-        Seq(500000L, 900000L)).orderBy("g")
-    }),
-
-    // Auto-routed skew join (Skew.decideJoinPlan — q224's report turned
-    // into a decision): views keyed by a deliberately skewed key (every
-    // even user collapses to -1, so one key owns ~half the fact) join a
-    // per-key click-count dim; the pre-flight measures the top key's
-    // output share and routes to Skew.saltedJoin. hotKeyRowLimit is
-    // pinned low so the SALTED regime is the one exercised and
-    // oracle-checked at test SFs (production resolves the 4M conf
-    // default); the rewrite is purely physical, so the oracle is the
-    // plain join.
-    "q229_skew_routed_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      def k = when(col("user_id") % 2 === 0, lit(-1L))
-        .otherwise(col("user_id")).as("k")
-      val fact = ev.filter(col("event_type") === "view")
-        .select(k, col("value"))
-      val dim = ev.filter(col("event_type") === "click")
-        .select(k).groupBy("k").agg(count(lit(1)).as("n_clicks"))
-      val (joined, _) = Skew.decideJoinPlan(fact, dim, "k",
-        buckets = 8, hotKeyRowLimit = 64)
-      joined.groupBy("k")
-        .agg(count(lit(1)).as("n_views"), max(col("n_clicks")).as("n_clicks"),
-          expr("sum(CAST(round(value * 100) AS BIGINT))").as("total_c"))
-        .orderBy("k")
-    }),
-
-    // Persisted ANN index probe (Ann.ivfIndex / ivfProbeIndex) — the
-    // embedding-space sibling of q218's signature store: the corpus
-    // (vec_id % 10 != 0) is clustered ONCE into a persistable
-    // (centroids, cell-assignments) pair; the batch (vec_id % 10 == 0)
-    // probes its nProbe closest cells WITHOUT re-clustering, and the
-    // store scan is filtered to the probed cells only (IN on the
-    // STORED cell column — partition pruning on a cell-partitioned
-    // store). Deterministic smallest-id centroids, no Lloyd (q43's
-    // oracle discipline: float cosine affects rank only). Both index
-    // tables materialized like the real flow (the q218 pattern — they
-    // ARE parquet tables a pipeline reads back).
-    "q230_ivf_index_probe" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val (cent, asg) = Ann.ivfIndex(e.filter(col("vec_id") % 10 =!= 0),
-        nCentroids = 8, initById = true)
-      Ann.ivfProbeIndex(cent.localCheckpoint(true),
-          asg.localCheckpoint(true),
-          e.filter(col("vec_id") % 10 === 0), k = 5, nProbe = 2)
-        .select("query_id", "neighbor_id", "rank")
-        .orderBy("query_id", "rank")
-    }),
-
-    // Cell-store serving path (Sketch.logHistQuantilesAt): the
-    // persisted sketch store answers the daily question — "today's
-    // trailing 7-day p50/p99" — from the w-day range ONLY (the range
-    // predicate prunes the store scan; plan committed in PLANS.md,
-    // parquet round-trip in BloomSketchSpec). Cells materialized once
-    // as the store (q218 pattern); the max-day probe is the store-
-    // sized lookup a real pipeline replaces with today's date.
-    "q231_cellstore_serve_day" -> ((s, dir) => {
-      val store = Sketch.logHistCells(
-        Tables.events(s, dir).select(col("event_type").as("g"),
-          expr("((ts_ns div 1000) div 86400000000)").as("d"),
-          expr("CAST(round(value * 100) AS BIGINT)").as("v")),
-        Seq("g"), "d", "v").localCheckpoint(true)
-      val day = store.agg(max("day")).first().getLong(0)
-      Sketch.logHistQuantilesAt(store, Seq("g"), day, windowDays = 7,
-        Seq(500000L, 990000L))
-        .select(col("g").as("event_type"), col("day"), col("n"),
-          col("est_p500000"), col("est_p990000"))
-        .orderBy("event_type")
-    }),
-
-    // Persisted PQ index probe (Ann.pqIndex / pqProbeIndex) — q230's
-    // compressed sibling: the corpus (vec_id % 10 != 0) encodes ONCE
-    // into the ~32x-smaller codes table; the batch (vec_id % 10 == 0)
-    // scores by ADC lookups against the codes STORE — raw corpus
-    // embeddings are never re-read or re-encoded. q126's determinism
-    // discipline (smallest-id seeds, no Lloyd, tie → larger codeword,
-    // subspace-ascending ADC sums); index tables materialized like the
-    // real flow (q218 pattern).
-    "q232_pq_index_probe" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val (cbk, codes) = Ann.pqIndex(e.filter(col("vec_id") % 10 =!= 0),
-        numSubspaces = 8, codebookSize = 16, initById = true)
-      Ann.pqProbeIndex(cbk.localCheckpoint(true),
-          codes.localCheckpoint(true),
-          e.filter(col("vec_id") % 10 === 0), k = 5)
-        .orderBy("query_id", "rank")
-    }),
-
-    // Composed IVF∘PQ probe (Ann.ivfPqIndex / ivfPqProbeIndex) — q230's
-    // cell pruning and q232's ADC scoring in ONE store: the batch
-    // probes its nProbe closest cells, the codes store is scan-pruned
-    // to those cells, and scoring is LUT lookups over the pruned
-    // ~32x-narrower codes — candidate work nProbe/nCentroids of q232's,
-    // raw embeddings never re-read. Same determinism disciplines as
-    // both parents (smallest-id centroids AND seeds, no Lloyd, ties to
-    // the larger id, subspace-ascending ADC sums); index tables
-    // materialized like the real flow (q218 pattern).
-    "q233_ivfpq_index_probe" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val (cent, cbk, codes) = Ann.ivfPqIndex(
-        e.filter(col("vec_id") % 10 =!= 0), nCentroids = 8,
-        numSubspaces = 8, codebookSize = 16, initById = true)
-      Ann.ivfPqProbeIndex(cent.localCheckpoint(true),
-          cbk.localCheckpoint(true), codes.localCheckpoint(true),
-          e.filter(col("vec_id") % 10 === 0), k = 5, nProbe = 2)
-        .orderBy("query_id", "rank")
-    }),
-
-    // q218's screen with the hot-cell list read from persisted
-    // METADATA instead of a store-wide bucket scan per micro-batch
-    // (Dedup.bucketCounts / mergeBucketCounts — VERDICT r13 #4): two
-    // "append generations" of the store each contribute their own
-    // counts, merged additively, exactly how a pipeline maintains the
-    // sibling table on append. The stats path is purely physical (the
-    // hot set is identical), so the oracle is q218's.
-    "q234_incdedup_bucketstats" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val store = Dedup.signatureStore(
-        docs.filter(col("doc_id") % 10 =!= 0), "doc_id", "text")
-        .localCheckpoint(true)
-      val stats = Dedup.mergeBucketCounts(
-        Dedup.bucketCounts(store.filter(col("id") % 2 === 0)),
-        Dedup.bucketCounts(store.filter(col("id") % 2 =!= 0)))
-      Dedup.incrementalNearDuplicates(store,
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          threshold = 0.10, bucketStats = Some(stats))
-        .orderBy("new_id", "corpus_id")
-    }),
-
-    // Greedy farthest-point (k-center) coreset selection over the
-    // embeddings (KMeans.farthestPointSample) — the diversity-sampling
-    // primitive: seed = lowest id, then 7 rounds of argmax min-dist²
-    // against the selected set (already-selected ids excluded, ties to
-    // the lower id), plus the nearest-center census giving the coreset
-    // WEIGHTS. The whole greedy loop runs on the q159 fixed-point
-    // integer grid (exact integer squared-L2, grid quantize), so an
-    // 8-step sequential selection replays bit-exactly as a chained
-    // materialized-CTE oracle.
-    "q235_coreset_fps" -> ((s, dir) =>
-      KMeans.farthestPointSample(Tables.embeddings(s, dir),
-        "vec_id", "embedding", k = 8, scale = 1000)
-        .orderBy("ord")),
-
-    // Hot-cell split maintenance for the persisted IVF store
-    // (Ann.splitHotCells): cells grown past the mean count
-    // split in two via deterministic integer 2-means (seed A = lowest
-    // id, seed B = farthest member on the fixed-point grid, members
-    // move iff strictly closer, grid-rounded mean re-centering);
-    // everything else untouched. The census reports every post-split
-    // cell with its parent, member count, and quantized-centroid
-    // checksum. A cell splits only when provably non-degenerate
-    // (max dist² > 0 — seed B always moves), so new ids stay
-    // contiguous and the updated store revalidates. Index built with
-    // q230's assignment discipline (smallest-id centroids, no Lloyd,
-    // cosine ties to the larger cell); both index tables materialized
-    // like the real flow (q218 pattern).
-    "q236_ivf_split_hotcells" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val (cent, asg) = Ann.ivfIndex(e, nCentroids = 8, initById = true)
-      val n = e.count()
-      val (census, _, _) = Ann.splitHotCells(cent.localCheckpoint(true),
-        asg.localCheckpoint(true), maxCellRows = n / 8L)
-      census.orderBy("cell")
-    }),
-
-    // Skip-gram co-occurrence over deterministic walks
-    // (Graph.walkCooccurrence) — the corpus-prep step between walking
-    // and training graph features (DeepWalk pair extraction, PPMI/
-    // GloVe-style association counts): q152's walk graph and seeds,
-    // 4 steps, window 2; unordered pairs with count >= 2 scored by the
-    // integer PMI ratio lift_ppm = c_ab·T²·10⁶ div (c_a·c_b·P) — the
-    // pre-log PMI, exact in 64-bit integers where a float log would
-    // diverge between engines.
-    "q237_walk_cooccurrence" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val fwd = li.select((col("l_orderkey") * 2).as("src"),
-        (col("l_partkey") * 2 + 1).as("dst"))
-      val edges = fwd
-        .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst")))
-        .distinct()
-      val seeds = li.filter(col("l_partkey") % 97 === 0)
-        .select((col("l_partkey") * 2 + 1).as("id")).distinct()
-      Graph.walkCooccurrence(edges, seeds, steps = 4, window = 2)
-        .orderBy("na", "nb")
-    }),
-
-    // DSIR importance weights (Corpus.importanceWeights): every raw
-    // document (doc_id % 7 != 0) scored by how target-like (doc_id % 7
-    // == 0 plays the curated domain) its hashed-token bag is — the
-    // pretraining data-selection recipe. log2 runs in 2⁻²⁰ fixed point
-    // (bitlength + shifts — pure integer, engine-exact where a float
-    // log2 breaks hash parity); buckets ride the q173 portable md5
-    // spelling.
-    "q238_importance_weights" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Corpus.importanceWeights(
-        docs.filter(col("doc_id") % 7 =!= 0),
-        docs.filter(col("doc_id") % 7 === 0),
-        "doc_id", "text", bins = 256)
-        .orderBy("doc_id")
-    }),
-
-    // Tokenizer fertility audit per language (Bpe.encodeCounts + lang
-    // rollup): subwords per million tokens and chars per million
-    // subwords by lang — the "is the tokenizer fair to every language"
-    // check a multilingual pretraining budget runs (high fertility =
-    // that language pays more sequence length per word). q139's
-    // train+encode replay, rolled up over the documents dimension.
-    "q239_tokenizer_fertility" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      Bpe.encodeCounts(docs, "doc_id", "text", steps = 5)
-        .join(docs.select(col("doc_id"), col("lang"), col("n_chars")),
-          Seq("doc_id"))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_tokens").as("n_tokens"),
-          sum("n_subwords").as("n_subwords"),
-          expr("(sum(n_subwords) * 1000000) div sum(n_tokens)")
-            .as("fertility_ppm"),
-          expr("(sum(n_chars) * 1000000) div sum(n_subwords)")
-            .as("chars_per_subword_ppm"))
-        .orderBy("lang")
-    }),
-
-    // Coreset coverage audit (KMeans.coresetCoverage) — the maintenance
-    // op of the coreset family: the corpus (vec_id % 10 != 0) selects
-    // its 8-center coreset ONCE (materialized like a store, q218
-    // pattern, vectors re-joined from the corpus); the batch (vec_id %
-    // 10 == 0) is assigned against the center literals without re-
-    // running the greedy loop. Radius budget = the coreset's own
-    // tightest selection radius; per center: batch members, worst
-    // dist², integer mean dist², over-budget count. All fixed-point —
-    // the q235 determinism carried through the audit.
-    "q240_coreset_coverage" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 10 =!= 0)
-      val coreset = KMeans.farthestPointSample(corpus, "vec_id",
-        "embedding", k = 8).localCheckpoint(true)
-      val centers = coreset.join(corpus, Seq("vec_id"))
-        .select(col("ord"), col("embedding"))
-      val thr = coreset.filter(col("ord") >= 1)
-        .agg(min("radius2")).first().getLong(0)
-      KMeans.coresetCoverage(centers,
-        e.filter(col("vec_id") % 10 === 0), maxRadius2 = thr)
-        .orderBy("ord")
-    }),
-
-    // Split-leakage audit: near-duplicate pairs (q28's portable
-    // MinHash-LSH) whose members land in DIFFERENT train/val/test
-    // splits under the stable md5 split (q55) — the eval-contamination
-    // check every held-out set needs (a test doc with a near-dup in
-    // train inflates the benchmark). One row per unordered split pair
-    // with its pair count and a leak flag; cross-split rows > 0 mean
-    // dedup must run BEFORE splitting, or splits must be assigned per
-    // duplicate CLUSTER, not per doc.
-    "q241_split_leakage" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val pairs = Dedup.minHashNearDuplicates(docs, "doc_id", "text",
-        shingleSize = 2, numHashes = 64, bands = 32, threshold = 0.10,
-        exactVerify = false, portableHash = true)
-      val split = docs.select(col("doc_id"),
-        TextFunctions.stableSplit(col("doc_id")).as("split"))
-      pairs
-        .join(split.select(col("doc_id").as("id_a"),
-          col("split").as("sa")), Seq("id_a"))
-        .join(split.select(col("doc_id").as("id_b"),
-          col("split").as("sb")), Seq("id_b"))
-        .select(least(col("sa"), col("sb")).as("split_a"),
-          greatest(col("sa"), col("sb")).as("split_b"))
-        .groupBy("split_a", "split_b")
-        .agg(count(lit(1)).as("n_pairs"))
-        .withColumn("is_leak",
-          (col("split_a") =!= col("split_b")).cast("long"))
-        .orderBy("split_a", "split_b")
-    }),
-
-    // Coreset extension (KMeans.extendCoreset) — the lifecycle's third
-    // op: q240's 8-center coreset (selected on the % 10 != 0 corpus,
-    // materialized like a store) is EXTENDED with 4 more centers over
-    // the full drifted corpus (batch included) — the greedy loop
-    // continues from the stored centers, so existing center ids stay
-    // stable and only append rows ship. Output = the 4 new (ord, id,
-    // radius2) rows, ord continuing after the store.
-    "q242_coreset_extend" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val corpus = e.filter(col("vec_id") % 10 =!= 0)
-      val coreset = KMeans.farthestPointSample(corpus, "vec_id",
-        "embedding", k = 8).localCheckpoint(true)
-      val centers = coreset.join(corpus, Seq("vec_id"))
-        .select(col("ord"), col("vec_id"), col("embedding"))
-      KMeans.extendCoreset(centers, e, "vec_id", "embedding", kAdd = 4)
-        .orderBy("ord")
-    })
-  )
-
-  /** Verify-time oracle preconditions — eager assertions that LICENSE a
-    * query's oracle (e.g. a plain-SELECT dedup oracle is only valid
-    * while the key is naturally unique in the source) but must NOT run
-    * inside the query-builder lambda: Bench times that lambda on every
-    * rep, so an eager count() there inflates the query's recorded
-    * seconds and breaks round-over-round comparability (ADVICE r11).
-    * Verify runs these once per dump, before the corresponding query;
-    * a violated precondition fails the verify run loudly, exactly as
-    * before. */
-  def preconditions: Map[String, (SparkSession, String) => Unit] = Map(
-    "q196_stream_dedup" -> ((s, dir) =>
-      checks.Validations.assertUniqueKeys(
-        Tables.events(s, dir).select("event_id"), Seq("event_id"),
-        "q196 oracle precondition: events.event_id")),
-    "q209_snapshot_diff" -> ((s, dir) => {
-      val (o, after) = q209Frames(s, dir)
-      checks.Validations.assertUniqueKeys(o, Seq("o_orderkey"),
-        "q209 precondition: snapshot before side")
-      checks.Validations.assertUniqueKeys(after, Seq("o_orderkey"),
-        "q209 precondition: snapshot after side")
-    }))
-
-  // ---- oracles ---------------------------------------------------------
-
-  /** q218's replay, shared verbatim by q234: the bucket-stats path is
-    * purely physical (the hot-cell set is identical whether recomputed
-    * or read from the persisted counts), so both keys gate against the
-    * same SQL. */
-  private val incdedupOracleSql =
-    """WITH tk AS (
-      |  SELECT doc_id AS id,
-      |    string_split_regex(lower(trim(text)), '\s+') AS t0
-      |  FROM documents),
-      |sets AS (
-      |  SELECT id, list_sort(list_distinct(list_transform(
-      |    list_transform(generate_series(1, len(t0) - 1),
-      |                   i -> t0[i] || ' ' || t0[i+1]),
-      |    sh -> ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647))) AS sh
-      |  FROM tk),
-      |sigs AS (
-      |  SELECT id, list_transform(range(64), i ->
-      |    list_min(list_transform(sh, h ->
-      |      ((((i+1)*1103515245 + 12345) % 2147483646 + 1) * h
-      |        + ((i+7)*69069 + 1) % 2147483647) % 2147483647))) AS sig
-      |  FROM sets WHERE len(sh) > 0),
-      |corp0 AS (
-      |  SELECT s.id, r.b, s.sig[2*r.b + 1] AS s1, s.sig[2*r.b + 2] AS s2
-      |  FROM sigs s, range(32) r(b) WHERE s.id % 10 <> 0),
-      |corp AS (
-      |  SELECT id, b, s1, s2 FROM (
-      |    SELECT id, b, s1, s2,
-      |      count(*) OVER (PARTITION BY b, s1, s2) AS bn
-      |    FROM corp0)
-      |  WHERE bn <= 64),
-      |newb AS (
-      |  SELECT s.id, r.b, s.sig[2*r.b + 1] AS s1, s.sig[2*r.b + 2] AS s2
-      |  FROM sigs s, range(32) r(b) WHERE s.id % 10 = 0),
-      |cand AS (
-      |  SELECT DISTINCT n.id AS new_id, c.id AS corpus_id
-      |  FROM newb n JOIN corp c USING (b, s1, s2)),
-      |est AS (
-      |  SELECT cand.new_id, cand.corpus_id,
-      |    CAST(len(list_filter(range(64), i -> sa.sig[i+1] = sb.sig[i+1]))
-      |      AS DOUBLE) / 64 AS jaccard
-      |  FROM cand JOIN sigs sa ON sa.id = cand.new_id
-      |            JOIN sigs sb ON sb.id = cand.corpus_id)
-      |SELECT new_id, corpus_id, jaccard FROM est WHERE jaccard >= 0.10
-      |ORDER BY new_id, corpus_id""".stripMargin
-
-  /** q235's greedy farthest-point replay: the k-step selection is
-    * inherently sequential, so the oracle unrolls it as a chained
-    * materialized-CTE loop (the q197 deflation discipline — DuckDB
-    * inlines plain CTEs and re-expansion goes combinatorial). Each
-    * round keeps the RUNNING min-dist² frame (d{i} = LEAST(d{i-1},
-    * dist² to the newest center)), equal by construction to the Spark
-    * side's min over all selected centers. Built by a string loop —
-    * eight near-identical CTE pairs are less reviewable handwritten. */
-  /** Shared portable MinHash-LSH replay (q28 / q241), through the
-    * signature-agreement `est` CTE; pre-stripped — callers concatenate
-    * their threshold/rollup suffix. */
-  private val minhashPairsCtes: String =
-    """WITH tk AS (
-      |  SELECT doc_id AS id,
-      |    string_split_regex(lower(trim(text)), '\s+') AS t0
-      |  FROM documents),
-      |sets AS (
-      |  SELECT id, list_sort(list_distinct(list_transform(
-      |    list_transform(generate_series(1, len(t0) - 1),
-      |                   i -> t0[i] || ' ' || t0[i+1]),
-      |    sh -> ('0x' || substr(md5(sh), 1, 8))::BIGINT % 2147483647))) AS sh
-      |  FROM tk),
-      |sigs AS (
-      |  SELECT id, list_transform(range(64), i ->
-      |    list_min(list_transform(sh, h ->
-      |      ((((i+1)*1103515245 + 12345) % 2147483646 + 1) * h
-      |        + ((i+7)*69069 + 1) % 2147483647) % 2147483647))) AS sig
-      |  FROM sets WHERE len(sh) > 0),
-      |banded AS (
-      |  SELECT s.id, r.b, s.sig[2*r.b + 1] AS s1, s.sig[2*r.b + 2] AS s2
-      |  FROM sigs s, range(32) r(b)),
-      |ok AS (
-      |  SELECT b, s1, s2 FROM banded GROUP BY b, s1, s2
-      |  HAVING count(*) <= 64),
-      |pruned AS (SELECT banded.* FROM banded JOIN ok USING (b, s1, s2)),
-      |cand AS (
-      |  SELECT DISTINCT x.id AS id_a, y.id AS id_b
-      |  FROM pruned x JOIN pruned y USING (b, s1, s2) WHERE x.id < y.id),
-      |est AS (
-      |  SELECT c.id_a, c.id_b,
-      |    CAST(len(list_filter(range(64), i -> sa.sig[i+1] = sb.sig[i+1]))
-      |      AS DOUBLE) / 64 AS jaccard
-      |  FROM cand c JOIN sigs sa ON sa.id = c.id_a
-      |              JOIN sigs sb ON sb.id = c.id_b)""".stripMargin
-
-  /** DuckDB integer dist² between two named 64-long-list columns —
-    * shared by the fps/coverage oracles. */
-  private def duckDist2(a: String, b: String): String =
-    s"list_aggregate(list_transform(range(64), i -> " +
-      s"($a[i+1] - $b[i+1]) * ($a[i+1] - $b[i+1])), 'sum')"
-
-  /** The greedy selection CTE chain (q through `sel`), parameterized by
-    * the corpus predicate; pre-stripped — callers CONCATENATE their
-    * suffix (never re-stripMargin over it, the q139 pipe lesson). */
-  private def fpsCtes(where: String): String = {
-    val rounds = (1 until 8).map { i =>
-      val notIn = (0 until i).map(j => s"SELECT id FROM s$j")
-        .mkString(" UNION ALL ")
-      val dcte =
-        if (i == 1)
-          s"""d1 AS MATERIALIZED (
-             |  SELECT q.id, q.v, ${duckDist2("q.v", "s.v")} AS d
-             |  FROM q, s0 s),""".stripMargin
-        else
-          s"""d$i AS MATERIALIZED (
-             |  SELECT p.id, p.v, LEAST(p.d, ${duckDist2("p.v", "s.v")}) AS d
-             |  FROM d${i - 1} p, s${i - 1} s),""".stripMargin
-      s"""$dcte
-         |s$i AS MATERIALIZED (
-         |  SELECT id, v, d FROM d$i
-         |  WHERE id NOT IN ($notIn)
-         |  ORDER BY d DESC, id LIMIT 1),""".stripMargin
-    }.mkString("\n")
-    val sel = (0 until 8).map(i =>
-      s"SELECT CAST($i AS BIGINT) AS ord, id, d, v FROM s$i")
-      .mkString("\n  UNION ALL ")
-    s"""WITH q AS MATERIALIZED (
-       |  SELECT vec_id AS id, list_transform(embedding, x ->
-       |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
-       |  FROM embeddings
-       |  $where),
-       |s0 AS MATERIALIZED (
-       |  SELECT id, v, 0::BIGINT AS d FROM q ORDER BY id LIMIT 1),
-       |$rounds
-       |sel AS MATERIALIZED (
-       |  $sel)""".stripMargin
-  }
-
-  private val fpsOracleSql: String =
-    fpsCtes("") + ",\n" +
-      s"""best AS (
-         |  SELECT id, ord FROM (
-         |    SELECT q.id, sel.ord, ${duckDist2("q.v", "sel.v")} AS dd
-         |    FROM q, sel)
-         |  QUALIFY row_number() OVER (PARTITION BY id ORDER BY dd, ord) = 1),
-         |cnt AS (SELECT ord, count(*) AS n_members FROM best GROUP BY ord)
-         |SELECT sel.ord, sel.id AS vec_id, CAST(sel.d AS BIGINT) AS radius2,
-         |  COALESCE(cnt.n_members, 0) AS n_members
-         |FROM sel LEFT JOIN cnt USING (ord) ORDER BY ord""".stripMargin
-
-  /** Shared BPE train+encode replay (q139 / q239): tokenize → doc-token
-    * counts (`dt`) → vocabulary → 5 greedy merge rounds → per-token
-    * subword widths (`widths`). Ends at the `widths` CTE; callers
-    * append their own rollup over `dt JOIN widths`. */
-  private val bpeEncodeCtes: String = {
-    val k = 5
-    val rounds = (1 to k).map { i =>
-      s"""p$i AS (
-         |  SELECT pr, sum(wc) AS c FROM (
-         |    SELECT s.wc, s.syms[u.i] || ' ' || s.syms[u.i + 1] AS pr
-         |    FROM (SELECT string_split_regex(trim(w), '\\s+') AS syms, wc
-         |          FROM w${i - 1}) s,
-         |         UNNEST(generate_series(1, len(s.syms) - 1)) AS u(i))
-         |  GROUP BY pr),
-         |m$i AS (SELECT pr FROM p$i ORDER BY c DESC, pr LIMIT 1),
-         |w$i AS (
-         |  SELECT tok, replace(w,
-         |    ' ' || split_part(pr, ' ', 1) || '  ' ||
-         |      split_part(pr, ' ', 2) || ' ',
-         |    ' ' || replace(pr, ' ', '') || ' ') AS w, wc
-         |  FROM w${i - 1}, m$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH toks AS (
-       |  SELECT doc_id, u.tok FROM (
-       |    SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS tk
-       |    FROM documents) t, UNNEST(tk) AS u(tok)
-       |  WHERE length(u.tok) > 0),
-       |dt AS (SELECT doc_id, tok, count(*) AS cnt FROM toks GROUP BY 1, 2),
-       |v AS (SELECT tok, count(*) AS wc FROM toks GROUP BY tok),
-       |w0 AS (
-       |  SELECT tok, ' ' || array_to_string(list_transform(
-       |    generate_series(1, length(tok)), i -> substr(tok, i, 1)), '  ')
-       |    || ' ' AS w, wc FROM v),
-       |$rounds,
-       |widths AS (SELECT tok,
-       |  CAST(len(string_split_regex(trim(w), '\\s+')) AS BIGINT) AS n_sub
-       |  FROM w$k)""".stripMargin
-  }
-
-  /** q238's fixed-point log2 over a named BIGINT expression — DuckDB
-    * spelling of `Corpus.importanceWeights`' lgS (shiftright ≡ >>). */
-  private def duckLg(x: String): String =
-    s"((length(bin($x)) - 1) * 1048576 + " +
-      s"((($x) << 20) >> (length(bin($x)) - 1)) - 1048576)"
-
-  def oracleSql: Map[String, String] = Map(
-    "q242_coreset_extend" -> {
-      val rounds = (1 to 4).map { i =>
-        val notIn = ("SELECT id FROM sel" +:
-          (1 until i).map(j => s"SELECT id FROM t$j")).mkString(" UNION ALL ")
-        val ecte =
-          if (i == 1)
-            s"""e1 AS MATERIALIZED (
-               |  SELECT id, v, dd AS d FROM (
-               |    SELECT id, v, dd,
-               |      row_number() OVER (PARTITION BY id ORDER BY dd) AS rn
-               |    FROM (SELECT q2.id, q2.v, ${duckDist2("q2.v", "sel.v")}
-               |            AS dd FROM q2, sel))
-               |  WHERE rn = 1),""".stripMargin
-          else
-            s"""e$i AS MATERIALIZED (
-               |  SELECT p.id, p.v, LEAST(p.d, ${duckDist2("p.v", "t.v")}) AS d
-               |  FROM e${i - 1} p, t${i - 1} t),""".stripMargin
-        s"""$ecte
-           |t$i AS MATERIALIZED (
-           |  SELECT id, v, d FROM e$i
-           |  WHERE id NOT IN ($notIn)
-           |  ORDER BY d DESC, id LIMIT 1),""".stripMargin
-      }.mkString("\n")
-      val out = (1 to 4).map(i =>
-        s"SELECT CAST(${7 + i} AS BIGINT) AS ord, id AS vec_id, " +
-          s"CAST(d AS BIGINT) AS radius2 FROM t$i")
-        .mkString("\n  UNION ALL ")
-      fpsCtes("WHERE vec_id % 10 <> 0") + ",\n" +
-        s"""q2 AS MATERIALIZED (
-           |  SELECT vec_id AS id, list_transform(embedding, x ->
-           |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
-           |  FROM embeddings),
-           |$rounds
-           |ext AS (
-           |  $out)
-           |SELECT ord, vec_id, radius2 FROM ext ORDER BY ord""".stripMargin
-    },
-    "q240_coreset_coverage" ->
-      (fpsCtes("WHERE vec_id % 10 <> 0") + ",\n" +
-        s"""bq AS (
-           |  SELECT vec_id, list_transform(embedding, x ->
-           |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
-           |  FROM embeddings WHERE vec_id % 10 = 0),
-           |ba AS (
-           |  SELECT vec_id, ord, dd FROM (
-           |    SELECT b.vec_id, sel.ord, ${duckDist2("b.v", "sel.v")} AS dd
-           |    FROM bq b, sel)
-           |  QUALIFY row_number() OVER (PARTITION BY vec_id
-           |    ORDER BY dd, ord) = 1),
-           |thr AS (SELECT CAST(min(d) AS BIGINT) AS r FROM sel
-           |  WHERE ord >= 1),
-           |agg AS (
-           |  SELECT ord, count(*) AS n_batch, max(dd) AS max_d2,
-           |    sum(dd) // count(*) AS avg_d2,
-           |    sum(CASE WHEN dd > thr.r THEN 1 ELSE 0 END) AS n_over
-           |  FROM ba, thr GROUP BY ord)
-           |SELECT sel.ord, CAST(COALESCE(agg.n_batch, 0) AS BIGINT) AS n_batch,
-           |  CAST(COALESCE(agg.max_d2, 0) AS BIGINT) AS max_d2,
-           |  CAST(COALESCE(agg.avg_d2, 0) AS BIGINT) AS avg_d2,
-           |  CAST(COALESCE(agg.n_over, 0) AS BIGINT) AS n_over
-           |FROM sel LEFT JOIN agg USING (ord) ORDER BY sel.ord""".stripMargin),
-    "q238_importance_weights" ->
-      s"""WITH rtk AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    ('0x' || substr(md5(tok), 1, 8))::BIGINT % 2147483647 % 256 AS b
-         |  FROM (SELECT doc_id,
-         |          unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
-         |        FROM documents WHERE doc_id % 7 <> 0)
-         |  WHERE tok <> ''),
-         |ttk AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    ('0x' || substr(md5(tok), 1, 8))::BIGINT % 2147483647 % 256 AS b
-         |  FROM (SELECT doc_id,
-         |          unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
-         |        FROM documents WHERE doc_id % 7 = 0)
-         |  WHERE tok <> ''),
-         |cr AS MATERIALIZED (SELECT b, count(*) AS cr FROM rtk GROUP BY 1),
-         |ct AS MATERIALIZED (SELECT b, count(*) AS ct FROM ttk GROUP BY 1),
-         |bs AS (
-         |  SELECT cr.b,
-         |    ${duckLg("COALESCE(ct.ct, 0) + 1")}
-         |      - ${duckLg("cr.cr + 1")} AS lg_b
-         |  FROM cr LEFT JOIN ct USING (b)),
-         |tt AS (
-         |  SELECT CAST((SELECT sum(cr) FROM cr) AS BIGINT) + 256 AS rp,
-         |         CAST((SELECT sum(ct) FROM ct) AS BIGINT) + 256 AS tp),
-         |c0 AS (SELECT ${duckLg("rp")} - ${duckLg("tp")} AS c FROM tt),
-         |d AS (SELECT doc_id, b, count(*) AS cnt FROM rtk GROUP BY 1, 2)
-         |SELECT d.doc_id, CAST(sum(cnt) AS BIGINT) AS n_toks,
-         |  CAST(sum(cnt * (lg_b + c0.c)) AS BIGINT) AS dsir_fp
-         |FROM d JOIN bs USING (b), c0
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin,
-    "q237_walk_cooccurrence" -> {
-      // q152's walk replay extended to 4 steps, then the pair/count
-      // algebra — lead() unrolled per offset (window = 2)
-      val stepCte = (1 to 4).map { t =>
-        s"""w$t AS (
-           |  SELECT walk, dst AS node FROM (
-           |    SELECT w.walk, e.dst,
-           |      ('0x'||substr(md5(CAST(w.walk AS VARCHAR)||':$t:'||
-           |        CAST(e.dst AS VARCHAR)),1,8))::BIGINT AS h
-           |    FROM w${t - 1} w JOIN e ON e.src = w.node)
-           |  QUALIFY row_number() OVER (PARTITION BY walk
-           |    ORDER BY h, dst) = 1)""".stripMargin
-      }.mkString(",\n")
-      val unions = (0 to 4).map(t =>
-        s"SELECT walk, CAST($t AS BIGINT) AS step, node FROM w$t")
-        .mkString("\n  UNION ALL ")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |w0 AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS walk, l_partkey * 2 + 1 AS node
-         |  FROM lineitem WHERE l_partkey % 97 = 0),
-         |$stepCte,
-         |pos AS MATERIALIZED (
-         |  $unions),
-         |pr AS (
-         |  SELECT least(u, v) AS na, greatest(u, v) AS nb FROM (
-         |    SELECT node AS u, lead(node, 1) OVER (
-         |      PARTITION BY walk ORDER BY step) AS v FROM pos
-         |    UNION ALL
-         |    SELECT node, lead(node, 2) OVER (
-         |      PARTITION BY walk ORDER BY step) FROM pos)
-         |  WHERE v IS NOT NULL AND u <> v),
-         |pc AS MATERIALIZED (
-         |  SELECT na, nb, count(*) AS c_ab FROM pr GROUP BY 1, 2),
-         |occ AS (SELECT node, count(*) AS c FROM pos GROUP BY 1),
-         |tt AS (SELECT count(*) AS t FROM pos),
-         |pp AS (SELECT sum(c_ab) AS p FROM pc)
-         |SELECT pc.na, pc.nb, pc.c_ab,
-         |  CAST((pc.c_ab * tt.t * tt.t * 1000000)
-         |    // (oa.c * ob.c * pp.p) AS BIGINT) AS lift_ppm
-         |FROM pc JOIN occ oa ON oa.node = pc.na
-         |        JOIN occ ob ON ob.node = pc.nb, tt, pp
-         |WHERE pc.c_ab >= 2 ORDER BY na, nb""".stripMargin
-    },
-    "q236_ivf_split_hotcells" ->
-      """WITH cent AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-        |  FROM (SELECT vec_id, embedding FROM embeddings
-        |        ORDER BY vec_id LIMIT 8)),
-        |asg AS MATERIALIZED (
-        |  SELECT id, v, cell FROM (
-        |    SELECT e.vec_id AS id, e.embedding AS v, c.ci AS cell,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(e.embedding, c.cv),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(e.embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(c.cv,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        c.ci DESC) AS rn
-        |    FROM embeddings e CROSS JOIN cent c)
-        |  WHERE rn = 1),
-        |cnt AS MATERIALIZED (SELECT cell, count(*) AS n FROM asg GROUP BY cell),
-        |tot AS (SELECT count(*) AS nn FROM embeddings),
-        |hot AS (SELECT cell FROM cnt, tot WHERE n > nn // 8),
-        |hm AS MATERIALIZED (
-        |  SELECT a.cell, a.id, list_transform(a.v, x ->
-        |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS qv
-        |  FROM asg a JOIN hot USING (cell)),
-        |sa AS (SELECT cell, qv AS av FROM hm
-        |  QUALIFY row_number() OVER (PARTITION BY cell ORDER BY id) = 1),
-        |da AS MATERIALIZED (
-        |  SELECT hm.cell, hm.id, hm.qv,
-        |    list_aggregate(list_transform(range(64), i ->
-        |      (hm.qv[i+1] - sa.av[i+1]) * (hm.qv[i+1] - sa.av[i+1])),
-        |      'sum') AS dA
-        |  FROM hm JOIN sa USING (cell)),
-        |sp AS MATERIALIZED (
-        |  SELECT cell, row_number() OVER (ORDER BY cell) - 1 AS j
-        |  FROM (SELECT cell FROM da GROUP BY cell HAVING max(dA) > 0)),
-        |sb AS (SELECT cell, qv AS bv FROM da JOIN sp USING (cell)
-        |  QUALIFY row_number() OVER (PARTITION BY cell
-        |    ORDER BY dA DESC, id) = 1),
-        |re AS MATERIALIZED (
-        |  SELECT da.cell, da.id, da.qv,
-        |    CASE WHEN list_aggregate(list_transform(range(64), i ->
-        |        (da.qv[i+1] - sb.bv[i+1]) * (da.qv[i+1] - sb.bv[i+1])),
-        |        'sum') < da.dA
-        |      THEN 8 + sp.j ELSE da.cell END AS newcell
-        |  FROM da JOIN sb USING (cell) JOIN sp USING (cell)),
-        |hme AS (
-        |  SELECT newcell, min(cell) AS parent, i,
-        |    CAST(floor(sum(qv[i+1])::DOUBLE / count(*) + 0.5) AS BIGINT) AS m,
-        |    count(*) AS c
-        |  FROM re, range(64) t(i) GROUP BY newcell, i),
-        |hcen AS (
-        |  SELECT newcell AS cell, min(parent) AS parent_cell,
-        |    max(c) AS n_members, sum(abs(m)) AS chk
-        |  FROM hme GROUP BY newcell),
-        |cold AS (
-        |  SELECT c.ci AS cell, c.ci AS parent_cell,
-        |    COALESCE(cnt.n, 0) AS n_members,
-        |    list_sum(list_transform(c.cv, x ->
-        |      abs(CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)))) AS chk
-        |  FROM cent c LEFT JOIN cnt ON cnt.cell = c.ci
-        |  WHERE c.ci NOT IN (SELECT cell FROM sp))
-        |SELECT CAST(cell AS BIGINT) AS cell,
-        |  CAST(parent_cell AS BIGINT) AS parent_cell,
-        |  CAST(n_members AS BIGINT) AS n_members,
-        |  CAST(chk AS BIGINT) AS centroid_chk
-        |FROM (SELECT * FROM cold UNION ALL SELECT * FROM hcen)
-        |ORDER BY cell""".stripMargin,
-    "q235_coreset_fps" -> fpsOracleSql,
-    "q234_incdedup_bucketstats" -> incdedupOracleSql,
-    "q201_containment_canonical" ->
-      """WITH RECURSIVE t AS MATERIALIZED (SELECT doc_id, lang, source, n_chars,
-        |  list_distinct(list_transform(
-        |    generate_series(1, len(string_split_regex(lower(trim(text)), '\s+')) - 1),
-        |    i -> string_split_regex(lower(trim(text)), '\s+')[i] || ' ' ||
-        |         string_split_regex(lower(trim(text)), '\s+')[i+1])) AS tk
-        | FROM documents),
-        |j AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-        |   AND a.doc_id <> b.doc_id
-        | WHERE len(a.tk) > 0 AND len(b.tk) > 0
-        |   AND CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE) / len(a.tk)
-        |     >= 0.5),
-        |pr AS MATERIALIZED (SELECT DISTINCT least(id_a, id_b) AS id_a,
-        |  greatest(id_a, id_b) AS id_b FROM j),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |  UNION SELECT id_b, id_a FROM pr),
-        |reach(id, comp) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id),
-        |cl AS (SELECT id AS doc_id, min(comp) AS cluster_id
-        |  FROM reach GROUP BY id)
-        |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(min((100000000 - n_chars) * 10000000000 + d.doc_id)
-        |    % 10000000000 AS BIGINT) AS keep_id,
-        |  CAST(100000000 - min((100000000 - n_chars) * 10000000000 + d.doc_id)
-        |    // 10000000000 AS BIGINT) AS keep_chars
-        |FROM cl JOIN documents d USING (doc_id)
-        |GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
-
-    "q202_budget_mix" ->
-      """WITH s AS (SELECT source,
-        |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-        |    AS toks,
-        |  sum(n_chars) // count(*) AS avg_chars
-        | FROM documents GROUP BY 1),
-        |b AS (SELECT sum(toks) // 2 AS budget FROM s),
-        |c AS (SELECT source, toks, avg_chars,
-        |  sum(toks) OVER (ORDER BY avg_chars DESC, source
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        | FROM s)
-        |SELECT source, toks, CAST(avg_chars AS BIGINT) AS avg_chars,
-        |  CAST(greatest(0, least(toks, budget - (cum - toks))) AS BIGINT)
-        |    AS alloc,
-        |  CAST((greatest(0, least(toks, budget - (cum - toks))) * 1000000)
-        |    // toks AS BIGINT) AS alloc_ppm
-        |FROM c CROSS JOIN b ORDER BY source""".stripMargin,
-
-    "q198_band_join" ->
-      """SELECT v.user_id % 10 AS user_mod, CAST(count(*) AS BIGINT) AS n_pairs,
-        |  CAST(sum(CAST(round(p.value * 100) AS BIGINT)) AS BIGINT) AS total_c
-        |FROM (SELECT user_id, ts FROM events WHERE event_type = 'view') v
-        |JOIN (SELECT user_id, ts, value FROM events
-        |      WHERE event_type = 'purchase') p
-        |  ON v.user_id = p.user_id AND p.ts >= v.ts
-        |  AND epoch_us(p.ts) <= epoch_us(v.ts) + 1800000000
-        |GROUP BY 1 ORDER BY user_mod""".stripMargin,
-
-    "q199_winsorized" ->
-      """WITH src AS (SELECT l_returnflag,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
-        |pv AS (SELECT l_returnflag, v, count(*) AS w FROM src GROUP BY 1, 2),
-        |c AS (SELECT l_returnflag, v,
-        |  sum(w) OVER (PARTITION BY l_returnflag ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY l_returnflag) AS tw FROM pv),
-        |cuts AS (SELECT l_returnflag,
-        |  min(CASE WHEN cw * 1000000 >= 50000 * tw THEN v END) AS lo,
-        |  min(CASE WHEN cw * 1000000 >= 950000 * tw THEN v END) AS hi
-        |  FROM c GROUP BY 1)
-        |SELECT s.l_returnflag, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CASE WHEN s.v < lo OR s.v > hi THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_clipped,
-        |  CAST(max(lo) AS BIGINT) AS lo, CAST(max(hi) AS BIGINT) AS hi,
-        |  CAST(sum(s.v) AS BIGINT) AS sum_raw,
-        |  CAST(sum(greatest(lo, least(hi, s.v))) AS BIGINT) AS sum_wins
-        |FROM src s JOIN cuts USING (l_returnflag)
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-
-    "q200_harmonic" -> {
-      val rounds = (1 to 2).map { k =>
-        s"""d$k AS MATERIALIZED (
-           |  SELECT src, id, min(dist) AS dist FROM (
-           |    SELECT src, id, dist FROM d${k - 1}
-           |    UNION ALL
-           |    SELECT d.src, e.dst AS id, d.dist + 1 AS dist
-           |    FROM e JOIN d${k - 1} d ON d.id = e.src)
-           |  GROUP BY src, id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |sd AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS id FROM lineitem
-         |  WHERE l_partkey % 97 = 0 ORDER BY id LIMIT 16),
-         |d0 AS (SELECT id AS src, id, CAST(0 AS BIGINT) AS dist FROM sd),
-         |$rounds
-         |SELECT id, CAST(count(*) AS BIGINT) AS n_reached,
-         |  CAST(sum(1000000 // dist) AS BIGINT) AS harmonic_ppm
-         |FROM d2 WHERE dist > 0 GROUP BY id
-         |ORDER BY harmonic_ppm DESC, id LIMIT 100""".stripMargin
-    },
-
-    "q197_drift_plane" -> {
-      def loop(pfx: String, src: String, acc: String) = (1 to 2).map { k =>
-        val prev = if (k == 1) s"${pfx}0" else s"$pfx${k - 1}"
-        s"""${pfx}u$k AS MATERIALIZED (SELECT vid, sum($acc * v) AS u
-           |  FROM $src JOIN $prev USING (pos) GROUP BY vid),
-           |${pfx}mu$k AS MATERIALIZED (SELECT max(abs(u)) AS m FROM ${pfx}u$k),
-           |${pfx}un$k AS MATERIALIZED (SELECT vid, (u * 1000000) // m AS un
-           |  FROM ${pfx}u$k, ${pfx}mu$k),
-           |${pfx}w$k AS MATERIALIZED (SELECT pos, sum($acc * un) AS w
-           |  FROM $src JOIN ${pfx}un$k USING (vid) GROUP BY pos),
-           |${pfx}mw$k AS MATERIALIZED (SELECT max(abs(w)) AS m FROM ${pfx}w$k),
-           |$pfx$k AS MATERIALIZED (SELECT pos, (w * 1000000) // m AS v
-           |  FROM ${pfx}w$k, ${pfx}mw$k)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH q AS MATERIALIZED (
-         |  SELECT vec_id AS vid,
-         |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
-         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000.0 + 0.5)
-         |      AS BIGINT) AS qx
-         |  FROM embeddings),
-         |a0 AS MATERIALIZED (SELECT DISTINCT pos, CAST(1000000 AS BIGINT) AS v FROM q),
-         |${loop("a", "q", "qx")},
-         |g AS MATERIALIZED (SELECT sum(v * v) AS g FROM a2),
-         |pj AS MATERIALIZED (SELECT vid, sum(qx * v) AS p
-         |  FROM q JOIN a2 USING (pos) GROUP BY vid),
-         |r AS MATERIALIZED (SELECT q.vid, q.pos,
-         |  CAST(qx AS HUGEINT) * g.g - CAST(pj.p AS HUGEINT) * a2.v AS qr
-         |  FROM q JOIN pj USING (vid) JOIN a2 USING (pos) CROSS JOIN g),
-         |b0 AS MATERIALIZED (SELECT DISTINCT pos, CAST(1000000 AS BIGINT) AS v FROM r),
-         |${loop("b", "r", "qr")}
-         |SELECT a2.pos, CAST(a2.v AS BIGINT) AS v1, CAST(b2.v AS BIGINT) AS v2
-         |FROM a2 JOIN b2 USING (pos) ORDER BY a2.pos""".stripMargin
-    },
-
-    "q193_ngram_novelty" ->
-      """WITH tk AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS t0 FROM documents),
-        |dg AS (SELECT doc_id,
-        |  unnest(list_distinct(list_transform(generate_series(1, len(t0) - 1),
-        |    i -> ('0x' || substr(md5(t0[i] || ' ' || t0[i+1]), 1, 8))::BIGINT
-        |      % 2147483647))) AS g
-        | FROM tk),
-        |fs AS (SELECT doc_id, g,
-        |  min(doc_id) OVER (PARTITION BY g) AS first_id FROM dg)
-        |SELECT doc_id // 50 AS bucket, CAST(count(*) AS BIGINT) AS n_grams,
-        |  CAST(sum(CASE WHEN doc_id = first_id THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_new,
-        |  CAST((sum(CASE WHEN doc_id = first_id THEN 1 ELSE 0 END) * 1000000)
-        |    // count(*) AS BIGINT) AS novelty_ppm
-        |FROM fs GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q194_table_checksum" ->
-      """WITH ho AS (SELECT ('0x' || substr(md5(
-        |    concat_ws('|', o_orderkey, o_custkey, o_orderstatus)), 1, 8))::BIGINT
-        |    AS h FROM orders),
-        |hl AS (SELECT ('0x' || substr(md5(concat_ws('|', l_orderkey,
-        |    l_linenumber, l_partkey, l_suppkey)), 1, 8))::BIGINT AS h
-        |  FROM lineitem),
-        |hc AS (SELECT ('0x' || substr(md5(
-        |    concat_ws('|', c_custkey, c_nationkey)), 1, 8))::BIGINT AS h
-        |  FROM customer)
-        |SELECT * FROM (
-        |  SELECT 'orders' AS tbl, CAST(count(*) AS BIGINT) AS n_rows,
-        |    CAST(bit_xor(h) AS BIGINT) AS xor_sig,
-        |    CAST(sum(h) % 2147483647 AS BIGINT) AS sum_sig FROM ho
-        |  UNION ALL
-        |  SELECT 'lineitem', CAST(count(*) AS BIGINT),
-        |    CAST(bit_xor(h) AS BIGINT),
-        |    CAST(sum(h) % 2147483647 AS BIGINT) FROM hl
-        |  UNION ALL
-        |  SELECT 'customer', CAST(count(*) AS BIGINT),
-        |    CAST(bit_xor(h) AS BIGINT),
-        |    CAST(sum(h) % 2147483647 AS BIGINT) FROM hc)
-        |ORDER BY tbl""".stripMargin,
-
-    "q195_chi2_mix" ->
-      """WITH ob AS (SELECT lang AS r, source AS c, count(*) AS o
-        |  FROM documents
-        |  WHERE lang IS NOT NULL AND source IS NOT NULL GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o) AS rt FROM ob GROUP BY 1),
-        |ct AS (SELECT c, sum(o) AS ct FROM ob GROUP BY 1),
-        |m AS (SELECT (SELECT sum(rt) FROM rt) AS n,
-        |  (SELECT count(*) FROM rt) AS nr,
-        |  (SELECT count(*) FROM ct) AS nc),
-        |cells AS (SELECT rt.rt, ct.ct, coalesce(ob.o, 0) AS o
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN ob ON ob.r = rt.r AND ob.c = ct.c)
-        |SELECT CAST(max(m.n) AS BIGINT) AS n,
-        |  CAST(max(m.nr) AS BIGINT) AS n_row_cats,
-        |  CAST(max(m.nc) AS BIGINT) AS n_col_cats,
-        |  CAST(max((m.nr - 1) * (m.nc - 1)) AS BIGINT) AS dof,
-        |  CAST(sum(((o * m.n - rt * ct) * (o * m.n - rt * ct) * 1000000)
-        |    // (m.n * rt * ct)) AS BIGINT) AS chi2_ppm
-        |FROM cells CROSS JOIN m""".stripMargin,
-
-    "q203_tv_drift" ->
-      """WITH tk AS (SELECT source AS s,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        | FROM documents WHERE source IS NOT NULL),
-        |cnt AS (SELECT s, t, count(*) AS c FROM tk
-        |  WHERE t <> '' GROUP BY 1, 2),
-        |tt AS (SELECT t, sum(c) AS ct FROM cnt GROUP BY 1),
-        |st AS (SELECT s, sum(c) AS ns FROM cnt GROUP BY 1),
-        |m AS (SELECT CAST(sum(ct) AS HUGEINT) AS n FROM tt),
-        |grid AS (SELECT st.s, st.ns, tt.ct, coalesce(cnt.c, 0) AS c
-        |  FROM tt CROSS JOIN st
-        |  LEFT JOIN cnt ON cnt.t = tt.t AND cnt.s = st.s)
-        |SELECT s AS source, CAST(max(ns) AS BIGINT) AS n_tokens,
-        |  CAST((sum(abs(CAST(c AS HUGEINT) * m.n - CAST(ct AS HUGEINT) * ns))
-        |    * 1000000) // (2 * max(CAST(ns AS HUGEINT) * m.n)) AS BIGINT)
-        |    AS tv_ppm
-        |FROM grid CROSS JOIN m GROUP BY s ORDER BY source""".stripMargin,
-
-    "q204_equidepth_hist" -> {
-      val cutPpms = (1 until 8).map(k => k.toLong * 1000000L / 8)
-      val cutDefs = cutPpms.zipWithIndex.map { case (q, i) =>
-        s"min(CASE WHEN cw * 1000000 >= $q * tw THEN v END) AS c${i + 1}"
-      }.mkString(",\n        |  ")
-      val bucketSum = (1 to 7).map(i => s"(s.v > c$i)::BIGINT").mkString(" + ")
-      s"""WITH src AS (SELECT l_returnflag AS g,
-        |  CAST(round(l_extendedprice * 100) AS BIGINT) AS v FROM lineitem),
-        |pv AS (SELECT g, v, count(*) AS w FROM src GROUP BY 1, 2),
-        |c AS (SELECT g, v,
-        |  sum(w) OVER (PARTITION BY g ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw FROM pv),
-        |cuts AS (SELECT g,
-        |  $cutDefs
-        |  FROM c GROUP BY 1),
-        |b AS (SELECT s.g, $bucketSum AS bucket, s.v
-        |  FROM src s JOIN cuts USING (g)),
-        |agg AS (SELECT g, bucket, count(*) AS n, sum(v) AS total
-        |  FROM b GROUP BY 1, 2),
-        |grid AS (SELECT g, unnest(generate_series(0, 7)) AS bucket FROM cuts)
-        |SELECT grid.g AS l_returnflag, CAST(grid.bucket AS BIGINT) AS bucket,
-        |  CAST(coalesce(agg.n, 0) AS BIGINT) AS n,
-        |  CAST(coalesce(agg.total, 0) AS BIGINT) AS total
-        |FROM grid LEFT JOIN agg ON agg.g = grid.g AND agg.bucket = grid.bucket
-        |ORDER BY l_returnflag, bucket""".stripMargin
-    },
-
-    "q205_boilerplate" ->
-      """WITH d AS (SELECT doc_id, source,
-        |    CASE WHEN doc_id % 3 = 0 THEN text ||
-        |      '. Subscribe to our newsletter for updates.' ELSE text END
-        |      AS text FROM documents),
-        |sn AS (SELECT doc_id, source, trim(s) AS s FROM
-        |    (SELECT doc_id, source,
-        |       unnest(string_split_regex(text, '[.!?]+')) AS s
-        |     FROM d)),
-        |pdh AS (SELECT doc_id, source,
-        |    ('0x' || substr(md5(s), 1, 8))::BIGINT AS h,
-        |    sum(len(s)) AS chars
-        |  FROM sn WHERE s <> '' GROUP BY 1, 2, 3),
-        |fl AS (SELECT h FROM
-        |    (SELECT h, count(*) AS df FROM pdh GROUP BY 1) WHERE df >= 5),
-        |pd AS (SELECT doc_id, source, sum(chars) AS tot,
-        |    sum(CASE WHEN h IN (SELECT h FROM fl) THEN chars ELSE 0 END)
-        |      AS boiler
-        |  FROM pdh GROUP BY 1, 2)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(tot) AS BIGINT) AS total_chars,
-        |  CAST(sum(boiler) AS BIGINT) AS boiler_chars,
-        |  CAST(sum(CASE WHEN boiler * 2 > tot THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_mostly_boiler,
-        |  CAST((sum(boiler) * 1000000) // sum(tot) AS BIGINT) AS boiler_ppm
-        |FROM pd GROUP BY source ORDER BY source""".stripMargin,
-
-    "q206_cdc_chunks" ->
-      """WITH t AS (SELECT source,
-        |    string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |c AS (SELECT source,
-        |    list_concat(list_concat([CAST(0 AS BIGINT)],
-        |      list_filter(generate_series(CAST(1 AS BIGINT),
-        |          CAST(len(toks) AS BIGINT)),
-        |        i -> ('0x' || substr(md5(toks[i]), 1, 8))::BIGINT % 16 = 0)),
-        |      [CAST(len(toks) AS BIGINT)]) AS cuts, toks
-        |  FROM t),
-        |ch AS (SELECT source, unnest(list_transform(
-        |    generate_series(1, len(cuts) - 1),
-        |    j -> array_to_string(toks[cuts[j] + 1 : cuts[j + 1]], ' ')))
-        |    AS chunk
-        |  FROM c),
-        |h AS (SELECT source, ('0x' || substr(md5(chunk), 1, 8))::BIGINT AS h
-        |  FROM ch WHERE chunk <> ''),
-        |ph AS (SELECT source, h, count(*) AS c FROM h GROUP BY 1, 2)
-        |SELECT source, CAST(sum(c) AS BIGINT) AS n_chunks,
-        |  CAST(count(*) AS BIGINT) AS n_distinct,
-        |  CAST((sum(c) - count(*)) * 1000000 // sum(c) AS BIGINT) AS dup_ppm
-        |FROM ph GROUP BY 1 ORDER BY source""".stripMargin,
-
-    "q207_knn_label_consistency" ->
-      """WITH nc AS (
-        |  SELECT 1 << (length(bin(count(*))) // 2) AS n FROM embeddings),
-        |cent AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-        |  FROM embeddings
-        |  QUALIFY row_number() OVER (ORDER BY vec_id) <= (SELECT n FROM nc)),
-        |asg AS (
-        |  SELECT id, v, lab, cell FROM (
-        |    SELECT e.vec_id AS id, e.embedding AS v,
-        |      CAST(e.label AS BIGINT) AS lab, c.ci AS cell,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(e.embedding, c.cv),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(e.embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(c.cv,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        c.ci DESC) AS rn
-        |    FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-        |knn AS (
-        |  SELECT qid, qlab, nlab FROM (
-        |    SELECT x.id AS qid, x.lab AS qlab, y.lab AS nlab,
-        |      row_number() OVER (PARTITION BY x.id ORDER BY
-        |        list_sum(list_transform(list_zip(x.v, y.v),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(x.v,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(y.v,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        y.id ASC) AS rnk
-        |    FROM asg x JOIN asg y ON x.cell = y.cell AND x.id <> y.id)
-        |  WHERE rnk <= 5),
-        |pv AS (SELECT qid, qlab, count(*) AS kn,
-        |    sum(CASE WHEN nlab = qlab THEN 1 ELSE 0 END) AS agree
-        |  FROM knn GROUP BY 1, 2)
-        |SELECT qlab AS label, CAST(count(*) AS BIGINT) AS n_vecs,
-        |  CAST(sum((agree * 1000000) // kn) // count(*) AS BIGINT)
-        |    AS avg_agree_ppm,
-        |  CAST(sum(CASE WHEN agree * 2 < kn THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_suspect
-        |FROM pv GROUP BY 1 ORDER BY label""".stripMargin,
-
-    "q208_landmark_reach" -> {
-      val rounds = (1 to 2).map { k =>
-        s"""d$k AS MATERIALIZED (
-           |  SELECT src, id, min(dist) AS dist FROM (
-           |    SELECT src, id, dist FROM d${k - 1}
-           |    UNION ALL
-           |    SELECT d.src, e.dst AS id, d.dist + 1 AS dist
-           |    FROM e JOIN d${k - 1} d ON d.id = e.src)
-           |  GROUP BY src, id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |sd AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS id FROM lineitem
-         |  WHERE l_partkey % 97 = 0 ORDER BY id LIMIT 16),
-         |d0 AS (SELECT id AS src, id, CAST(0 AS BIGINT) AS dist FROM sd),
-         |$rounds
-         |SELECT src, dist, CAST(count(*) AS BIGINT) AS n_nodes
-         |FROM d2 WHERE dist > 0 GROUP BY src, dist
-         |ORDER BY src, dist""".stripMargin
-    },
-
-    "q209_snapshot_diff" ->
-      """WITH o AS (SELECT o_orderkey AS k, o_custkey, o_orderstatus,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS price_c
-        |  FROM orders),
-        |a AS (SELECT k, o_custkey, o_orderstatus,
-        |    CASE WHEN k % 7 = 0 THEN price_c + 1 ELSE price_c END AS price_c
-        |  FROM o WHERE k % 13 <> 0
-        |  UNION ALL
-        |  SELECT k + 1000000000, o_custkey, o_orderstatus, price_c
-        |  FROM o WHERE k % 17 = 0),
-        |hb AS (SELECT k, ('0x' || substr(md5(concat_ws('|',
-        |    o_custkey, o_orderstatus, price_c)), 1, 8))::BIGINT AS hb FROM o),
-        |ha AS (SELECT k, ('0x' || substr(md5(concat_ws('|',
-        |    o_custkey, o_orderstatus, price_c)), 1, 8))::BIGINT AS ha FROM a)
-        |SELECT
-        |  CAST(sum(CASE WHEN hb IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_added,
-        |  CAST(sum(CASE WHEN ha IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_removed,
-        |  CAST(sum(CASE WHEN hb IS NOT NULL AND ha IS NOT NULL
-        |    AND hb <> ha THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-        |  CAST(sum(CASE WHEN hb = ha THEN 1 ELSE 0 END) AS BIGINT) AS n_same
-        |FROM hb FULL OUTER JOIN ha USING (k)""".stripMargin,
-
-    "q210_mad_outliers" ->
-      """WITH src AS (SELECT event_type AS g,
-        |    CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |pv1 AS (SELECT g, v, count(*) AS w FROM src GROUP BY 1, 2),
-        |c1 AS (SELECT g, v,
-        |  sum(w) OVER (PARTITION BY g ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw FROM pv1),
-        |med AS (SELECT g,
-        |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN v END) AS med
-        |  FROM c1 GROUP BY 1),
-        |dev AS (SELECT s.g, s.v, abs(s.v - med.med) AS d, med.med
-        |  FROM src s JOIN med USING (g)),
-        |pv2 AS (SELECT g, d, count(*) AS w FROM dev GROUP BY 1, 2),
-        |c2 AS (SELECT g, d,
-        |  sum(w) OVER (PARTITION BY g ORDER BY d
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw FROM pv2),
-        |mad AS (SELECT g,
-        |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN d END) AS mad
-        |  FROM c2 GROUP BY 1)
-        |SELECT dev.g AS event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(max(dev.med) AS BIGINT) AS med,
-        |  CAST(max(mad.mad) AS BIGINT) AS mad,
-        |  CAST(sum(CASE WHEN dev.d > 3 * mad.mad THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_outliers
-        |FROM dev JOIN mad USING (g)
-        |GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    // q159's two-round integer-Lloyd replay, extended with the
-    // silhouette arithmetic over the final centroid set. sc feeds two
-    // branches (own, oth) — MATERIALIZED per the q197 CTE lesson.
-    "q211_cluster_silhouette" ->
-      """WITH q AS MATERIALIZED (
-        |  SELECT vec_id, list_transform(embedding, x ->
-        |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
-        |  FROM embeddings),
-        |c0 AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cl, v
-        |  FROM q ORDER BY vec_id LIMIT 8),
-        |a1 AS MATERIALIZED (
-        |  SELECT vec_id, v, cl FROM (
-        |    SELECT q.vec_id, q.v, c.cl,
-        |      list_aggregate(list_transform(range(64), i ->
-        |        (q.v[i+1] - c.v[i+1]) * (q.v[i+1] - c.v[i+1])), 'sum') AS d2
-        |    FROM q, c0 c)
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY d2, cl) = 1),
-        |m1 AS (
-        |  SELECT cl, i,
-        |    CAST(floor(sum(v[i+1])::DOUBLE / count(*) + 0.5) AS BIGINT) AS m
-        |  FROM a1, range(64) t(i) GROUP BY cl, i),
-        |c1n AS (SELECT cl, list(m ORDER BY i) AS v FROM m1 GROUP BY cl),
-        |c1 AS MATERIALIZED (SELECT c0.cl, COALESCE(c1n.v, c0.v) AS v
-        |       FROM c0 LEFT JOIN c1n USING (cl)),
-        |sc AS MATERIALIZED (
-        |  SELECT q.vec_id, c.cl,
-        |    list_aggregate(list_transform(range(64), i ->
-        |      (q.v[i+1] - c.v[i+1]) * (q.v[i+1] - c.v[i+1])), 'sum') AS d2
-        |  FROM q, c1 c),
-        |own AS (SELECT vec_id, cl, d2 AS a FROM sc
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY d2, cl) = 1),
-        |oth AS (SELECT sc.vec_id, min(sc.d2) AS b FROM sc
-        |  JOIN own ON sc.vec_id = own.vec_id AND sc.cl <> own.cl
-        |  GROUP BY 1),
-        |sp AS (SELECT own.cl,
-        |    CASE WHEN greatest(a, b) = 0 THEN 0
-        |         ELSE ((b - a) * 1000000) // greatest(a, b) END AS sp
-        |  FROM own JOIN oth USING (vec_id))
-        |SELECT CAST(cl AS BIGINT) AS cluster, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(sp) // count(*) AS BIGINT) AS avg_sil_ppm
-        |FROM sp GROUP BY cl ORDER BY cluster""".stripMargin,
-
-    "q212_retention_cohorts" ->
-      """WITH uw AS (SELECT DISTINCT user_id,
-        |    epoch_us(ts) // 604800000000 AS wk FROM events),
-        |f AS (SELECT user_id, min(wk) AS cohort FROM uw GROUP BY 1)
-        |SELECT cohort, wk - cohort AS "offset",
-        |  CAST(count(*) AS BIGINT) AS n_users
-        |FROM uw JOIN f USING (user_id)
-        |GROUP BY 1, 2 ORDER BY cohort, "offset"""".stripMargin,
-
-    "q213_neighbor_agg" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-        |ed AS (SELECT a AS src, b AS dst FROM e0
-        |  UNION ALL SELECT b, a FROM e0),
-        |deg AS (SELECT src AS id, count(*) AS deg FROM ed GROUP BY 1)
-        |SELECT ed.src AS id, CAST(count(*) AS BIGINT) AS deg,
-        |  CAST(sum(d2.deg) AS BIGINT) AS sum_nbr_deg,
-        |  CAST(max(d2.deg) AS BIGINT) AS max_nbr_deg
-        |FROM ed JOIN deg d2 ON d2.id = ed.dst
-        |GROUP BY 1 ORDER BY sum_nbr_deg DESC, id LIMIT 100""".stripMargin,
-
-    "q214_split_manifest" ->
-      """WITH d AS (SELECT source, text,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      % 1000000 AS p FROM documents)
-        |SELECT source,
-        |  CASE WHEN p < 800000 THEN 'train'
-        |       WHEN p < 900000 THEN 'val' ELSE 'test' END AS split,
-        |  CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(string_split_regex(trim(text), '\s+'))) AS BIGINT)
-        |    AS n_tokens
-        |FROM d GROUP BY 1, 2 ORDER BY source, split""".stripMargin,
-
-    "q215_quantile_drift" -> {
-      def half(p: Int) =
-        s"""pv$p AS (SELECT g, v, count(*) AS w FROM src
-           |  WHERE par = $p GROUP BY 1, 2),
-           |c$p AS (SELECT g, v,
-           |  sum(w) OVER (PARTITION BY g ORDER BY v
-           |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-           |  sum(w) OVER (PARTITION BY g) AS tw FROM pv$p),
-           |q$p AS (SELECT g,
-           |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN v END) AS p50_$p,
-           |  min(CASE WHEN cw * 1000000 >= 900000 * tw THEN v END) AS p90_$p
-           |  FROM c$p GROUP BY 1)""".stripMargin
-      s"""WITH src AS (SELECT event_type AS g,
-         |    CAST(round(value * 100) AS BIGINT) AS v,
-         |    (epoch_us(ts) // 604800000000) % 2 AS par FROM events),
-         |${half(0)},
-         |${half(1)}
-         |SELECT g AS event_type,
-         |  CAST(p50_0 AS BIGINT) AS p50_0, CAST(p90_0 AS BIGINT) AS p90_0,
-         |  CAST(p50_1 AS BIGINT) AS p50_1, CAST(p90_1 AS BIGINT) AS p90_1,
-         |  CAST(CASE WHEN p50_0 = 0 THEN NULL
-         |    ELSE (abs(p50_1 - p50_0) * 1000000) // p50_0 END AS BIGINT)
-         |    AS p50_drift_ppm,
-         |  CAST(CASE WHEN p90_0 = 0 THEN NULL
-         |    ELSE (abs(p90_1 - p90_0) * 1000000) // p90_0 END AS BIGINT)
-         |    AS p90_drift_ppm
-         |FROM q0 JOIN q1 USING (g) ORDER BY event_type""".stripMargin
-    },
-
-    "q216_loghist_quantiles" ->
-      """WITH src AS (SELECT l_returnflag AS g,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-        |  FROM lineitem),
-        |hb AS (SELECT g, v,
-        |    (length(bin(v)) - 1) * 4 +
-        |    ((v >> greatest(length(bin(v)) - 3, 0)) & 3) AS b
-        |  FROM src WHERE v >= 1),
-        |hist AS (SELECT g, b, count(*) AS c, min(v) AS mn
-        |  FROM hb GROUP BY 1, 2),
-        |cum AS (SELECT g, b, mn,
-        |  sum(c) OVER (PARTITION BY g ORDER BY b
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(c) OVER (PARTITION BY g) AS tw FROM hist)
-        |SELECT g AS l_returnflag, CAST(max(tw) AS BIGINT) AS n,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 500000 * tw THEN mn END)
-        |    AS BIGINT) AS est_p500000,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 990000 * tw THEN mn END)
-        |    AS BIGINT) AS est_p990000
-        |FROM cum GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-
-    "q217_link_prediction" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-        |ed AS (SELECT a AS src, b AS dst FROM e0
-        |  UNION ALL SELECT b, a FROM e0),
-        |deg AS (SELECT src AS id, count(*) AS deg FROM ed GROUP BY 1),
-        |legs AS (SELECT ed.src AS v, ed.dst, dv.deg AS dvd
-        |  FROM ed JOIN deg dv ON dv.id = ed.src AND dv.deg <= 64),
-        |wed AS (SELECT x.dst AS a, y.dst AS b, count(*) AS common,
-        |    sum(1000000 // x.dvd) AS ra_ppm
-        |  FROM legs x JOIN legs y ON x.v = y.v AND x.dst < y.dst
-        |  GROUP BY 1, 2),
-        |ne AS (SELECT wed.a, wed.b, wed.common, wed.ra_ppm
-        |  FROM wed LEFT JOIN e0 ON e0.a = wed.a AND e0.b = wed.b
-        |  WHERE e0.a IS NULL)
-        |SELECT ne.a AS id_a, ne.b AS id_b,
-        |  CAST(common AS BIGINT) AS common,
-        |  CAST(ra_ppm AS BIGINT) AS ra_ppm,
-        |  CAST((common * 1000000) // (da.deg + db.deg - common) AS BIGINT)
-        |    AS jaccard_ppm
-        |FROM ne JOIN deg da ON da.id = ne.a JOIN deg db ON db.id = ne.b
-        |ORDER BY ra_ppm DESC, id_a, id_b LIMIT 100""".stripMargin,
-
-    // q28's portable minhash31 replay, split store-vs-batch: candidates
-    // = packed r=2 band-slice equality across the split, estimate =
-    // agreeing components / 64 (exact in binary).
-    "q218_incremental_neardup" -> incdedupOracleSql,
-
-    "q196_stream_dedup" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_c
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-
-    "q192_activity_heatmap" ->
-      """SELECT (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
-        |  (epoch_us(ts) // 3600000000) % 24 AS hr,
-        |  CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |    AS total_c
-        |FROM events GROUP BY 1, 2 ORDER BY dow, hr""".stripMargin,
-
-    "q189_token_gini" ->
-      """WITH tk AS (SELECT doc_id,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS t
-        | FROM documents),
-        |tf AS (SELECT doc_id, t, count(*) AS c FROM tk
-        |  WHERE t <> '' GROUP BY 1, 2),
-        |sh AS (SELECT doc_id, c,
-        |  sum(c) OVER (PARTITION BY doc_id) AS n FROM tf)
-        |SELECT doc_id, CAST(max(n) AS BIGINT) AS n_tokens,
-        |  CAST(count(*) AS BIGINT) AS n_types,
-        |  CAST(1000000 - sum((((c * 1000000) // n) * ((c * 1000000) // n))
-        |    // 1000000) AS BIGINT) AS gini_ppm
-        |FROM sh GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q190_skew_report" ->
-      """WITH c AS (SELECT l_partkey AS k, count(*) AS cnt
-        |  FROM lineitem GROUP BY 1),
-        |t AS (SELECT sum(cnt) AS n FROM c),
-        |top AS (SELECT k, cnt, (cnt * 1000000) // n AS share_ppm
-        |  FROM c, t ORDER BY cnt DESC, k LIMIT 50)
-        |SELECT k, CAST(cnt AS BIGINT) AS cnt,
-        |  CAST(share_ppm AS BIGINT) AS share_ppm
-        |FROM top ORDER BY k""".stripMargin,
-
-    // q100's sessionization, per-session micro duration, then the q146
-    // cumulative-weight quantile pattern on one global group.
-    "q191_session_quantiles" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, epoch_us(ts) AS tus,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, tus,
-        |    sum(CASE WHEN pts IS NOT NULL AND ts - pts > INTERVAL 1 HOUR
-        |             THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-        |      AS session_id
-        |  FROM x),
-        |d AS (SELECT 'all' AS g, max(tus) - min(tus) AS v,
-        |    CAST(1 AS BIGINT) AS w
-        |  FROM sess GROUP BY user_id, session_id),
-        |pv AS (SELECT g, v, CAST(sum(w) AS BIGINT) AS w FROM d
-        |  GROUP BY 1, 2),
-        |cu AS (SELECT g, v,
-        |    CAST(sum(w) OVER (PARTITION BY g ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cw,
-        |    CAST(sum(w) OVER (PARTITION BY g) AS BIGINT) AS tw
-        |  FROM pv)
-        |SELECT g,
-        |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN v END) AS p500000,
-        |  min(CASE WHEN cw * 1000000 >= 900000 * tw THEN v END) AS p900000,
-        |  max(tw) AS total_w
-        |FROM cu GROUP BY g ORDER BY g""".stripMargin,
-
-    "q188_dataset_card" ->
-      """SELECT
-        |  (SELECT CAST(count(*) AS BIGINT) FROM documents) AS n_docs,
-        |  (SELECT CAST(sum(len(string_split_regex(trim(text), '\s+')))
-        |     AS BIGINT) FROM documents) AS total_tokens,
-        |  (SELECT CAST(count(DISTINCT lang) AS BIGINT) FROM documents)
-        |    AS n_langs,
-        |  (SELECT CAST(count(DISTINCT source) AS BIGINT) FROM documents)
-        |    AS n_sources,
-        |  (SELECT CAST(count(*) - count(DISTINCT md5(text)) AS BIGINT)
-        |     FROM documents) AS redundant_docs""".stripMargin,
-
-    // q65's unrolled rank rounds, diffed between iterations 2 and 3.
-    "q186_pr_convergence" -> {
-      val iters = (1 to 3).map { k =>
-        s"""r$k AS (
-           |  SELECT n.id, CAST(150000 + (850000 * COALESCE(s.c, 0)) // 1000000
-           |    AS BIGINT) AS rank
-           |  FROM n LEFT JOIN (
-           |    SELECT e.dst AS id, CAST(sum(r.rank // d.deg) AS BIGINT) AS c
-           |    FROM e JOIN r${k - 1} r ON r.id = e.src
-           |           JOIN deg d ON d.id = e.src
-           |    GROUP BY e.dst) s ON s.id = n.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |n AS (SELECT DISTINCT src AS id FROM e
-         |      UNION SELECT DISTINCT dst FROM e),
-         |deg AS (SELECT src AS id, count(*) AS deg FROM e GROUP BY src),
-         |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM n),
-         |$iters
-         |SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-         |  CAST(sum(abs(r3.rank - r2.rank)) AS BIGINT) AS l1_delta,
-         |  CAST(max(abs(r3.rank - r2.rank)) AS BIGINT) AS max_delta
-         |FROM r2 JOIN r3 USING (id)""".stripMargin
-    },
-
-    // q159's assignment CTEs joined to labels, majority per cluster.
-    "q187_cluster_purity" ->
-      """WITH q AS (
-        |  SELECT vec_id, list_transform(embedding, x ->
-        |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
-        |  FROM embeddings),
-        |c0 AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cl, v
-        |  FROM q ORDER BY vec_id LIMIT 8),
-        |a1 AS (
-        |  SELECT vec_id, v, cl FROM (
-        |    SELECT q.vec_id, q.v, c.cl,
-        |      list_aggregate(list_transform(range(64), i ->
-        |        (q.v[i+1] - c.v[i+1]) * (q.v[i+1] - c.v[i+1])), 'sum') AS d2
-        |    FROM q, c0 c)
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY d2, cl) = 1),
-        |m1 AS (
-        |  SELECT cl, i,
-        |    CAST(floor(sum(v[i+1])::DOUBLE / count(*) + 0.5) AS BIGINT) AS m
-        |  FROM a1, range(64) t(i) GROUP BY cl, i),
-        |c1n AS (SELECT cl, list(m ORDER BY i) AS v FROM m1 GROUP BY cl),
-        |c1 AS (SELECT c0.cl, COALESCE(c1n.v, c0.v) AS v
-        |       FROM c0 LEFT JOIN c1n USING (cl)),
-        |a2 AS (
-        |  SELECT vec_id, cl FROM (
-        |    SELECT q.vec_id, c.cl,
-        |      list_aggregate(list_transform(range(64), i ->
-        |        (q.v[i+1] - c.v[i+1]) * (q.v[i+1] - c.v[i+1])), 'sum') AS d2
-        |    FROM q, c1 c)
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY d2, cl) = 1),
-        |j AS (SELECT a2.cl AS cluster, CAST(e.label AS BIGINT) AS label
-        |  FROM a2 JOIN embeddings e USING (vec_id)),
-        |g AS (SELECT cluster, label, count(*) AS cnt
-        |  FROM j GROUP BY 1, 2),
-        |t AS (SELECT cluster, label, cnt,
-        |    sum(cnt) OVER (PARTITION BY cluster) AS n,
-        |    row_number() OVER (PARTITION BY cluster
-        |      ORDER BY cnt DESC, label) AS rk
-        |  FROM g)
-        |SELECT CAST(cluster AS BIGINT) AS cluster, CAST(n AS BIGINT) AS n,
-        |  label AS top_label, CAST(cnt AS BIGINT) AS top_n,
-        |  CAST((cnt * 1000000) // n AS BIGINT) AS purity_ppm
-        |FROM t WHERE rk = 1 ORDER BY cluster""".stripMargin,
-
-    "q185_ri_audit" ->
-      """SELECT 'lineitem->orders' AS relation,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_child,
-        |  (SELECT CAST(count(*) AS BIGINT) FROM lineitem l
-        |   WHERE NOT EXISTS (SELECT 1 FROM orders o
-        |                     WHERE o.o_orderkey = l.l_orderkey))
-        |    AS n_orphans
-        |UNION ALL
-        |SELECT 'lineitem->part',
-        |  (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-        |  (SELECT CAST(count(*) AS BIGINT) FROM lineitem l
-        |   WHERE NOT EXISTS (SELECT 1 FROM part p
-        |                     WHERE p.p_partkey = l.l_partkey))
-        |UNION ALL
-        |SELECT 'orders->customer',
-        |  (SELECT CAST(count(*) AS BIGINT) FROM orders),
-        |  (SELECT CAST(count(*) AS BIGINT) FROM orders o
-        |   WHERE NOT EXISTS (SELECT 1 FROM customer c
-        |                     WHERE c.c_custkey = o.o_custkey))
-        |ORDER BY relation""".stripMargin,
-
-    "q184_item_sim" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |deg AS (SELECT p AS id, count(*) AS d FROM os GROUP BY p),
-        |pw AS (SELECT x.p AS a, y.p AS b, count(*) AS w
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |sc AS (SELECT a, b, CAST(w AS BIGINT) AS w,
-        |    CAST((w * w * 1000000) // (da.d * db.d) AS BIGINT) AS cos2_ppm
-        |  FROM pw JOIN deg da ON da.id = pw.a JOIN deg db ON db.id = pw.b),
-        |top AS (SELECT * FROM sc
-        |  ORDER BY cos2_ppm DESC, a, b LIMIT 200)
-        |SELECT a, b, w, cos2_ppm FROM top ORDER BY a, b""".stripMargin,
-
-    // q165's winnow-pair pipeline closed by a recursive reachability
-    // CTE (the q48 closure pattern), min id as cluster label.
-    "q183_clone_clusters" ->
-      """WITH RECURSIVE tk AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS t0 FROM documents),
-        |gi AS (SELECT doc_id, t0,
-        |  unnest(generate_series(1, len(t0) - 2)) AS i
-        | FROM tk WHERE len(t0) >= 3),
-        |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |  ('0x' || substr(md5(t0[i] || ' ' || t0[i+1] || ' ' || t0[i+2]),
-        |    1, 8))::BIGINT % 2147483647 AS h
-        | FROM gi),
-        |kk AS (SELECT doc_id, pos,
-        |  min(h * 4294967296 + (4294967295 - pos)) OVER (
-        |    PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mk
-        | FROM g),
-        |fp AS (SELECT DISTINCT doc_id AS id, mk // 4294967296 AS fp
-        |  FROM kk WHERE pos >= 3),
-        |kept AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 8),
-        |bl AS MATERIALIZED (
-        |  SELECT f.id, f.fp FROM fp f JOIN kept USING (fp)),
-        |pr AS (SELECT x.id AS id_a, y.id AS id_b
-        |  FROM bl x JOIN bl y ON x.fp = y.fp AND x.id < y.id
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |  UNION SELECT id_b, id_a FROM pr),
-        |reach(id, comp) AS (
-        |  SELECT doc_id, doc_id FROM documents
-        |  UNION
-        |  SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id)
-        |SELECT id AS doc_id, min(comp) AS cluster_id
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    // The q149 exact-moment Pearson over edge endpoint degrees.
-    "q182_assortativity" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-        |deg AS (
-        |  SELECT id, count(*) AS d FROM (
-        |    SELECT a AS id FROM e0 UNION ALL SELECT b AS id FROM e0)
-        |  GROUP BY id),
-        |d2 AS (SELECT a, b FROM e0 UNION ALL SELECT b, a FROM e0),
-        |t AS (SELECT 'all' AS g, da.d AS x, db.d AS y
-        |  FROM d2 JOIN deg da ON da.id = d2.a JOIN deg db ON db.id = d2.b),
-        |m AS (SELECT g, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-        |    sum(CAST(y AS HUGEINT) * y) AS syy,
-        |    sum(CAST(x AS HUGEINT) * y) AS sxy
-        |  FROM t GROUP BY 1)
-        |SELECT g, CAST(n AS BIGINT) AS n,
-        |  CAST(sxy * n - sx * sy AS DOUBLE) /
-        |    (sqrt(CAST(sxx * n - sx * sx AS DOUBLE)) *
-        |     sqrt(CAST(syy * n - sy * sy AS DOUBLE))) AS r
-        |FROM m
-        |WHERE sxx * n - sx * sx > 0 AND syy * n - sy * sy > 0
-        |ORDER BY g""".stripMargin,
-
-    "q181_decay_score" ->
-      """WITH ev AS (SELECT user_id, epoch_us(ts) // 86400000000 AS day,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        |m AS (SELECT max(day) AS maxd FROM ev)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(c >> CAST(least(maxd - day, 62) AS INT)) AS BIGINT)
-        |    AS decayed_c
-        |FROM ev, m GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q180_originality" -> {
-      val cat = (0 until 3).map(k => if (k == 0) "t0[i]" else s"t0[i+$k]")
-        .mkString(" || ' ' || ")
-      s"""WITH tk AS (SELECT doc_id,
-         |  string_split_regex(lower(trim(text)), '\\s+') AS t0 FROM documents),
-         |dg AS (SELECT doc_id,
-         |  unnest(list_distinct(list_transform(generate_series(1, len(t0) - 2),
-         |    i -> ('0x' || substr(md5($cat), 1, 8))::BIGINT % 2147483647)))
-         |    AS g
-         | FROM tk WHERE len(t0) >= 3),
-         |df AS (SELECT g, count(*) AS df FROM dg GROUP BY g)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |  CAST(sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS n_unique,
-         |  CAST((sum(CASE WHEN df = 1 THEN 1 ELSE 0 END) * 1000000)
-         |    // count(*) AS BIGINT) AS originality_ppm
-         |FROM dg JOIN df USING (g)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    },
-
-    "q179_gini_profile" ->
-      """WITH u AS (
-        |  SELECT 'status' AS k, o_orderstatus AS value FROM orders
-        |  UNION ALL
-        |  SELECT 'priority', o_orderpriority FROM orders
-        |  UNION ALL
-        |  SELECT 'cust', CAST(o_custkey AS VARCHAR) FROM orders),
-        |c AS (SELECT k, value, count(*) AS cnt FROM u GROUP BY 1, 2),
-        |t AS (SELECT k, sum(cnt) AS n, count(*) AS n_distinct,
-        |  max(cnt) AS top FROM c GROUP BY 1)
-        |SELECT c.k, CAST(t.n AS BIGINT) AS n,
-        |  CAST(t.n_distinct AS BIGINT) AS n_distinct,
-        |  CAST((t.top * 1000000) // t.n AS BIGINT) AS top_share_ppm,
-        |  CAST(1000000 - sum((((cnt * 1000000) // t.n)
-        |    * ((cnt * 1000000) // t.n)) // 1000000) AS BIGINT) AS gini_ppm
-        |FROM c JOIN t USING (k)
-        |GROUP BY c.k, t.n, t.n_distinct, t.top
-        |ORDER BY c.k""".stripMargin,
-
-    "q178_butterflies" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |pw AS (SELECT x.p AS a, y.p AS b, count(*) AS w
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p GROUP BY 1, 2)
-        |SELECT id, CAST(sum((w * (w - 1)) // 2) AS BIGINT) AS butterflies
-        |FROM (SELECT a AS id, w FROM pw UNION ALL SELECT b, w FROM pw)
-        |GROUP BY id ORDER BY id""".stripMargin,
-
-    // Two unrolled weight-proportional rank rounds, integer floor at
-    // every division exactly as the loop computes them.
-    "q177_weighted_pagerank" -> {
-      def round(k: Int, prev: String) =
-        s"""s$k AS (SELECT e.dst AS id,
-           |    sum(($prev * e.w) // wo.wout) AS s
-           |  FROM e JOIN wout wo ON wo.src = e.src
-           |  ${if (k == 1) "" else s"JOIN r${k - 1} r ON r.id = e.src"}
-           |  GROUP BY e.dst),
-           |r$k AS (SELECT n.id,
-           |    150000 + (850000 * COALESCE(s$k.s, 0)) // 1000000 AS rank
-           |  FROM n LEFT JOIN s$k ON s$k.id = n.id)""".stripMargin
-      s"""WITH li AS (SELECT l_orderkey * 2 AS o, l_partkey * 2 + 1 AS p,
-         |  CAST(round(l_quantity) AS BIGINT) AS q FROM lineitem),
-         |e AS (SELECT src, dst, CAST(sum(q) AS BIGINT) AS w FROM (
-         |  SELECT o AS src, p AS dst, q FROM li
-         |  UNION ALL SELECT p, o, q FROM li) GROUP BY 1, 2),
-         |wout AS (SELECT src, sum(w) AS wout FROM e GROUP BY 1),
-         |n AS (SELECT DISTINCT id FROM (
-         |  SELECT src AS id FROM e UNION ALL SELECT dst FROM e)),
-         |${round(1, "1000000")},
-         |${round(2, "r.rank")}
-         |SELECT id, CAST(rank AS BIGINT) AS rank FROM r2
-         |ORDER BY id""".stripMargin
-    },
-
-    "q176_k_anonymity" ->
-      """WITH c AS (SELECT CAST(c_nationkey AS BIGINT) AS nation,
-        |  c_mktsegment AS segment,
-        |  CAST(round(c_acctbal) AS BIGINT) // 1000 AS bal_k,
-        |  CAST(round(c_acctbal * 100) AS BIGINT) AS cents
-        | FROM customer)
-        |SELECT nation, segment, bal_k, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(count(DISTINCT cents) AS BIGINT) AS l_div,
-        |  CAST(CASE WHEN count(*) < 5 THEN 1 ELSE 0 END AS INT) AS k_risk,
-        |  CAST(CASE WHEN count(DISTINCT cents) < 2 THEN 1 ELSE 0 END AS INT)
-        |    AS l_risk
-        |FROM c GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q175_markov" ->
-      """WITH x AS (SELECT user_id, event_id, event_type,
-        |  lead(event_type) OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) AS next_type FROM events),
-        |tr AS (SELECT event_type AS from_type, next_type AS to_type,
-        |  count(*) AS n FROM x WHERE next_type IS NOT NULL GROUP BY 1, 2),
-        |tot AS (SELECT from_type, sum(n) AS tot FROM tr GROUP BY 1)
-        |SELECT from_type, to_type, CAST(n AS BIGINT) AS n,
-        |  CAST((n * 1000000) // tot AS BIGINT) AS p_ppm
-        |FROM tr JOIN tot USING (from_type)
-        |ORDER BY from_type, to_type""".stripMargin,
-
-    "q174_seasonal" ->
-      """WITH ev AS (SELECT event_id,
-        |  (epoch_us(ts) // 86400000000 + 4) % 7 AS dow,
-        |  (epoch_us(ts) // 3600000000) % 24 AS hr,
-        |  CAST(round(value * 100) AS BIGINT) AS c FROM events),
-        |b AS (SELECT dow, hr, sum(c) // count(*) AS base_c
-        |      FROM ev GROUP BY 1, 2),
-        |r AS (SELECT event_id, ev.dow, ev.hr, c, c - base_c AS resid_c
-        |      FROM ev JOIN b USING (dow, hr)
-        |      ORDER BY abs(c - base_c) DESC, event_id LIMIT 100)
-        |SELECT event_id, CAST(dow AS BIGINT) AS dow,
-        |  CAST(hr AS BIGINT) AS hr, c, CAST(resid_c AS BIGINT) AS resid_c
-        |FROM r ORDER BY event_id""".stripMargin,
-
-    // Signed feature hashing: md5-31 bin, independent md5-nibble sign.
-    "q173_feature_hash" ->
-      """WITH tk AS (SELECT doc_id,
-        |  unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        | FROM documents)
-        |SELECT doc_id,
-        |  ('0x' || substr(md5(tok), 1, 8))::BIGINT % 2147483647 % 64 AS bin,
-        |  CAST(sum(1 - 2 * (('0x' || substr(md5(tok), 9, 1))::BIGINT % 2))
-        |    AS BIGINT) AS v
-        |FROM tk WHERE tok <> ''
-        |GROUP BY doc_id, bin ORDER BY doc_id, bin""".stripMargin,
-
-    // q171's unrolled iteration plus the projection and label agg.
-    "q172_label_drift" -> {
-      val rounds = (1 to 2).map { k =>
-        s"""u$k AS (SELECT vid, sum(qx * v) AS u
-           |  FROM q JOIN v${k - 1} USING (pos) GROUP BY vid),
-           |mu$k AS (SELECT max(abs(u)) AS m FROM u$k),
-           |un$k AS (SELECT vid, (u * 1000000) // m AS un FROM u$k, mu$k),
-           |w$k AS (SELECT pos, sum(qx * un) AS w
-           |  FROM q JOIN un$k USING (vid) GROUP BY pos),
-           |mw$k AS (SELECT max(abs(w)) AS m FROM w$k),
-           |v$k AS (SELECT pos, (w * 1000000) // m AS v FROM w$k, mw$k)"""
-          .stripMargin
-      }.mkString(",\n")
-      s"""WITH q AS (
-         |  SELECT vec_id AS vid, CAST(label AS BIGINT) AS label,
-         |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
-         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000.0 + 0.5)
-         |      AS BIGINT) AS qx
-         |  FROM embeddings),
-         |v0 AS (SELECT DISTINCT pos, CAST(1000000 AS BIGINT) AS v FROM q),
-         |$rounds,
-         |pr AS (SELECT vid, label, sum(qx * v) AS proj
-         |  FROM q JOIN v2 USING (pos) GROUP BY vid, label)
-         |SELECT label, CAST(count(*) AS BIGINT) AS n,
-         |  CAST(sum(proj) // count(*) AS BIGINT) AS mean_proj
-         |FROM pr GROUP BY label ORDER BY label""".stripMargin
-    },
-
-    // Two unrolled power-iteration rounds; // and div both truncate
-    // toward zero on integers (measured), so the normalization steps
-    // replay exactly.
-    "q171_power_iteration" -> {
-      val rounds = (1 to 2).map { k =>
-        s"""u$k AS (SELECT vid, sum(qx * v) AS u
-           |  FROM q JOIN v${k - 1} USING (pos) GROUP BY vid),
-           |mu$k AS (SELECT max(abs(u)) AS m FROM u$k),
-           |un$k AS (SELECT vid, (u * 1000000) // m AS un FROM u$k, mu$k),
-           |w$k AS (SELECT pos, sum(qx * un) AS w
-           |  FROM q JOIN un$k USING (vid) GROUP BY pos),
-           |mw$k AS (SELECT max(abs(w)) AS m FROM w$k),
-           |v$k AS (SELECT pos, (w * 1000000) // m AS v FROM w$k, mw$k)"""
-          .stripMargin
-      }.mkString(",\n")
-      s"""WITH q AS (
-         |  SELECT vec_id AS vid,
-         |    CAST(generate_subscripts(embedding, 1) - 1 AS BIGINT) AS pos,
-         |    CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000.0 + 0.5)
-         |      AS BIGINT) AS qx
-         |  FROM embeddings),
-         |v0 AS (SELECT DISTINCT pos, CAST(1000000 AS BIGINT) AS v FROM q),
-         |$rounds
-         |SELECT pos, CAST(v AS BIGINT) AS v FROM v2 ORDER BY pos""".stripMargin
-    },
-
-    // q111's triangle pipeline extended with the degree join and the
-    // integer-ppm clique-density formula.
-    "q170_clustering_coeff" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-        |deg AS (
-        |  SELECT id, count(*) AS d FROM (
-        |    SELECT a AS id FROM e0 UNION ALL SELECT b AS id FROM e0)
-        |  GROUP BY id),
-        |og AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.a ELSE e0.b END AS u,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.b ELSE e0.a END AS v
-        |  FROM e0 JOIN deg da ON da.id = e0.a JOIN deg db ON db.id = e0.b),
-        |tri AS (
-        |  SELECT o1.u, o1.v, o2.v AS w
-        |  FROM og o1 JOIN og o2 ON o1.u = o2.u AND o1.v < o2.v
-        |  JOIN e0 ON e0.a = o1.v AND e0.b = o2.v),
-        |t AS (
-        |  SELECT id, count(*) AS n FROM (
-        |    SELECT u AS id FROM tri UNION ALL SELECT v AS id FROM tri
-        |    UNION ALL SELECT w AS id FROM tri)
-        |  GROUP BY id)
-        |SELECT deg.id AS id, CAST(deg.d AS BIGINT) AS degree,
-        |  CAST(COALESCE(t.n, 0) AS BIGINT) AS triangles,
-        |  CAST(CASE WHEN deg.d >= 2 THEN
-        |    (2000000 * COALESCE(t.n, 0)) // (deg.d * (deg.d - 1))
-        |    ELSE 0 END AS BIGINT) AS cc_ppm
-        |FROM deg LEFT JOIN t ON t.id = deg.id ORDER BY id""".stripMargin,
-
-    // RRF over the q168 BM25 ranking and the q161 LM ranking: both CTE
-    // pipelines inlined, row_number with id tie-break, top-100 cut,
-    // 1e6/(60+rank) integer contributions.
-    "q169_rrf_fusion" ->
-      """WITH tk AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS t0 FROM documents),
-        |d AS (SELECT doc_id, CAST(len(t0) AS BIGINT) AS len,
-        |  len(list_filter(t0, x -> x = 'spark')) AS tf0,
-        |  len(list_filter(t0, x -> x = 'merge')) AS tf1,
-        |  len(list_filter(t0, x -> x = 'window')) AS tf2
-        | FROM tk),
-        |st AS (SELECT count(*) AS n, sum(len) // count(*) AS avglen,
-        |  sum(CASE WHEN tf0 > 0 THEN 1 ELSE 0 END) AS df0,
-        |  sum(CASE WHEN tf1 > 0 THEN 1 ELSE 0 END) AS df1,
-        |  sum(CASE WHEN tf2 > 0 THEN 1 ELSE 0 END) AS df2 FROM d),
-        |sc AS (SELECT doc_id, len, tf0, tf1, tf2, n, df0, df1, df2,
-        |  250 + (750 * len) // avglen AS nm FROM d, st),
-        |bm AS (SELECT doc_id,
-        |  CASE WHEN tf0 > 0 THEN
-        |   (((1000000 * (n - df0 + 1)) // (df0 + 1)) *
-        |    ((tf0 * 2200 * 1000000000) //
-        |     (tf0 * 1000000 + 1200 * nm))) // 1000000 ELSE 0 END +
-        |  CASE WHEN tf1 > 0 THEN
-        |   (((1000000 * (n - df1 + 1)) // (df1 + 1)) *
-        |    ((tf1 * 2200 * 1000000000) //
-        |     (tf1 * 1000000 + 1200 * nm))) // 1000000 ELSE 0 END +
-        |  CASE WHEN tf2 > 0 THEN
-        |   (((1000000 * (n - df2 + 1)) // (df2 + 1)) *
-        |    ((tf2 * 2200 * 1000000000) //
-        |     (tf2 * 1000000 + 1200 * nm))) // 1000000 ELSE 0 END
-        |  AS score_ppm
-        | FROM sc WHERE tf0 + tf1 + tf2 > 0),
-        |t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |db AS (SELECT doc_id, w1, w2, count(*) AS k FROM bi GROUP BY 1, 2, 3),
-        |bc AS (SELECT w1, w2, sum(k) AS c_xy FROM db GROUP BY 1, 2),
-        |pc AS (SELECT w1, sum(c_xy) AS c_x FROM bc GROUP BY 1),
-        |v AS (SELECT count(DISTINCT u.w) AS v
-        |      FROM t, UNNEST(toks) AS u(w) WHERE u.w <> ''),
-        |s AS (
-        |  SELECT db.doc_id, db.k,
-        |    (1000000 * (bc.c_xy + 1)) // (pc.c_x + v.v) AS ppm
-        |  FROM db JOIN bc USING (w1, w2) JOIN pc USING (w1), v),
-        |lm AS (SELECT doc_id, sum(k * ppm) // sum(k) AS lm_ppm
-        |  FROM s GROUP BY doc_id),
-        |ra AS (SELECT doc_id AS id, row_number()
-        |    OVER (ORDER BY score_ppm DESC, doc_id) AS rank0
-        |  FROM bm QUALIFY rank0 <= 100),
-        |rb AS (SELECT doc_id AS id, row_number()
-        |    OVER (ORDER BY lm_ppm DESC, doc_id) AS rank1
-        |  FROM lm QUALIFY rank1 <= 100)
-        |SELECT COALESCE(ra.id, rb.id) AS doc_id,
-        |  CAST(COALESCE(rank0, 0) AS BIGINT) AS rank0,
-        |  CAST(COALESCE(rank1, 0) AS BIGINT) AS rank1,
-        |  CAST(COALESCE(1000000 // (60 + rank0), 0)
-        |     + COALESCE(1000000 // (60 + rank1), 0) AS BIGINT) AS rrf_ppm
-        |FROM ra FULL OUTER JOIN rb ON ra.id = rb.id
-        |ORDER BY doc_id""".stripMargin,
-
-    // BM25 integer-ppm arithmetic replayed term by term (k1=1.2, b=0.75
-    // in milli units; every division is integer floor).
-    "q168_bm25" -> {
-      val terms = Seq("spark", "merge", "window")
-      val tf = terms.zipWithIndex.map { case (t, i) =>
-        s"len(list_filter(t0, x -> x = '$t')) AS tf$i" }.mkString(",\n|  ")
-      val dfs = terms.indices.map(i =>
-        s"sum(CASE WHEN tf$i > 0 THEN 1 ELSE 0 END) AS df$i").mkString(", ")
-      val contrib = terms.indices.map(i =>
-        s"""CASE WHEN tf$i > 0 THEN
-           |   (((1000000 * (n - df$i + 1)) // (df$i + 1)) *
-           |    ((tf$i * 2200 * 1000000000) //
-           |     (tf$i * 1000000 + 1200 * nm))) // 1000000
-           | ELSE 0 END""".stripMargin).mkString(" +\n|")
-      s"""WITH tk AS (SELECT doc_id,
-         |  string_split_regex(lower(trim(text)), '\\s+') AS t0 FROM documents),
-         |d AS (SELECT doc_id, CAST(len(t0) AS BIGINT) AS len,
-         |  $tf
-         | FROM tk),
-         |st AS (SELECT count(*) AS n, sum(len) // count(*) AS avglen,
-         |  $dfs FROM d),
-         |sc AS (SELECT doc_id, len, tf0, tf1, tf2, n, df0, df1, df2,
-         |  250 + (750 * len) // avglen AS nm FROM d, st)
-         |SELECT doc_id, CAST($contrib AS BIGINT) AS score_ppm
-         |FROM sc WHERE tf0 + tf1 + tf2 > 0 ORDER BY doc_id""".stripMargin
-    },
-
-    // Temporal earliest arrival replayed as three unrolled full-table
-    // relaxation rounds (the delta frontier is an optimization, not a
-    // semantics change — non-improved nodes re-contribute identical
-    // candidates that the min folds away).
-    "q167_temporal_reach" -> {
-      val rounds = (1 to 3).map { k =>
-        s"""a$k AS (
-           |  SELECT id, min(arr) AS arr FROM (
-           |    SELECT id, arr FROM a${k - 1}
-           |    UNION ALL
-           |    SELECT e.dst AS id, e.t AS arr
-           |    FROM e JOIN a${k - 1} a ON a.id = e.src AND e.t > a.arr)
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ev AS (
-         |  SELECT user_id * 2 AS u,
-         |    CAST(props->>'k' AS BIGINT) * 2 + 1 AS kk,
-         |    epoch_us(ts) AS t
-         |  FROM events WHERE props->>'k' IS NOT NULL),
-         |e AS (SELECT u AS src, kk AS dst, t FROM ev
-         |      UNION ALL SELECT kk, u, t FROM ev),
-         |a0 AS (SELECT DISTINCT user_id * 2 AS id, CAST(-1 AS BIGINT) AS arr
-         |       FROM events WHERE user_id % 17 = 0),
-         |$rounds
-         |SELECT id, CAST(arr AS BIGINT) AS arr FROM a3 ORDER BY id""".stripMargin
-    },
-
-    // Per-landmark BFS replayed as two unrolled min-dist rounds per
-    // (src, id) — the bitmask is an execution encoding, not semantics.
-    "q166_msbfs" -> {
-      val rounds = (1 to 2).map { k =>
-        s"""d$k AS (
-           |  SELECT src, id, min(dist) AS dist FROM (
-           |    SELECT src, id, dist FROM d${k - 1}
-           |    UNION ALL
-           |    SELECT d.src, e.dst AS id, d.dist + 1 AS dist
-           |    FROM e JOIN d${k - 1} d ON d.id = e.src)
-           |  GROUP BY src, id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |sd AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS id FROM lineitem
-         |  WHERE l_partkey % 97 = 0 ORDER BY id LIMIT 16),
-         |d0 AS (SELECT id AS src, id, CAST(0 AS BIGINT) AS dist FROM sd),
-         |$rounds
-         |SELECT id, src, CAST(dist AS BIGINT) AS dist FROM d2
-         |ORDER BY id, src""".stripMargin
-    },
-
-    // q164's winnow pipeline, then the df-filtered fp self-join.
-    "q165_winnow_pairs" ->
-      """WITH tk AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS t0 FROM documents),
-        |gi AS (SELECT doc_id, t0,
-        |  unnest(generate_series(1, len(t0) - 2)) AS i
-        | FROM tk WHERE len(t0) >= 3),
-        |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |  ('0x' || substr(md5(t0[i] || ' ' || t0[i+1] || ' ' || t0[i+2]),
-        |    1, 8))::BIGINT % 2147483647 AS h
-        | FROM gi),
-        |kk AS (SELECT doc_id, pos,
-        |  min(h * 4294967296 + (4294967295 - pos)) OVER (
-        |    PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mk
-        | FROM g),
-        |fp AS (SELECT DISTINCT doc_id AS id, mk // 4294967296 AS fp
-        |  FROM kk WHERE pos >= 3),
-        |kept AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 8),
-        |bl AS MATERIALIZED (
-        |  SELECT f.id, f.fp FROM fp f JOIN kept USING (fp))
-        |SELECT x.id AS id_a, y.id AS id_b,
-        |  CAST(count(*) AS BIGINT) AS shared
-        |FROM bl x JOIN bl y ON x.fp = y.fp AND x.id < y.id
-        |GROUP BY 1, 2 HAVING count(*) >= 2 ORDER BY id_a, id_b""".stripMargin,
-
-    // Winnowing replayed literally: gram hashes via the portable md5-31
-    // family, the rightmost-on-ties rule via the same arithmetic key
-    // (h·2³² + (2³²−1 − pos), window min ⇒ smallest hash / largest pos).
-    "q164_winnow" ->
-      """WITH tk AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS t0 FROM documents),
-        |gi AS (SELECT doc_id, t0,
-        |  unnest(generate_series(1, len(t0) - 2)) AS i
-        | FROM tk WHERE len(t0) >= 3),
-        |g AS (SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-        |  ('0x' || substr(md5(t0[i] || ' ' || t0[i+1] || ' ' || t0[i+2]),
-        |    1, 8))::BIGINT % 2147483647 AS h
-        | FROM gi),
-        |k AS (SELECT doc_id, pos,
-        |  min(h * 4294967296 + (4294967295 - pos)) OVER (
-        |    PARTITION BY doc_id ORDER BY pos
-        |    ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS mk
-        | FROM g),
-        |sel AS (SELECT DISTINCT doc_id, mk FROM k WHERE pos >= 3)
-        |SELECT doc_id, CAST(4294967295 - mk % 4294967296 AS BIGINT) AS pos,
-        |  CAST(mk // 4294967296 AS BIGINT) AS fp
-        |FROM sel ORDER BY doc_id, pos""".stripMargin,
-
-    "q163_truss_peel" -> {
-      // Every CTE referenced more than once is MATERIALIZED — DuckDB
-      // inlines plain CTEs, so the un-hinted 2-round chain recomputed
-      // the triangle enumeration exponentially (>79 GB of temp spill
-      // at sf0.1 before the IO error).
-      def round(i: Int) =
-        s"""deg$i AS MATERIALIZED (
-           |  SELECT id, count(*) AS d FROM (
-           |    SELECT a AS id FROM e${i - 1} UNION ALL SELECT b FROM e${i - 1})
-           |  GROUP BY id),
-           |og$i AS MATERIALIZED (
-           |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e.a < e.b)
-           |              THEN e.a ELSE e.b END AS u,
-           |         CASE WHEN da.d < db.d OR (da.d = db.d AND e.a < e.b)
-           |              THEN e.b ELSE e.a END AS v
-           |  FROM e${i - 1} e JOIN deg$i da ON da.id = e.a
-           |  JOIN deg$i db ON db.id = e.b),
-           |tri$i AS MATERIALIZED (
-           |  SELECT o1.u, o1.v, o2.v AS w
-           |  FROM og$i o1 JOIN og$i o2 ON o1.u = o2.u AND o1.v < o2.v
-           |  JOIN e${i - 1} e ON e.a = o1.v AND e.b = o2.v),
-           |sup$i AS MATERIALIZED (
-           |  SELECT a, b, count(*) AS support FROM (
-           |    SELECT least(u, v) AS a, greatest(u, v) AS b FROM tri$i
-           |    UNION ALL SELECT least(u, w), greatest(u, w) FROM tri$i
-           |    UNION ALL SELECT least(v, w), greatest(v, w) FROM tri$i)
-           |  GROUP BY 1, 2),
-           |e$i AS MATERIALIZED (SELECT a, b FROM sup$i WHERE support >= 2)"""
-        .stripMargin
-      s"""WITH os0 AS (
-         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
-         |  WHERE l_orderkey % 3 = 0),
-         |os AS MATERIALIZED (
-         |  SELECT o, p FROM (
-         |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-         |  WHERE ns <= 8),
-         |e0 AS MATERIALIZED (
-         |  SELECT DISTINCT x.p AS a, y.p AS b
-         |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-         |${round(1)},
-         |${round(2)}
-         |SELECT a, b FROM e2 ORDER BY a, b""".stripMargin
-    },
-
-    "q162_edge_support" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-        |deg AS (
-        |  SELECT id, count(*) AS d FROM (
-        |    SELECT a AS id FROM e0 UNION ALL SELECT b AS id FROM e0)
-        |  GROUP BY id),
-        |og AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.a ELSE e0.b END AS u,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.b ELSE e0.a END AS v
-        |  FROM e0 JOIN deg da ON da.id = e0.a JOIN deg db ON db.id = e0.b),
-        |tri AS (
-        |  SELECT o1.u, o1.v, o2.v AS w
-        |  FROM og o1 JOIN og o2 ON o1.u = o2.u AND o1.v < o2.v
-        |  JOIN e0 ON e0.a = o1.v AND e0.b = o2.v),
-        |sup AS (
-        |  SELECT a, b, count(*) AS support FROM (
-        |    SELECT least(u, v) AS a, greatest(u, v) AS b FROM tri
-        |    UNION ALL SELECT least(u, w), greatest(u, w) FROM tri
-        |    UNION ALL SELECT least(v, w), greatest(v, w) FROM tri)
-        |  GROUP BY 1, 2)
-        |SELECT e0.a, e0.b, CAST(COALESCE(sup.support, 0) AS BIGINT) AS support
-        |FROM e0 LEFT JOIN sup USING (a, b)
-        |ORDER BY e0.a, e0.b""".stripMargin,
-
-    "q161_bigram_lm" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |bi AS (
-        |  SELECT doc_id, toks[i] AS w1, toks[i + 1] AS w2
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |db AS (SELECT doc_id, w1, w2, count(*) AS k FROM bi GROUP BY 1, 2, 3),
-        |bc AS (SELECT w1, w2, sum(k) AS c_xy FROM db GROUP BY 1, 2),
-        |pc AS (SELECT w1, sum(c_xy) AS c_x FROM bc GROUP BY 1),
-        |v AS (SELECT count(DISTINCT u.w) AS v
-        |      FROM t, UNNEST(toks) AS u(w) WHERE u.w <> ''),
-        |s AS (
-        |  SELECT db.doc_id, db.k,
-        |    (1000000 * (bc.c_xy + 1)) // (pc.c_x + v.v) AS ppm
-        |  FROM db JOIN bc USING (w1, w2) JOIN pc USING (w1), v)
-        |SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_pairs,
-        |  CAST(sum(k * ppm) // sum(k) AS BIGINT) AS lm_ppm
-        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q160_scc" -> {
-      def pass(p: String, joinOn: String, emit: String) = (1 to 3).map { k =>
-        s"""$p$k AS (
-           |  SELECT id, min(lbl) AS lbl FROM (
-           |    SELECT id, lbl FROM $p${k - 1}
-           |    UNION ALL
-           |    SELECT e.$emit AS id, l.lbl
-           |    FROM e JOIN $p${k - 1} l ON l.id = e.$joinOn)
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey % 16384 AS src,
-         |                  l_partkey % 16384 AS dst
-         |  FROM lineitem),
-         |n AS (SELECT src AS id FROM e UNION SELECT dst FROM e),
-         |f0 AS (SELECT id, CAST(id AS BIGINT) AS lbl FROM n),
-         |${pass("f", "dst", "src")},
-         |b0 AS (SELECT id, CAST(id AS BIGINT) AS lbl FROM n),
-         |${pass("b", "src", "dst")}
-         |SELECT f.id, f.lbl AS fwd_min, b.lbl AS bwd_min,
-         |  CASE WHEN f.lbl = b.lbl THEN f.lbl END AS scc_id
-         |FROM f3 f JOIN b3 b USING (id) ORDER BY f.id""".stripMargin
-    },
-
-    "q150_sssp" -> {
-      val rounds = (1 to 4).map { k =>
-        s"""d$k AS (
-           |  SELECT id, min(dist) AS dist FROM (
-           |    SELECT id, dist FROM d${k - 1}
-           |    UNION ALL
-           |    SELECT e.dst AS id, d.dist + e.w AS dist
-           |    FROM e JOIN d${k - 1} d ON d.id = e.src)
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e0 AS (
-         |  SELECT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst,
-         |         CAST(min(l_linenumber % 5 + 1) AS BIGINT) AS w
-         |  FROM lineitem GROUP BY 1, 2),
-         |e AS (
-         |  SELECT src, dst, w FROM e0
-         |  UNION ALL
-         |  SELECT dst, src, w FROM e0),
-         |d0 AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS id, CAST(0 AS BIGINT) AS dist
-         |  FROM lineitem WHERE l_partkey % 97 = 0),
-         |$rounds
-         |SELECT id, CAST(dist AS BIGINT) AS dist FROM d4 ORDER BY id""".stripMargin
-    },
-
-    "q159_kmeans" ->
-      """WITH q AS (
-        |  SELECT vec_id, list_transform(embedding, x ->
-        |    CAST(floor(CAST(x AS DOUBLE) * 1000 + 0.5) AS BIGINT)) AS v
-        |  FROM embeddings),
-        |c0 AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cl, v
-        |  FROM q ORDER BY vec_id LIMIT 8),
-        |a1 AS (
-        |  SELECT vec_id, v, cl FROM (
-        |    SELECT q.vec_id, q.v, c.cl,
-        |      list_aggregate(list_transform(range(64), i ->
-        |        (q.v[i+1] - c.v[i+1]) * (q.v[i+1] - c.v[i+1])), 'sum') AS d2
-        |    FROM q, c0 c)
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY d2, cl) = 1),
-        |m1 AS (
-        |  SELECT cl, i,
-        |    CAST(floor(sum(v[i+1])::DOUBLE / count(*) + 0.5) AS BIGINT) AS m
-        |  FROM a1, range(64) t(i) GROUP BY cl, i),
-        |c1n AS (SELECT cl, list(m ORDER BY i) AS v FROM m1 GROUP BY cl),
-        |c1 AS (SELECT c0.cl, COALESCE(c1n.v, c0.v) AS v
-        |       FROM c0 LEFT JOIN c1n USING (cl)),
-        |a2 AS (
-        |  SELECT vec_id, cl, d2 FROM (
-        |    SELECT q.vec_id, c.cl,
-        |      list_aggregate(list_transform(range(64), i ->
-        |        (q.v[i+1] - c.v[i+1]) * (q.v[i+1] - c.v[i+1])), 'sum') AS d2
-        |    FROM q, c1 c)
-        |  QUALIFY row_number() OVER (PARTITION BY vec_id
-        |    ORDER BY d2, cl) = 1)
-        |SELECT vec_id, CAST(cl AS BIGINT) AS cluster,
-        |  CAST(d2 AS BIGINT) AS dist2
-        |FROM a2 ORDER BY vec_id""".stripMargin,
-
-    "q158_image_hamming_pairs" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS id, 8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h,
-        |         (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |bits AS (
-        |  SELECT id, j * 8 + i AS pos,
-        |    CASE WHEN (base + 7 * (((i + 1) * w) // 9) + 13 * ((j * h) // 8)) % 256
-        |            > (base + 7 * ((i * w) // 9) + 13 * ((j * h) // 8)) % 256
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM ids, range(8) t1(i), range(8) t2(j)),
-        |hashes AS (
-        |  SELECT id,
-        |    bit_or(CASE WHEN b = 1 AND pos >= 32
-        |      THEN (1::BIGINT << (pos - 32)) ELSE 0::BIGINT END) AS hash_hi,
-        |    bit_or(CASE WHEN b = 1 AND pos < 32
-        |      THEN (1::BIGINT << pos) ELSE 0::BIGINT END) AS hash_lo
-        |  FROM bits GROUP BY id),
-        |classes AS (
-        |  SELECT hash_hi, hash_lo, min(id) AS canon_id
-        |  FROM hashes GROUP BY 1, 2),
-        |banded AS (
-        |  SELECT canon_id, hash_hi, hash_lo, 0 AS band,
-        |         hash_hi // 65536 AS bucket FROM classes
-        |  UNION ALL SELECT canon_id, hash_hi, hash_lo, 1,
-        |         hash_hi % 65536 FROM classes
-        |  UNION ALL SELECT canon_id, hash_hi, hash_lo, 2,
-        |         hash_lo // 65536 FROM classes
-        |  UNION ALL SELECT canon_id, hash_hi, hash_lo, 3,
-        |         hash_lo % 65536 FROM classes),
-        |pairs AS (
-        |  SELECT DISTINCT a.canon_id AS id_a, b.canon_id AS id_b,
-        |    bit_count(xor(a.hash_hi, b.hash_hi))
-        |      + bit_count(xor(a.hash_lo, b.hash_lo)) AS hamming
-        |  FROM banded a JOIN banded b
-        |    ON a.band = b.band AND a.bucket = b.bucket
-        |   AND a.canon_id < b.canon_id)
-        |SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
-        |FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-
-    "q157_audio_neardup" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(500 + doc_id % 1000 AS BIGINT) AS n,
-        |    (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |f AS (
-        |  SELECT media_id,
-        |    list_transform(range(64), j ->
-        |      list_aggregate(list_transform(
-        |        range(j * n // 64, (j + 1) * n // 64),
-        |        i -> abs((base + i * 7919) % 65536 - 32768)), 'sum')) AS e
-        |  FROM v),
-        |sigs AS (
-        |  SELECT media_id,
-        |    CAST(list_aggregate(list_transform(range(63), k ->
-        |      CASE WHEN e[k + 2] > e[k + 1]
-        |        THEN 1::BIGINT << k ELSE 0::BIGINT END), 'sum')
-        |      AS BIGINT) AS afp
-        |  FROM f),
-        |r AS (
-        |  SELECT media_id AS id, afp,
-        |    row_number() OVER (ORDER BY afp, media_id) AS rnk
-        |  FROM sigs),
-        |pairs AS (
-        |  SELECT least(a.id, b.id) AS id_a, greatest(a.id, b.id) AS id_b,
-        |    bit_count(xor(a.afp, b.afp)) AS hamming
-        |  FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 8)
-        |SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
-        |FROM pairs WHERE hamming <= 8 ORDER BY id_a, id_b""".stripMargin,
-
-    "q156_image_neardup" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS id, 8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h,
-        |         (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |bits AS (
-        |  SELECT id, j * 8 + i AS pos,
-        |    CASE WHEN (base + 7 * (((i + 1) * w) // 9) + 13 * ((j * h) // 8)) % 256
-        |            > (base + 7 * ((i * w) // 9) + 13 * ((j * h) // 8)) % 256
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM ids, range(8) t1(i), range(8) t2(j)),
-        |hashes AS (
-        |  SELECT id,
-        |    bit_or(CASE WHEN b = 1 AND pos >= 32
-        |      THEN (1::BIGINT << (pos - 32)) ELSE 0::BIGINT END) AS hash_hi,
-        |    bit_or(CASE WHEN b = 1 AND pos < 32
-        |      THEN (1::BIGINT << pos) ELSE 0::BIGINT END) AS hash_lo
-        |  FROM bits GROUP BY id),
-        |r AS (
-        |  SELECT id, hash_hi, hash_lo,
-        |    row_number() OVER (ORDER BY hash_hi, hash_lo, id) AS rnk
-        |  FROM hashes),
-        |pairs AS (
-        |  SELECT least(a.id, b.id) AS id_a, greatest(a.id, b.id) AS id_b,
-        |    bit_count(xor(a.hash_hi, b.hash_hi))
-        |      + bit_count(xor(a.hash_lo, b.hash_lo)) AS hamming
-        |  FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 8)
-        |SELECT id_a, id_b, CAST(hamming AS BIGINT) AS hamming
-        |FROM pairs WHERE hamming <= 4 ORDER BY id_a, id_b""".stripMargin,
-
-    "q155_video_fp" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(1 + doc_id % 6 AS BIGINT) AS nf,
-        |    CAST(8 + doc_id % 9 AS BIGINT) AS w,
-        |    CAST(8 + doc_id % 7 AS BIGINT) AS h,
-        |    (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |s AS (
-        |  SELECT media_id, w, h, base, CAST(t.i AS BIGINT) AS sample_idx,
-        |    (CAST(t.i AS BIGINT) * 150) // 100 AS f
-        |  FROM v, unnest(range(LEAST(
-        |    CAST(ceil(nf * 100 / 150.0) AS BIGINT), 8)))
-        |    AS t(i)),
-        |bits AS (
-        |  SELECT media_id, sample_idx, tj.j * 8 + ti.i AS pos,
-        |    CASE WHEN (base + 7 * (((ti.i + 1) * w) // 9)
-        |               + 13 * ((tj.j * h) // 8) + 17 * f) % 256
-        |            > (base + 7 * ((ti.i * w) // 9)
-        |               + 13 * ((tj.j * h) // 8) + 17 * f) % 256
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM s, range(8) ti(i), range(8) tj(j))
-        |SELECT media_id, sample_idx,
-        |  bit_or(CASE WHEN b = 1 AND pos >= 32
-        |    THEN (1::BIGINT << (pos - 32)) ELSE 0::BIGINT END) AS hash_hi,
-        |  bit_or(CASE WHEN b = 1 AND pos < 32
-        |    THEN (1::BIGINT << pos) ELSE 0::BIGINT END) AS hash_lo
-        |FROM bits GROUP BY 1, 2 ORDER BY media_id, sample_idx""".stripMargin,
-
-    "q154_audio_fp" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(500 + doc_id % 1000 AS BIGINT) AS n,
-        |    (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |f AS (
-        |  SELECT media_id,
-        |    list_transform(range(64), j ->
-        |      list_aggregate(list_transform(
-        |        range(j * n // 64, (j + 1) * n // 64),
-        |        i -> abs((base + i * 7919) % 65536 - 32768)), 'sum')) AS e
-        |  FROM v)
-        |SELECT media_id,
-        |  CAST(list_aggregate(list_transform(range(63), k ->
-        |    CASE WHEN e[k + 2] > e[k + 1]
-        |      THEN 1::BIGINT << k ELSE 0::BIGINT END), 'sum')
-        |    AS BIGINT) AS afp
-        |FROM f ORDER BY media_id""".stripMargin,
-
-    "q153_image_dhash" ->
-      """WITH ids AS (
-        |  SELECT doc_id AS id, 8 + doc_id % 9 AS w, 8 + doc_id % 7 AS h,
-        |         (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |bits AS (
-        |  SELECT id, j * 8 + i AS pos,
-        |    CASE WHEN (base + 7 * (((i + 1) * w) // 9) + 13 * ((j * h) // 8)) % 256
-        |            > (base + 7 * ((i * w) // 9) + 13 * ((j * h) // 8)) % 256
-        |      THEN 1 ELSE 0 END AS b
-        |  FROM ids, range(8) t1(i), range(8) t2(j)),
-        |hashes AS (
-        |  SELECT id,
-        |    bit_or(CASE WHEN b = 1 AND pos >= 32
-        |      THEN (1::BIGINT << (pos - 32)) ELSE 0::BIGINT END) AS hash_hi,
-        |    bit_or(CASE WHEN b = 1 AND pos < 32
-        |      THEN (1::BIGINT << pos) ELSE 0::BIGINT END) AS hash_lo
-        |  FROM bits GROUP BY id)
-        |SELECT hash_hi, hash_lo, min(id) AS canon_id, count(*) AS n_dup
-        |FROM hashes GROUP BY 1, 2 ORDER BY canon_id""".stripMargin,
-
-    "q152_walks" -> {
-      val stepCte = (1 to 3).map { t =>
-        s"""w$t AS (
-           |  SELECT walk, dst AS node FROM (
-           |    SELECT w.walk, e.dst,
-           |      ('0x'||substr(md5(CAST(w.walk AS VARCHAR)||':$t:'||
-           |        CAST(e.dst AS VARCHAR)),1,8))::BIGINT AS h
-           |    FROM w${t - 1} w JOIN e ON e.src = w.node)
-           |  QUALIFY row_number() OVER (PARTITION BY walk
-           |    ORDER BY h, dst) = 1)""".stripMargin
-      }.mkString(",\n")
-      val unions = (0 to 3).map(t =>
-        s"SELECT walk, CAST($t AS BIGINT) AS step, node FROM w$t")
-        .mkString("\nUNION ALL\n")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |w0 AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS walk, l_partkey * 2 + 1 AS node
-         |  FROM lineitem WHERE l_partkey % 97 = 0),
-         |$stepCte
-         |$unions
-         |ORDER BY walk, step""".stripMargin
-    },
-
-    "q151_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |    AS token FROM documents),
-        |tk AS (SELECT token FROM toks WHERE token <> ''),
-        |thr AS (
-        |  SELECT greatest(count(*) * 25000 // 1000000, 1) AS t FROM tk),
-        |c AS (SELECT token, count(*) AS cnt FROM tk GROUP BY 1)
-        |SELECT c.token, c.cnt FROM c, thr WHERE c.cnt >= thr.t
-        |ORDER BY c.cnt DESC, c.token""".stripMargin,
-
-    "q129_hll_sketch" ->
-      """WITH h AS (
-        |  SELECT event_type,
-        |    ('0x'||substr(md5(CAST(user_id AS VARCHAR)),1,8))::BIGINT AS hv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |r AS (
-        |  SELECT event_type,
-        |    CAST(hv // 67108864 AS INT) AS bucket,
-        |    CAST(CASE WHEN hv % 67108864 = 0 THEN 27
-        |         ELSE 27 - length(bin(hv % 67108864)) END AS INT) AS rho
-        |  FROM h)
-        |SELECT event_type, bucket, CAST(max(rho) AS INT) AS register
-        |FROM r GROUP BY 1, 2 ORDER BY event_type, bucket""".stripMargin,
-
-    "q130_scd2" ->
-      """WITH ch AS (
-        |  SELECT user_id, epoch_us(ts) AS seq, min(event_type) AS state
-        |  FROM events GROUP BY 1, 2),
-        |f AS (
-        |  SELECT *, lag(state) OVER (PARTITION BY user_id ORDER BY seq)
-        |    AS prev FROM ch),
-        |c AS (SELECT user_id, seq, state FROM f
-        |      WHERE prev IS DISTINCT FROM state)
-        |SELECT user_id, state,
-        |  seq AS valid_from,
-        |  lead(seq) OVER w AS valid_to,
-        |  CAST(row_number() OVER w AS BIGINT) AS version,
-        |  lead(seq) OVER w IS NULL AS is_current
-        |FROM c
-        |WINDOW w AS (PARTITION BY user_id ORDER BY seq)
-        |ORDER BY user_id, version""".stripMargin,
-
-    "q131_hits" ->
-      """WITH e AS (
-        |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-        |  FROM lineitem),
-        |n AS (SELECT DISTINCT src AS id FROM e
-        |      UNION SELECT DISTINCT dst FROM e),
-        |a1 AS (SELECT dst AS id, count(*) AS a FROM e GROUP BY 1),
-        |h1 AS (SELECT e.src AS id, sum(a1.a) AS h
-        |       FROM e JOIN a1 ON a1.id = e.dst GROUP BY 1),
-        |a2 AS (SELECT e.dst AS id, sum(h1.h) AS a
-        |       FROM e JOIN h1 ON h1.id = e.src GROUP BY 1),
-        |h2 AS (SELECT e.src AS id, sum(a2.a) AS h
-        |       FROM e JOIN a2 ON a2.id = e.dst GROUP BY 1)
-        |SELECT n.id, CAST(COALESCE(h2.h, 0) AS BIGINT) AS hub,
-        |       CAST(COALESCE(a2.a, 0) AS BIGINT) AS auth
-        |FROM n LEFT JOIN h2 ON h2.id = n.id LEFT JOIN a2 ON a2.id = n.id
-        |ORDER BY n.id""".stripMargin,
-
-    "q136_bfs" -> {
-      val rounds = (1 to 4).map { k =>
-        s"""d$k AS (
-           |  SELECT id, min(dist) AS dist FROM (
-           |    SELECT id, dist FROM d${k - 1}
-           |    UNION ALL
-           |    SELECT e.dst AS id, d.dist + 1 AS dist
-           |    FROM e JOIN d${k - 1} d ON d.id = e.src)
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |d0 AS (
-         |  SELECT DISTINCT l_partkey * 2 + 1 AS id, CAST(0 AS BIGINT) AS dist
-         |  FROM lineitem WHERE l_partkey % 97 = 0),
-         |$rounds
-         |SELECT id, CAST(dist AS BIGINT) AS dist FROM d4 ORDER BY id""".stripMargin
-    },
-
-    "q135_pareto" ->
-      """WITH pts AS (
-        |  SELECT DISTINCT l_returnflag AS rf, l_linestatus AS ls,
-        |    CAST(round(l_quantity) AS BIGINT) AS qty,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c
-        |  FROM lineitem),
-        |m AS (
-        |  SELECT *, max(price_c) OVER (
-        |    PARTITION BY rf, ls ORDER BY qty DESC, price_c DESC
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS cm
-        |  FROM pts)
-        |SELECT rf, ls, qty, price_c FROM m
-        |WHERE cm IS NULL OR cm < price_c
-        |ORDER BY rf, ls, qty""".stripMargin,
-
-    "q134_sorted_neighborhood" ->
-      """WITH d AS (
-        |  SELECT doc_id, list_transform(
-        |    list_distinct(string_split_regex(lower(trim(text)), '\s+')),
-        |    tkn -> md5(tkn)) AS hs
-        |  FROM documents),
-        |bits AS (
-        |  SELECT doc_id, list_transform(range(64), j ->
-        |    CASE WHEN list_sum(list_transform(hs, h ->
-        |      CASE WHEN ((strpos('0123456789abcdef',
-        |          substr(h, 2*(j//8) + CASE WHEN j%8 < 4 THEN 2 ELSE 1 END, 1)) - 1)
-        |          >> (CASE WHEN j%8 < 4 THEN j%8 ELSE j%8 - 4 END)) & 1 = 1
-        |      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END) AS b
-        |  FROM d),
-        |sigs AS (
-        |  SELECT doc_id AS id, array_to_string(list_transform(range(8), k ->
-        |      substr('0123456789abcdef',
-        |        1 + b[8*k+5] + 2*b[8*k+6] + 4*b[8*k+7] + 8*b[8*k+8], 1) ||
-        |      substr('0123456789abcdef',
-        |        1 + b[8*k+1] + 2*b[8*k+2] + 4*b[8*k+3] + 8*b[8*k+4], 1)), '')
-        |    AS sig
-        |  FROM bits),
-        |r AS (
-        |  SELECT s.id, s.sig,
-        |    row_number() OVER (ORDER BY m.lang, m.n_chars, m.doc_id) AS rnk
-        |  FROM sigs s JOIN documents m ON m.doc_id = s.id),
-        |pairs AS (
-        |  SELECT a.id AS ia, b.id AS ib,
-        |    bit_count(xor(('0x'||substr(a.sig,1,8))::BIGINT,
-        |                  ('0x'||substr(b.sig,1,8))::BIGINT)) +
-        |    bit_count(xor(('0x'||substr(a.sig,9,8))::BIGINT,
-        |                  ('0x'||substr(b.sig,9,8))::BIGINT)) AS hamming
-        |  FROM r a JOIN r b ON b.rnk > a.rnk AND b.rnk <= a.rnk + 8)
-        |SELECT least(ia, ib) AS id_a, greatest(ia, ib) AS id_b,
-        |       CAST(hamming AS BIGINT) AS hamming
-        |FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin,
-
-    "q133_star_join" ->
-      """SELECT n_name AS nation,
-        |  CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |    AS DECIMAL(28,4))) AS DOUBLE) AS revenue,
-        |  count(*) AS n_items
-        |FROM lineitem
-        |JOIN orders   ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |              AND c_nationkey = s_nationkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1
-        |ORDER BY revenue DESC, nation""".stripMargin,
-
-    "q132_cusum" ->
-      """WITH daily AS (
-        |  SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
-        |         count(*) AS c
-        |  FROM events GROUP BY 1, 2),
-        |s AS (
-        |  SELECT *, count(*) OVER (PARTITION BY event_type) AS n,
-        |         sum(c) OVER (PARTITION BY event_type) AS t FROM daily),
-        |r AS (
-        |  SELECT event_type, day, c, t,
-        |    CAST(sum(n * c - t) OVER (PARTITION BY event_type ORDER BY day)
-        |      AS BIGINT) AS cusum
-        |  FROM s)
-        |SELECT event_type, day, CAST(c AS BIGINT) AS c, cusum,
-        |       abs(cusum) > t AS breach
-        |FROM r ORDER BY event_type, day""".stripMargin,
-
-    "q01_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-         | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty,
-         | CAST(sum(CAST(l_extendedprice AS DECIMAL(28,4))) AS DOUBLE) AS sum_base_price,
-         | CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(28,4))) AS DOUBLE)
-         |   AS sum_disc_price,
-         | count(*) AS count_order
-         |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-         |GROUP BY l_returnflag, l_linestatus
-         |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q02_log_index" ->
-      """SELECT l_orderkey AS transaction_id, l_linenumber,
-        | CAST(row_number() OVER (PARTITION BY l_orderkey
-        |   ORDER BY l_shipdate, l_linenumber, l_partkey, l_extendedprice, l_tax)
-        |   AS INT) AS log_index
-        |FROM lineitem ORDER BY transaction_id, l_linenumber""".stripMargin,
-
-    "q03_enrich" ->
-      """WITH price AS (
-        |  SELECT p_brand AS symbol, max(p_retailprice) / 1000.0 AS coin_price_usd
-        |  FROM part GROUP BY p_brand),
-        |meta AS (
-        |  SELECT p_partkey AS token_address, p_brand AS symbol,
-        |         p_size % 4 AS decimals FROM part),
-        |dims AS (
-        |  SELECT m.token_address, p.coin_price_usd, m.decimals
-        |  FROM meta m LEFT JOIN price p USING (symbol)),
-        |txns AS (
-        |  SELECT l_orderkey AS transaction_id, l_linenumber,
-        |         l_partkey AS token_address, l_extendedprice AS coin_value,
-        |         l_tax AS fee, l_linenumber % 3 AS typ,
-        |         CAST(row_number() OVER (PARTITION BY l_orderkey
-        |           ORDER BY l_shipdate, l_linenumber, l_partkey, l_extendedprice,
-        |                    l_tax) AS INT) AS log_index
-        |  FROM lineitem),
-        |joined AS (
-        |  SELECT t.transaction_id, t.l_linenumber, t.token_address, t.log_index,
-        |    COALESCE(d.coin_price_usd, 0) AS price0,
-        |    CAST(t.coin_value AS DOUBLE) /
-        |      power(10.0, CASE WHEN t.typ IN (0,1) THEN 0
-        |                       ELSE COALESCE(d.decimals, 0) END) AS cv,
-        |    t.fee
-        |  FROM txns t JOIN dims d USING (token_address))
-        |SELECT transaction_id, l_linenumber, token_address, log_index,
-        |  cv AS coin_value, cv * price0 AS coin_value_usd,
-        |  CASE WHEN log_index > 1 THEN 0.0 ELSE fee END AS fee,
-        |  (CASE WHEN log_index > 1 THEN 0.0 ELSE fee END) * price0 AS fee_usd
-        |FROM joined ORDER BY transaction_id, l_linenumber""".stripMargin,
-
-    "q04_transactions_agg" ->
-      s"""WITH txns AS ($eventTxnsSql)
-         |SELECT transaction_id,
-         | ${dSumWhere("\"type\" = 0", "coin_value")} AS external_value,
-         | ${dSumWhere("\"type\" = 0", "coin_value_usd")} AS external_value_usd,
-         | max(block_date_time) AS block_date,
-         | ${dSum("fee")} AS txn_fee,
-         | ${dSum("fee_usd")} AS txn_fee_usd,
-         | ${dSumWhere("\"type\" = 1", "coin_value")} AS internal_value,
-         | ${dSumWhere("\"type\" = 1", "coin_value_usd")} AS internal_value_usd,
-         | ${dSumWhere("\"type\" = 2", "coin_value_usd")} AS token_transfer_usd
-         |FROM txns GROUP BY transaction_id ORDER BY transaction_id""".stripMargin,
-
-    "q05_link_inputs" ->
-      s"""WITH txns AS ($eventTxnsSql)
-         |SELECT transaction_id, event_type AS sender_address,
-         | ${dSumWhere("\"type\" IN (0,1)", "coin_value + fee")} AS value,
-         | ${dSum("coin_value_usd + fee_usd")} AS value_usd
-         |FROM txns GROUP BY transaction_id, event_type
-         |ORDER BY transaction_id, sender_address""".stripMargin,
-
-    "q06_link_outputs" ->
-      s"""WITH txns AS ($eventTxnsSql)
-         |SELECT transaction_id,
-         | CAST(transaction_id % 7 AS VARCHAR) AS receiver_address,
-         | ${dSumWhere("\"type\" IN (0,1)", "coin_value")} AS value,
-         | ${dSumWhere("\"type\" IN (0,1)", "coin_value_usd")} AS value_usd
-         |FROM txns GROUP BY 1, 2 ORDER BY transaction_id, receiver_address""".stripMargin,
-
-    "q07_chain_state" ->
-      """SELECT event_type, max(value) AS max_value,
-        | max(CAST(ts AS DATE)) AS max_date, max(event_id) AS max_event_id
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q08_distinct" ->
-      """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-        |ORDER BY o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q09_left_join" ->
-      """SELECT c_custkey, n_name, r_name
-        |FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q10_inner_join" ->
-      """SELECT l_orderkey, l_linenumber, p_brand, p_size
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE p_size > 40 ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q11_anti_join" ->
-      """SELECT p_partkey FROM part
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem
-        |                  WHERE l_partkey = p_partkey AND l_quantity <= 2)
-        |ORDER BY p_partkey""".stripMargin,
-
-    "q12_full_outer" ->
-      """WITH c AS (SELECT c_nationkey, count(*) AS n_customers
-        |           FROM customer GROUP BY c_nationkey),
-        |     s AS (SELECT s_nationkey, count(*) AS n_suppliers
-        |           FROM supplier GROUP BY s_nationkey)
-        |SELECT COALESCE(c_nationkey, s_nationkey) AS nationkey,
-        |       n_customers, n_suppliers
-        |FROM c FULL OUTER JOIN s ON c_nationkey = s_nationkey
-        |ORDER BY nationkey""".stripMargin,
-
-    "q13_semi_join" ->
-      """SELECT c_custkey FROM customer
-        |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "q14_filters" ->
-      """SELECT l_orderkey, l_linenumber, CAST(l_quantity AS BIGINT) AS qty,
-        | l_discount
-        |FROM lineitem
-        |WHERE l_quantity IN (1, 2, 3) AND l_shipdate >= TIMESTAMP '1995-07-01'
-        |  AND l_discount > 0.05
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "q15_cond_update" ->
-      """SELECT o_orderkey,
-        | CASE WHEN o_orderstatus = 'F' THEN 'final'
-        |      WHEN o_orderstatus = 'O' THEN 'open' ELSE 'other' END AS status_flag,
-        | CASE WHEN o_totalprice > 150000.0 THEN 1 ELSE 0 END AS big_order,
-        | 'tpch' AS source_tag
-        |FROM orders ORDER BY o_orderkey""".stripMargin,
-
-    "q16_union_all" ->
-      """SELECT event_id, event_type FROM events WHERE event_type = 'click'
-        |UNION ALL
-        |SELECT event_id, event_type FROM events WHERE event_type = 'purchase'
-        |ORDER BY event_id""".stripMargin,
-
-    "q17_except" ->
-      """SELECT DISTINCT user_id FROM events
-        |EXCEPT
-        |SELECT DISTINCT user_id FROM events
-        |WHERE event_type = 'purchase' AND value > 95
-        |ORDER BY user_id""".stripMargin,
-
-    "q18_topk" ->
-      """SELECT o_orderkey, o_totalprice FROM orders
-        |ORDER BY o_totalprice DESC, o_orderkey LIMIT 10""".stripMargin,
-
-    "q19_latest_block" ->
-      """SELECT max(event_id) AS head_event,
-        | arg_max(event_id, ts) AS latest_event_id,
-        | max(CAST(ts AS DATE)) AS head_date
-        |FROM events""".stripMargin,
-
-    "q20_count_by_date" ->
-      """SELECT CAST(ts AS DATE) AS d, count(*) AS n FROM events
-        |GROUP BY 1 ORDER BY d""".stripMargin,
-
-    "q21_date_funcs" ->
-      """SELECT o_orderkey, CAST(year(o_orderdate) AS INT) AS y,
-        | CAST(month(o_orderdate) AS INT) AS m,
-        | CAST(o_orderdate AS DATE) AS d,
-        | strftime(o_orderdate, '%Y-%m') AS ym
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "q22_regex" ->
-      """SELECT doc_id, regexp_replace(text, '[aeiou]', '', 'g') AS devoweled,
-        | upper(substr(text, 1, 20)) AS head_upper,
-        | CAST(length(text) AS INT) AS n_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q23_dedup_exact" ->
-      """SELECT min(doc_id) AS keep_id, count(*) AS n_dups
-        |FROM documents GROUP BY text ORDER BY keep_id""".stripMargin,
-
-    "q24_token_stats" ->
-      """SELECT doc_id,
-        | CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS n_tokens,
-        | CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\s+'))) AS INT)
-        |   AS n_distinct,
-        | CAST(length(text) AS INT) AS n_len
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q47_subword_count" ->
-      """SELECT doc_id,
-        | CAST(len(string_split_regex(trim(text), '\s+'))
-        |   + len(regexp_extract_all(text, '[a-z][A-Z0-9]|[0-9][A-Za-z]')) AS INT)
-        |   AS n_subwords,
-        | CAST(len(string_split_regex(trim(text), '\s+')) AS INT) AS n_tokens
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q56_training_prep" ->
-      """WITH keep AS (
-        |  SELECT min(doc_id) AS doc_id FROM documents GROUP BY text),
-        |dd AS (
-        |  SELECT d.* FROM documents d
-        |  WHERE EXISTS (SELECT 1 FROM keep k WHERE k.doc_id = d.doc_id)),
-        |gated AS (
-        |  SELECT doc_id, lang,
-        |    len(string_split_regex(trim(text), '\s+')) AS n_tok,
-        |    CAST(len(list_filter(string_split_regex(lower(trim(text)), '\s+'),
-        |      t -> t IN ('the','a','of','and','to'))) AS DOUBLE)
-        |      / greatest(len(string_split_regex(lower(trim(text)), '\s+')), 1)
-        |      AS stop_ratio
-        |  FROM dd),
-        |split_assigned AS (
-        |  SELECT lang, n_tok,
-        |    CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('d','e')
-        |         THEN 'val'
-        |         WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'
-        |         THEN 'test' ELSE 'train' END AS split
-        |  FROM gated WHERE n_tok >= 20 AND stop_ratio >= 0.02)
-        |SELECT split, lang, count(*) AS n_docs,
-        |  CAST(sum(CAST(n_tok AS BIGINT)) AS BIGINT) AS n_tokens
-        |FROM split_assigned GROUP BY split, lang ORDER BY split, lang""".stripMargin,
-
-    "q55_train_split" ->
-      """WITH s AS (SELECT lang,
-        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('d','e')
-        |       THEN 'val'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'
-        |       THEN 'test' ELSE 'train' END AS split
-        | FROM documents)
-        |SELECT split, lang, count(*) AS n FROM s
-        |GROUP BY split, lang ORDER BY split, lang""".stripMargin,
-
-    "q25_quality" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS toks,
-        |  string_split_regex(trim(text), '\s+') AS rawtoks
-        | FROM documents)
-        |SELECT doc_id,
-        | CAST(len(list_filter(toks, t -> t IN ('the','a','of','and','to'))) AS DOUBLE)
-        |   / greatest(len(toks), 1) AS stop_ratio,
-        | CAST(list_sum(list_transform(rawtoks, t -> CAST(length(t) AS BIGINT))) AS DOUBLE)
-        |   / greatest(len(rawtoks), 1) AS mean_tok_len
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "q26_lang_id" ->
-      """WITH t AS (SELECT doc_id,
-        |  string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
-        |h AS (SELECT doc_id,
-        |  len(list_filter(toks, x -> x IN ('the','a','of'))) AS h_en,
-        |  len(list_filter(toks, x -> x IN ('der','die','das'))) AS h_de,
-        |  len(list_filter(toks, x -> x IN ('le','la','les'))) AS h_fr
-        | FROM t)
-        |SELECT doc_id,
-        | CASE WHEN h_fr >= h_en AND h_fr >= h_de THEN 'fr'
-        |      WHEN h_en >= h_de THEN 'en' ELSE 'de' END AS predicted_lang
-        |FROM h ORDER BY doc_id""".stripMargin,
-
-    "q27_fingerprint" ->
-      """SELECT doc_id,
-        | md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS fp_md5
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Exact mirror of the portable MinHash-LSH path: md5-31 shingle
-    // hashes, affine family hᵢ=(aᵢh+bᵢ) mod 2³¹−1, 32 bands × 2 rows,
-    // hot-bucket cap 64, signature-agreement Jaccard estimate ≥ 0.10.
-    "q28_minhash_neardup" ->
-      (minhashPairsCtes + "\n" +
-        """SELECT id_a, id_b, jaccard FROM est WHERE jaccard >= 0.10
-          |ORDER BY id_a, id_b""".stripMargin),
-
-    "q241_split_leakage" ->
-      (minhashPairsCtes + ",\n" +
-        """pairs AS (SELECT id_a, id_b FROM est WHERE jaccard >= 0.10),
-          |sp AS (SELECT doc_id,
-          |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) IN ('d','e')
-          |       THEN 'val'
-          |       WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 1) = 'f'
-          |       THEN 'test' ELSE 'train' END AS split
-          |  FROM documents),
-          |lab AS (
-          |  SELECT least(a.split, b.split) AS split_a,
-          |         greatest(a.split, b.split) AS split_b
-          |  FROM pairs JOIN sp a ON a.doc_id = pairs.id_a
-          |             JOIN sp b ON b.doc_id = pairs.id_b)
-          |SELECT split_a, split_b, count(*) AS n_pairs,
-          |  CAST(CASE WHEN split_a <> split_b THEN 1 ELSE 0 END AS BIGINT)
-          |    AS is_leak
-          |FROM lab GROUP BY split_a, split_b
-          |ORDER BY split_a, split_b""".stripMargin),
-
-    // Exact mirror of the portable SimHash: distinct lowercase tokens,
-    // bit j of token = bit (j mod 8) of md5 byte ⌊j/8⌋ (hex chars
-    // high-nibble-first), vote ≥ 0 → 1, bytes rendered as lowercase hex.
-    "q29_simhash" ->
-      """WITH d AS (
-        |  SELECT doc_id, list_transform(
-        |    list_distinct(string_split_regex(lower(trim(text)), '\s+')),
-        |    tkn -> md5(tkn)) AS hs
-        |  FROM documents),
-        |bits AS (
-        |  SELECT doc_id, list_transform(range(64), j ->
-        |    CASE WHEN list_sum(list_transform(hs, h ->
-        |      CASE WHEN ((strpos('0123456789abcdef',
-        |          substr(h, 2*(j//8) + CASE WHEN j%8 < 4 THEN 2 ELSE 1 END, 1)) - 1)
-        |          >> (CASE WHEN j%8 < 4 THEN j%8 ELSE j%8 - 4 END)) & 1 = 1
-        |      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END) AS b
-        |  FROM d)
-        |SELECT doc_id, array_to_string(list_transform(range(8), k ->
-        |    substr('0123456789abcdef',
-        |      1 + b[8*k+5] + 2*b[8*k+6] + 4*b[8*k+7] + 8*b[8*k+8], 1) ||
-        |    substr('0123456789abcdef',
-        |      1 + b[8*k+1] + 2*b[8*k+2] + 4*b[8*k+3] + 8*b[8*k+4], 1)), '')
-        |  AS simhash
-        |FROM bits ORDER BY doc_id""".stripMargin,
-
-    // q29's signature CTEs + pigeonhole bands (4 hex chars = 16 bits),
-    // candidate pairs share a band, exact hamming via half-word
-    // xor/bit_count (64-bit hex exceeds signed BIGINT; 32-bit halves
-    // don't). CAST: bit_count yields TINYINT, Spark emits BIGINT.
-    "q102_simhash_radius" ->
-      """WITH d AS (
-        |  SELECT doc_id, list_transform(
-        |    list_distinct(string_split_regex(lower(trim(text)), '\s+')),
-        |    tkn -> md5(tkn)) AS hs
-        |  FROM documents),
-        |bits AS (
-        |  SELECT doc_id, list_transform(range(64), j ->
-        |    CASE WHEN list_sum(list_transform(hs, h ->
-        |      CASE WHEN ((strpos('0123456789abcdef',
-        |          substr(h, 2*(j//8) + CASE WHEN j%8 < 4 THEN 2 ELSE 1 END, 1)) - 1)
-        |          >> (CASE WHEN j%8 < 4 THEN j%8 ELSE j%8 - 4 END)) & 1 = 1
-        |      THEN 1 ELSE -1 END)) >= 0 THEN 1 ELSE 0 END) AS b
-        |  FROM d),
-        |sigs AS (
-        |  SELECT doc_id AS id, array_to_string(list_transform(range(8), k ->
-        |      substr('0123456789abcdef',
-        |        1 + b[8*k+5] + 2*b[8*k+6] + 4*b[8*k+7] + 8*b[8*k+8], 1) ||
-        |      substr('0123456789abcdef',
-        |        1 + b[8*k+1] + 2*b[8*k+2] + 4*b[8*k+3] + 8*b[8*k+4], 1)), '')
-        |    AS sig
-        |  FROM bits),
-        |bnd AS (
-        |  SELECT id, bb.band, substr(sig, 4*bb.band + 1, 4) AS bucket
-        |  FROM sigs, (SELECT unnest([0,1,2,3]) AS band) bb),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS id_a, c.id AS id_b
-        |  FROM bnd a JOIN bnd c
-        |    ON a.band = c.band AND a.bucket = c.bucket AND a.id < c.id),
-        |ham AS (
-        |  SELECT c.id_a, c.id_b,
-        |    CAST(bit_count(xor(('0x'||substr(sa.sig,1,8))::BIGINT,
-        |                       ('0x'||substr(sb.sig,1,8))::BIGINT)) +
-        |         bit_count(xor(('0x'||substr(sa.sig,9,8))::BIGINT,
-        |                       ('0x'||substr(sb.sig,9,8))::BIGINT)) AS BIGINT)
-        |      AS hamming
-        |  FROM cand c JOIN sigs sa ON sa.id = c.id_a
-        |              JOIN sigs sb ON sb.id = c.id_b)
-        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Exact mirror of the portable Rademacher-LSH ANN: sign components
-    // from md5('hp{t}_{bit}_{d}'), 16 tables × 6 bits, candidates =
-    // bucket collisions, exact cosine re-rank.
-    "q32_ann_lsh" ->
-      """WITH sgn AS (
-        |  SELECT tt.t, bb.bit, list_transform(range(64), d ->
-        |    CASE WHEN strpos('0123456789abcdef',
-        |      substr(md5('hp' || tt.t || '_' || bb.bit || '_' || d), 1, 1)) - 1 < 8
-        |    THEN 1.0 ELSE -1.0 END) AS sgns
-        |  FROM range(16) tt(t), range(6) bb(bit)),
-        |vb AS (
-        |  SELECT e.vec_id, s.t,
-        |    sum(CASE WHEN list_sum(list_transform(list_zip(e.embedding, s.sgns),
-        |          p -> CAST(p[1] AS DOUBLE) * p[2])) >= 0
-        |        THEN (1::BIGINT << CAST(5 - s.bit AS INT)) ELSE 0 END) AS bucket
-        |  FROM embeddings e, sgn s GROUP BY e.vec_id, s.t),
-        |cand AS (
-        |  SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
-        |  FROM vb q JOIN vb c ON q.t = c.t AND q.bucket = c.bucket
-        |  WHERE q.vec_id < 5 AND c.vec_id <> q.vec_id),
-        |scored AS (
-        |  SELECT cand.query_id, cand.neighbor_id,
-        |    row_number() OVER (PARTITION BY cand.query_id ORDER BY
-        |      list_sum(list_transform(list_zip(qe.embedding, ce.embedding),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(qe.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(ce.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |      cand.neighbor_id) AS rnk
-        |  FROM cand JOIN embeddings qe ON qe.vec_id = cand.query_id
-        |            JOIN embeddings ce ON ce.vec_id = cand.neighbor_id)
-        |SELECT query_id, neighbor_id, CAST(rnk AS INT) AS rank
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    // Exact mirror of the sampled-coarse-quantizer IVF: centroids = the 8
-    // lowest-id vectors, assignment/probe by cosine (ties → larger cell
-    // index, matching array_max on struct(sim, idx)), probe 4 cells,
-    // exact cosine re-rank within probed cells.
-    "q43_ann_ivf" ->
-      """WITH cent AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-        |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id LIMIT 8)),
-        |asg AS (
-        |  SELECT id, v, cell FROM (
-        |    SELECT e.vec_id AS id, e.embedding AS v, c.ci AS cell,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(e.embedding, c.cv),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(e.embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(c.cv,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        c.ci DESC) AS rn
-        |    FROM embeddings e CROSS JOIN cent c) WHERE rn = 1),
-        |prb AS (
-        |  SELECT query_id, qv, cell FROM (
-        |    SELECT q.vec_id AS query_id, q.embedding AS qv, c.ci AS cell,
-        |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(q.embedding, c.cv),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(q.embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(c.cv,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        c.ci DESC) AS rn
-        |    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id < 5)
-        |  WHERE rn <= 4),
-        |cand AS (
-        |  SELECT p.query_id, p.qv, a.id, a.v
-        |  FROM prb p JOIN asg a USING (cell) WHERE a.id <> p.query_id),
-        |scored AS (
-        |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id ORDER BY
-        |      list_sum(list_transform(list_zip(qv, v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(qv,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(v,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |      id ASC) AS rnk
-        |  FROM cand)
-        |SELECT query_id, id AS neighbor_id, CAST(rnk AS INT) AS rank
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    "q30_jaccard_pairs" ->
-      """WITH t AS (SELECT doc_id, lang, source,
-        |  list_distinct(list_transform(
-        |    generate_series(1, len(string_split_regex(lower(trim(text)), '\s+')) - 1),
-        |    i -> string_split_regex(lower(trim(text)), '\s+')[i] || ' ' ||
-        |         string_split_regex(lower(trim(text)), '\s+')[i+1])) AS tk
-        | FROM documents),
-        |j AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.tk, b.tk))) AS jaccard
-        | FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-        |   AND a.doc_id < b.doc_id)
-        |SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.08
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q48_dup_clusters" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, lang, source,
-        |  list_distinct(list_transform(
-        |    generate_series(1, len(string_split_regex(lower(trim(text)), '\s+')) - 1),
-        |    i -> string_split_regex(lower(trim(text)), '\s+')[i] || ' ' ||
-        |         string_split_regex(lower(trim(text)), '\s+')[i+1])) AS tk
-        | FROM documents),
-        |j AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-        |   AND a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.tk, b.tk))) >= 0.08),
-        |edges AS (
-        | SELECT id_a AS src, id_b AS dst FROM j
-        | UNION SELECT id_b, id_a FROM j),
-        |reach(id, comp) AS (
-        | SELECT doc_id, doc_id FROM documents
-        | UNION
-        | SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id)
-        |SELECT id AS doc_id, min(comp) AS cluster_id
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    // identical semantics to q48 — the Spark side routes through the
-    // co-bucketed big-graph CC regime instead of the small-graph paths
-    "q145_cc_cobucket" ->
-      """WITH RECURSIVE t AS (SELECT doc_id, lang, source,
-        |  list_distinct(list_transform(
-        |    generate_series(1, len(string_split_regex(lower(trim(text)), '\s+')) - 1),
-        |    i -> string_split_regex(lower(trim(text)), '\s+')[i] || ' ' ||
-        |         string_split_regex(lower(trim(text)), '\s+')[i+1])) AS tk
-        | FROM documents),
-        |j AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        | FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-        |   AND a.doc_id < b.doc_id
-        | WHERE CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE)
-        |    / len(list_distinct(list_concat(a.tk, b.tk))) >= 0.08),
-        |edges AS (
-        | SELECT id_a AS src, id_b AS dst FROM j
-        | UNION SELECT id_b, id_a FROM j),
-        |reach(id, comp) AS (
-        | SELECT doc_id, doc_id FROM documents
-        | UNION
-        | SELECT e.dst, r.comp FROM reach r JOIN edges e ON e.src = r.id)
-        |SELECT id AS doc_id, min(comp) AS cluster_id
-        |FROM reach GROUP BY id ORDER BY doc_id""".stripMargin,
-
-    "q31_ann_bruteforce" ->
-      """WITH q AS (SELECT vec_id AS qid, embedding AS qe FROM embeddings
-        |           WHERE vec_id < 5),
-        |scored AS (
-        |  SELECT q.qid, e.vec_id,
-        |    row_number() OVER (PARTITION BY q.qid ORDER BY
-        |      list_sum(list_transform(list_zip(q.qe, e.embedding),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(q.qe,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(e.embedding,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |      e.vec_id) AS rnk
-        |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.qid)
-        |SELECT qid AS query_id, vec_id AS neighbor_id, CAST(rnk AS INT) AS rank
-        |FROM scored WHERE rnk <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    "q33_embed_stats" ->
-      """SELECT label, count(*) AS n,
-        | CAST(max(CAST(list_sum(list_transform(embedding,
-        |   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS DECIMAL(28,10)))
-        |   AS DOUBLE) AS max_norm_sq,
-        | CAST(min(CAST(list_sum(list_transform(embedding,
-        |   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))) AS DECIMAL(28,10)))
-        |   AS DOUBLE) AS min_norm_sq
-        |FROM embeddings GROUP BY label ORDER BY label""".stripMargin,
-
-    "q34_pivot" ->
-      s"""SELECT user_id,
-         | ${dSumWhere("event_type = 'click'", "value")} AS click,
-         | ${dSumWhere("event_type = 'error'", "value")} AS error,
-         | ${dSumWhere("event_type = 'purchase'", "value")} AS purchase,
-         | ${dSumWhere("event_type = 'signup'", "value")} AS signup,
-         | ${dSumWhere("event_type = 'view'", "value")} AS view
-         |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q35_window_funcs" ->
-      """SELECT event_id, user_id,
-        | lag(event_id, 1) OVER w AS prev_event_id,
-        | lead(event_type, 1) OVER w AS next_type,
-        | CAST(row_number() OVER w AS INT) AS rn,
-        | CAST(sum(CAST(value AS DECIMAL(28,10))) OVER
-        |   (PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-        |   AS running_value
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q36_sync_advance" ->
-      """SELECT CAST(least(max(event_id) - 50, 2000) AS BIGINT) AS next_watermark,
-        | least(max(event_id) - 50, 2000) > 0 AS should_run
-        |FROM events""".stripMargin,
-
-    // Dims are the id-only closed form shared with Multimodal.syntheticDims;
-    // the Spark side reads them by genuinely decoding the PNG header.
-    "q37_media_meta" ->
-      """SELECT doc_id AS media_id,
-        | CAST(8 + doc_id % 9 AS INT) AS width,
-        | CAST(8 + doc_id % 7 AS INT) AS height,
-        | CAST((8 + doc_id % 9) * (8 + doc_id % 7) AS BIGINT) AS n_pixels
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    // ImageIOCodec features = red-channel histogram (bin = r >> 4) over a
-    // PNG whose gray pixel(x,y) = ((id%1000003)·31 + x·7 + y·13) % 256 —
-    // PNG is lossless, so the SQL recomputation of the pixel function
-    // must equal what the real decoder recovered, bin for bin.
-    "q38_media_features" -> {
-      val cs = (0 until 16).map(k =>
-        s" CAST(len(list_filter(bins, x -> x = $k)) AS BIGINT) AS c${"%02d".format(k)}")
-        .mkString(",\n")
-      s"""WITH n AS (
-         |  SELECT doc_id AS media_id,
-         |    CAST((8 + doc_id % 9) * (8 + doc_id % 7) AS BIGINT) AS n_pixels,
-         |    list_transform(range((8 + doc_id % 9) * (8 + doc_id % 7)),
-         |      i -> (((doc_id % 1000003) * 31 + (i % (8 + doc_id % 9)) * 7
-         |             + (i // (8 + doc_id % 9)) * 13) % 256) // 16) AS bins
-         |  FROM documents)
-         |SELECT media_id, n_pixels,
-         |$cs
-         |FROM n ORDER BY media_id""".stripMargin
-    },
-
-    "q39_frame_counts" ->
-      """SELECT doc_id AS media_id,
-        | least(CAST(ceil(length(text) / 64.0) AS BIGINT), 8) AS n_frames
-        |FROM documents ORDER BY media_id""".stripMargin,
-
-    "q41_pipeline_vertices" ->
-      s"""WITH price AS (
-         |  SELECT p_brand AS symbol, max(p_retailprice) / 1000.0 AS coin_price_usd
-         |  FROM part GROUP BY p_brand),
-         |meta AS (
-         |  SELECT p_partkey AS token_address, p_brand AS symbol,
-         |         p_size % 4 AS decimals FROM part),
-         |dims AS (
-         |  SELECT m.token_address, p.coin_price_usd, m.decimals
-         |  FROM meta m LEFT JOIN price p USING (symbol)),
-         |txns AS (
-         |  SELECT l_orderkey AS transaction_id, l_partkey AS token_address,
-         |         l_extendedprice AS coin_value, l_tax AS fee,
-         |         l_linenumber % 3 AS typ, CAST(l_shipdate AS DATE) AS bdt,
-         |         row_number() OVER (PARTITION BY l_orderkey
-         |           ORDER BY l_shipdate, l_linenumber, l_partkey,
-         |                    l_extendedprice, l_tax) AS log_index
-         |  FROM lineitem),
-         |enriched AS (
-         |  SELECT t.transaction_id, t.typ, t.bdt AS block_date_time,
-         |    CAST(t.coin_value AS DOUBLE) /
-         |      power(10.0, CASE WHEN t.typ IN (0,1) THEN 0
-         |                       ELSE COALESCE(d.decimals, 0) END) AS cv,
-         |    CAST(t.coin_value AS DOUBLE) /
-         |      power(10.0, CASE WHEN t.typ IN (0,1) THEN 0
-         |                       ELSE COALESCE(d.decimals, 0) END)
-         |      * COALESCE(d.coin_price_usd, 0) AS cv_usd,
-         |    CASE WHEN t.log_index > 1 THEN 0.0 ELSE t.fee END AS fee,
-         |    (CASE WHEN t.log_index > 1 THEN 0.0 ELSE t.fee END)
-         |      * COALESCE(d.coin_price_usd, 0) AS fee_usd
-         |  FROM txns t JOIN dims d USING (token_address))
-         |SELECT transaction_id,
-         | ${dSumWhere("typ = 0", "cv")} AS external_value,
-         | ${dSumWhere("typ = 0", "cv_usd")} AS external_value_usd,
-         | max(block_date_time) AS block_date,
-         | ${dSum("fee")} AS txn_fee,
-         | ${dSum("fee_usd")} AS txn_fee_usd,
-         | ${dSumWhere("typ = 1", "cv")} AS internal_value,
-         | ${dSumWhere("typ = 1", "cv_usd")} AS internal_value_usd,
-         | ${dSumWhere("typ = 2", "cv_usd")} AS token_transfer_usd
-         |FROM enriched GROUP BY transaction_id ORDER BY transaction_id""".stripMargin,
-
-    "q44_percentiles" ->
-      """SELECT l_returnflag,
-        | quantile_cont(l_quantity, 0.5) AS median_qty,
-        | quantile_cont(l_quantity, 0.9) AS p90_qty,
-        | quantile_cont(l_discount, 0.5) AS median_disc
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q45_rollup" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        | CAST(sum(CAST(l_quantity AS BIGINT)) AS BIGINT) AS qty,
-        | CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus) AS INT) AS gflag
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gflag, l_returnflag, l_linestatus""".stripMargin,
-
-    "q46_distinct_counts" ->
-      """SELECT l_returnflag,
-        | count(DISTINCT l_partkey) AS n_parts,
-        | count(DISTINCT l_suppkey) AS n_supps,
-        | count(DISTINCT (l_partkey, l_suppkey)) AS n_pairs
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "q49_asof_join" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |purchases AS (
-        |  SELECT user_id, ts, value AS last_purchase_value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id, p.last_purchase_value
-        |FROM clicks c ASOF LEFT JOIN purchases p
-        |  ON c.user_id = p.user_id AND c.ts >= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-
-    "q68_asof_forward" ->
-      """WITH clicks AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-        |purchases AS (
-        |  SELECT user_id, ts, value AS next_purchase_value FROM events
-        |  WHERE event_type = 'purchase')
-        |SELECT c.event_id, c.user_id, p.next_purchase_value
-        |FROM clicks c ASOF LEFT JOIN purchases p
-        |  ON c.user_id = p.user_id AND c.ts <= p.ts
-        |ORDER BY c.event_id""".stripMargin,
-
-    "q87_asof_broadcast" ->
-      """WITH views AS (
-        |  SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'),
-        |purchases AS (
-        |  SELECT user_id, ts, value AS last_purchase_value,
-        |         props AS last_purchase_props
-        |  FROM events WHERE event_type = 'purchase')
-        |SELECT v.event_id, v.user_id, p.last_purchase_value,
-        |       p.last_purchase_props
-        |FROM views v ASOF LEFT JOIN purchases p
-        |  ON v.user_id = p.user_id AND v.ts >= p.ts
-        |ORDER BY v.event_id""".stripMargin,
-
-    "q52_cube" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        | CAST(grouping(o_orderstatus) * 2 + grouping(o_orderpriority) AS INT)
-        |   AS gflag
-        |FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-        |ORDER BY gflag, o_orderstatus, o_orderpriority""".stripMargin,
-
-    "q53_intersect" ->
-      """SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'
-        |INTERSECT
-        |SELECT DISTINCT user_id FROM events WHERE event_type = 'error'
-        |ORDER BY user_id""".stripMargin,
-
-    "q54_string_agg" ->
-      """SELECT n_regionkey,
-        | string_agg(n_name, ',' ORDER BY n_name) AS nations
-        |FROM nation GROUP BY n_regionkey ORDER BY n_regionkey""".stripMargin,
-
-    "q50_sessionize" ->
-      """WITH x AS (
-        |  SELECT event_id, user_id, ts,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-        |  FROM events)
-        |SELECT event_id, user_id,
-        |  CAST(sum(CASE WHEN pts IS NOT NULL AND ts - pts > INTERVAL 1 HOUR
-        |                THEN 1 ELSE 0 END)
-        |    OVER (PARTITION BY user_id ORDER BY ts
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-        |    AS BIGINT) AS session_id
-        |FROM x ORDER BY event_id""".stripMargin,
-
-    "q51_interval_join" ->
-      """SELECT a.user_id, a.event_id AS id_a, b.event_id AS id_b
-        |FROM events a JOIN events b
-        |  ON a.user_id = b.user_id AND b.ts > a.ts
-        |  AND b.ts <= a.ts + INTERVAL 2 HOUR
-        |ORDER BY a.user_id, id_a, id_b""".stripMargin,
-
-    "q42_ripple_enrich" ->
-      """WITH price AS (SELECT max(value) / 100.0 AS coin_price_usd FROM events)
-        |SELECT event_id AS transaction_id,
-        | value + value * 0.25 AS outgoing_value,
-        | value AS incoming_value,
-        | (value + value * 0.25) * coin_price_usd AS outgoing_value_usd,
-        | value * coin_price_usd AS incoming_value_usd
-        |FROM events CROSS JOIN price ORDER BY transaction_id""".stripMargin,
-
-    "q57_group_topk" ->
-      """SELECT o_custkey, o_orderkey, o_totalprice, CAST(rn AS INT) AS rank
-        |FROM (SELECT o_custkey, o_orderkey, o_totalprice,
-        |        row_number() OVER (PARTITION BY o_custkey
-        |          ORDER BY o_totalprice DESC, o_orderkey) AS rn
-        |      FROM orders)
-        |WHERE rn <= 3 ORDER BY o_custkey, rank""".stripMargin,
-
-    "q58_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure,
-        |       l_quantity AS val FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice
-        |FROM lineitem
-        |UNION ALL
-        |SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM lineitem
-        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-
-    "q59_vocab" ->
-      """SELECT token, count(*) AS n
-        |FROM (SELECT unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |        AS token FROM documents)
-        |WHERE token <> '' GROUP BY token
-        |ORDER BY n DESC, token LIMIT 50""".stripMargin,
-
-    "q60_stratified_cap" ->
-      """SELECT doc_id, lang, source
-        |FROM (SELECT doc_id, lang, source,
-        |        row_number() OVER (PARTITION BY lang, source
-        |          ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rn
-        |      FROM documents)
-        |WHERE rn <= 20 ORDER BY doc_id""".stripMargin,
-
-    "q62_seq_pack" ->
-      """WITH d AS (SELECT doc_id,
-        |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,1) IN ('d','e')
-        |       THEN 'val'
-        |       WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,1) = 'f'
-        |       THEN 'test' ELSE 'train' END AS split,
-        |  CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok
-        | FROM documents),
-        |c AS (SELECT doc_id, split, n_tok,
-        |  sum(n_tok) OVER (PARTITION BY split ORDER BY doc_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum FROM d)
-        |SELECT doc_id, split, n_tok,
-        |  CAST((cum - n_tok) // 2048 AS BIGINT) AS start_win,
-        |  CAST((cum - 1) // 2048 AS BIGINT) AS end_win
-        |FROM c ORDER BY doc_id""".stripMargin,
-
-    "q101_cms_sketch" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split_regex(lower(trim(text)), '\s+')) AS tok
-        |  FROM documents),
-        |t AS (SELECT tok FROM toks WHERE tok <> ''),
-        |rows_ AS (SELECT unnest([0, 1, 2, 3]) AS r),
-        |counters AS (
-        |  SELECT r, ('0x' || substr(md5(tok || '#' || r), 1, 8))::BIGINT % 1024
-        |           AS bucket, count(*) AS c
-        |  FROM t, rows_ GROUP BY 1, 2),
-        |top20 AS (SELECT tok, count(*) AS n FROM t GROUP BY tok
-        |          ORDER BY n DESC, tok LIMIT 20)
-        |SELECT p.tok, CAST(p.n AS BIGINT) AS true_count,
-        |       CAST(min(c.c) AS BIGINT) AS cms_estimate
-        |FROM top20 p JOIN rows_ r ON TRUE
-        |JOIN counters c ON c.r = r.r AND c.bucket =
-        |  ('0x' || substr(md5(p.tok || '#' || r.r), 1, 8))::BIGINT % 1024
-        |GROUP BY 1, 2
-        |ORDER BY true_count DESC, tok""".stripMargin,
-
-    "q100_funnel" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_type,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, ts, event_type,
-        |    sum(CASE WHEN pts IS NOT NULL AND ts - pts > INTERVAL 1 HOUR
-        |             THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-        |      AS session_id
-        |  FROM x),
-        |v AS (
-        |  SELECT user_id, session_id,
-        |         min(CASE WHEN event_type = 'view' THEN ts END) AS t_view
-        |  FROM sess GROUP BY 1, 2 HAVING t_view IS NOT NULL),
-        |c AS (
-        |  SELECT s.user_id, s.session_id, min(s.ts) AS t_click
-        |  FROM sess s JOIN v ON s.user_id = v.user_id
-        |                    AND s.session_id = v.session_id
-        |  WHERE s.event_type = 'click' AND s.ts > v.t_view
-        |  GROUP BY 1, 2),
-        |p AS (
-        |  SELECT s.user_id, s.session_id, min(s.ts) AS t_purchase
-        |  FROM sess s JOIN c ON s.user_id = c.user_id
-        |                    AND s.session_id = c.session_id
-        |  WHERE s.event_type = 'purchase' AND s.ts > c.t_click
-        |  GROUP BY 1, 2)
-        |SELECT (SELECT count(*) FROM v) AS n_view,
-        |       (SELECT count(*) FROM c) AS n_view_click,
-        |       (SELECT count(*) FROM p) AS n_full_funnel""".stripMargin,
-
-    "q98_centroid_sim" ->
-      """WITH q AS (
-        |  SELECT label, generate_subscripts(embedding, 1) AS pos,
-        |         CAST(floor(CAST(unnest(embedding) AS DOUBLE) * 10000.0 + 0.5)
-        |           AS BIGINT) AS qx
-        |  FROM embeddings),
-        |s AS (SELECT label, pos, CAST(sum(qx) AS BIGINT) AS sv
-        |      FROM q GROUP BY 1, 2),
-        |n AS (SELECT label, CAST(sum(sv * sv) AS BIGINT) AS nrm
-        |      FROM s GROUP BY 1),
-        |d AS (SELECT a.label AS label_a, b.label AS label_b,
-        |             CAST(sum(a.sv * b.sv) AS BIGINT) AS dot
-        |      FROM s a JOIN s b ON a.pos = b.pos AND a.label < b.label
-        |      GROUP BY 1, 2)
-        |SELECT d.label_a, d.label_b,
-        |  CAST(dot AS DOUBLE)
-        |    / (sqrt(CAST(na.nrm AS DOUBLE)) * sqrt(CAST(nb.nrm AS DOUBLE)))
-        |    AS cos_sim
-        |FROM d JOIN n na ON d.label_a = na.label
-        |       JOIN n nb ON d.label_b = nb.label
-        |ORDER BY 1, 2""".stripMargin,
-
-    "q99_fuzzy_match" ->
-      """SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        |       CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
-        |FROM part a JOIN part b
-        |  ON a.p_brand = b.p_brand AND a.p_size = b.p_size
-        | AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 12
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q97_source_overlap" -> {
-      val cat = (0 until 8).map(k => if (k == 0) "t0[i]" else s"t0[i+$k]")
-        .mkString(" || ' ' || ")
-      s"""WITH tk AS (SELECT source,
-         |  string_split_regex(lower(trim(text)), '\\s+') AS t0 FROM documents),
-         |sh AS (SELECT DISTINCT source,
-         |  unnest(list_distinct(list_transform(generate_series(1, len(t0) - 7),
-         |    i -> ('0x' || substr(md5($cat), 1, 8))::BIGINT % 2147483647))) AS g
-         | FROM tk)
-         |SELECT a.source AS source_a, b.source AS source_b,
-         |       count(*) AS n_shared
-         |FROM sh a JOIN sh b ON a.g = b.g AND a.source < b.source
-         |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-    },
-
-    "q96_zscore" ->
-      """WITH stats AS (
-        |  SELECT lang, count(*) AS n, sum(n_chars) AS s,
-        |         sum(n_chars * n_chars) AS ss
-        |  FROM documents GROUP BY lang)
-        |SELECT d.doc_id, d.lang,
-        |  CAST(d.n_chars * t.n - t.s AS DOUBLE)
-        |    / sqrt(CAST(t.ss * t.n - t.s * t.s AS DOUBLE)) AS z
-        |FROM documents d JOIN stats t USING (lang)
-        |WHERE t.ss * t.n - t.s * t.s > 0
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "q95_chunking" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |         len(string_split_regex(trim(text), '\s+')) AS n
-        |  FROM documents WHERE length(trim(text)) > 0),
-        |c AS (
-        |  SELECT doc_id, n,
-        |         unnest(generate_series(0, greatest(n - 17, 0), 48)) AS start
-        |  FROM d)
-        |SELECT doc_id, CAST(start // 48 AS INT) AS chunk_id,
-        |       CAST(least(64, n - start) AS INT) AS n_tokens
-        |FROM c ORDER BY doc_id, chunk_id""".stripMargin,
-
-    "q94_shard_assign" ->
-      """SELECT doc_id, CAST(n_tok AS INT) AS n_tok,
-        |       CAST((cum - n_tok) // 20000 AS BIGINT) AS shard
-        |FROM (SELECT doc_id, n_tok,
-        |        sum(n_tok) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        |      FROM (SELECT doc_id,
-        |              len(string_split_regex(trim(text), '\s+')) AS n_tok
-        |            FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-
-    "q93_dup_ngram_coverage" -> {
-      val cat = (0 until 8).map(k => if (k == 0) "t0[i]" else s"t0[i+$k]")
-        .mkString(" || ' ' || ")
-      s"""WITH tk AS (SELECT doc_id,
-         |  string_split_regex(lower(trim(text)), '\\s+') AS t0 FROM documents),
-         |sh AS (SELECT doc_id,
-         |  unnest(list_distinct(list_transform(generate_series(1, len(t0) - 7),
-         |    i -> ('0x' || substr(md5($cat), 1, 8))::BIGINT % 2147483647))) AS g
-         | FROM tk),
-         |dup AS (SELECT g FROM sh GROUP BY g HAVING count(*) >= 2),
-         |tot AS (SELECT doc_id, count(*) AS n_grams FROM sh GROUP BY doc_id),
-         |cov AS (SELECT doc_id, count(*) AS n_dup FROM sh
-         |        WHERE g IN (SELECT g FROM dup) GROUP BY doc_id)
-         |SELECT t.doc_id, CAST(t.n_grams AS INT) AS n_grams,
-         |  CAST(coalesce(c.n_dup, 0) AS DOUBLE) / CAST(t.n_grams AS DOUBLE)
-         |    AS dup_frac
-         |FROM tot t LEFT JOIN cov c USING (doc_id)
-         |ORDER BY t.doc_id""".stripMargin
-    },
-
-    "q63_contamination" -> {
-      val cat = (0 until 8).map(k => if (k == 0) "t0[i]" else s"t0[i+$k]")
-        .mkString(" || ' ' || ")
-      s"""WITH tk AS (SELECT doc_id,
-         |  CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,1) IN ('d','e')
-         |       THEN 'val'
-         |       WHEN substr(md5(CAST(doc_id AS VARCHAR)),1,1) = 'f'
-         |       THEN 'test' ELSE 'train' END AS split,
-         |  string_split_regex(lower(trim(text)), '\\s+') AS t0
-         | FROM documents),
-         |sh AS (SELECT doc_id, split,
-         |  unnest(list_distinct(list_transform(generate_series(1, len(t0) - 7),
-         |    i -> ('0x' || substr(md5($cat), 1, 8))::BIGINT % 2147483647))) AS g
-         | FROM tk)
-         |SELECT DISTINCT doc_id FROM sh WHERE split = 'train'
-         |  AND g IN (SELECT g FROM sh WHERE split <> 'train')
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "q64_tumbling" ->
-      s"""SELECT event_type, epoch_ns(ts) // 3600000000000 AS hour_id,
-         | count(*) AS n, ${dSum("value")} AS sum_value
-         |FROM events GROUP BY 1, 2 ORDER BY event_type, hour_id""".stripMargin,
-
-    "q65_pagerank" -> {
-      val iters = (1 to 3).map { k =>
-        s"""r$k AS (
-           |  SELECT n.id, CAST(150000 + (850000 * COALESCE(s.c, 0)) // 1000000
-           |    AS BIGINT) AS rank
-           |  FROM n LEFT JOIN (
-           |    SELECT e.dst AS id, CAST(sum(r.rank // d.deg) AS BIGINT) AS c
-           |    FROM e JOIN r${k - 1} r ON r.id = e.src
-           |           JOIN deg d ON d.id = e.src
-           |    GROUP BY e.dst) s ON s.id = n.id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |n AS (SELECT DISTINCT src AS id FROM e
-         |      UNION SELECT DISTINCT dst FROM e),
-         |deg AS (SELECT src AS id, count(*) AS deg FROM e GROUP BY src),
-         |r0 AS (SELECT id, CAST(1000000 AS BIGINT) AS rank FROM n),
-         |$iters
-         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
-    },
-
-    "q66_tfidf" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\s+'))
-        |    AS token FROM documents),
-        |tf AS (SELECT doc_id, token, count(*) AS tf FROM toks
-        |       WHERE token <> '' GROUP BY doc_id, token),
-        |dfreq AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-        |n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-        |scored AS (SELECT t.doc_id, t.token, t.tf, d.df,
-        |    t.tf * (CAST(n.n_docs AS DOUBLE) / d.df) AS score
-        |  FROM tf t JOIN dfreq d USING (token) CROSS JOIN n),
-        |r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
-        |        ORDER BY score DESC, token) AS rnk FROM scored)
-        |SELECT doc_id, rnk, token, tf, df, score FROM r WHERE rnk <= 5
-        |ORDER BY doc_id, rnk""".stripMargin,
-
-    "q69_hash_sample" ->
-      """SELECT doc_id, lang, source FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      < 429496729
-        |ORDER BY doc_id""".stripMargin,
-
-    "q89_mixture_sample" ->
-      """SELECT source, count(*) AS n FROM documents
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      < CASE source WHEN 'src0' THEN 4294967296
-        |                    WHEN 'src1' THEN 2147483648
-        |                    WHEN 'src2' THEN 1073741824
-        |                    ELSE 536870912 END
-        |GROUP BY source ORDER BY source""".stripMargin,
-
-    "q92_snapshot_diff" ->
-      """WITH old AS (
-        |  SELECT doc_id, md5(text) AS h_old FROM documents WHERE doc_id % 10 <> 0),
-        |nw AS (
-        |  SELECT doc_id,
-        |         md5(CASE WHEN doc_id % 7 = 0 THEN text || ' v2' ELSE text END)
-        |           AS h_new
-        |  FROM documents WHERE doc_id % 10 <> 9)
-        |SELECT CASE WHEN h_old IS NULL THEN 'added'
-        |            WHEN h_new IS NULL THEN 'removed'
-        |            WHEN h_old <> h_new THEN 'changed'
-        |            ELSE 'unchanged' END AS status, count(*) AS n
-        |FROM old FULL OUTER JOIN nw USING (doc_id)
-        |GROUP BY status ORDER BY status""".stripMargin,
-
-    "q91_range_join" ->
-      """WITH mx AS (SELECT max(event_id) // 1000 AS m FROM events),
-        |batches AS (SELECT unnest(generate_series(0, m)) AS batch_id FROM mx)
-        |SELECT b.batch_id, count(*) AS n
-        |FROM events e JOIN batches b
-        |  ON e.event_id BETWEEN b.batch_id * 1000 AND b.batch_id * 1000 + 999
-        |GROUP BY b.batch_id ORDER BY b.batch_id""".stripMargin,
-
-    "q90_topk_agg" ->
-      """SELECT user_id, CAST(rn AS INT) AS rank, event_id, value FROM (
-        |  SELECT user_id, event_id, value,
-        |         row_number() OVER (PARTITION BY user_id
-        |                            ORDER BY value DESC, event_id DESC) AS rn
-        |  FROM events WHERE event_type = 'purchase') t
-        |WHERE rn <= 3
-        |ORDER BY user_id, rank""".stripMargin,
-
-    "q70_argmax" ->
-      """SELECT user_id, event_id AS top_event_id, value AS top_value
-        |FROM (SELECT user_id, event_id, value,
-        |        row_number() OVER (PARTITION BY user_id
-        |          ORDER BY value DESC, event_id DESC) AS rn
-        |      FROM events)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "q71_json_extract" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(props->>'k' AS BIGINT)) AS BIGINT) AS sum_k,
-        | min(CAST(props->>'k' AS BIGINT)) AS min_k,
-        | max(CAST(props->>'k' AS BIGINT)) AS max_k
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q72_rolling" ->
-      """SELECT user_id, event_id,
-        | CAST(sum(CAST(value AS DECIMAL(28,10))) OVER (w ROWS BETWEEN 2
-        |   PRECEDING AND CURRENT ROW) AS DOUBLE) AS roll_sum3,
-        | count(*) OVER (w ROWS UNBOUNDED PRECEDING) AS row_in_user,
-        | CAST(sum(CAST(value AS DECIMAL(28,10))) OVER (w ROWS UNBOUNDED
-        |   PRECEDING) AS DOUBLE) AS run_sum
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-        |ORDER BY user_id, row_in_user""".stripMargin,
-
-    "q73_lead_lag" ->
-      """SELECT user_id, event_id,
-        | lag(value, 1) OVER w AS prev_value,
-        | lead(event_type, 1) OVER w AS next_type,
-        | value - coalesce(lag(value, 1) OVER w, 0.0) AS delta,
-        | first_value(event_id) OVER (w ROWS UNBOUNDED PRECEDING)
-        |   AS first_event_id
-        |FROM events
-        |WINDOW w AS (PARTITION BY user_id ORDER BY epoch_ns(ts), event_id)
-        |ORDER BY user_id, event_id""".stripMargin,
-
-    "q74_histogram" ->
-      s"""SELECT CAST(floor(value / 50.0) AS BIGINT) AS bucket,
-         | count(*) AS n, ${dSum("value")} AS sum_value
-         |FROM events GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "q75_gini" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS c
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id,
-        |  CAST(1 AS DOUBLE) - CAST(sum(c*c) AS DOUBLE)
-        |    / CAST(sum(c)*sum(c) AS DOUBLE) AS gini,
-        |  CAST(sum(c) AS BIGINT) AS n
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "q76_quantize" ->
-      """WITH e AS (
-        |  SELECT vec_id, CAST(u.x AS DOUBLE) AS xd
-        |  FROM embeddings, UNNEST(embedding) AS u(x)),
-        |m AS (SELECT vec_id, max(abs(xd)) AS maxabs FROM e
-        |      GROUP BY vec_id HAVING max(abs(xd)) > 0),
-        |q AS (SELECT e.vec_id, m.maxabs,
-        |        CAST(floor(e.xd * 127.0 / m.maxabs + 0.5) AS BIGINT) AS q
-        |      FROM e JOIN m ON e.vec_id = m.vec_id)
-        |SELECT vec_id, CAST(sum(q) AS BIGINT) AS q_sum,
-        |  min(q) AS q_min, max(q) AS q_max,
-        |  CAST(sum(CASE WHEN abs(q) = 127 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_sat,
-        |  max(maxabs) AS maxabs
-        |FROM q GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "q77_redact" ->
-      """SELECT doc_id,
-        | md5(regexp_replace(text, '[0-9]', '#', 'g')) AS redacted_md5,
-        | length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))
-        |   AS n_digits
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "q78_salted_join" ->
-      s"""SELECT c.c_nationkey, count(*) AS n, ${dSum("e.value")} AS sum_value
-         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-         |GROUP BY c.c_nationkey ORDER BY c.c_nationkey""".stripMargin,
-
-    "q79_schema_union" ->
-      """SELECT doc_id, lang FROM documents
-        |UNION ALL BY NAME
-        |SELECT doc_id, source FROM documents
-        |ORDER BY doc_id, lang, source""".stripMargin,
-
-    "q80_bigrams" ->
-      """WITH t AS (
-        |  SELECT string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |b AS (
-        |  SELECT toks[i] || ' ' || toks[i + 1] AS bigram
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-        |  WHERE len(toks) >= 2)
-        |SELECT bigram, count(*) AS n FROM b
-        |GROUP BY bigram ORDER BY n DESC, bigram LIMIT 40""".stripMargin,
-
-    "q88_repetition" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, CAST(len(toks) AS INT) AS n_tok,
-        |         CAST(len(list_distinct(toks)) AS INT) AS n_distinct,
-        |         toks[i] || ' ' || toks[i + 1] AS bigram
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |c AS (
-        |  SELECT doc_id, bigram, max(n_tok) AS n_tok,
-        |         max(n_distinct) AS n_distinct, count(*) AS c
-        |  FROM b GROUP BY doc_id, bigram)
-        |SELECT doc_id,
-        |  CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS top_bigram_frac,
-        |  CAST(max(n_tok) - max(n_distinct) AS DOUBLE) / CAST(max(n_tok) AS DOUBLE)
-        |    AS rep_token_frac
-        |FROM c GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q81_date_spine" ->
-      """WITH bounds AS (
-        |  SELECT min(CAST(ts AS DATE)) AS lo, max(CAST(ts AS DATE)) AS hi
-        |  FROM events),
-        |spine AS (
-        |  SELECT CAST(unnest(generate_series(lo, hi, INTERVAL 1 DAY)) AS DATE)
-        |    AS d FROM bounds),
-        |daily AS (
-        |  SELECT CAST(ts AS DATE) AS d, count(*) AS n FROM events
-        |  WHERE event_type = 'purchase' AND value > 480 GROUP BY 1)
-        |SELECT spine.d, coalesce(daily.n, 0) AS n
-        |FROM spine LEFT JOIN daily USING (d) ORDER BY d""".stripMargin,
-
-    "q82_keep_best" ->
-      """SELECT fp, doc_id AS keep_doc_id, n_chars
-        |FROM (SELECT md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |        AS fp, doc_id, n_chars,
-        |        row_number() OVER (
-        |          PARTITION BY md5(regexp_replace(lower(trim(text)), '\s+', ' ', 'g'))
-        |          ORDER BY n_chars DESC, doc_id) AS rn
-        |      FROM documents)
-        |WHERE rn = 1 ORDER BY fp""".stripMargin,
-
-    "q83_contrastive_pairs" ->
-      """SELECT a.label, a.vec_id AS a, b.vec_id AS b
-        |FROM embeddings a JOIN embeddings b
-        |  ON a.label = b.label AND a.vec_id < b.vec_id
-        |WHERE ('0x' || substr(md5(CAST(a.vec_id AS VARCHAR) || '_' ||
-        |        CAST(b.vec_id AS VARCHAR)), 1, 8))::BIGINT < 1073741824
-        |ORDER BY a.label, a, b""".stripMargin,
-
-    "q86_argmax_window" ->
-      """SELECT user_id, event_id AS top_event_id, value AS top_value
-        |FROM (SELECT user_id, event_id, value,
-        |        row_number() OVER (PARTITION BY user_id
-        |          ORDER BY value DESC, event_id DESC) AS rn
-        |      FROM events)
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "q85_json_map" ->
-      """SELECT k, count(*) AS n,
-        | CAST(sum(CAST(json_extract(props, '$.' || k) AS BIGINT)) AS BIGINT)
-        |   AS sum_v,
-        | count(DISTINCT event_type) AS n_types
-        |FROM (SELECT event_type, props, unnest(json_keys(props)) AS k
-        |      FROM events)
-        |GROUP BY k ORDER BY k""".stripMargin,
-
-    "q84_multi_pivot" ->
-      """SELECT source,
-        | CAST(sum(CASE WHEN lang = 'en' THEN 1 END) AS BIGINT) AS en_n,
-        | CAST(sum(CASE WHEN lang = 'en' THEN n_chars END) AS BIGINT) AS en_chars,
-        | CAST(sum(CASE WHEN lang = 'de' THEN 1 END) AS BIGINT) AS de_n,
-        | CAST(sum(CASE WHEN lang = 'de' THEN n_chars END) AS BIGINT) AS de_chars,
-        | CAST(sum(CASE WHEN lang = 'es' THEN 1 END) AS BIGINT) AS es_n,
-        | CAST(sum(CASE WHEN lang = 'es' THEN n_chars END) AS BIGINT) AS es_chars,
-        | CAST(sum(CASE WHEN lang = 'fr' THEN 1 END) AS BIGINT) AS fr_n,
-        | CAST(sum(CASE WHEN lang = 'fr' THEN n_chars END) AS BIGINT) AS fr_chars,
-        | CAST(sum(CASE WHEN lang = 'zh' THEN 1 END) AS BIGINT) AS zh_n,
-        | CAST(sum(CASE WHEN lang = 'zh' THEN n_chars END) AS BIGINT) AS zh_chars
-        |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "q67_rank_funcs" ->
-      """SELECT event_id, event_type,
-        | rank() OVER w1 AS rnk,
-        | dense_rank() OVER w1 AS drnk,
-        | percent_rank() OVER w1 AS pct_rank,
-        | cume_dist() OVER w1 AS cdist,
-        | ntile(4) OVER w2 AS quartile
-        |FROM events
-        |WINDOW w1 AS (PARTITION BY event_type
-        |              ORDER BY epoch_ns(ts) // 1000000000),
-        |       w2 AS (PARTITION BY event_type ORDER BY epoch_ns(ts), event_id)
-        |ORDER BY event_id""".stripMargin,
-
-    "q61_quality_score" ->
-      """WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(trim(text)), '\s+') AS toks FROM documents),
-        |x AS (SELECT doc_id,
-        |  least(CAST(length(text) AS DOUBLE) / 200.0, 1.0) AS len_score,
-        |  CAST(length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g'))
-        |    AS DOUBLE) / CAST(greatest(length(text), 1) AS DOUBLE) AS punct_ratio,
-        |  CAST(len(list_filter(toks, tk -> tk IN ('the','a','of','and','to')))
-        |    AS DOUBLE) / greatest(len(toks), 1) AS stop_ratio
-        | FROM t)
-        |SELECT doc_id, len_score, punct_ratio, stop_ratio,
-        | least(greatest(len_score * 0.4 + (1.0 - punct_ratio) * 0.3 +
-        |   least(stop_ratio * 5.0, 1.0) * 0.3, 0.0), 1.0) AS quality
-        |FROM x ORDER BY doc_id""".stripMargin,
-
-    "q40_embed_neardup" ->
-      """WITH p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |       * sqrt(list_sum(list_transform(b.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        |  FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b FROM p WHERE sim >= 0.3 ORDER BY id_a, id_b""".stripMargin,
-
-    "q103_bloom_prune" ->
-      """WITH keys AS (SELECT p_partkey FROM part WHERE p_size <= 5),
-        |pos AS (
-        |  SELECT ('0x'||substr(md5(CAST(p_partkey AS VARCHAR)),1,8))::BIGINT % 4096 AS p
-        |  FROM keys
-        |  UNION
-        |  SELECT ('0x'||substr(md5(CAST(p_partkey AS VARCHAR)),9,8))::BIGINT % 4096
-        |  FROM keys)
-        |SELECT l_returnflag,
-        |  count(CASE WHEN
-        |      ('0x'||substr(md5(CAST(l_partkey AS VARCHAR)),1,8))::BIGINT % 4096
-        |        IN (SELECT p FROM pos)
-        |      AND ('0x'||substr(md5(CAST(l_partkey AS VARCHAR)),9,8))::BIGINT % 4096
-        |        IN (SELECT p FROM pos)
-        |    THEN 1 END) AS n_bloom,
-        |  count(CASE WHEN l_partkey IN (SELECT p_partkey FROM keys)
-        |    THEN 1 END) AS n_exact
-        |FROM lineitem GROUP BY l_returnflag
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q104_kmv_distinct" ->
-      """WITH h AS (
-        |  SELECT DISTINCT l_returnflag,
-        |    ('0x'||substr(md5(CAST(l_partkey AS VARCHAR)),1,8))::BIGINT AS h
-        |  FROM lineitem),
-        |r AS (
-        |  SELECT l_returnflag, h,
-        |    row_number() OVER (PARTITION BY l_returnflag ORDER BY h) AS rn
-        |  FROM h),
-        |g AS (
-        |  SELECT l_returnflag, count(*) AS ndv,
-        |    max(CASE WHEN rn = 256 THEN h END) AS h_k
-        |  FROM r GROUP BY 1)
-        |SELECT l_returnflag,
-        |  CAST(CASE WHEN ndv < 256 THEN ndv
-        |       ELSE (255 * 4294967296) // h_k END AS BIGINT) AS est_ndv,
-        |  ndv AS exact_ndv
-        |FROM g ORDER BY l_returnflag""".stripMargin,
-
-    "q105_profile" ->
-      """SELECT 'l_returnflag' AS "column", count(*) AS n_rows,
-        |  count(l_returnflag) AS n_nonnull, count(DISTINCT l_returnflag) AS n_distinct,
-        |  min(CAST(l_returnflag AS VARCHAR)) AS min_s,
-        |  max(CAST(l_returnflag AS VARCHAR)) AS max_s FROM lineitem
-        |UNION ALL
-        |SELECT 'l_linestatus', count(*), count(l_linestatus),
-        |  count(DISTINCT l_linestatus), min(CAST(l_linestatus AS VARCHAR)),
-        |  max(CAST(l_linestatus AS VARCHAR)) FROM lineitem
-        |UNION ALL
-        |SELECT 'l_orderkey', count(*), count(l_orderkey),
-        |  count(DISTINCT l_orderkey), min(CAST(l_orderkey AS VARCHAR)),
-        |  max(CAST(l_orderkey AS VARCHAR)) FROM lineitem
-        |UNION ALL
-        |SELECT 'l_partkey', count(*), count(l_partkey),
-        |  count(DISTINCT l_partkey), min(CAST(l_partkey AS VARCHAR)),
-        |  max(CAST(l_partkey AS VARCHAR)) FROM lineitem
-        |UNION ALL
-        |SELECT 'l_suppkey', count(*), count(l_suppkey),
-        |  count(DISTINCT l_suppkey), min(CAST(l_suppkey AS VARCHAR)),
-        |  max(CAST(l_suppkey AS VARCHAR)) FROM lineitem
-        |UNION ALL
-        |SELECT 'l_linenumber', count(*), count(l_linenumber),
-        |  count(DISTINCT l_linenumber), min(CAST(l_linenumber AS VARCHAR)),
-        |  max(CAST(l_linenumber AS VARCHAR)) FROM lineitem
-        |UNION ALL
-        |SELECT 'l_shipdate', count(*), count(l_shipdate),
-        |  count(DISTINCT CAST(l_shipdate AS DATE)),
-        |  min(CAST(CAST(l_shipdate AS DATE) AS VARCHAR)),
-        |  max(CAST(CAST(l_shipdate AS DATE) AS VARCHAR)) FROM lineitem
-        |ORDER BY "column"""".stripMargin,
-
-    "q106_collocations" ->
-      """WITH t AS (
-        |  SELECT string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |uni AS (
-        |  SELECT u.w FROM t, UNNEST(toks) AS u(w) WHERE u.w <> ''),
-        |uc AS (SELECT w, count(*) AS c FROM uni GROUP BY w),
-        |n AS (SELECT count(*) AS n_uni FROM uni),
-        |bi AS (
-        |  SELECT toks[i] AS w1, toks[i + 1] AS w2, count(*) AS c_xy
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-        |  WHERE len(toks) >= 2
-        |  GROUP BY 1, 2
-        |  HAVING count(*) >= 3)
-        |SELECT w1, w2, c_xy, x.c AS c_x, y.c AS c_y, n_uni
-        |FROM bi JOIN uc x ON bi.w1 = x.w JOIN uc y ON bi.w2 = y.w, n
-        |WHERE c_xy * n_uni * 10 >= 13 * x.c * y.c
-        |ORDER BY w1, w2""".stripMargin,
-
-    "q108_semantic_dedup" ->
-      """WITH seeds AS (
-        |  SELECT vec_id AS seed_id, embedding AS sv
-        |  FROM embeddings ORDER BY vec_id LIMIT 8),
-        |sims AS (
-        |  SELECT e.vec_id, s.seed_id,
-        |    list_sum(list_transform(list_zip(e.embedding, s.sv),
-        |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(e.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(s.sv,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
-        |  FROM embeddings e CROSS JOIN seeds s),
-        |assign AS (
-        |  SELECT vec_id, seed_id AS cluster FROM (
-        |    SELECT vec_id, seed_id,
-        |      row_number() OVER (PARTITION BY vec_id
-        |                         ORDER BY sim DESC, seed_id) AS rn
-        |    FROM sims) WHERE rn = 1),
-        |v AS (
-        |  SELECT e.vec_id, e.embedding, a.cluster
-        |  FROM embeddings e JOIN assign a USING (vec_id)),
-        |dropped AS (
-        |  SELECT DISTINCT b.vec_id
-        |  FROM v a JOIN v b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-        |  WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |    / (sqrt(list_sum(list_transform(a.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |     * sqrt(list_sum(list_transform(b.embedding,
-        |         x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) >= 0.3)
-        |SELECT v.vec_id, v.cluster, d.vec_id IS NULL AS kept
-        |FROM v LEFT JOIN dropped d ON v.vec_id = d.vec_id
-        |ORDER BY v.vec_id""".stripMargin,
-
-    "q109_bigram_fluency" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents),
-        |b AS (
-        |  SELECT doc_id, toks[i] || ' ' || toks[i + 1] AS bigram
-        |  FROM t, UNNEST(generate_series(1, len(toks) - 1)) AS u(i)
-        |  WHERE len(toks) >= 2),
-        |f AS (SELECT bigram, count(*) AS c FROM b GROUP BY bigram)
-        |SELECT doc_id, count(*) AS n_bi,
-        |  CAST(sum(c) AS BIGINT) AS freq_sum,
-        |  CAST(CAST(sum(c) AS BIGINT) AS DOUBLE) / CAST(count(*) AS DOUBLE)
-        |    AS fluency
-        |FROM b JOIN f USING (bigram)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "q110_bpe_pairs" ->
-      """WITH tok AS (
-        |  SELECT u.tok FROM (
-        |    SELECT string_split_regex(lower(trim(text)), '\s+') AS toks
-        |    FROM documents) t, UNNEST(toks) AS u(tok)
-        |  WHERE length(u.tok) >= 2),
-        |p AS (
-        |  SELECT substr(tok, i, 2) AS pair
-        |  FROM tok, UNNEST(generate_series(1, length(tok) - 1)) AS u(i))
-        |SELECT pair, count(*) AS n FROM p
-        |GROUP BY pair ORDER BY n DESC, pair LIMIT 40""".stripMargin,
-
-    "q111_triangles" ->
-      """WITH os0 AS (
-        |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-        |os AS (
-        |  SELECT o, p FROM (
-        |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-        |  WHERE ns <= 8),
-        |e0 AS (
-        |  SELECT DISTINCT x.p AS a, y.p AS b
-        |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-        |deg AS (
-        |  SELECT id, count(*) AS d FROM (
-        |    SELECT a AS id FROM e0 UNION ALL SELECT b AS id FROM e0)
-        |  GROUP BY id),
-        |og AS (
-        |  SELECT CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.a ELSE e0.b END AS u,
-        |         CASE WHEN da.d < db.d OR (da.d = db.d AND e0.a < e0.b)
-        |              THEN e0.b ELSE e0.a END AS v
-        |  FROM e0 JOIN deg da ON da.id = e0.a JOIN deg db ON db.id = e0.b),
-        |tri AS (
-        |  SELECT o1.u, o1.v, o2.v AS w
-        |  FROM og o1 JOIN og o2 ON o1.u = o2.u AND o1.v < o2.v
-        |  JOIN e0 ON e0.a = o1.v AND e0.b = o2.v),
-        |t AS (
-        |  SELECT id, count(*) AS n FROM (
-        |    SELECT u AS id FROM tri UNION ALL SELECT v AS id FROM tri
-        |    UNION ALL SELECT w AS id FROM tri)
-        |  GROUP BY id)
-        |SELECT deg.id AS id, CAST(COALESCE(t.n, 0) AS BIGINT) AS triangles
-        |FROM deg LEFT JOIN t ON t.id = deg.id ORDER BY id""".stripMargin,
-
-    "q112_weighted_sample" ->
-      """WITH m AS (SELECT max(n_chars) AS mxw FROM documents)
-        |SELECT doc_id, source, n_chars FROM documents, m
-        |WHERE ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |        * CAST(mxw AS BIGINT)
-        |      < CAST(n_chars AS BIGINT) * 4294967296
-        |ORDER BY doc_id""".stripMargin,
-
-    "q128_rolling" -> """
-      |WITH daily AS (
-      |  SELECT user_id, epoch_ns(ts) // 86400000000000 AS day,
-      |         sum(CAST(value AS DECIMAL(28,10))) AS d
-      |  FROM events GROUP BY 1, 2)
-      |SELECT user_id, day,
-      |  CAST(d AS DOUBLE) AS day_value,
-      |  CAST(sum(d) OVER w AS DOUBLE) AS roll7_value,
-      |  CAST(count(*) OVER w AS BIGINT) AS roll7_days
-      |FROM daily
-      |WINDOW w AS (PARTITION BY user_id ORDER BY day
-      |             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-      |ORDER BY user_id, day""".stripMargin,
-
-    "q127_incremental_rollup" -> """
-      |SELECT event_type,
-      |  count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(28,10))) AS DOUBLE) AS sum_value,
-      |  min(value) AS min_value,
-      |  max(value) AS max_value,
-      |  CAST(sum(CAST(value AS DECIMAL(28,10))) AS DOUBLE) / count(*)
-      |    AS avg_value
-      |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q126_ann_pq" -> """
-      |WITH seed AS MATERIALIZED (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-      |  FROM (SELECT vec_id, embedding FROM embeddings ORDER BY vec_id
-      |        LIMIT 16)),
-      |cb AS MATERIALIZED (
-      |  SELECT m.m, s.ci, list_slice(s.cv, m.m*8+1, m.m*8+8) AS cent
-      |  FROM seed s CROSS JOIN
-      |       (SELECT unnest([0,1,2,3,4,5,6,7]) AS m) m),
-      |codes AS MATERIALIZED (
-      |  SELECT id, m, ci AS code FROM (
-      |    SELECT e.vec_id AS id, c.m, c.ci,
-      |      row_number() OVER (PARTITION BY e.vec_id, c.m ORDER BY
-      |        list_sum(list_transform(
-      |          list_zip(list_slice(e.embedding, c.m*8+1, c.m*8+8), c.cent),
-      |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) DESC,
-      |        c.ci DESC) AS rn
-      |    FROM embeddings e CROSS JOIN cb c) WHERE rn = 1),
-      |lut AS MATERIALIZED (
-      |  SELECT q.vec_id AS query_id, c.m, c.ci,
-      |    list_sum(list_transform(
-      |      list_zip(list_slice(q.embedding, c.m*8+1, c.m*8+8), c.cent),
-      |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) AS d
-      |  FROM embeddings q CROSS JOIN cb c WHERE q.vec_id < 5),
-      |scored AS (
-      |  SELECT l.query_id, cd.id, list_sum(list(l.d ORDER BY l.m)) AS score
-      |  FROM codes cd JOIN lut l ON l.m = cd.m AND l.ci = cd.code
-      |  WHERE cd.id <> l.query_id
-      |  GROUP BY l.query_id, cd.id),
-      |r AS (
-      |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-      |           ORDER BY score DESC, id ASC) AS rnk
-      |  FROM scored)
-      |SELECT query_id, id AS neighbor_id, CAST(rnk AS INT) AS rank
-      |FROM r WHERE rnk <= 10 ORDER BY query_id, rank""".stripMargin,
-
-    "q125_ppr" -> {
-      val rounds = (1 to 3).map { k =>
-        s"""r$k AS MATERIALIZED (
-           |  SELECT id, CAST(sum(r) AS BIGINT) AS rank FROM (
-           |    SELECT id, CAST(150000 AS BIGINT) AS r FROM s0
-           |    UNION ALL
-           |    SELECT c.id, (850000 * c.c) // 1000000 FROM (
-           |      SELECT e.dst AS id,
-           |             CAST(sum(r.rank // d.deg) AS BIGINT) AS c
-           |      FROM e JOIN r${k - 1} r ON r.id = e.src
-           |             JOIN deg d ON d.id = e.src
-           |      GROUP BY e.dst) c) u
-           |  GROUP BY id)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH e AS MATERIALIZED (
-         |  SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
-         |  FROM lineitem
-         |  UNION
-         |  SELECT DISTINCT l_partkey * 2 + 1, l_orderkey * 2 FROM lineitem),
-         |deg AS MATERIALIZED (
-         |  SELECT src AS id, count(*) AS deg FROM e GROUP BY src),
-         |s0 AS MATERIALIZED (
-         |  SELECT DISTINCT src AS id FROM e WHERE src % 50 = 0),
-         |r0 AS MATERIALIZED (
-         |  SELECT id, CAST(1000000 AS BIGINT) AS rank FROM s0),
-         |$rounds
-         |SELECT id, rank FROM r3 ORDER BY id""".stripMargin
-    },
-
-    "q124_merge_upsert" -> """
-      |WITH all_rows AS (
-      |  SELECT c_custkey AS k, c_acctbal AS v,
-      |         CAST(-1 AS BIGINT) AS seq, 'U' AS op FROM customer
-      |  UNION ALL
-      |  SELECT user_id, value, event_id,
-      |         CASE WHEN event_type = 'error' THEN 'D' ELSE 'U' END
-      |  FROM events),
-      |latest AS (
-      |  SELECT k, v, seq, op,
-      |         row_number() OVER (PARTITION BY k ORDER BY seq DESC) AS rn
-      |  FROM all_rows)
-      |SELECT k, seq AS last_seq, v
-      |FROM latest WHERE rn = 1 AND op <> 'D'
-      |ORDER BY k""".stripMargin,
-
-    "q123_interval_join" -> """
-      |WITH li AS (
-      |  SELECT s.s_nationkey AS nk, l.l_orderkey, l.l_linenumber,
-      |         CAST(l.l_shipdate AS DATE) AS ls,
-      |         CAST(l.l_shipdate AS DATE)
-      |           + (CAST(l.l_quantity AS INTEGER) % 28) AS le
-      |  FROM lineitem l JOIN supplier s ON l.l_suppkey = s.s_suppkey),
-      |win AS (
-      |  SELECT n.n_nationkey AS nk, q.window_id,
-      |         DATE '1992-01-01' + (n.n_nationkey * 30 + q.window_id * 400) AS ws,
-      |         DATE '1992-01-01' + (n.n_nationkey * 30 + q.window_id * 400 + 45) AS we
-      |  FROM nation n CROSS JOIN (SELECT unnest([0,1,2,3]) AS window_id) q)
-      |SELECT CAST(li.nk AS BIGINT) AS nk, li.l_orderkey, li.l_linenumber,
-      |       CAST(win.window_id AS BIGINT) AS window_id,
-      |       CAST(datediff('day', greatest(li.ls, win.ws),
-      |                     least(li.le, win.we)) + 1 AS BIGINT) AS overlap_days
-      |FROM li JOIN win ON li.nk = win.nk
-      |  AND li.ls <= win.we AND win.ws <= li.le
-      |ORDER BY nk, l_orderkey, l_linenumber, window_id""".stripMargin,
-
-    "q122_kcore" -> {
-      // MATERIALIZED is load-bearing: each e_i is referenced ~3× by round
-      // i+1 (degree count + two IN-subqueries); without it DuckDB inlines
-      // the CTE chain and re-evaluates e0 3^rounds times (observed: >75
-      // CPU-min at sf0.1 vs seconds materialized).
-      val rounds = (1 to 4).map { i =>
-        s"""d${i - 1} AS MATERIALIZED (
-           |  SELECT id, count(*) AS c FROM (
-           |    SELECT a AS id FROM e${i - 1}
-           |    UNION ALL SELECT b AS id FROM e${i - 1})
-           |  GROUP BY id),
-           |k${i - 1} AS MATERIALIZED (SELECT id FROM d${i - 1} WHERE c >= 3),
-           |e$i AS MATERIALIZED (
-           |  SELECT a, b FROM e${i - 1}
-           |  WHERE a IN (SELECT id FROM k${i - 1})
-           |    AND b IN (SELECT id FROM k${i - 1}))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH os0 AS MATERIALIZED (
-         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         |os AS MATERIALIZED (
-         |  SELECT o, p FROM (
-         |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-         |  WHERE ns <= 8),
-         |e0 AS MATERIALIZED (
-         |  SELECT DISTINCT x.p AS a, y.p AS b
-         |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-         |$rounds
-         |SELECT id, count(*) AS deg FROM (
-         |  SELECT a AS id FROM e4 UNION ALL SELECT b AS id FROM e4)
-         |GROUP BY id ORDER BY id""".stripMargin
-    },
-
-    "q121_zorder" -> {
-      // Morton spread16 as nested SQL (same magic-mask doubling as
-      // io/Layout.spread16); DuckDB & | << need full parenthesization.
-      def sp(e: String): String = {
-        val s0 = s"(($e) & 65535)"
-        val s1 = s"((($s0 | ($s0 << 8))) & 16711935)"
-        val s2 = s"((($s1 | ($s1 << 4))) & 252645135)"
-        val s3 = s"((($s2 | ($s2 << 2))) & 858993459)"
-        s"((($s3 | ($s3 << 1))) & 1431655765)"
-      }
-      val z = s"(${sp("l_partkey")} | (${sp("l_suppkey")} << 1))"
-      s"""SELECT CAST(($z // 4096) AS BIGINT) AS zbucket,
-         |  count(*) AS n_rows,
-         |  min(l_partkey) AS min_part, max(l_partkey) AS max_part,
-         |  min(l_suppkey) AS min_supp, max(l_suppkey) AS max_supp
-         |FROM lineitem GROUP BY 1 ORDER BY zbucket""".stripMargin
-    },
-
-    "q120_inverted_index" ->
-      """WITH tf AS (
-        |  SELECT token, doc_id, count(*) AS tf FROM (
-        |    SELECT doc_id,
-        |      unnest(string_split_regex(lower(trim(text)), '\s+')) AS token
-        |    FROM documents)
-        |  WHERE token <> '' GROUP BY token, doc_id),
-        |r AS (
-        |  SELECT token, doc_id, tf,
-        |    row_number() OVER (PARTITION BY token
-        |                       ORDER BY tf DESC, doc_id) AS rn,
-        |    count(*) OVER (PARTITION BY token) AS df
-        |  FROM tf)
-        |SELECT token, df,
-        |  string_agg(doc_id || ':' || tf, ',' ORDER BY rn) AS postings
-        |FROM r WHERE rn <= 3 AND df >= 5
-        |GROUP BY token, df ORDER BY token""".stripMargin,
-
-    "q119_retention" ->
-      """WITH e AS (
-        |  SELECT user_id AS u, epoch_ns(ts) // 604800000000000 AS p
-        |  FROM events),
-        |f AS (SELECT u, min(p) AS p0 FROM e GROUP BY u),
-        |x AS (
-        |  SELECT DISTINCT e.u, f.p0 AS cohort, e.p - f.p0 AS "offset"
-        |  FROM e JOIN f USING (u))
-        |SELECT cohort, "offset", count(*) AS n_users
-        |FROM x GROUP BY 1, 2 ORDER BY cohort, "offset"""".stripMargin,
-
-    "q118_mad_outliers" ->
-      """WITH c AS (
-        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS c
-        |  FROM events),
-        |m AS (
-        |  SELECT event_type, quantile_cont(c, 0.5) AS med FROM c GROUP BY 1),
-        |d AS (
-        |  SELECT c.event_type, abs(CAST(c.c AS DOUBLE) - m.med) AS dev, m.med
-        |  FROM c JOIN m USING (event_type)),
-        |md AS (
-        |  SELECT event_type, quantile_cont(dev, 0.5) AS mad FROM d GROUP BY 1)
-        |SELECT d.event_type, count(*) AS n,
-        |  max(d.med) AS med_cents, max(md.mad) AS mad_cents,
-        |  count(*) FILTER (WHERE d.dev > 3 * md.mad) AS n_outliers
-        |FROM d JOIN md USING (event_type)
-        |GROUP BY d.event_type ORDER BY d.event_type""".stripMargin,
-
-    "q117_equidepth" ->
-      """WITH r AS (
-        |  SELECT l_extendedprice AS price,
-        |         row_number() OVER (ORDER BY l_extendedprice) AS rnk,
-        |         count(*) OVER () AS n
-        |  FROM lineitem)
-        |SELECT CAST(((rnk - 1) * 10) // n AS BIGINT) AS bin,
-        |  count(*) AS n_rows, min(price) AS min_price, max(price) AS max_price
-        |FROM r GROUP BY 1 ORDER BY bin""".stripMargin,
-
-    "q116_bpe_train" -> {
-      val k = 5
-      val rounds = (1 to k).map { i =>
-        s"""p$i AS (
-           |  SELECT pr, sum(wc) AS c FROM (
-           |    SELECT s.wc, s.syms[u.i] || ' ' || s.syms[u.i + 1] AS pr
-           |    FROM (SELECT string_split_regex(trim(w), '\\s+') AS syms, wc
-           |          FROM w${i - 1}) s,
-           |         UNNEST(generate_series(1, len(s.syms) - 1)) AS u(i))
-           |  GROUP BY pr),
-           |m$i AS (SELECT pr, c FROM p$i ORDER BY c DESC, pr LIMIT 1),
-           |w$i AS (
-           |  SELECT replace(w,
-           |    ' ' || split_part(pr, ' ', 1) || '  ' ||
-           |      split_part(pr, ' ', 2) || ' ',
-           |    ' ' || replace(pr, ' ', '') || ' ') AS w, wc
-           |  FROM w${i - 1}, m$i)""".stripMargin
-      }.mkString(",\n")
-      val union = (1 to k)
-        .map(i => s"SELECT $i AS step, pr AS pair, CAST(c AS BIGINT) AS c FROM m$i")
-        .mkString("\n  UNION ALL ")
-      s"""WITH toks AS (
-         |  SELECT u.tok FROM (
-         |    SELECT string_split_regex(lower(trim(text)), '\\s+') AS toks
-         |    FROM documents) t, UNNEST(toks) AS u(tok)
-         |  WHERE length(u.tok) > 0),
-         |v AS (SELECT tok, count(*) AS wc FROM toks GROUP BY tok),
-         |w0 AS (
-         |  SELECT ' ' || array_to_string(list_transform(
-         |    generate_series(1, length(tok)), i -> substr(tok, i, 1)), '  ')
-         |    || ' ' AS w, wc FROM v),
-         |$rounds
-         |SELECT * FROM (
-         |  $union)
-         |ORDER BY step""".stripMargin
-    },
-
-    "q115_containment" ->
-      """WITH t AS (SELECT doc_id, lang, source,
-        |  list_distinct(list_transform(
-        |    generate_series(1, len(string_split_regex(lower(trim(text)), '\s+')) - 1),
-        |    i -> string_split_regex(lower(trim(text)), '\s+')[i] || ' ' ||
-        |         string_split_regex(lower(trim(text)), '\s+')[i+1])) AS tk
-        | FROM documents),
-        |j AS (
-        | SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(len(list_intersect(a.tk, b.tk)) AS DOUBLE) / len(a.tk)
-        |    AS containment
-        | FROM t a JOIN t b ON a.lang = b.lang AND a.source = b.source
-        |   AND a.doc_id <> b.doc_id
-        | WHERE len(a.tk) > 0 AND len(b.tk) > 0)
-        |SELECT id_a, id_b, containment FROM j WHERE containment >= 0.5
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "q114_label_prop" -> {
-      val rounds = (1 to 3).map { k =>
-        s"""v$k AS (
-           |  SELECT e.dst AS id, l.lbl, count(*) AS c
-           |  FROM e JOIN l${k - 1} l ON l.id = e.src GROUP BY e.dst, l.lbl),
-           |l$k AS (
-           |  SELECT id, lbl FROM (
-           |    SELECT id, lbl, row_number() OVER (
-           |      PARTITION BY id ORDER BY c DESC, lbl) AS rn FROM v$k)
-           |  WHERE rn = 1)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH os0 AS (
-         |  SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
-         |os AS (
-         |  SELECT o, p FROM (
-         |    SELECT o, p, count(*) OVER (PARTITION BY o) AS ns FROM os0)
-         |  WHERE ns <= 8),
-         |e0 AS (
-         |  SELECT DISTINCT x.p AS a, y.p AS b
-         |  FROM os x JOIN os y ON x.o = y.o AND x.p < y.p),
-         |e AS (
-         |  SELECT a AS src, b AS dst FROM e0
-         |  UNION ALL SELECT b AS src, a AS dst FROM e0),
-         |l0 AS (SELECT DISTINCT src AS id, src AS lbl FROM e),
-         |$rounds
-         |SELECT id, lbl AS label FROM l3 ORDER BY id""".stripMargin
-    },
-
-    "q113_hopping" -> {
-      val hop = 600L; val k = 3 // 30-min size / 10-min hop => 3 windows
-      s"""WITH e AS (
-         |  SELECT event_type, value,
-         |         epoch_ns(ts) // 1000000000 AS tsec FROM events),
-         |w AS (
-         |  SELECT event_type, value,
-         |    ((tsec // $hop) - u.j) * $hop AS w_start
-         |  FROM e, UNNEST(generate_series(0, ${k - 1})) AS u(j))
-         |SELECT event_type, CAST(w_start AS BIGINT) AS w_start,
-         |  count(*) AS n, ${dSum("value")} AS sum_value
-         |FROM w GROUP BY 1, 2 ORDER BY event_type, w_start""".stripMargin
-    },
-
-    "q107_span_dedup" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(trim(text)), '\s+') AS toks
-        |  FROM documents WHERE len(string_split_regex(lower(trim(text)), '\s+')) > 0),
-        |s AS (
-        |  SELECT doc_id, i AS span_idx,
-        |    md5(array_to_string(list_slice(toks, i * 8 + 1, i * 8 + 8), ' ')) AS h
-        |  FROM t, UNNEST(generate_series(0, (len(toks) + 7) // 8 - 1)) AS u(i)),
-        |r AS (
-        |  SELECT doc_id,
-        |    row_number() OVER (PARTITION BY h ORDER BY doc_id, span_idx) AS rn
-        |  FROM s),
-        |g AS (
-        |  SELECT doc_id, count(*) AS n_spans,
-        |    sum(CASE WHEN rn = 1 THEN 1 ELSE 0 END) AS n_kept
-        |  FROM r GROUP BY doc_id)
-        |SELECT doc_id, n_spans, CAST(n_kept AS BIGINT) AS n_kept,
-        |  CAST(n_spans - n_kept AS DOUBLE) / CAST(n_spans AS DOUBLE)
-        |    AS dup_span_frac
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "q137_mix_epochs" ->
-      """WITH per AS (
-        |  SELECT source, count(*) AS n_docs,
-        |    CAST(sum(len(string_split_regex(lower(trim(text)), '\s+')))
-        |      AS BIGINT) AS n_toks
-        |  FROM documents GROUP BY source),
-        |tot AS (SELECT CAST(max(n_toks) AS BIGINT) AS mx,
-        |               CAST(sum(n_toks) AS BIGINT) AS tot FROM per)
-        |SELECT source, n_docs, n_toks,
-        |  CAST((mx + n_toks - 1) // n_toks AS BIGINT) AS repeats,
-        |  CAST(n_toks * ((mx + n_toks - 1) // n_toks) AS BIGINT) AS eff_toks,
-        |  CAST((n_toks * 1000000) // tot AS BIGINT) AS share_ppm
-        |FROM per, tot ORDER BY source""".stripMargin,
-
-    "q138_fd_audit" -> {
-      def audit(name: String, table: String, det: Seq[String], dep: String) =
-        s"""SELECT '$name' AS fd, count(*) AS n_keys,
-           |  CAST(sum(CASE WHEN card > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           |    AS n_violating,
-           |  CAST(max(card) AS BIGINT) AS max_card
-           |FROM (
-           |  SELECT ${det.mkString(", ")}, count(*) AS card
-           |  FROM (SELECT DISTINCT ${(det :+ dep).mkString(", ")} FROM $table)
-           |  GROUP BY ${det.mkString(", ")})""".stripMargin
-      Seq(
-        audit("nation->region", "nation", Seq("n_nationkey"), "n_regionkey"),
-        audit("orderline->part", "lineitem",
-          Seq("l_orderkey", "l_linenumber"), "l_partkey"),
-        audit("part->supp", "lineitem", Seq("l_partkey"), "l_suppkey"),
-        audit("cust->priority", "orders", Seq("o_custkey"), "o_orderpriority"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY fd")
-    },
-
-    // bpeEncodeCtes is already margin-stripped — concatenate, never
-    // re-stripMargin over it (a second strip eats one pipe of a `||`
-    // concat continuation line)
-    "q139_bpe_encode" ->
-      (bpeEncodeCtes + "\n" +
-        """SELECT dt.doc_id, CAST(sum(dt.cnt) AS BIGINT) AS n_tokens,
-          |  CAST(sum(dt.cnt * widths.n_sub) AS BIGINT) AS n_subwords
-          |FROM dt JOIN widths ON dt.tok = widths.tok
-          |GROUP BY dt.doc_id ORDER BY doc_id""".stripMargin),
-
-    "q239_tokenizer_fertility" ->
-      (bpeEncodeCtes + ",\n" +
-        """enc AS (
-          |  SELECT dt.doc_id, sum(dt.cnt) AS n_tokens,
-          |    sum(dt.cnt * widths.n_sub) AS n_subwords
-          |  FROM dt JOIN widths ON dt.tok = widths.tok
-          |  GROUP BY dt.doc_id)
-          |SELECT d.lang, CAST(count(*) AS BIGINT) AS n_docs,
-          |  CAST(sum(enc.n_tokens) AS BIGINT) AS n_tokens,
-          |  CAST(sum(enc.n_subwords) AS BIGINT) AS n_subwords,
-          |  CAST((sum(enc.n_subwords) * 1000000) // sum(enc.n_tokens)
-          |    AS BIGINT) AS fertility_ppm,
-          |  CAST((sum(d.n_chars) * 1000000) // sum(enc.n_subwords)
-          |    AS BIGINT) AS chars_per_subword_ppm
-          |FROM enc JOIN documents d USING (doc_id)
-          |GROUP BY d.lang ORDER BY lang""".stripMargin),
-
-    "q140_int8_gram" ->
-      """WITH m AS (
-        |  SELECT list_transform(embedding,
-        |    x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 / maxabs + 0.5)
-        |         AS BIGINT)) AS q
-        |  FROM (SELECT embedding,
-        |          list_max(list_transform(embedding,
-        |            x -> abs(CAST(x AS DOUBLE)))) AS maxabs
-        |        FROM embeddings)
-        |  WHERE maxabs > 0)
-        |SELECT CAST(u.i AS BIGINT) AS i, CAST(v.j AS BIGINT) AS j,
-        |  CAST(sum(q[u.i] * q[v.j]) AS BIGINT) AS g
-        |FROM m, UNNEST(generate_series(1, len(q))) AS u(i),
-        |        UNNEST(generate_series(1, len(q))) AS v(j)
-        |WHERE v.j >= u.i
-        |GROUP BY 1, 2 ORDER BY i, j""".stripMargin,
-
-    "q141_kmv_setops" -> {
-      val k = 256
-      s"""WITH ha AS (
-         |  SELECT DISTINCT
-         |    ('0x'||substr(md5(CAST(user_id AS VARCHAR)),1,8))::BIGINT AS h
-         |  FROM events WHERE event_type = 'view' AND user_id IS NOT NULL),
-         |hb AS (
-         |  SELECT DISTINCT
-         |    ('0x'||substr(md5(CAST(user_id AS VARCHAR)),1,8))::BIGINT AS h
-         |  FROM events WHERE event_type = 'click' AND user_id IS NOT NULL),
-         |la AS (SELECT (SELECT list(h ORDER BY h)
-         |                 FROM (SELECT h FROM ha ORDER BY h LIMIT $k)) AS ma,
-         |              (SELECT count(*) FROM ha) AS na),
-         |lb AS (SELECT (SELECT list(h ORDER BY h)
-         |                 FROM (SELECT h FROM hb ORDER BY h LIMIT $k)) AS mb,
-         |              (SELECT count(*) FROM hb) AS nb),
-         |m AS (SELECT ma, na, mb, nb,
-         |        list_slice(list_sort(list_distinct(list_concat(ma, mb))),
-         |          1, $k) AS mu
-         |      FROM la, lb),
-         |c AS (SELECT *, least($k, len(mu)) AS ku,
-         |        CAST(len(list_filter(mu, h -> list_contains(ma, h)
-         |          AND list_contains(mb, h))) AS BIGINT) AS match_k,
-         |        CASE WHEN len(mu) < $k THEN len(mu)
-         |             ELSE (${k - 1} * 4294967296) // mu[$k] END AS est_union
-         |      FROM m)
-         |SELECT
-         |  CAST(CASE WHEN na < $k THEN na
-         |       ELSE (${k - 1} * 4294967296) // ma[$k] END AS BIGINT) AS est_a,
-         |  CAST(CASE WHEN nb < $k THEN nb
-         |       ELSE (${k - 1} * 4294967296) // mb[$k] END AS BIGINT) AS est_b,
-         |  CAST(est_union AS BIGINT) AS est_union, match_k,
-         |  CAST((match_k * est_union) // ku AS BIGINT) AS est_inter,
-         |  CAST((match_k * 1000000) // ku AS BIGINT) AS jaccard_ppm
-         |FROM c""".stripMargin
-    },
-
-    "q149_grouped_corr" ->
-      """WITH t AS (SELECT l_returnflag,
-        |    CAST(round(l_quantity) AS BIGINT) AS x,
-        |    CAST(round(l_extendedprice * 100) AS BIGINT) AS y
-        |  FROM lineitem),
-        |m AS (SELECT l_returnflag, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |    sum(CAST(x AS HUGEINT) * x) AS sxx,
-        |    sum(CAST(y AS HUGEINT) * y) AS syy,
-        |    sum(CAST(x AS HUGEINT) * y) AS sxy
-        |  FROM t GROUP BY 1)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  CAST(sxy * n - sx * sy AS DOUBLE) /
-        |    (sqrt(CAST(sxx * n - sx * sx AS DOUBLE)) *
-        |     sqrt(CAST(syy * n - sy * sy AS DOUBLE))) AS r
-        |FROM m
-        |WHERE sxx * n - sx * sx > 0 AND syy * n - sy * sy > 0
-        |ORDER BY l_returnflag""".stripMargin,
-
-    "q148_windowed_rollup" ->
-      """SELECT epoch_ns(ts) // 3600000000000 * 3600000 AS bucket_ms,
-        |  event_type, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(28,10))) AS DOUBLE) AS total
-        |FROM events GROUP BY 1, 2 ORDER BY bucket_ms, event_type""".stripMargin,
-
-    "q147_contamination" -> {
-      val cat = (0 until 8).map(k => if (k == 0) "t0[i]" else s"t0[i+$k]")
-        .mkString(" || ' ' || ")
-      s"""WITH tk AS (SELECT doc_id, source,
-         |  string_split_regex(lower(trim(text)), '\\s+') AS t0 FROM documents),
-         |dg AS (SELECT doc_id, source,
-         |  unnest(list_distinct(list_transform(generate_series(1, len(t0) - 7),
-         |    i -> ('0x' || substr(md5($cat), 1, 8))::BIGINT % 2147483647))) AS g
-         | FROM tk),
-         |bench AS (SELECT DISTINCT g FROM dg WHERE source IN ('src0', 'src1'))
-         |SELECT d.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |  CAST(count(b.g) AS BIGINT) AS n_hit,
-         |  CAST(CASE WHEN count(b.g) * 1000000 >= 200000 * count(*)
-         |       THEN 1 ELSE 0 END AS INT) AS contaminated
-         |FROM dg d LEFT JOIN bench b ON d.g = b.g
-         |WHERE d.source NOT IN ('src0', 'src1')
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin
-    },
-
-    "q146_quantiles" ->
-      """WITH pv AS (
-        |  SELECT o_orderpriority,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS v,
-        |    CAST(count(*) AS BIGINT) AS w
-        |  FROM orders GROUP BY 1, 2),
-        |c AS (
-        |  SELECT o_orderpriority, v,
-        |    CAST(sum(w) OVER (PARTITION BY o_orderpriority ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cw,
-        |    CAST(sum(w) OVER (PARTITION BY o_orderpriority) AS BIGINT) AS tw
-        |  FROM pv)
-        |SELECT o_orderpriority,
-        |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN v END) AS p500000,
-        |  min(CASE WHEN cw * 1000000 >= 900000 * tw THEN v END) AS p900000,
-        |  min(CASE WHEN cw * 1000000 >= 990000 * tw THEN v END) AS p990000,
-        |  max(tw) AS total_w
-        |FROM c GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "q142_weighted_median" ->
-      """WITH pv AS (
-        |  SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT)
-        |           AS v,
-        |    CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS w
-        |  FROM lineitem GROUP BY 1, 2),
-        |c AS (
-        |  SELECT l_returnflag, v,
-        |    CAST(sum(w) OVER (PARTITION BY l_returnflag ORDER BY v
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS cw,
-        |    CAST(sum(w) OVER (PARTITION BY l_returnflag) AS BIGINT) AS tw
-        |  FROM pv)
-        |SELECT l_returnflag, min(v) AS w_median, max(tw) AS total_w
-        |FROM c WHERE cw * 2 >= tw
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    // syntheticGif frame f: gray pixel(x,y) = (base + 7x + 13y + 17f)
-    // % 256 with base = (id % 1000003)·31; nf = 1 + id % 6 frames of
-    // 100 ms each; sampling at 150 ms takes t = 0, 150, … < nf·100 and
-    // shows frame t // 100 at each stamp. LEAST(…, 8) is the codec's
-    // maxSamples per-row memory cap — encoded here so the oracle states
-    // the full contract (the fixture's ceil(nf·100/150) ≤ 4 never hits
-    // it, but parity must hold by construction, not coincidence).
-    "q143_video_frames" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(1 + doc_id % 6 AS BIGINT) AS nf,
-        |    CAST(8 + doc_id % 9 AS BIGINT) AS w,
-        |    CAST(8 + doc_id % 7 AS BIGINT) AS h,
-        |    (doc_id % 1000003) * 31 AS base
-        |  FROM documents),
-        |s AS (
-        |  SELECT media_id, w, h, base, CAST(t.i AS BIGINT) AS sample_idx,
-        |    (CAST(t.i AS BIGINT) * 150) // 100 AS f
-        |  FROM v, unnest(range(LEAST(
-        |    CAST(ceil(nf * 100 / 150.0) AS BIGINT), 8)))
-        |    AS t(i))
-        |SELECT media_id, sample_idx,
-        |  CAST(list_sum(list_transform(range(w * h),
-        |    p -> (base + (p % w) * 7 + (p // w) * 13 + f * 17) % 256))
-        |    AS BIGINT) AS gray_sum
-        |FROM s ORDER BY media_id, sample_idx""".stripMargin,
-
-    // syntheticWav sample(i) = ((id % 1000003)·31 + i·7919) % 65536
-    // − 32768 over n = 500 + id % 1000 PCM16 samples at 8 kHz.
-    "q144_audio_features" ->
-      """WITH v AS (
-        |  SELECT doc_id AS media_id,
-        |    CAST(500 + doc_id % 1000 AS BIGINT) AS n_samples,
-        |    list_transform(range(500 + doc_id % 1000),
-        |      i -> ((doc_id % 1000003) * 31 + i * 7919) % 65536
-        |           - 32768) AS s
-        |  FROM documents)
-        |SELECT media_id, n_samples, CAST(8000 AS INT) AS sample_rate,
-        |  CAST(list_aggregate(list_transform(s, x -> abs(x)), 'sum')
-        |    AS BIGINT) AS sum_abs,
-        |  CAST(list_aggregate(list_transform(s, x -> abs(x)), 'max')
-        |    AS BIGINT) AS max_abs
-        |FROM v ORDER BY media_id""".stripMargin,
-
-    "q219_fuzzy_er_clusters" ->
-      """WITH RECURSIVE e AS MATERIALIZED (
-        |  SELECT p_name || ' ' || p_type AS nm, min(p_partkey) AS ent_id
-        |  FROM part GROUP BY 1),
-        |b AS (SELECT ent_id, nm, string_split(nm, ' ')[1] AS blk FROM e),
-        |pr AS MATERIALIZED (
-        |  SELECT x.ent_id AS id_a, y.ent_id AS id_b
-        |  FROM b x JOIN b y ON x.blk = y.blk AND x.ent_id < y.ent_id
-        |  WHERE levenshtein(x.nm, y.nm) BETWEEN 1 AND 4),
-        |edges AS (SELECT id_a AS src, id_b AS dst FROM pr
-        |  UNION SELECT id_b, id_a FROM pr),
-        |reach(id, comp) AS (
-        |  SELECT ent_id, ent_id FROM e
-        |  UNION
-        |  SELECT ed.dst, r.comp FROM reach r JOIN edges ed ON ed.src = r.id),
-        |cl AS (SELECT id AS ent_id, min(comp) AS cluster_id
-        |  FROM reach GROUP BY id)
-        |SELECT cl.cluster_id, CAST(count(*) AS BIGINT) AS n_entities,
-        |  min(ce.nm) AS canon_nm
-        |FROM cl JOIN e ce ON ce.ent_id = cl.cluster_id
-        |GROUP BY 1 ORDER BY cluster_id""".stripMargin,
-
-    "q220_percentile_ranks" ->
-      """WITH src AS (SELECT event_type AS g,
-        |    CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |pv AS (SELECT g, v, count(*) AS w FROM src
-        |  WHERE v IS NOT NULL GROUP BY 1, 2),
-        |c AS (SELECT g, v, w,
-        |  sum(w) OVER (PARTITION BY g ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw FROM pv)
-        |SELECT g AS event_type, v, CAST(w AS BIGINT) AS w,
-        |  CAST((cw * 1000000) // tw AS BIGINT) AS rank_ppm
-        |FROM c ORDER BY event_type, v""".stripMargin,
-
-    "q221_sliding_distinct" ->
-      """WITH h AS (
-        |  SELECT event_type, epoch_us(ts) // 86400000000 AS d,
-        |    ('0x'||substr(md5(CAST(user_id AS VARCHAR)),1,8))::BIGINT AS hv
-        |  FROM events WHERE user_id IS NOT NULL),
-        |r AS (
-        |  SELECT event_type, d, CAST(hv // 67108864 AS INT) AS bucket,
-        |    CAST(CASE WHEN hv % 67108864 = 0 THEN 27
-        |         ELSE 27 - length(bin(hv % 67108864)) END AS INT) AS rho
-        |  FROM h),
-        |cells AS MATERIALIZED (
-        |  SELECT event_type, d, bucket, max(rho) AS register
-        |  FROM r GROUP BY 1, 2, 3),
-        |days AS (SELECT DISTINCT event_type, d AS day FROM cells)
-        |SELECT c.event_type, days.day, c.bucket,
-        |  CAST(max(c.register) AS INT) AS register
-        |FROM cells c JOIN days ON days.event_type = c.event_type
-        |  AND c.d <= days.day AND c.d >= days.day - 6
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "q222_trailing_quantiles" ->
-      """WITH src AS (SELECT event_type AS g,
-        |    epoch_us(ts) // 86400000000 AS d,
-        |    CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |hb AS (SELECT g, d, v,
-        |    (length(bin(v)) - 1) * 4 +
-        |    ((v >> greatest(length(bin(v)) - 3, 0)) & 3) AS b
-        |  FROM src WHERE v >= 1),
-        |hist AS MATERIALIZED (SELECT g, d, b, count(*) AS c, min(v) AS mn
-        |  FROM hb GROUP BY 1, 2, 3),
-        |days AS (SELECT DISTINCT g, d AS day FROM hist),
-        |m AS (SELECT h.g, days.day, h.b, sum(h.c) AS c, min(h.mn) AS mn
-        |  FROM hist h JOIN days ON days.g = h.g
-        |    AND h.d <= days.day AND h.d >= days.day - 6
-        |  GROUP BY 1, 2, 3),
-        |cum AS (SELECT g, day, b, mn,
-        |  sum(c) OVER (PARTITION BY g, day ORDER BY b
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(c) OVER (PARTITION BY g, day) AS tw FROM m)
-        |SELECT g AS event_type, day, CAST(max(tw) AS BIGINT) AS n,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 500000 * tw THEN mn END)
-        |    AS BIGINT) AS est_p500000,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 990000 * tw THEN mn END)
-        |    AS BIGINT) AS est_p990000
-        |FROM cum GROUP BY 1, 2 ORDER BY event_type, day""".stripMargin,
-
-    "q223_rank_profile" ->
-      """WITH src AS (SELECT user_id, event_type AS g,
-        |    CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |pv AS (SELECT g, v, count(*) AS w FROM src
-        |  WHERE v IS NOT NULL GROUP BY 1, 2),
-        |c AS (SELECT g, v,
-        |  sum(w) OVER (PARTITION BY g ORDER BY v
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw FROM pv),
-        |r AS (SELECT g, v, (cw * 1000000) // tw AS rank_ppm FROM c)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(rank_ppm) // count(*) AS BIGINT) AS avg_rank_ppm
-        |FROM src JOIN r USING (g, v)
-        |GROUP BY 1 ORDER BY avg_rank_ppm DESC, user_id LIMIT 100""".stripMargin,
-
-    "q224_join_skew" ->
-      """WITH l AS (SELECT user_id, count(*) AS n_left FROM events
-        |  WHERE event_type = 'view' AND user_id IS NOT NULL GROUP BY 1),
-        |r AS (SELECT user_id, count(*) AS n_right FROM events
-        |  WHERE event_type = 'click' AND user_id IS NOT NULL GROUP BY 1)
-        |SELECT coalesce(l.user_id, r.user_id) AS user_id,
-        |  CAST(coalesce(n_left, 0) AS BIGINT) AS n_left,
-        |  CAST(coalesce(n_right, 0) AS BIGINT) AS n_right,
-        |  CAST(coalesce(n_left, 0) * coalesce(n_right, 0) AS BIGINT)
-        |    AS out_rows
-        |FROM l FULL OUTER JOIN r ON l.user_id = r.user_id
-        |ORDER BY out_rows DESC, user_id LIMIT 50""".stripMargin,
-
-    "q225_split_balance" ->
-      """WITH d AS (SELECT source,
-        |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT
-        |      % 1000000 AS p FROM documents),
-        |ob AS (SELECT source AS r,
-        |    CASE WHEN p < 800000 THEN 'train'
-        |         WHEN p < 900000 THEN 'val' ELSE 'test' END AS c,
-        |    count(*) AS o
-        |  FROM d WHERE source IS NOT NULL GROUP BY 1, 2),
-        |rt AS (SELECT r, sum(o) AS rt FROM ob GROUP BY 1),
-        |ct AS (SELECT c, sum(o) AS ct FROM ob GROUP BY 1),
-        |m AS (SELECT (SELECT sum(rt) FROM rt) AS n,
-        |  (SELECT count(*) FROM rt) AS nr,
-        |  (SELECT count(*) FROM ct) AS nc),
-        |cells AS (SELECT rt.rt, ct.ct, coalesce(ob.o, 0) AS o
-        |  FROM rt CROSS JOIN ct
-        |  LEFT JOIN ob ON ob.r = rt.r AND ob.c = ct.c)
-        |SELECT CAST(max(m.n) AS BIGINT) AS n,
-        |  CAST(max(m.nr) AS BIGINT) AS n_row_cats,
-        |  CAST(max(m.nc) AS BIGINT) AS n_col_cats,
-        |  CAST(max((m.nr - 1) * (m.nc - 1)) AS BIGINT) AS dof,
-        |  CAST(sum(((o * m.n - rt * ct) * (o * m.n - rt * ct) * 1000000)
-        |    // (m.n * rt * ct)) AS BIGINT) AS chi2_ppm
-        |FROM cells CROSS JOIN m""".stripMargin,
-
-    "q226_volume_anomalies" ->
-      """WITH src AS (SELECT event_type AS g,
-        |    epoch_us(ts) // 3600000000 AS hr, count(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |c1 AS (SELECT g, n,
-        |  sum(w) OVER (PARTITION BY g ORDER BY n
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw
-        |  FROM (SELECT g, n, count(*) AS w FROM src GROUP BY 1, 2)),
-        |med AS (SELECT g,
-        |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN n END) AS med
-        |  FROM c1 GROUP BY 1),
-        |dev AS (SELECT s.g, s.hr, s.n, abs(s.n - med.med) AS d, med.med
-        |  FROM src s JOIN med USING (g)),
-        |c2 AS (SELECT g, d,
-        |  sum(w) OVER (PARTITION BY g ORDER BY d
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw
-        |  FROM (SELECT g, d, count(*) AS w FROM dev GROUP BY 1, 2)),
-        |mad AS (SELECT g,
-        |  min(CASE WHEN cw * 1000000 >= 500000 * tw THEN d END) AS mad
-        |  FROM c2 GROUP BY 1)
-        |SELECT dev.g AS event_type, dev.hr, CAST(dev.n AS BIGINT) AS n,
-        |  CAST(dev.med AS BIGINT) AS med, CAST(mad.mad AS BIGINT) AS mad
-        |FROM dev JOIN mad USING (g)
-        |WHERE dev.d > 3 * mad.mad
-        |ORDER BY event_type, hr""".stripMargin,
-
-    "q227_session_baskets" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_type,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, ts, event_type,
-        |    sum(CASE WHEN pts IS NOT NULL AND ts - pts > INTERVAL 1 HOUR
-        |             THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-        |      AS session_id
-        |  FROM x),
-        |b AS MATERIALIZED (
-        |  SELECT DISTINCT user_id, session_id, event_type AS t FROM sess),
-        |nn AS (SELECT count(*) AS n
-        |  FROM (SELECT DISTINCT user_id, session_id FROM b)),
-        |s1 AS (SELECT t, count(*) AS c FROM b GROUP BY 1),
-        |pr AS (SELECT a.t AS t_a, bb.t AS t_b, count(*) AS c_ab
-        |  FROM b a JOIN b bb ON a.user_id = bb.user_id
-        |    AND a.session_id = bb.session_id AND a.t < bb.t
-        |  GROUP BY 1, 2)
-        |SELECT t_a, t_b, CAST(c_ab AS BIGINT) AS c_ab,
-        |  CAST(sa.c AS BIGINT) AS c_a, CAST(sb.c AS BIGINT) AS c_b,
-        |  CAST((CAST(c_ab AS HUGEINT) * nn.n * 1000000) //
-        |    (CAST(sa.c AS HUGEINT) * sb.c) AS BIGINT) AS lift_ppm
-        |FROM pr JOIN s1 sa ON sa.t = pr.t_a
-        |        JOIN s1 sb ON sb.t = pr.t_b CROSS JOIN nn
-        |ORDER BY t_a, t_b""".stripMargin,
-
-    "q228_conversion_time" ->
-      """WITH x AS (
-        |  SELECT user_id, ts, event_type,
-        |    lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS pts
-        |  FROM events),
-        |sess AS (
-        |  SELECT user_id, ts, event_type,
-        |    sum(CASE WHEN pts IS NOT NULL AND ts - pts > INTERVAL 1 HOUR
-        |             THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY user_id ORDER BY ts
-        |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) + 1
-        |      AS session_id
-        |  FROM x),
-        |v AS (
-        |  SELECT user_id, session_id,
-        |         min(CASE WHEN event_type = 'view' THEN ts END) AS t_view
-        |  FROM sess GROUP BY 1, 2 HAVING t_view IS NOT NULL),
-        |p AS (
-        |  SELECT s.user_id, s.session_id, min(s.ts) AS t_purchase
-        |  FROM sess s JOIN v ON s.user_id = v.user_id
-        |                    AND s.session_id = v.session_id
-        |  WHERE s.event_type = 'purchase' AND s.ts > v.t_view
-        |  GROUP BY 1, 2),
-        |d AS (
-        |  SELECT 'all' AS g,
-        |    (epoch_us(p.t_purchase) - epoch_us(v.t_view)) // 1000000 AS secs
-        |  FROM p JOIN v ON p.user_id = v.user_id
-        |              AND p.session_id = v.session_id),
-        |pv AS (SELECT g, secs, count(*) AS w FROM d GROUP BY 1, 2),
-        |c AS (SELECT g, secs, w,
-        |  sum(w) OVER (PARTITION BY g ORDER BY secs
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(w) OVER (PARTITION BY g) AS tw FROM pv)
-        |SELECT g,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 500000 * tw THEN secs END)
-        |    AS BIGINT) AS p500000,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 900000 * tw THEN secs END)
-        |    AS BIGINT) AS p900000,
-        |  CAST(max(tw) AS BIGINT) AS total_w
-        |FROM c GROUP BY 1 ORDER BY g""".stripMargin,
-
-    "q229_skew_routed_join" ->
-      """WITH f AS (
-        |  SELECT CASE WHEN user_id % 2 = 0 THEN -1 ELSE user_id END AS k,
-        |         value
-        |  FROM events WHERE event_type = 'view'),
-        |d AS (
-        |  SELECT CASE WHEN user_id % 2 = 0 THEN -1 ELSE user_id END AS k,
-        |         CAST(count(*) AS BIGINT) AS n_clicks
-        |  FROM events WHERE event_type = 'click' GROUP BY 1)
-        |SELECT k, CAST(count(*) AS BIGINT) AS n_views,
-        |  max(n_clicks) AS n_clicks,
-        |  CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS total_c
-        |FROM f JOIN d USING (k)
-        |GROUP BY k ORDER BY k""".stripMargin,
-
-    "q230_ivf_index_probe" ->
-      """WITH cent AS (
-        |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-        |  FROM (SELECT vec_id, embedding FROM embeddings
-        |        WHERE vec_id % 10 <> 0 ORDER BY vec_id LIMIT 8)),
-        |asg AS (
-        |  SELECT id, v, cell FROM (
-        |    SELECT e.vec_id AS id, e.embedding AS v, c.ci AS cell,
-        |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(e.embedding, c.cv),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(e.embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(c.cv,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        c.ci DESC) AS rn
-        |    FROM embeddings e CROSS JOIN cent c WHERE e.vec_id % 10 <> 0)
-        |  WHERE rn = 1),
-        |prb AS (
-        |  SELECT query_id, qv, cell FROM (
-        |    SELECT q.vec_id AS query_id, q.embedding AS qv, c.ci AS cell,
-        |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-        |        list_sum(list_transform(list_zip(q.embedding, c.cv),
-        |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |        / (sqrt(list_sum(list_transform(q.embedding,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |           * sqrt(list_sum(list_transform(c.cv,
-        |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |        c.ci DESC) AS rn
-        |    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id % 10 = 0)
-        |  WHERE rn <= 2),
-        |cand AS (
-        |  SELECT p.query_id, p.qv, a.id, a.v
-        |  FROM prb p JOIN asg a USING (cell) WHERE a.id <> p.query_id),
-        |scored AS (
-        |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id ORDER BY
-        |      list_sum(list_transform(list_zip(qv, v),
-        |        p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(qv,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-        |         * sqrt(list_sum(list_transform(v,
-        |           x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-        |      id ASC) AS rnk
-        |  FROM cand)
-        |SELECT query_id, id AS neighbor_id, CAST(rnk AS INT) AS rank
-        |FROM scored WHERE rnk <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q231_cellstore_serve_day" ->
-      """WITH src AS (SELECT event_type AS g,
-        |    epoch_us(ts) // 86400000000 AS d,
-        |    CAST(round(value * 100) AS BIGINT) AS v FROM events),
-        |hb AS (SELECT g, d, v,
-        |    (length(bin(v)) - 1) * 4 +
-        |    ((v >> greatest(length(bin(v)) - 3, 0)) & 3) AS b
-        |  FROM src WHERE v >= 1),
-        |hist AS MATERIALIZED (SELECT g, d, b, count(*) AS c, min(v) AS mn
-        |  FROM hb GROUP BY 1, 2, 3),
-        |mx AS (SELECT max(d) AS day FROM hist),
-        |days AS (SELECT DISTINCT g, d AS day FROM hist
-        |  JOIN mx ON hist.d = mx.day),
-        |m AS (SELECT h.g, days.day, h.b, sum(h.c) AS c, min(h.mn) AS mn
-        |  FROM hist h JOIN days ON days.g = h.g
-        |    AND h.d <= days.day AND h.d >= days.day - 6
-        |  GROUP BY 1, 2, 3),
-        |cum AS (SELECT g, day, b, mn,
-        |  sum(c) OVER (PARTITION BY g, day ORDER BY b
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cw,
-        |  sum(c) OVER (PARTITION BY g, day) AS tw FROM m)
-        |SELECT g AS event_type, day, CAST(max(tw) AS BIGINT) AS n,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 500000 * tw THEN mn END)
-        |    AS BIGINT) AS est_p500000,
-        |  CAST(min(CASE WHEN cw * 1000000 >= 990000 * tw THEN mn END)
-        |    AS BIGINT) AS est_p990000
-        |FROM cum GROUP BY 1, 2 ORDER BY event_type""".stripMargin,
-
-    "q232_pq_index_probe" -> """
-      |WITH seed AS MATERIALIZED (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-      |  FROM (SELECT vec_id, embedding FROM embeddings
-      |        WHERE vec_id % 10 <> 0 ORDER BY vec_id LIMIT 16)),
-      |cb AS MATERIALIZED (
-      |  SELECT m.m, s.ci, list_slice(s.cv, m.m*8+1, m.m*8+8) AS cent
-      |  FROM seed s CROSS JOIN
-      |       (SELECT unnest([0,1,2,3,4,5,6,7]) AS m) m),
-      |codes AS MATERIALIZED (
-      |  SELECT id, m, ci AS code FROM (
-      |    SELECT e.vec_id AS id, c.m, c.ci,
-      |      row_number() OVER (PARTITION BY e.vec_id, c.m ORDER BY
-      |        list_sum(list_transform(
-      |          list_zip(list_slice(e.embedding, c.m*8+1, c.m*8+8), c.cent),
-      |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) DESC,
-      |        c.ci DESC) AS rn
-      |    FROM embeddings e CROSS JOIN cb c WHERE e.vec_id % 10 <> 0)
-      |  WHERE rn = 1),
-      |lut AS MATERIALIZED (
-      |  SELECT q.vec_id AS query_id, c.m, c.ci,
-      |    list_sum(list_transform(
-      |      list_zip(list_slice(q.embedding, c.m*8+1, c.m*8+8), c.cent),
-      |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) AS d
-      |  FROM embeddings q CROSS JOIN cb c WHERE q.vec_id % 10 = 0),
-      |scored AS (
-      |  SELECT l.query_id, cd.id, list_sum(list(l.d ORDER BY l.m)) AS score
-      |  FROM codes cd JOIN lut l ON l.m = cd.m AND l.ci = cd.code
-      |  WHERE cd.id <> l.query_id
-      |  GROUP BY l.query_id, cd.id),
-      |r AS (
-      |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-      |           ORDER BY score DESC, id ASC) AS rnk
-      |  FROM scored)
-      |SELECT query_id, id AS neighbor_id, CAST(rnk AS INT) AS rank
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rank""".stripMargin,
-
-    "q233_ivfpq_index_probe" -> """
-      |WITH cent AS MATERIALIZED (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-      |  FROM (SELECT vec_id, embedding FROM embeddings
-      |        WHERE vec_id % 10 <> 0 ORDER BY vec_id LIMIT 8)),
-      |seed AS MATERIALIZED (
-      |  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS ci, embedding AS cv
-      |  FROM (SELECT vec_id, embedding FROM embeddings
-      |        WHERE vec_id % 10 <> 0 ORDER BY vec_id LIMIT 16)),
-      |cb AS MATERIALIZED (
-      |  SELECT m.m, s.ci, list_slice(s.cv, m.m*8+1, m.m*8+8) AS cent
-      |  FROM seed s CROSS JOIN
-      |       (SELECT unnest([0,1,2,3,4,5,6,7]) AS m) m),
-      |asg AS MATERIALIZED (
-      |  SELECT id, cell FROM (
-      |    SELECT e.vec_id AS id, c.ci AS cell,
-      |      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-      |        list_sum(list_transform(list_zip(e.embedding, c.cv),
-      |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(e.embedding,
-      |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |           * sqrt(list_sum(list_transform(c.cv,
-      |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-      |        c.ci DESC) AS rn
-      |    FROM embeddings e CROSS JOIN cent c WHERE e.vec_id % 10 <> 0)
-      |  WHERE rn = 1),
-      |codes AS MATERIALIZED (
-      |  SELECT id, m, ci AS code FROM (
-      |    SELECT e.vec_id AS id, c.m, c.ci,
-      |      row_number() OVER (PARTITION BY e.vec_id, c.m ORDER BY
-      |        list_sum(list_transform(
-      |          list_zip(list_slice(e.embedding, c.m*8+1, c.m*8+8), c.cent),
-      |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) DESC,
-      |        c.ci DESC) AS rn
-      |    FROM embeddings e CROSS JOIN cb c WHERE e.vec_id % 10 <> 0)
-      |  WHERE rn = 1),
-      |prb AS MATERIALIZED (
-      |  SELECT query_id, cell FROM (
-      |    SELECT q.vec_id AS query_id, c.ci AS cell,
-      |      row_number() OVER (PARTITION BY q.vec_id ORDER BY
-      |        list_sum(list_transform(list_zip(q.embedding, c.cv),
-      |          p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(q.embedding,
-      |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |           * sqrt(list_sum(list_transform(c.cv,
-      |             x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) DESC,
-      |        c.ci DESC) AS rn
-      |    FROM embeddings q CROSS JOIN cent c WHERE q.vec_id % 10 = 0)
-      |  WHERE rn <= 2),
-      |lut AS MATERIALIZED (
-      |  SELECT q.vec_id AS query_id, c.m, c.ci,
-      |    list_sum(list_transform(
-      |      list_zip(list_slice(q.embedding, c.m*8+1, c.m*8+8), c.cent),
-      |      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) AS d
-      |  FROM embeddings q CROSS JOIN cb c WHERE q.vec_id % 10 = 0),
-      |scored AS (
-      |  SELECT p.query_id, a.id, list_sum(list(l.d ORDER BY l.m)) AS score
-      |  FROM prb p
-      |  JOIN asg a USING (cell)
-      |  JOIN codes cd ON cd.id = a.id
-      |  JOIN lut l ON l.query_id = p.query_id
-      |            AND l.m = cd.m AND l.ci = cd.code
-      |  WHERE a.id <> p.query_id
-      |  GROUP BY p.query_id, a.id),
-      |r AS (
-      |  SELECT query_id, id, row_number() OVER (PARTITION BY query_id
-      |           ORDER BY score DESC, id ASC) AS rnk
-      |  FROM scored)
-      |SELECT query_id, id AS neighbor_id, CAST(rnk AS INT) AS rank
-      |FROM r WHERE rnk <= 5 ORDER BY query_id, rank""".stripMargin
-  )
+  val preconditions: Map[String, (SparkSession, String) => Unit] =
+    registry.flatMap(q => q.precondition.map(q.name -> _)).toMap
 }

@@ -1,6 +1,7 @@
 package graft
+import graft.queries.QueryDef
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each registered query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -15,14 +16,13 @@ object Verify {
     // entries looked like skips. Failures are collected into a
     // failed.json artifact and the process exits non-zero.
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .foreach { case (name, fn) =>
+    SparkEntry.registry.filter(d => only.forall(_.contains(d.name)))
+      .foreach { case QueryDef(name, fn, _, precondition, _) =>
       try {
         // oracle-licensing preconditions run HERE, not in the query
         // lambda — Bench times that lambda (ADVICE r11); a violated
         // precondition fails the verify run as loudly as a bad result
-        SparkEntry.preconditions.get(name).foreach(p => p(spark, sfDir))
+        precondition.foreach(p => p(spark, sfDir))
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
       }
@@ -30,6 +30,10 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = Option(e.getMessage).getOrElse(e.toString).take(500)
       }
+      // Operators that cache inside a lazy result (duplicateClusters' node
+      // table, the n-gram pair joins' shingle table) cannot release it
+      // themselves; release it here so no later query reads it.
+      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -43,8 +47,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = SparkEntry.registry
+      .map(d => s"${q(d.name)}: ${q(d.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     if (failures.nonEmpty) {
       val fj = failures.map { case (k, v) => s"${q(k)}: ${q(v)}" }

@@ -307,7 +307,7 @@ object TextHash {
   /** SimHash over distinct whitespace tokens of the lowercase text; bit j
     * of token = bit (j mod 8) of md5 byte ⌊j/8⌋; output bit j = 1 iff the
     * ±1 vote sum is ≥ 0; bytes rendered high-nibble-first as lowercase
-    * hex (the exact mirror of the DuckDB formulation in SparkEntry). */
+    * hex (the exact mirror of the DuckDB formulation in q29's oracle). */
   def simhash64Hex(text: UTF8String): UTF8String = {
     val s = text.toLowerCase.toString.trim
     val toks = s.split("\\s+")

@@ -72,7 +72,7 @@ object VectorExpressions {
   /** Portable (md5-seeded) Rademacher-hyperplane bucket keys: component
     * (t, bit, d) = +1 iff the first hex digit of md5("hp{t}_{bit}_{d}")
     * is < 8. Reproducible in any engine with md5 — the oracle-checkable
-    * LSH family (DuckDB mirror lives in SparkEntry.oracleSql). */
+    * LSH family (DuckDB mirror: q32's oracle in queries/VectorQueries). */
   def rademacherBuckets(v: Column, nBits: Int, nTables: Int): Column =
     column(RademacherBuckets(expression(v), nBits, nTables))
 }

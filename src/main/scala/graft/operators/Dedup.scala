@@ -734,20 +734,14 @@ object Dedup {
     }
     // iterate ONLY over nodes that participate in a pair — in a dedup
     // graph that's a small fraction of the corpus; untouched nodes are
-    // singleton clusters and join back at the end
-    val active = edges.select(col("src").as("id")).distinct()
+    // singleton clusters and join back at the end.
     // localCheckpoint each round: iterative self-joins otherwise nest the
     // plan exponentially (the analyzer, not the data, runs out of heap).
     // The changed-row count is observed in the checkpoint job itself
     // (round-15 loop-action fusion, GraphTuning.checkpointWithCount
     // pattern) — the old convergence check was one extra job per round
     // over the just-checkpointed label table.
-    val (labels, _) = Graph.iterate(
-        active.withColumn("label", col("id")).localCheckpoint(true), -1L,
-        maxIterations, Graph.Stop.Empty) { (labels, _) =>
-      GraphTuning.checkpointObserving(Graph.ccRound(edges, labels),
-        Graph.ccChangedRows)
-    }
+    val labels = Graph.ccShuffleLoop(edges, maxIterations)
     nodes.join(labels, Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("label"), col("id")).as("cluster_id"))

@@ -948,6 +948,19 @@ object Graph {
   private[graft] def ccChangedRows: org.apache.spark.sql.Column =
     sum(when(col("__changed"), 1L).otherwise(0L))
 
+  /** The distributed hash-min CC loop of `Dedup.duplicateClusters`, also
+    * the shuffle arm of the `Crossover` and `Scale` harnesses: [[ccRound]]
+    * over every node of the symmetric `edges` until no label changes or
+    * `maxRounds` rounds ran. Each round is one checkpoint job that also
+    * observes the changed-row count. Emits (id, label, __changed). */
+  private[graft] def ccShuffleLoop(edges: DataFrame, maxRounds: Int)
+      : DataFrame =
+    iterate(edges.select(col("src").as("id")).distinct()
+        .withColumn("label", col("id")).localCheckpoint(true), -1L,
+        maxRounds, Stop.Empty) { (labels, _) =>
+      GraphTuning.checkpointObserving(ccRound(edges, labels), ccChangedRows)
+    }._1
+
   /** Big-graph connected components — the bucketed-table regime of the
     * hash-min/pointer-jump loop in `Dedup.duplicateClusters` (the dedup
     * clustering backbone): edges bucketed by src once, the label table

@@ -1,13 +1,18 @@
 package graft
 
-/** Smoke: every registered query runs at sf0.001 and yields rows; every
-  * oracle key refers to a real query. (Exact value parity vs DuckDB is the
-  * driver's t2 gate, replicated locally by scripts/compare.py.) */
+import graft.queries.QueryDef
+
+/** Smoke: every registered query runs at sf0.001 and yields rows. (Exact
+  * value parity vs DuckDB is the driver's t2 gate, replicated locally by
+  * scripts/compare.py.) */
 class QueriesSpec extends SparkSpec {
 
-  test("oracleSql keys ⊆ queries keys") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle without query: $missing")
+  test("registry rejects a repeated query name") {
+    val d = SparkEntry.registry.head
+    val err = intercept[IllegalArgumentException] {
+      QueryDef.registry(Seq(d, d.copy(oracle = "SELECT 1")))
+    }
+    assert(err.getMessage.contains(s"duplicate query names: ${d.name}"))
   }
 
   test("entry (flagship) returns rows") {

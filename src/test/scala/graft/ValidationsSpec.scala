@@ -125,9 +125,4 @@ class ValidationsSpec extends SparkSpec {
       err.getMessage.contains("not unique"))
   }
 
-  test("SparkEntry.preconditions keys are declared queries") {
-    assert(SparkEntry.preconditions.keySet.subsetOf(
-      SparkEntry.queries.keySet))
-  }
-
 }
