@@ -734,13 +734,7 @@ object Dedup {
     }
     // iterate ONLY over nodes that participate in a pair — in a dedup
     // graph that's a small fraction of the corpus; untouched nodes are
-    // singleton clusters and join back at the end.
-    // localCheckpoint each round: iterative self-joins otherwise nest the
-    // plan exponentially (the analyzer, not the data, runs out of heap).
-    // The changed-row count is observed in the checkpoint job itself
-    // (round-15 loop-action fusion, GraphTuning.checkpointWithCount
-    // pattern) — the old convergence check was one extra job per round
-    // over the just-checkpointed label table.
+    // singleton clusters and join back at the end
     val labels = Graph.ccShuffleLoop(edges, maxIterations)
     nodes.join(labels, Seq("id"), "left")
       .select(col("id").as(idCol),

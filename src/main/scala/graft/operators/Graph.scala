@@ -951,8 +951,12 @@ object Graph {
   /** The distributed hash-min CC loop of `Dedup.duplicateClusters`, also
     * the shuffle arm of the `Crossover` and `Scale` harnesses: [[ccRound]]
     * over every node of the symmetric `edges` until no label changes or
-    * `maxRounds` rounds ran. Each round is one checkpoint job that also
-    * observes the changed-row count. Emits (id, label, __changed). */
+    * `maxRounds` rounds ran. Each round is one localCheckpoint job
+    * (iterative self-joins otherwise nest the plan exponentially — the
+    * analyzer, not the data, runs out of heap) that also observes the
+    * changed-row count (round-15 loop-action fusion; a separate
+    * convergence count would be one more job per round). Emits
+    * (id, label, __changed). */
   private[graft] def ccShuffleLoop(edges: DataFrame, maxRounds: Int)
       : DataFrame =
     iterate(edges.select(col("src").as("id")).distinct()
