@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.QueryDef
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.Properties
 import org.apache.spark.SparkContext
@@ -10,12 +11,15 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FormattedMode
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 /** Per-query wall-time bench over `SparkEntry.registry`: sf0.001 warm-up,
   * noop sink, min over reps. Besides the stdout record it prints, per rep,
   * one stderr line with that rep's jobs, stages, tasks, task
-  * run/CPU/GC seconds and Janino compiles (`[bench-rep]`), and per query
-  * the last rep's costliest stages (`[bench-stage]`).
+  * run/CPU/GC seconds and Janino compiles (`[bench-rep]`), per query
+  * the last rep's costliest stages (`[bench-stage]`), and once per run
+  * the compiles of the warm-up, of rep 0 and of the later reps with the
+  * peak code-cache and Metaspace use (`[bench-run]`).
   *
   * Environment: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1),
   * `SPARK_GRAFT_CPUS` (see [[GraftSession.harnessCpus]]),
@@ -157,6 +161,24 @@ object Bench {
     }
   }
 
+  /** Peak use of the JIT code cache (per code heap, against its size) and
+    * of Metaspace, in MB: the generated classes the codegen cache keeps
+    * alive hold both, and a full code heap stops the JIT. */
+  private def memoryPools: String = {
+    def mb(b: Long) = "%.1f".formatLocal(java.util.Locale.ROOT, b / 1048576.0)
+    val CodeHeap = """CodeHeap '(.+)'""".r
+    ManagementFactory.getMemoryPoolMXBeans.asScala.flatMap { p =>
+      val peak = p.getPeakUsage
+      val size = if (peak.getMax > 0) "/" + mb(peak.getMax) else ""
+      (p.getName match {
+        case CodeHeap(heap) => Some("code." + heap.replace(' ', '-'))
+        case "Code Cache" => Some("code")
+        case "Metaspace" => Some("metaspace")
+        case _ => None
+      }).map(name => s"$name=${mb(peak.getUsed)}$size")
+    }.mkString("peakMB: ", " ", "")
+  }
+
   /** Stages per query in the `[bench-stage]` lines. */
   private val TopStages = 5
 
@@ -176,11 +198,13 @@ object Bench {
     sc.addSparkListener(counters)
     // JVM/codegen/parquet-reader warm-up on the tiny sf so the timed runs
     // measure steady-state throughput, not one-time cost: running every
-    // query shape at sf0.001 compiles its whole-stage codegen (Janino
-    // caches by generated source, identical across data dirs except where
-    // a data-derived literal outside a filter is inlined — filter literals
-    // are hoisted, graft.plans.HoistLiterals; `compiles=` on each
-    // `[bench-rep]` line shows any recompile) and JITs the hot paths.
+    // query shape at sf0.001 compiles its whole-stage codegen and JITs the
+    // hot paths. The generated classes stay for the whole run: Spark caches
+    // them by generated source in a JVM-wide LRU that
+    // GraftSession.CodegenCacheEntries sizes above this pass's class count,
+    // and literals that change with the data are hoisted out of the source
+    // (graft.plans.HoistLiterals). `compiles=` on each `[bench-rep]` line
+    // and the `[bench-run]` totals show any recompile.
     // Standard benchmarking practice; the timed loop below still does all
     // its own IO/compute at the target SF.
     // SPARK_GRAFT_ONLY=q65_pagerank,q28_minhash_neardup narrows the run
@@ -188,6 +212,8 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.registry.sortBy(_.name)
       .filter(d => only.forall(_.contains(d.name)))
+    def compileCount: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val warmCompiles0 = compileCount
     try exec(SparkEntry.entry(spark)) catch { case _: Throwable => }
     val warmDir = "/root/testdata/sf0.001"
     selected.foreach { d =>
@@ -199,10 +225,7 @@ object Bench {
     selected.filter(_.tags(QueryDef.WarmAtTargetSf)).foreach { d =>
       try exec(d.run(spark, sfDir)) catch { case _: Throwable => }
     }
-    // Drop every warm-up InMemoryRelation so the timed loop can never
-    // read a cache built above — even when the target SF IS sf0.001.
-    // (Janino's generated-code cache is JVM-level and survives this.)
-    spark.catalog.clearCache()
+    val warmCompiles = compileCount - warmCompiles0
     // Per-query time = min over reps (3 by default): one-off JIT/GC
     // hiccups otherwise masquerade as plan regressions between rounds.
     // The per-query SPREAD (max - min over reps) is emitted alongside so
@@ -217,6 +240,7 @@ object Bench {
     // total; the error itself goes to stderr.
     // Per-query record: every rep's (wall sec, task run sec), the run
     // seconds read from the rep's own key.
+    val repCompiles = new Array[Long](reps)
     val results: Seq[(String, Option[Seq[(Double, Double)]])] =
       selected.map { case QueryDef(name, fn, _, _, _) =>
         planDir.foreach { d =>
@@ -232,18 +256,22 @@ object Bench {
         // (wall sec, Janino compiles): the compile count is JVM-wide, and
         // only this rep runs while it is read
         val walls = keys.map { key =>
+          // every rep starts with no cached table: a `.cache()` inside a
+          // lazy result stays registered, and the warm-up, the plan dump
+          // or the previous rep would otherwise serve this rep's reads
+          spark.catalog.clearCache()
           val t0 = System.nanoTime()
-          val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+          val c0 = compileCount
           try Counters.keyed(sc, key)(exec(fn(spark, sfDir)))
           catch { case e: Throwable =>
             failed = true
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
-          ((System.nanoTime() - t0) / 1e9,
-            CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+          ((System.nanoTime() - t0) / 1e9, compileCount - c0)
         }
         val records = counters.take(sc, keys)
         walls.zip(records).zipWithIndex.foreach { case (((sec, compiles), r), rep) =>
+          repCompiles(rep) += compiles
           System.err.println(f"[bench-rep] $name rep=$rep%d sec=$sec%.3f " +
             f"jobs=${r.jobs}%d stages=${r.stages}%d tasks=${r.tasks}%d " +
             f"runSec=${r.runSec}%.3f cpuSec=${r.cpuSec}%.3f gcSec=${r.gcSec}%.3f " +
@@ -267,6 +295,8 @@ object Bench {
           f"$contendedSpread%.1f s of spread (top: $top). Re-run on a " +
           "quiet box before quoting round-over-round.")
     }
+    System.err.println(s"[bench-run] compiles warmup=$warmCompiles " +
+      s"rep0=${repCompiles.head} later=${repCompiles.tail.sum} $memoryPools")
     def fmt(sel: Seq[(Double, Double)] => Double): String = results.map {
       case (k, v) =>
         "\"" + k + "\":" + v.map(t =>

@@ -19,7 +19,14 @@ import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
   *
   * `GraftSession.builder` installs it. Register it elsewhere with
   * `withExtensions(new GraftExtensions)` on a session builder, or with
-  * spark.sql.extensions=graft.GraftExtensions.
+  * spark.sql.extensions=graft.GraftExtensions. A session built that way
+  * keeps Spark's codegen cache of 100 classes unless it sets
+  * `spark.sql.codegen.cache.maxEntries` itself (see
+  * `GraftSession.CodegenCacheEntries`), so a large query set evicts its
+  * own classes, and keeps stage ids in class names
+  * (`spark.sql.codegen.useIdInClassName`), so a pipeline that AQE numbers
+  * differently compiles again. The cap is JVM-wide and fixed at the JVM's
+  * first codegen, which is why an extension cannot set it.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -35,6 +35,31 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // A whole-stage class is named after its codegen stage id, and AQE
+      // numbers the stages in the order it plans them, which moves with
+      // the data size: the same pipeline at sf0.001 and sf0.01 compiled
+      // twice, as GeneratedIteratorForCodegenStage5 and ...Stage7 (38 of
+      // the 52 compiles after warm-up in a 9-query Bench run at sf0.01).
+      // One class name makes equal pipelines one cache entry; the stage id
+      // is still in the generated source's comment and in `explain`.
+      .config("spark.sql.codegen.useIdInClassName", "false")
+
+  /** Size of Spark's compiled-class cache (`spark.sql.codegen.cache.maxEntries`,
+    * Spark's default 100), sized so a session keeps every class of the
+    * query working set.
+    *
+    * Measured with a 100,000-entry cap on a 4-CPU machine: the `graft.Bench`
+    * warm-up (all 242 queries at sf0.001 plus the target-SF warm-up rep,
+    * target sf0.01) compiles 2,536 distinct classes (2,940 with stage ids
+    * in the class names), and the 12 perfbench `etl_queries` compile 139 in
+    * their warm-up. At the default cap the timed pass evicts and recompiles
+    * them: 4,939 compiles in one 242-query rep at sf0.01, 100-114 per
+    * `etl_queries` run. 4,096 leaves 60% headroom over the Bench working set.
+    *
+    * The conf is static, and `CodeGenerator` reads it once per JVM, at the
+    * first codegen: the first session built decides it for the JVM. */
+  val CodegenCacheEntries = 4096
 
   def local(appName: String = "graft", cpus: Int = 32): SparkSession = {
     val s = builder(appName, cpus.toString).master(s"local[$cpus]").getOrCreate()

@@ -6,8 +6,8 @@ import java.time.{Duration, LocalDateTime, Period}
 
 import graft.plans.{HoistLiterals, HoistedLiteral}
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.catalyst.expressions.{And, Cast, Coalesce, EqualTo,
-  GreaterThan, IsNull, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, BitwiseNot, BoundReference, Cast,
+  Coalesce, EqualTo, GreaterThan, IsNull, Literal, UnsafeProjection}
 import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, SimpleMode, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.functions._
@@ -15,7 +15,9 @@ import org.apache.spark.sql.types._
 
 /** HoistLiterals: filter literals leave the generated source, so a filter
   * whose bounds change per call compiles once; results, pushed filters and
-  * `explain` stay as they were. */
+  * `explain` stay as they were. The session keeps the compiled classes:
+  * its codegen cache holds the query working set, and a class does not
+  * depend on its stage id. */
 class HoistLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
@@ -59,6 +61,29 @@ class HoistLiteralsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     noop(between(12, 50))
     assert(!between(0, 1).queryExecution.executedPlan.isInstanceOf[AdaptiveSparkPlanExec])
     assert(countCompiles(noop(between(62, 120))) == 0)
+  }
+
+  test("a query's classes outlive 150 other generated classes") {
+    def query() = spark.read.parquet(blocks).filter(col("b") > 3)
+      .groupBy((col("v") * 2).as("k")).agg(max("b")).collect()
+    query()
+    // each projection has its own column count, so each is a new class
+    // (the odd column types keep other suites from having compiled one)
+    val others = countCompiles((1 to 150).foreach { n =>
+      UnsafeProjection.create(Seq.tabulate(n)(BoundReference(_, ShortType, nullable = true)) :+
+        BitwiseNot(BoundReference(n, ByteType, nullable = true)))
+    })
+    assert(others >= 150)
+    assert(countCompiles(query()) == 0)
+  }
+
+  test("a pipeline planned under another stage id reuses its class") {
+    val counts = spark.read.parquet(blocks).filter(col("b") > 3).groupBy("v").count()
+    val small = spark.range(5).select((col("id") % 7).as("v"), col("id").as("count"))
+    counts.collect()
+    small.collect()
+    // in the union the aggregate's pipelines get other stage ids
+    assert(countCompiles(small.union(counts).collect()) == 0)
   }
 
   test("every hoisted type filters the same rows, NaN, ±Infinity and -0.0 included") {
