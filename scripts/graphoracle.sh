@@ -9,8 +9,11 @@
 # graft.Verify take). The query list is derived from the family files
 # under src/main/scala/graft/queries on every run, so new graph queries
 # join without an edit here. Results go to a fresh temporary directory,
-# printed first. SPARK_GRAFT_CPUS defaults to 4. Exits non-zero if any
-# scale factor has a failing query.
+# printed first, with each scale factor's Verify log next to its results.
+# SPARK_GRAFT_CPUS defaults to 4. Exits non-zero if any scale factor has a
+# failing query, or if its Verify log holds a Spark "Asked to cache already
+# cached data" WARN (a query cached a plan that an earlier one left
+# registered: some operator returned without releasing its cache).
 set -euo pipefail
 [ $# -ge 1 ] || { echo "usage: $0 <sf-dir> [<sf-dir> ...]" >&2; exit 2; }
 dirs=()
@@ -33,8 +36,12 @@ status=0
 for dir in "${dirs[@]}"; do
   res="$out/$(basename "$dir")"
   SPARK_GRAFT_ONLY=$queries SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-4} \
-    sbt --batch "runMain graft.Verify $dir $res"
+    sbt --batch "runMain graft.Verify $dir $res" 2>&1 | tee "$res.log"
   echo "== $(basename "$dir")"
   python3 scripts/compare.py "$dir" "$res" || status=1
+  if n=$(grep -c "Asked to cache already cached data" "$res.log"); then
+    echo "== $(basename "$dir"): $n 'already cached' WARNs in $res.log" >&2
+    status=1
+  fi
 done
 exit $status

@@ -31,7 +31,7 @@ object Plans {
       "q104_kmv_distinct" -> "KMV sketch: distinct exchange O(ndv) then ObjectHashAggregate with partial_topkpairsagg — map-side buffers ≤ k",
       "q107_span_dedup" -> "span dedup: spans hash at the scan stage, the exchange carries (16-byte hash, id, idx) — text never shuffles",
       "q111_triangles" -> "triangle counting: one fact shuffle builds capped adjacency, degree joins broadcast, then per-EDGE sorted-adjacency intersection (broadcast nbr arrays + merge-scan IntersectSortedLongs) — the O(m^1.5) wedge stream never exists",
-      "q115_containment" -> "containment join: blocked self-join off ONE cached shingle exchange, merge-scan containment as a codegen'd predicate",
+      "q115_containment" -> "containment join: blocked self-join off ONE checkpointed shingle table, merge-scan containment as a codegen'd predicate",
       "q117_equidepth" -> "equi-depth histogram: range-exchange sort (the prefix-sum layout), carry pass map-only, bin agg partial+final — no single-partition window anywhere",
       "q123_interval_join" -> "interval overlap join: bin explode at the scan stage, broadcast hash equi-join on (key, bin), exact overlap + first-shared-bin filters fused after the join — fact side has NO exchange",
       "q124_merge_upsert" -> "CDC merge: union → ObjectHashAggregate with partial_maxbyrowagg map-side — one exchange keyed by k, no sort at any stage",
@@ -94,7 +94,7 @@ object Plans {
       "q236_ivf_split_hotcells" -> "IVF hot-cell split census: member work reads ONLY the hot cells (cell IN filter — partition pruning on a cell-partitioned store); seed joins are nCells-bounded broadcasts; the re-center is one (cell·dim)-row partial+final agg; unsplit-cell census is a metadata-sized count join, the corpus never shuffles",
       "q237_walk_cooccurrence" -> "walk skip-gram associations: pairs from ONE lead-array window pass over the checkpointed walk table (no self-join), two count aggs, scalar T/P totals ride broadcast one-row frames — the only exchanges are the walk-keyed window and the pair/occurrence aggs",
       "q238_importance_weights" -> "DSIR importance weights: scan-stage tokenize+md5-bucket (re-scanned, never a materialized token explosion), bins-row bucket-score table BROADCAST into the per-doc agg, fixed-point log2 is pure codegen integer math (bitlength + shifts) — the only corpus-sized exchange is the (doc, bucket) partial agg",
-      "q239_tokenizer_fertility" -> "tokenizer fertility by language: q139's cached (doc, tok) projection feeds trainer and encoder (one tokenize scan), vocab-sized merge work, width join deliberately shuffled (100 TB vocab outgrows broadcast), lang rollup over doc-sized rows",
+      "q239_tokenizer_fertility" -> "tokenizer fertility by language: q139's checkpointed (doc, tok) projection feeds trainer and encoder (one tokenize scan), vocab-sized merge work, width join deliberately shuffled (100 TB vocab outgrows broadcast), lang rollup over doc-sized rows",
       "q240_coreset_coverage" -> "coreset coverage audit: batch scanned ONCE against the k center literals (codegen integer dist² argmin), k-row agg, k-row left join restores empty centers — the greedy selection ran upstream on the store side, the audit itself never shuffles the batch",
       "q241_split_leakage" -> "near-dup split leakage: q28's banded minhash pairs (pair-sized) join the doc-sized split table twice — pair side small so both joins broadcast the pairs at this SF; at scale they are id-keyed shuffle joins of (id, split) projections; final rollup is 6 rows",
       "q242_coreset_extend" -> "coreset extension (first new round shown in the k-row output plan): the greedy loop continues from the STORED centers as baked literals — per round one scan of the drifted corpus into a top-1 TakeOrderedAndProject, no shuffle of the corpus, append rows only")

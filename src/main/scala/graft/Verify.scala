@@ -30,10 +30,6 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
         failures(name) = Option(e.getMessage).getOrElse(e.toString).take(500)
       }
-      // Operators that cache inside a lazy result (duplicateClusters' node
-      // table, the n-gram pair joins' shingle table) cannot release it
-      // themselves; release it here so no later query reads it.
-      spark.catalog.clearCache()
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

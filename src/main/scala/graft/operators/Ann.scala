@@ -290,7 +290,8 @@ object Ann extends Logging {
       nCentroids: Int = 16, nProbe: Int = 4, lloydIterations: Int = 2,
       idCol: String = "vec_id", vecCol: String = "embedding",
       initById: Boolean = false): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v")).cache()
+    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .localCheckpoint(false) // read by training and by the cell scan
     val centroids = trainCentroids(c, nCentroids, lloydIterations, initById)
     def nearestCell(v: Column): Column = nearestCellCol(centroids, v)
 
@@ -348,7 +349,7 @@ object Ann extends Logging {
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val centroids = trainCentroids(
-      if (lloydIterations > 0) c.cache() else c,
+      if (lloydIterations > 0) c.localCheckpoint(false) else c,
       nCentroids, lloydIterations, initById)
     import spark.implicits._
     val centDf = centroids.zipWithIndex
@@ -508,7 +509,8 @@ object Ann extends Logging {
       lloydIterations: Int = 0,
       idCol: String = "vec_id", vecCol: String = "embedding",
       initById: Boolean = false, rerankFactor: Int = 0): DataFrame = {
-    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v")).cache()
+    val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
+      .localCheckpoint(false) // read by training, the codes and the re-rank
     val cb = trainCodebook(c, numSubspaces, codebookSize, lloydIterations,
       initById)
 
@@ -574,7 +576,7 @@ object Ann extends Logging {
       initById: Boolean = false): (DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val cc = if (lloydIterations > 0) c.cache() else c
+    val cc = if (lloydIterations > 0) c.localCheckpoint(false) else c
     val cb = trainCodebook(cc, numSubspaces, codebookSize, lloydIterations,
       initById)
     import spark.implicits._
@@ -665,7 +667,7 @@ object Ann extends Logging {
       initById: Boolean = false): (DataFrame, DataFrame, DataFrame) = {
     val spark = corpus.sparkSession
     val c = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val cc = if (lloydIterations > 0) c.cache() else c
+    val cc = if (lloydIterations > 0) c.localCheckpoint(false) else c
     val cent = trainCentroids(cc, nCentroids, lloydIterations, initById)
     val cb = trainCodebook(cc, numSubspaces, codebookSize,
       lloydIterations, initById)
@@ -765,11 +767,16 @@ object Ann extends Logging {
     }
     def d2(a: Column, b: Column): Column = aggregate(
       zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0L), (s, x) => s + x)
+    // Cell sets filter as ONE array literal, not an `isin` list whose
+    // length would reach the generated class (a recompile per data
+    // size). `NOT array_contains` keeps what `NOT IN` keeps: centroid
+    // cells are non-null (collectCentroids reads them as Int), and a
+    // null assignment cell drops under both forms for a non-empty set.
     // member work reads ONLY the hot cells (partition-pruned on a
     // cell-partitioned store); read by seed/reassign branches —
     // materialize once
     val members = assignments
-      .filter(col("cell").isin(hot.map(Int.box): _*))
+      .filter(array_contains(typedLit(hot), col("cell")))
       .select(col("cell"), col("id"), col("v"),
         KMeans.quantize(col("v"), scale).as("qv"))
       .localCheckpoint(true)
@@ -785,14 +792,13 @@ object Ann extends Logging {
     logInfo(s"[graft.ann] splitHotCells maxCellRows=$maxCellRows " +
       s"hot=${hot.length}/$nCells splittable=${splittable.length} " +
       s"cells: ${splittable.mkString(",")}")
-    val coldCensus = censusOf(
-      centroids.filter(!col("cell").isin(splittable.map(Int.box): _*)),
-      counts)
+    val isSplit = array_contains(typedLit(splittable), col("cell"))
+    val coldCensus = censusOf(centroids.filter(!isSplit), counts)
     if (splittable.isEmpty) // hot cells that are single point masses
       return (coldCensus, centroids, assignments)
     val newId = splittable.zipWithIndex
       .map { case (c, j) => (c, nCells + j) }.toMap
-    val daS = da.filter(col("cell").isin(splittable.map(Int.box): _*))
+    val daS = da.filter(isSplit)
     val wB = Window.partitionBy("cell")
       .orderBy(col("dA").desc, col("id").asc)
     val seedB = daS.withColumn("rn", row_number().over(wB))
@@ -818,14 +824,12 @@ object Ann extends Logging {
       col("newcell").cast("long").as("cell"),
       col("parent_cell").cast("long").as("parent_cell"),
       col("n_members"), col("centroid_chk")))
-    val newCent = centroids
-      .filter(!col("cell").isin(splittable.map(Int.box): _*))
+    val newCent = centroids.filter(!isSplit)
       .unionByName(hotAgg.select(col("newcell").as("cell"),
         transform(col("pm"), p =>
           (p.getField("m").cast("double") / scale).cast("float"))
           .as("centroid")))
-    val newAsg = assignments
-      .filter(!col("cell").isin(splittable.map(Int.box): _*))
+    val newAsg = assignments.filter(!isSplit)
       .unionByName(re.select(col("id"), col("newcell").as("cell"), col("v")))
     (census, newCent, newAsg)
   }

@@ -111,7 +111,7 @@ object Bpe {
     * (doc_id, n_tokens, n_subwords) — the "how many tokenizer tokens is
     * this corpus" accounting every pretraining budget starts from.
     *
-    * Scale shape: the corpus tokenizes ONCE into cached (doc_id, tok)
+    * Scale shape: the corpus tokenizes ONCE into checkpointed (doc_id, tok)
     * pairs; trainer and encoder both run off that projection (the q101
     * lesson — never two full tokenize scans). The merge application is
     * vocab-sized map-side string work; the per-token subword widths then
@@ -126,7 +126,7 @@ object Bpe {
         explode(TextFunctions.tokens(lower(trim(col(textCol))))).as("tok"))
       .filter(length(col("tok")) > 0)
       .groupBy("doc_id", "tok").agg(count(lit(1)).as("cnt"))
-      .cache() // read twice: vocabulary build + the width join
+      .localCheckpoint(false) // read twice: vocabulary build + the width join
     val vocab = toks.groupBy("tok").agg(sum(col("cnt")).as("wc"))
       .select(col("tok"), col("wc"), concat(lit(" "),
         array_join(expr(

@@ -126,18 +126,20 @@ object Dedup {
     // oracle-checkable path); band buckets are then the raw signature
     // slices (array<long> join keys) instead of a murmur of them, so
     // candidate generation is engine-independent too.
-    // Cached: the plan references sets/banded from both sides of two
-    // self-joins — without persistence the shingle+signature pass would
-    // recompute ~6×. (The cluster-scale analog: materialize signatures
-    // once, they are ~100× smaller than the corpus.)
+    // Materialized: the plan references sets/banded from both sides of
+    // two self-joins — without persistence the shingle+signature pass
+    // would recompute ~6×. (The cluster-scale analog: materialize
+    // signatures once, they are ~100× smaller than the corpus.)
     def signature(sh: Column) =
       if (portableHash) graft.expressions.TextHash.minhash31(sh, numHashes)
       else graft.expressions.TextHash.minhashFromHashes(sh, numHashes)
-    // one cached pass: shingle → signature; everything downstream (banding,
-    // verification joins) references this narrow table. In the estimate
-    // path the shingle sets are dropped before caching — at scale the
+    // one materialized pass: shingle → signature; everything downstream
+    // (banding, verification joins) references this narrow table. In the
+    // estimate path the shingle sets are dropped first — at scale the
     // signature table is ~100× smaller than the corpus and is what a real
-    // pipeline would materialize.
+    // pipeline would materialize. Lazy localCheckpoint, not cache: the
+    // first stage that reads it fills the blocks, and the ContextCleaner
+    // reclaims them once the result is unreferenced.
     val sigs = {
       val s = df.select(col(idCol).as("id"),
         (if (portableHash)
@@ -146,7 +148,7 @@ object Dedup {
            graft.expressions.TextHash.shingleHashes(col(textCol), shingleSize)).as("sh"))
         .filter(size(col("sh")) > 0)
         .withColumn("sig", signature(col("sh")))
-      (if (exactVerify) s else s.drop("sh")).cache()
+      (if (exactVerify) s else s.drop("sh")).localCheckpoint(false)
     }
     // Band bucket keys: the portable family joins on the raw signature
     // slice (engine-independent); r ≤ 2 packs the two 31-bit components
@@ -402,9 +404,9 @@ object Dedup {
     * carries (band, slice, id) only; hot buckets (a non-discriminative
     * slice — e.g. a boilerplate-heavy corpus where one 16-bit slice is
     * constant) are capped by `maxBucketSize` with O(cap) memory; the
-    * signature table is cached once and is ~100× narrower than the
-    * corpus. Growing `bands` trades larger candidate volume for a wider
-    * guaranteed radius (bands = k+1 is the minimum for radius k).
+    * signature table is ~100× narrower than the corpus. Growing `bands`
+    * trades larger candidate volume for a wider guaranteed radius
+    * (bands = k+1 is the minimum for radius k).
     *
     * `portableHash` switches to the md5 bit-vote signature
     * ([[simHashHex]]) with hex-substring band keys and half-word xor
@@ -609,7 +611,7 @@ object Dedup {
         blockCols.map(col): _*)
       .filter(size(col("tk")) > 0)
       .withColumn("n", size(col("tk")))
-      .cache() // read by the prefix index AND both verification joins
+      .localCheckpoint(false) // read by the prefix index AND both verification joins
     val toks = sets.select(Seq(col("id"), col("n"), explode(col("tk")).as("t")) ++
       blockCols.map(col): _*)
     val freq = toks.groupBy("t").agg(count(lit(1)).as("df"))
@@ -649,7 +651,8 @@ object Dedup {
       maxIterations: Int = 20,
       localEdgeThreshold: Long = 1L << 21,
       coBucketEdgeThreshold: Long = 24000000L): DataFrame = {
-    val nodes = ids.select(col(idCol).as("id")).distinct().cache()
+    // read once, by whichever regime's final join runs
+    val nodes = ids.select(col(idCol).as("id")).distinct()
     val edgesPlan = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
@@ -747,9 +750,10 @@ object Dedup {
     * the join input — rows with a non-empty shingle set, exactly the n
     * that gets squared — and refuses above `maxUnblockedRows`: at scale
     * the caller must either pass blocking keys or use
-    * [[prefixJaccardPairs]]. The count is one action over the
-    * already-cached shingle table, so the guard runs EAGERLY at call
-    * time on the unblocked path (the blocked path stays fully lazy). */
+    * [[prefixJaccardPairs]]. The count is one action that fills the
+    * lazily checkpointed shingle table the joins then read, so the guard
+    * runs EAGERLY at call time on the unblocked path (the blocked path
+    * stays fully lazy). */
   private def guardUnblocked(base: DataFrame, blockCols: Seq[String],
       maxUnblockedRows: Long, fn: String): Unit =
     if (blockCols.isEmpty) {
@@ -792,7 +796,7 @@ object Dedup {
     val base = df.select(col(idCol).as("id") +: col(nameCol).as("nm") +:
       blockCols.map(col): _*)
       .filter(col("nm").isNotNull)
-      .cache()
+      .localCheckpoint(false)
     guardUnblocked(base, blockCols, maxUnblockedRows,
       "blockedEditDistancePairs")
     val l = base.select(col("id").as("id_a") +: col("nm").as("nm_a") +:
@@ -813,7 +817,7 @@ object Dedup {
     * near-dup measure that catches a short document quoted inside a long
     * one (Jaccard stays near |a|/|b| there and never fires). Same
     * blocked-cross-product scale shape as [[ngramJaccardPairs]]: one
-    * cached shingle pass, pairs only within cheap blocking keys, the
+    * checkpointed shingle pass, pairs only within cheap blocking keys, the
     * merge-scan containment a single codegen'd expression. Emitted both
     * directions when both clear the threshold (containment is directed).
     */
@@ -825,7 +829,7 @@ object Dedup {
       graft.expressions.TextHash.shingleHashes(col(textCol), shingleSize).as("tk") +:
       blockCols.map(col): _*)
       .filter(size(col("tk")) > 0)
-      .cache()
+      .localCheckpoint(false)
     guardUnblocked(base, blockCols, maxUnblockedRows, "ngramContainmentPairs")
     val l = base.select(col("id").as("id_a") +: col("tk").as("tk_a") +: blockCols.map(col): _*)
     val r = base.select(col("id").as("id_b") +: col("tk").as("tk_b") +: blockCols.map(col): _*)
@@ -846,13 +850,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String, blockCols: Seq[String],
       threshold: Double, shingleSize: Int = 1,
       maxUnblockedRows: Long = 10000L): DataFrame = {
-    // cached: both join legs read it — one shingle pass, not two (the
-    // cluster-scale analog: materialize the shingle table once)
+    // checkpointed: both join legs read it — one shingle pass, not two
+    // (the cluster-scale analog: materialize the shingle table once)
     val base = df.select(col(idCol).as("id") +:
       graft.expressions.TextHash.shingleHashes(col(textCol), shingleSize).as("tk") +:
       blockCols.map(col): _*)
       .filter(size(col("tk")) > 0)
-      .cache()
+      .localCheckpoint(false)
     guardUnblocked(base, blockCols, maxUnblockedRows, "ngramJaccardPairs")
     val l = base.select(col("id").as("id_a") +: col("tk").as("tk_a") +: blockCols.map(col): _*)
     val r = base.select(col("id").as("id_b") +: col("tk").as("tk_b") +: blockCols.map(col): _*)

@@ -83,7 +83,7 @@ object KMeans {
       k: Int, rounds: Int = 2, scale: Int = 1000): DataFrame = {
     require(k >= 1 && rounds >= 1, s"need k >= 1, rounds >= 1 (got $k, $rounds)")
     val q = df.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("v"))
-      .cache()
+      .localCheckpoint(false)
     val centroids = trainCentroids(q, k, rounds)
     val scored = centroids.zipWithIndex.map { case (cent, i) =>
       struct(dist2(col("v"), cent).as("d"), lit(i).as("i"))
@@ -325,7 +325,7 @@ object KMeans {
       k: Int, rounds: Int = 2, scale: Int = 1000): DataFrame = {
     require(k >= 2 && rounds >= 1, s"need k >= 2, rounds >= 1 (got $k, $rounds)")
     val q = df.select(col(idCol).as("id"), quantize(col(vecCol), scale).as("v"))
-      .cache()
+      .localCheckpoint(false)
     val centroids = trainCentroids(q, k, rounds)
     val ds = centroids.zipWithIndex.map { case (cent, i) =>
       struct(dist2(col("v"), cent).as("d"), lit(i).as("i"))

@@ -11,11 +11,13 @@ import org.apache.spark.sql.functions._
   * reference's six process boundaries collapse into one lazy plan whose
   * only shuffle is the log_index window's hash partition by transaction.
   *
-  * §3.2 (TigerGraph projection): ONE enriched frame, cached, fanned into
-  * three grouped aggregations (vertices + two edge sets) and a global
-  * chain-state aggregate — the cache means the enrichment runs once, not
-  * four times, exactly the multi-sink pattern a 100 TB run needs
-  * (compute-once, write-many).
+  * §3.2 (TigerGraph projection): ONE enriched frame, checkpointed lazily,
+  * fanned into three grouped aggregations (vertices + two edge sets) and
+  * a global chain-state aggregate — the first output's action fills the
+  * checkpoint and the other three read it, so the enrichment runs once,
+  * not four times, exactly the multi-sink pattern a 100 TB run needs
+  * (compute-once, write-many). The ContextCleaner reclaims the blocks
+  * once the four outputs are unreferenced.
   */
 object Pipelines {
 
@@ -40,21 +42,21 @@ object Pipelines {
     * addition to the enrichment outputs. */
   def graphProjection(enriched: DataFrame, chainName: String,
       blockCol: String = "block_number"): GraphProjection = {
-    val cached = enriched.cache()
+    val shared = enriched.localCheckpoint(false)
     // block_number comes from the caller-designated block column (the
     // reference pivots max over `block`, streaming_operator.py:151-158);
     // falls back to transaction_id only when no block column exists.
-    val blockSrc = if (cached.columns.contains(blockCol)) blockCol else "transaction_id"
-    val chainState = cached
+    val blockSrc = if (shared.columns.contains(blockCol)) blockCol else "transaction_id"
+    val chainState = shared
       .withColumn("chain", lit(chainName))
       .groupBy("chain").agg(
         max(col("coin_price_usd")).as("price_usd"),
         max(col("block_date_time")).as("block_date_time"),
         max(col(blockSrc)).as("block_number"))
     GraphProjection(
-      Aggregations.transactionsAgg(cached),
-      Aggregations.linkInputsAgg(cached),
-      Aggregations.linkOutputsAgg(cached),
+      Aggregations.transactionsAgg(shared),
+      Aggregations.linkInputsAgg(shared),
+      Aggregations.linkOutputsAgg(shared),
       chainState)
   }
 }

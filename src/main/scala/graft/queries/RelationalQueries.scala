@@ -1019,7 +1019,7 @@ object RelationalQueries {
       val c = Tables.events(s, dir)
         .select(col("event_type"),
           expr("CAST(round(value * 100) AS BIGINT)").as("c"))
-        .cache()
+        .localCheckpoint(false)
       val med = c.groupBy("event_type")
         .agg(expr("percentile(c, 0.5)").as("med"))
       val dev = c.join(broadcast(med), Seq("event_type"))

@@ -175,7 +175,7 @@ class GraphRegimePinSpec extends SparkSpec {
     ("duplicateClusters distributed", () => Seq(Dedup.duplicateClusters(
       (1L to 80L).toDF("doc_id"), "doc_id",
       canonical.select(col("src").as("id_a"), col("dst").as("id_b")),
-      localEdgeThreshold = 0L)), (51, 80L)))
+      localEdgeThreshold = 0L)), (50, 80L)))
 
   for ((name, run, pin) <- loops)
     test(s"loop pin: $name") {

@@ -183,6 +183,26 @@ class SkewIvfSpec extends SparkSpec {
     Ann.assignCells(newCent, e.limit(5)).collect() // must not throw
   }
 
+  test("splitHotCells: a hot set of another size compiles no new class") {
+    val e = Tables.embeddings(spark, sfDir)
+    val (cent, asg) = Ann.ivfIndex(e, nCentroids = 8, initById = true)
+    val centC = cent.localCheckpoint(true)
+    val asgC = asg.localCheckpoint(true)
+    // caps at the 2nd and 3rd largest cell sizes: the lower cap makes
+    // more cells hot, so the cell-set filters get longer lists
+    val sizes = asgC.groupBy("cell").count().as[(Int, Long)].collect()
+      .map(_._2).distinct.sorted.reverse
+    assert(sizes.length >= 3, s"cell sizes ${sizes.mkString(",")}")
+    def split(maxCellRows: Long): Long = {
+      val (census, newCent, newAsg) =
+        Ann.splitHotCells(centC, asgC, maxCellRows)
+      Seq(newCent, newAsg).foreach(_.write.format("noop").mode("overwrite").save())
+      census.count()
+    }
+    val fewer = split(sizes(1))
+    assert(countCompiles(assert(split(sizes(2)) > fewer)) == 0)
+  }
+
   test("splitHotCells: a point-mass hot cell stays whole; a spread cell splits by the seed rule") {
     val cents = Seq((0, Seq(0f, 0f)), (1, Seq(10f, 10f)))
       .toDF("cell", "centroid")
