@@ -11,11 +11,13 @@ import org.apache.spark.sql.execution.{ColumnarRule, SparkPlan}
   * Catalyst expressions to SQL users, so
   * `spark.sql("SELECT cosine_f(a, b) …")` plans the same codegen'd
   * operators the DataFrame API uses, and installs the engine's rules at
-  * three tiers: optimizer (`ArgmaxWindowRewrite`), planner strategy
-  * (`GraftStrategy`) and physical plan (`HoistLiterals`, through the
+  * four tiers: optimizer (`ArgmaxWindowRewrite`), planner strategy
+  * (`GraftStrategy`), physical plan (`HoistLiterals`, through the
   * columnar-rule hook: it runs before whole-stage codegen with and
   * without AQE, where a post-planner strategy rule runs only inside
-  * adaptive plans).
+  * adaptive plans) and adaptive query-stage preparation
+  * (`OnePartitionSort`: a global sort whose input fits one advisory-size
+  * partition sorts in one partition, with no sample job).
   *
   * `GraftSession.builder` installs it. Register it elsewhere with
   * `withExtensions(new GraftExtensions)` on a session builder, or with
@@ -50,6 +52,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectColumnar(_ => new ColumnarRule {
       override def preColumnarTransitions: Rule[SparkPlan] = graft.plans.HoistLiterals
     })
+    // Query-stage preparation tier: a small global sort's range exchange
+    // takes one partition, so RangePartitioner runs no sample job
+    // (graft.plans.OnePartitionSort).
+    ext.injectQueryStagePrepRule(_ => graft.plans.OnePartitionSort)
 
     def register(name: String, builder: Seq[Expression] => Expression): Unit =
       ext.injectFunction((FunctionIdentifier(name),

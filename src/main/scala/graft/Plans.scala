@@ -104,7 +104,11 @@ object Plans {
     sb.append("at every scan, `BroadcastHashJoin` for every dimension join,\n")
     sb.append("`WholeStageCodegen` spans over the hot paths, one `Exchange` per\n")
     sb.append("logical shuffle need (the trailing range exchange is the\n")
-    sb.append("determinism ORDER BY for oracle hash parity).\n")
+    sb.append("determinism ORDER BY for oracle hash parity; when the sort's input\n")
+    sb.append("is estimated at most spark.sql.adaptive.advisoryPartitionSizeInBytes\n")
+    sb.append("it is `rangepartitioning(…, 1)` and runs no sample job, see\n")
+    sb.append("plans/OnePartitionSort; these are the plans before any stage runs,\n")
+    sb.append("and AQE decides again on measured sizes as stages finish).\n")
     sb.append("Quantile-family plans are pinned to the bracket+exact\n")
     sb.append("(scale-path) regime via graft.agg.oneWindowRowLimit=0;\n")
     sb.append("production routing takes the one-window plan on proven-\n")

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 
 /** Parquet table readers for the synthetic star schema (TESTDATA.md).
@@ -12,19 +13,30 @@ import org.apache.spark.sql.functions._
   * collapses into `spark.read.<fmt>` / `df.write.<fmt>` against the
   * appropriate filesystem scheme (file://, gs://, s3a://). Column
   * pruning and predicate pushdown reach the parquet scan automatically.
+  *
+  * Every reader takes the table's schema from one parquet footer read on
+  * the driver (`FooterSchema`) and passes it to `spark.read.schema`:
+  * Spark's own inference reads the same footer inside a Spark job, one
+  * job per table read, which produces no row.
   */
 object Tables {
   private def p(dir: String, name: String) = s"$dir/$name.parquet"
 
-  def region(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "region"))
-  def nation(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "nation"))
-  def customer(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "customer"))
-  def supplier(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "supplier"))
-  def part(s: SparkSession, dir: String): DataFrame     = s.read.parquet(p(dir, "part"))
-  def orders(s: SparkSession, dir: String): DataFrame   = s.read.parquet(p(dir, "orders"))
-  def lineitem(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "lineitem"))
-  def documents(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "documents"))
-  def embeddings(s: SparkSession, dir: String): DataFrame = s.read.parquet(p(dir, "embeddings"))
+  private def read(s: SparkSession, path: String): DataFrame =
+    FooterSchema(s, path) match {
+      case Some(schema) => s.read.schema(schema).parquet(path)
+      case None         => s.read.parquet(path)
+    }
+
+  def region(s: SparkSession, dir: String): DataFrame   = read(s, p(dir, "region"))
+  def nation(s: SparkSession, dir: String): DataFrame   = read(s, p(dir, "nation"))
+  def customer(s: SparkSession, dir: String): DataFrame = read(s, p(dir, "customer"))
+  def supplier(s: SparkSession, dir: String): DataFrame = read(s, p(dir, "supplier"))
+  def part(s: SparkSession, dir: String): DataFrame     = read(s, p(dir, "part"))
+  def orders(s: SparkSession, dir: String): DataFrame   = read(s, p(dir, "orders"))
+  def lineitem(s: SparkSession, dir: String): DataFrame = read(s, p(dir, "lineitem"))
+  def documents(s: SparkSession, dir: String): DataFrame = read(s, p(dir, "documents"))
+  def embeddings(s: SparkSession, dir: String): DataFrame = read(s, p(dir, "embeddings"))
 
   /** events.ts arrives in whichever timestamp representation the producer
     * chose — parquet TIMESTAMP(NANOS) (read as LongType nanos via
@@ -39,7 +51,7 @@ object Tables {
     * on both representations. */
   def events(s: SparkSession, dir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(p(dir, "events"))
+    val raw = read(s, p(dir, "events"))
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         // integral div — double division loses integer precision at
@@ -64,6 +76,6 @@ object Tables {
     * same namespace the DuckDB oracle sees. */
   def registerAll(s: SparkSession, dir: String): Unit = names.foreach {
     case "events" => events(s, dir).createOrReplaceTempView("events")
-    case n        => s.read.parquet(p(dir, n)).createOrReplaceTempView(n)
+    case n        => read(s, p(dir, n)).createOrReplaceTempView(n)
   }
 }

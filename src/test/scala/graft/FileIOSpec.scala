@@ -3,11 +3,52 @@ package graft
 import graft.io.FileIO
 import graft.functions.TextFunctions
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 class FileIOSpec extends SparkSpec {
   import spark.implicits._
+
+  private def readTable(name: String, dir: String): DataFrame = name match {
+    case "region"     => Tables.region(spark, dir)
+    case "nation"     => Tables.nation(spark, dir)
+    case "customer"   => Tables.customer(spark, dir)
+    case "supplier"   => Tables.supplier(spark, dir)
+    case "part"       => Tables.part(spark, dir)
+    case "orders"     => Tables.orders(spark, dir)
+    case "lineitem"   => Tables.lineitem(spark, dir)
+    case "events"     => Tables.events(spark, dir)
+    case "documents"  => Tables.documents(spark, dir)
+    case "embeddings" => Tables.embeddings(spark, dir)
+  }
+
+  /** Every table read at `dir` submits no job, and scans with the schema
+    * Spark's own parquet inference gives the same path (the session reads
+    * events under nanosAsLong). */
+  private def assertReadsRunNoJob(dir: String): Unit = Tables.names.foreach { n =>
+    var df: DataFrame = null
+    val jobs = countJobs { df = readTable(n, dir) }
+    assert(jobs == 0, s"reading $n ran $jobs jobs")
+    val scanned = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.schema }
+    assert(scanned == Some(spark.read.parquet(s"$dir/$n.parquet").schema), n)
+  }
+
+  test("a Tables read runs no job and scans the inferred schema") {
+    assertReadsRunNoJob(sfDir)
+  }
+
+  test("a Tables read of Spark-written part files runs no job and scans the inferred schema") {
+    val dir = Files.createTempDirectory("parts").toString
+    Tables.names.foreach { n =>
+      spark.read.parquet(s"$sfDir/$n.parquet").repartition(3)
+        .write.parquet(s"$dir/$n.parquet")
+      val files = new java.io.File(s"$dir/$n.parquet").list().toSeq
+      assert(files.contains("_SUCCESS") && files.count(_.startsWith("part-")) == 3, n)
+    }
+    assertReadsRunNoJob(dir)
+  }
 
   test("Tables.events adapts to both ts representations identically") {
     // The driver regenerated events.parquet between rounds and its ts

@@ -1,14 +1,27 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Window => LWindow}
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** ArgmaxWindowRewrite: the injected optimizer rule that turns top-1
-  * row_number windows into struct-extremum aggregations. */
-class RuleSpec extends SparkSpec {
+/** The injected plan rules: ArgmaxWindowRewrite, the optimizer rule that
+  * turns top-1 row_number windows into struct-extremum aggregations, and
+  * OnePartitionSort, the query-stage rule that sorts a small global
+  * ORDER BY in one partition. */
+class RuleSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  /** Partition counts of the range exchanges in an executed plan. */
+  private def rangeExchanges(df: Dataset[_]): Seq[Int] =
+    collect(df.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        e.outputPartitioning.numPartitions
+    }
 
   private def events = Seq(
     (1L, 10L, 5.0, "a"), (1L, 11L, 9.0, "b"), (1L, 12L, 9.0, "c"),
@@ -70,5 +83,34 @@ class RuleSpec extends SparkSpec {
     val df = events.withColumn("rn", rank().over(w)).filter(col("rn") === 1)
     assert(hasWindow(df))
     assert(df.filter(col("user_id") === 1).count() == 2) // 9.0 tie survives
+  }
+
+  test("a small global sort ranges into one partition and runs no sample job") {
+    def sorted = spark.range(0, 1000).selectExpr("id % 97 AS k", "id").orderBy("k", "id")
+    val (one, many) = (sorted, sorted)
+    var oneRows, manyRows = Array.empty[Row]
+    val oneJobs = countJobs { oneRows = one.collect() }
+    // an advisory size of one byte fits no input: Spark's n-way exchange
+    val manyJobs = withConf("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1") {
+      countJobs { manyRows = many.collect() }
+    }
+    assert(rangeExchanges(one) == Seq(1))
+    assert(rangeExchanges(many) == Seq(spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    assert(oneJobs == manyJobs - 1, s"one partition: $oneJobs jobs, n partitions: $manyJobs")
+    assert(oneRows.toSeq == manyRows.toSeq)
+  }
+
+  test("repartitionByRange keeps its partition count") {
+    val df = spark.range(0, 1000).repartitionByRange(4, col("id"))
+    assert(df.collect().length == 1000)
+    assert(rangeExchanges(df) == Seq(4))
+  }
+
+  test("orderBy(...).limit(n) still plans TakeOrderedAndProject") {
+    val df = spark.range(0, 1000).orderBy(col("id").desc).limit(5)
+    assert(df.as[Long].collect().toSeq == Seq(999L, 998L, 997L, 996L, 995L))
+    assert(collect(df.queryExecution.executedPlan) {
+      case t: TakeOrderedAndProjectExec => t }.nonEmpty)
+    assert(rangeExchanges(df).isEmpty)
   }
 }
